@@ -954,24 +954,33 @@ object Bench {
           } finally spark.sparkContext.setJobDescription(null)
         }
       val ccN = sys.env.getOrElse("SPARK_GRAFT_SOAK_CC_N", "131072").toLong
+      // one chain 0-1-…-(n-1) as a (src, dst) edge list, and the check that a
+      // CC result over it is one component of all n nodes labelled 0
+      def ccChain(n: Long) = spark.range(0, n - 1)
+        .select(col("id").as("src"), (col("id") + 1L).as("dst"))
+      def requireOneChain(cc: org.apache.spark.sql.DataFrame, n: Long,
+                          what: String): Unit = {
+        val agg = cc.agg(count(lit(1)), countDistinct(col("component")),
+          max(col("component"))).head
+        require(agg.getLong(0) == n && agg.getLong(1) == 1L
+            && agg.getLong(2) == 0L,
+          s"$what wrong structure: ${agg.toString}")
+      }
       soakLeg("soak_cc_chain", slowSec = 45.0) { () =>
         // one chain 0-1-2-…-(n-1): a single component of diameter n-1 —
         // the adversarial shape for label propagation (one giant near-dup
         // cluster), converging only via pointer jumping. Wall is dominated
         // by round count × per-round shuffle latency, and round count is
         // the measurement: it must track log2(diameter), not the diameter.
+        // localBound = 0 pins the distributed path — the chain's snapshot
+        // (2(n-1) rows) would otherwise be finished on the driver in 0 rounds.
         val n = ccN
-        val edges = spark.range(0, n - 1)
-          .select(col("id").as("src"), (col("id") + 1L).as("dst"))
+        val edges = ccChain(n)
         val c0 = System.nanoTime()
         val (cc, rounds) = graft.operators.Dedup
-          .connectedComponentsWithRounds(edges, "src", "dst")
-        val agg = cc.agg(count(lit(1)), countDistinct(col("component")),
-          max(col("component"))).head
+          .connectedComponentsWithRounds(edges, "src", "dst", localBound = 0)
+        requireOneChain(cc, n, "CC soak")
         val sec = (System.nanoTime() - c0) / 1e9
-        require(agg.getLong(0) == n && agg.getLong(1) == 1L
-            && agg.getLong(2) == 0L,
-          s"CC soak wrong structure: ${agg.toString}")
         // rounds must stay logarithmic in the diameter — 2·log2(n)+2 leaves
         // slack for the propagation constant and the confirming round
         val bound = 2 * (64 - java.lang.Long.numberOfLeadingZeros(n - 1)) + 2
@@ -993,13 +1002,10 @@ object Bench {
           .select(col("id").as("node"), lit(0L).as("lbl"))
         val w0 = System.nanoTime()
         val (wcc, warmRounds) = graft.operators.Dedup
-          .connectedComponentsWithRounds(edges, "src", "dst", seed = Some(seed))
-        val wagg = wcc.agg(count(lit(1)), countDistinct(col("component")),
-          max(col("component"))).head
+          .connectedComponentsWithRounds(edges, "src", "dst", seed = Some(seed),
+            localBound = 0)
+        requireOneChain(wcc, n, "warm CC soak")
         val warmSec = (System.nanoTime() - w0) / 1e9
-        require(wagg.getLong(0) == n && wagg.getLong(1) == 1L
-            && wagg.getLong(2) == 0L,
-          s"warm CC soak wrong structure: ${wagg.toString}")
         require(warmRounds < rounds,
           s"warm start did not cut rounds: $warmRounds vs cold $rounds")
         val warmBound = 2 * (64 - java.lang.Long.numberOfLeadingZeros(m)) + 3
@@ -1011,6 +1017,22 @@ object Bench {
         firstPass.putIfAbsent("soak_cc_chain_rounds_warm", wr)
         recordRun("soak_cc_chain_rounds_warm", wr)
         sec + warmSec
+      }
+      soakLeg("soak_cc_chain_local", slowSec = 10.0) { () =>
+        // the same chain through the default path: its snapshot is under the
+        // heap-derived bound, so union-find on the driver closes it in 0
+        // rounds — the per-round job latency the distributed legs pay is
+        // what this leg's time saves
+        val n = ccN
+        val c0 = System.nanoTime()
+        val (cc, rounds) = graft.operators.Dedup
+          .connectedComponentsWithRounds(ccChain(n), "src", "dst")
+        requireOneChain(cc, n, "local CC soak")
+        val sec = (System.nanoTime() - c0) / 1e9
+        require(rounds == 0, s"local CC soak ran $rounds distributed rounds: " +
+          s"the ${2 * (n - 1)}-row snapshot exceeds the local bound " +
+          s"${graft.operators.Dedup.localComponentsBound}")
+        sec
       }
       soakLeg("soak_lsh_sigs", slowSec = 25.0) { () =>
         // The LSH bucket-cap claim: a degenerate corpus slice (boilerplate,

@@ -323,8 +323,8 @@ object CorpusPipeline {
       threshold = cfg.nearDupThreshold, tokenHash = cfg.tokenHash)
     // non-canonical cluster members (node ≠ its component's min label).
     // connectedComponents consumes the pairs eagerly and returns a
-    // checkpoint-backed frame, so the sketch's signature cache can be
-    // released as soon as it returns.
+    // materialized frame (a local relation or a checkpoint), so the
+    // sketch's signature cache can be released as soon as it returns.
     val losers =
       try Dedup.connectedComponents(pairs, "id_a", "id_b")
         .filter(col("node") =!= col("component"))

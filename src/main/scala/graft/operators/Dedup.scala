@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication operators for large-scale corpus pipelines.
   *
@@ -340,9 +343,25 @@ object Dedup {
     * group instead of dropping one side of every pair (pair-wise dropping
     * over-deletes on transitive chains a–b, b–c).
     *
-    * Algorithm: distributed min-label propagation with pointer jumping.
-    * The edge table is symmetrized and seeded with one self-edge per node,
-    * so each round
+    * Algorithm: the edge list is symmetrized once and checkpointed; its
+    * row count then picks one of two paths (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014: iterate only while
+    * the graph is too big for one machine).
+    *
+    * LOCAL path — snapshot rows ≤ `localBound` (default
+    * [[localComponentsBound]], derived from the driver heap): the rows are
+    * collected into primitive long arrays and closed by union-find on the
+    * driver, uniting toward the smaller root, so every root is its
+    * component's min id. Exact by construction, zero rounds, and two small
+    * jobs (count, collect) over the snapshot's blocks instead of ~6 AQE
+    * materialization jobs per round — the per-round cost of the
+    * distributed path is scheduling latency, not compute, so every
+    * batch-proportional graph (q74, the scoped service folds) takes this
+    * path.
+    *
+    * DISTRIBUTED path — larger snapshots, or `localBound = 0`: min-label
+    * propagation with pointer jumping. The edge table is seeded with one
+    * self-edge per node, so each round
     *   (a) relaxes each label to the min over the node's CLOSED
     *       neighborhood in a single edge–label join + min-agg (the
     *       self-edge contributes the node's own label — no separate
@@ -382,9 +401,11 @@ object Dedup {
     * the only value the driver reads per round.
     *
     * Returns (node, component) where component = min node id of the
-    * component — deterministic, no tie-breaking; the result is left
-    * checkpoint-cached (callers typically consume it more than once — size
-    * it as one long pair per node). Self-loops in the input are discarded: a
+    * component — deterministic, no tie-breaking, identical on both paths.
+    * The result is already materialized either way (callers typically
+    * consume it more than once — size it as one long pair per node): a
+    * driver-side local relation on the local path, the last round's
+    * checkpoint on the distributed one. Self-loops in the input are discarded: a
     * node appearing ONLY in self-loops is absent from the output (it is
     * in no 2+-node component). Id columns must be integral — a lossy cast
     * (string ids hashing to null) would silently drop edges, so it is
@@ -393,6 +414,26 @@ object Dedup {
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 64): DataFrame =
     connectedComponentsWithRounds(edges, srcCol, dstCol, maxIter)._1
+
+  /** Default `localBound` of [[connectedComponentsWithRounds]]: the largest
+    * symmetrized edge snapshot (in rows) finished by union-find on the
+    * driver. Derived from the driver's max heap, never a host-tuned
+    * constant. Per snapshot row the local path holds at most
+    *   - 16 B: the collected (s, d) longs in a primitive array,
+    *   - 16 B: the row's serialized task result, until the collect returns,
+    *   -  8 B: its entry in the sorted node-id array,
+    *   -  4 B: its union-find parent slot,
+    *   - ~80 B: its result row in the local relation (a row object, its
+    *     two-slot value array, two boxed longs),
+    * ≈ 128 B, counting one node per row (every node of the snapshot is the
+    * source of at least one row, so nodes ≤ rows). The path may take 1/8
+    * of the heap: Spark's unified memory claims 60% of what lies beyond
+    * 300 MB, and the rest (user memory) also carries the optimizer's and
+    * the scan's transient copies of the result rows. Hence
+    * bound = maxMemory / 8 / 128 B = maxMemory / 1024, i.e. 2^20 rows per
+    * GiB of driver heap, capped so every array index fits an Int. */
+  def localComponentsBound: Long =
+    math.min(Runtime.getRuntime.maxMemory / 1024, Int.MaxValue / 2)
 
   /** Eager, plan-truncating checkpoint for the CC loop's reused frames.
     * When the session has a RELIABLE checkpoint directory configured
@@ -412,10 +453,14 @@ object Dedup {
 
   /** [[connectedComponents]] plus the number of label-propagation rounds the
     * build ran (including the final confirming round whose label sum was
-    * unchanged) — the observable the O(log diameter) claim is measured by:
-    * the soak bench pins rounds ≈ log₂(diameter) on a synthetic
-    * million-node chain, turning the complexity argument into a number. */
-  /** `seed`, when given, WARM-STARTS the label propagation: a (node, lbl)
+    * unchanged; 0 on the local path) — the observable the O(log diameter)
+    * claim is measured by: the soak bench pins rounds ≈ log₂(diameter) on a
+    * synthetic chain, turning the complexity argument into a number. Such
+    * a measurement passes `localBound = 0`, which disables the local path;
+    * every other caller keeps the heap-derived default
+    * ([[localComponentsBound]]).
+    *
+    * `seed`, when given, WARM-STARTS the label propagation: a (node, lbl)
     * frame whose labels replace the self-label start for the nodes it
     * covers (uncovered nodes still start at themselves). Contract — for
     * EXACTNESS, not just speed — each seeded `lbl` must be (a) ≤ its
@@ -430,12 +475,14 @@ object Dedup {
     * spec-gated warm==cold equality in DedupSimilaritySpec rather than a
     * (corpus-sized) runtime check. Seeding near the fixpoint cuts rounds
     * from O(log diameter) to the few needed to merge NEW structure —
-    * measured 6–10 → ~3 on the incremental maintenance folds. */
+    * measured 6–10 → ~3 on the incremental maintenance folds. The local
+    * path ignores the seed: under the contract the fixpoint is the
+    * component min anyway, which union-find computes directly. */
   def connectedComponentsWithRounds(edges: DataFrame, srcCol: String,
                                     dstCol: String,
                                     maxIter: Int = 64,
-                                    seed: Option[DataFrame] = None): (DataFrame, Int) = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+                                    seed: Option[DataFrame] = None,
+                                    localBound: Long = localComponentsBound): (DataFrame, Int) = {
     Seq(srcCol, dstCol).foreach { c =>
       val dt = edges.schema(c).dataType
       require(Seq(LongType, IntegerType, ShortType, ByteType).contains(dt),
@@ -458,13 +505,31 @@ object Dedup {
     // plan's shuffles via exchange reuse but each re-ran its post-exchange
     // segment — for the LSH generators that is the exact cosine gate,
     // paid twice per build (guide §2.3: don't compute what you throw
-    // away). Same row multiset, checkpointed identically. */
+    // away). Same row multiset, checkpointed identically.
     val real = truncate(
       sym.filter(col("s") =!= col("d"))
         .select(explode(array(
           struct(col("s"), col("d")),
           struct(col("d").as("s"), col("s").as("d")))).as("e"))
         .select(col("e.s").as("s"), col("e.d").as("d")))
+    // Deterministic release of a localCheckpoint's persisted blocks: the
+    // checkpointed Dataset is backed by a LogicalRDD leaf whose RDD holds
+    // the storage. (Dataset.unpersist goes through the CacheManager and
+    // does not know about checkpoint RDDs; without this, snapshots linger
+    // until driver GC happens to collect the Dataset.)
+    def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
+    if (localBound > 0) {
+      // counted over the checkpoint's blocks, not the upstream plan
+      val snapshot = real.queryExecution.toRdd
+      if (snapshot.count() <= localBound) {
+        val local = localComponents(real.sparkSession, snapshot)
+        release(real)
+        return (local, 0)
+      }
+    }
     val nodes = real.select(col("s")).distinct()
     // Symmetrized + self-edge-seeded + deduped once; reused every round.
     // truncate, i.e. a checkpoint (not persist): a persisted frame still CARRIES the
@@ -491,15 +556,6 @@ object Dedup {
         selfStart.join(s0, Seq("node"), "left")
           .select(col("node"), coalesce(col("pl"), col("lbl")).as("lbl"))
     })
-    // Deterministic release of a localCheckpoint's persisted blocks: the
-    // checkpointed Dataset is backed by a LogicalRDD leaf whose RDD holds
-    // the storage. (Dataset.unpersist goes through the CacheManager and
-    // does not know about checkpoint RDDs; without this, snapshots linger
-    // until driver GC happens to collect the Dataset.)
-    def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
     release(real) // und and labels are materialized; the edge snapshot is done
     var prevSum: Option[java.math.BigDecimal] = None
     var it = 0
@@ -533,6 +589,43 @@ object Dedup {
     (labels.select(col("node"), col("lbl").as("component")), it)
   }
 
+  /** The local path of [[connectedComponentsWithRounds]] over the
+    * symmetrized (s, d) snapshot rows: one primitive long array per
+    * partition is collected, the distinct node ids are indexed by sorting,
+    * and union-find (path halving) always unites toward the smaller root.
+    * Indices follow id order, so every root is its component's min id. */
+  private def localComponents(spark: SparkSession,
+                              snapshot: RDD[InternalRow]): DataFrame = {
+    val parts = snapshot.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      Iterator.single(b.result())
+    }.collect()
+    // every node is the source of a row, so the sources are the node set
+    val ids = new Array[Long](parts.map(_.length / 2).sum)
+    var n = 0
+    for (p <- parts; j <- p.indices by 2) { ids(n) = p(j); n += 1 }
+    java.util.Arrays.sort(ids)
+    var m = 0
+    for (j <- ids.indices if j == 0 || ids(j) != ids(j - 1)) { ids(m) = ids(j); m += 1 }
+    val parent = Array.range(0, m)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def root(v: Long): Int = find(java.util.Arrays.binarySearch(ids, 0, m, v))
+    // each undirected edge is in the snapshot in both orientations
+    for (p <- parts; j <- p.indices by 2 if p(j) < p(j + 1)) {
+      val (a, b) = (root(p(j)), root(p(j + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val out = new java.util.ArrayList[Row](m)
+    for (i <- 0 until m) out.add(Row(ids(i), ids(find(i))))
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("node", LongType), StructField("component", LongType))))
+  }
+
   /** Full-coverage cluster assignment over a universe of ids: close `edges`
     * into components ([[connectedComponents]]) and give EVERY id in
     * `universe` a row — (id, cluster_id, cluster_size, is_canonical) — with
@@ -557,12 +650,13 @@ object Dedup {
   def componentAssignments(universe: DataFrame, idCol: String,
                            edges: DataFrame, srcCol: String, dstCol: String,
                            maxIter: Int = 64,
-                           seed: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+                           seed: Option[DataFrame] = None,
+                           localBound: Long = localComponentsBound): DataFrame = {
     val dt = universe.schema(idCol).dataType
     require(Seq(LongType, IntegerType, ShortType, ByteType).contains(dt),
       s"componentAssignments: id column '$idCol' must be integral, got $dt")
-    val cc = connectedComponentsWithRounds(edges, srcCol, dstCol, maxIter, seed)._1
+    val cc = connectedComponentsWithRounds(edges, srcCol, dstCol, maxIter, seed,
+      localBound)._1
     val ids = universe.select(col(idCol).cast("long").as("id"))
     val assigned = ids
       .join(cc.select(col("node").as("id"), col("component")), Seq("id"), "left")
@@ -610,7 +704,8 @@ object Dedup {
                                       newEdges: DataFrame, srcCol: String,
                                       dstCol: String,
                                       maxIter: Int = 64,
-                                      warmStart: Boolean = true): DataFrame = {
+                                      warmStart: Boolean = true,
+                                      localBound: Long = localComponentsBound): DataFrame = {
     val star = assignment
       .select(col("id").cast("long").as("s"), col("cluster_id").cast("long").as("d"))
     val fresh = newEdges
@@ -624,7 +719,7 @@ object Dedup {
           col("cluster_id").cast("long").as("lbl")))
       else None
     componentAssignments(universe, "id", star.unionByName(fresh), "s", "d",
-      maxIter, seed)
+      maxIter, seed, localBound)
   }
 
   /** SCOPED form of [[incrementalComponentAssignments]]: restrict the fold's
@@ -674,9 +769,10 @@ object Dedup {
                                             newUniverse: DataFrame, idCol: String,
                                             newEdges: DataFrame, srcCol: String,
                                             dstCol: String,
-                                            maxIter: Int = 64): DataFrame = {
+                                            maxIter: Int = 64,
+                                            localBound: Long = localComponentsBound): DataFrame = {
     val (untouched, rec) = incrementalComponentAssignmentsScopedParts(
-      assignment, newUniverse, idCol, newEdges, srcCol, dstCol, maxIter)
+      assignment, newUniverse, idCol, newEdges, srcCol, dstCol, maxIter, localBound)
     untouched.unionByName(rec)
   }
 
@@ -694,11 +790,10 @@ object Dedup {
     * as a batch-proportional DELTA and reconstruct full coverage later by
     * latest-fold-wins merge over (snapshot, deltas) — the contract
     * [[graft.jobs.ClusterMaintenance]] builds its delta state layout on. */
-  def incrementalComponentAssignmentsScopedParts(assignment: DataFrame,
-                                                 newUniverse: DataFrame, idCol: String,
-                                                 newEdges: DataFrame, srcCol: String,
-                                                 dstCol: String,
-                                                 maxIter: Int = 64): (DataFrame, DataFrame) = {
+  def incrementalComponentAssignmentsScopedParts(
+      assignment: DataFrame, newUniverse: DataFrame, idCol: String,
+      newEdges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 64,
+      localBound: Long = localComponentsBound): (DataFrame, DataFrame) = {
     // Materialize the candidate pairs once (they feed the endpoint set, the
     // scoped edge graph, and — via the broadcast builds — would otherwise
     // re-run the whole LSH candidate generator per consumer). localCheckpoint
@@ -732,14 +827,14 @@ object Dedup {
     val seed = Some(touched.select(col("id").as("node"),
       col("cluster_id").as("lbl")))
     val rec = componentAssignments(scopedU, "id", star.unionByName(fresh),
-      "s", "d", maxIter, seed)
+      "s", "d", maxIter, seed, localBound)
     val untouched = assignment
       .join(broadcast(affected), Seq("cluster_id"), "left_anti")
       .select(col("id").cast("long").as("id"),
         col("cluster_id").cast("long").as("cluster_id"),
         col("cluster_size").cast("long").as("cluster_size"),
         col("is_canonical").cast("int").as("is_canonical"))
-    // rec's CC loop materialized eagerly above (checkpointed labels), so
+    // rec's CC ran eagerly above (local relation or checkpointed labels), so
     // consumers re-run only the cheap scoped joins on top of it — the
     // corpus-sized side is the untouched scan, read once by whatever action
     // consumes the result.

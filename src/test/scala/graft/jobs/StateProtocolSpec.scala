@@ -235,4 +235,50 @@ class StateProtocolSpec extends AnyFunSuite {
         Seq(s"$dir/b=0", s"$dir/b=1"), "spec", "unused")
     }
   }
+
+  test("parallelJobs runs every job concurrently") {
+    // both jobs must reach the barrier together: run one after the other,
+    // the first would time out waiting for the second
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    def job(): Unit = {
+      barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      ran.incrementAndGet()
+      ()
+    }
+    StateProtocol.parallelJobs(() => job(), () => job())
+    assert(ran.get == 2)
+    // a single job runs inline on the caller's thread
+    val caller = Thread.currentThread()
+    var on: Thread = null
+    StateProtocol.parallelJobs(() => on = Thread.currentThread())
+    assert(on eq caller)
+  }
+
+  test("parallelJobs raises a failure only after the other job has settled") {
+    val settled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      StateProtocol.parallelJobs(
+        () => throw new IllegalStateException("boom"),
+        () => { Thread.sleep(300); settled.set(true) })
+    }
+    assert(e.getMessage == "boom", "the job's own exception, not a wrapper")
+    assert(settled.get, "the failure surfaced while the other job was still running")
+  }
+
+  test("parallelJobs carries the caller's Spark job description to the pool threads") {
+    val spark = graft.TestSession.spark
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    sc.setJobDescription("spec:parallelJobs")
+    try {
+      def job(): Unit = {
+        seen.add(sc.getLocalProperty("spark.job.description"))
+        assert(spark.range(100).count() == 100L)
+        ()
+      }
+      StateProtocol.parallelJobs(() => job(), () => job())
+    } finally sc.setJobDescription(null)
+    assert(seen.toArray.toSeq == Seq("spec:parallelJobs", "spec:parallelJobs"))
+  }
 }

@@ -6,6 +6,27 @@ import org.apache.spark.sql.functions._
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  // The CC specs run on both paths: the default bound finishes their small
+  // graphs by union-find on the driver, localBound = 0 pins the distributed
+  // label-propagation rounds. The default path keeps the original test name.
+  private val ccPaths = Seq("" -> Dedup.localComponentsBound, " [distributed]" -> 0L)
+
+  /** Driver-side union-find reference: node -> min id of its component,
+    * over the endpoints of `edges` (self-loops included as given). */
+  private def unionFindComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // union toward the smaller root, so each root stays its component's min
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(v => v -> find(v)).toMap
+  }
+
   test("exactDedup keeps exactly one row per duplicate group (min tiebreak)") {
     val df = Seq((1L, "same text here"), (2L, "same text here"), (3L, "unique"))
       .toDF("id", "text")
@@ -402,7 +423,8 @@ class DedupSimilaritySpec extends SparkSpec {
       "— q113 would never exercise the cross-batch join")
   }
 
-  test("warm-started CC from a prior assignment equals cold start with no extra rounds") {
+  for ((path, bound) <- ccPaths)
+  test(s"warm-started CC from a prior assignment equals cold start with no extra rounds$path") {
     // the incremental-fold shape: star edges from a prior assignment plus
     // new-batch pairs that bridge two old clusters through a chain of new
     // nodes — the case where labels must travel farthest
@@ -414,25 +436,27 @@ class DedupSimilaritySpec extends SparkSpec {
     val seed = ((0L to 15L).map(i => (i, 0L)) ++ (16L to 31L).map(i => (i, 16L)))
       .toDF("node", "lbl")
     val (coldDf, coldRounds) =
-      Dedup.connectedComponentsWithRounds(edges, "s", "d")
+      Dedup.connectedComponentsWithRounds(edges, "s", "d", localBound = bound)
     val cold = coldDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (warmDf, warmRounds) =
-      Dedup.connectedComponentsWithRounds(edges, "s", "d", seed = Some(seed))
+    val (warmDf, warmRounds) = Dedup.connectedComponentsWithRounds(edges, "s", "d",
+      seed = Some(seed), localBound = bound)
     val warm = warmDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(warm == cold, "warm-started labels diverged from cold start")
     assert(cold.forall(_._2 == 0L), "everything bridges into component 0")
     assert(warmRounds <= coldRounds,
       s"warm start took MORE rounds ($warmRounds) than cold ($coldRounds)")
+    assert((coldRounds == 0) == (bound > 0), s"wrong path: $coldRounds rounds")
   }
 
-  test("incrementalComponentAssignments: warmStart=false equals the default warm path") {
+  for ((path, bound) <- ccPaths)
+  test(s"incrementalComponentAssignments: warmStart=false equals the default warm path$path") {
     val oldEdges = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("a", "b")
     val prior = Dedup.componentAssignments((0L to 9L).toDF("id"), "id",
       oldEdges, "a", "b")
     val newEdges = Seq((2L, 10L), (6L, 10L), (9L, 12L)).toDF("a", "b")
     val newU = (10L to 12L).toDF("id")
     def rows(warm: Boolean) = Dedup.incrementalComponentAssignments(prior,
-        newU, "id", newEdges, "a", "b", warmStart = warm)
+        newU, "id", newEdges, "a", "b", warmStart = warm, localBound = bound)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     assert(rows(warm = true) == rows(warm = false))
   }
@@ -509,16 +533,17 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("connectedComponents: long path, mixed components, noisy edge list") {
+  for ((path, bound) <- ccPaths)
+  test(s"connectedComponents: long path, mixed components, noisy edge list$path") {
     // a 200-node path (diameter 199 — bare propagation would need 199
     // rounds; pointer jumping must close it within the 64-round cap),
     // a triangle, an isolated pair, plus reversed duplicates + a self-loop
-    val path = (0L until 199L).map(i => (i, i + 1))
+    val chain = (0L until 199L).map(i => (i, i + 1))
     val noise = Seq((300L, 301L), (301L, 302L), (302L, 300L), (400L, 401L),
       (302L, 301L), (401L, 400L), (500L, 500L))
-    val edges = (path ++ noise).toDF("a", "b")
-    val got = Dedup.connectedComponents(edges, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val edges = (chain ++ noise).toDF("a", "b")
+    val got = Dedup.connectedComponentsWithRounds(edges, "a", "b", localBound = bound)
+      ._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0L to 199L).foreach(v => assert(got(v) == 0L, s"node $v"))
     Seq(300L, 301L, 302L).foreach(v => assert(got(v) == 300L))
     Seq(400L, 401L).foreach(v => assert(got(v) == 400L))
@@ -527,49 +552,74 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(got.size == 205)
   }
 
-  test("connectedComponents matches union-find on a pseudo-random graph") {
+  for ((path, bound) <- ccPaths)
+  test(s"connectedComponents matches union-find on a pseudo-random graph$path") {
     // deterministic LCG edge list over 400 nodes, ~300 edges
     var st = 12345L
     def next(): Long = { st = st * 6364136223846793005L + 1442695040888963407L; st }
     val edges = (0 until 300).map { _ =>
       (math.floorMod(next(), 400L), math.floorMod(next(), 400L))
     }.filter { case (a, b) => a != b }
-    // driver-side union-find ground truth
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    // union toward the smaller root, so each root stays its component's min
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val roots = edges.flatMap(e => Seq(e._1, e._2)).distinct.groupBy(find)
-    val expectMap = roots.flatMap { case (_, members) =>
-      val m = members.min; members.map(_ -> m)
-    }
-    val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expectMap)
+    val got = Dedup.connectedComponentsWithRounds(edges.toDF("a", "b"), "a", "b",
+        localBound = bound)
+      ._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == unionFindComponents(edges))
   }
 
-  test("connectedComponents releases per-round snapshots (storage stays O(1) tables)") {
+  test("CC property: local == distributed == union-find on generated graphs, cold and warm") {
+    // seed 1 is the empty graph; the others mix a long chain, random edges
+    // over a small id range (duplicates, reversed pairs, merged chains) and
+    // nodes that appear only in self-loops
+    for (gen <- 1 to 4) {
+      val rnd = new scala.util.Random(gen)
+      val edges: Seq[(Long, Long)] = if (gen == 1) Seq.empty else {
+        val base = 1000L * (1 + rnd.nextInt(9))
+        val chain = (0 until 20 + rnd.nextInt(60)).map(i => (base + i, base + i + 1))
+        val random = Seq.fill(10 + rnd.nextInt(40))(
+          (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
+        val loops = Seq.fill(3) { val v = 50000L + rnd.nextInt(100); (v, v) }
+        rnd.shuffle(chain ++ random ++ loops :+ (base, rnd.nextInt(120).toLong))
+      }
+      val expect = unionFindComponents(edges.filter(e => e._1 != e._2))
+      // a warm start valid under the seed contract: a random subset of the
+      // nodes, each labelled by a member of its own component ≤ itself
+      val members = expect.groupBy(_._2).map { case (c, m) => c -> m.keys.toVector.sorted }
+      val warm = expect.toSeq.filter(_ => rnd.nextBoolean()).map { case (v, c) =>
+        val below = members(c).takeWhile(_ <= v)
+        (v, below(rnd.nextInt(below.size)))
+      }.toDF("node", "lbl")
+      val df = edges.toDF("a", "b")
+      for (seed <- Seq(None, Some(warm)); (path, bound) <- ccPaths) {
+        val (out, rounds) = Dedup.connectedComponentsWithRounds(df, "a", "b",
+          seed = seed, localBound = bound)
+        val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+        val what = s"graph $gen, ${if (seed.isEmpty) "cold" else "warm"}$path"
+        assert(got.sorted == expect.toSeq.sorted, what)
+        assert((rounds == 0) == (bound > 0), s"$what: wrong path, $rounds rounds")
+      }
+    }
+  }
+
+  for ((path, bound) <- ccPaths)
+  test(s"connectedComponents releases per-round snapshots (storage stays O(1) tables)$path") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // 64-node path → ~7 rounds; without the explicit release every round's
     // localCheckpoint would linger in persistent storage until driver GC
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
-    val out = Dedup.connectedComponents(edges, "a", "b")
+    val out = Dedup.connectedComponentsWithRounds(edges, "a", "b", localBound = bound)._1
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // at most the result's own checkpoint survives the call
-    assert(after.size <= 1, s"leaked ${after.size} persisted RDDs: $after")
+    // at most the result's own checkpoint survives the call; the local
+    // path's result is a driver-side relation, so nothing survives it
+    val allowed = if (bound > 0) 0 else 1
+    assert(after.size <= allowed, s"leaked ${after.size} persisted RDDs: $after")
     assert(out.count() == 64)
   }
 
-  test("connectedComponents rejects non-integral id columns loudly") {
+  for ((path, bound) <- ccPaths)
+  test(s"connectedComponents rejects non-integral id columns loudly$path") {
     val bad = Seq(("a", "b")).toDF("x", "y")
     val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(bad, "x", "y")
+      Dedup.connectedComponentsWithRounds(bad, "x", "y", localBound = bound)
     }
     assert(e.getMessage.contains("integral"))
   }
@@ -592,28 +642,30 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(rows.forall(r => (r._4 == 1) == (r._1 == r._2)))
   }
 
-  test("incrementalComponentAssignments == full recompute, incl. a new doc bridging two old clusters") {
+  for ((path, bound) <- ccPaths)
+  test(s"incrementalComponentAssignments == full recompute, incl. a new doc bridging two old clusters$path") {
     // old universe 0..9 with clusters {0,1,2} and {5,6}; new batch 10..12:
     // 10 bridges the two OLD clusters (the merge case the star reduction
     // must get right), 11 joins nothing (stays singleton), 12 pairs with 9
     // (an old singleton gets pulled into a new 2-cluster)
     val oldEdges = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("a", "b")
     val oldU = (0L to 9L).toDF("id")
-    val prior = Dedup.componentAssignments(oldU, "id", oldEdges, "a", "b")
+    val prior = Dedup.componentAssignments(oldU, "id", oldEdges, "a", "b",
+      localBound = bound)
     val newEdges = Seq((2L, 10L), (6L, 10L), (9L, 12L)).toDF("a", "b")
     val newU = (10L to 12L).toDF("id")
     val incr = Dedup.incrementalComponentAssignments(prior, newU, "id",
-        newEdges, "a", "b")
+        newEdges, "a", "b", localBound = bound)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     val full = Dedup.componentAssignments((0L to 12L).toDF("id"), "id",
-        oldEdges.unionByName(newEdges), "a", "b")
+        oldEdges.unionByName(newEdges), "a", "b", localBound = bound)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     assert(incr == full)
     // the SCOPED form must survive the hardest case — a new doc merging two
     // old clusters (both become "affected"; their stars enter the scoped
     // graph together)
     val scoped = Dedup.incrementalComponentAssignmentsScoped(prior, newU, "id",
-        newEdges, "a", "b")
+        newEdges, "a", "b", localBound = bound)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     assert(scoped == full)
     // the bridged mega-cluster kept the older label 0 and counts 10,
@@ -621,7 +673,8 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(incr.contains((10L, 0L, 6L, 0)))
   }
 
-  test("scoped incremental: untouched clusters pass through verbatim; touched recompute") {
+  for ((path, bound) <- ccPaths)
+  test(s"scoped incremental: untouched clusters pass through verbatim; touched recompute$path") {
     // clusters {0,1,2} (label 0) and {5,6} (label 5); singletons 3,4,7,8,9.
     // The batch touches ONLY cluster 0 (edge 2-10) and singleton 9 (edge
     // 9-12): cluster {5,6} and singletons 3,4,7,8 are untouched — the
@@ -629,17 +682,18 @@ class DedupSimilaritySpec extends SparkSpec {
     // canonical bit), while the affected subgraph recomputes.
     val oldEdges = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("a", "b")
     val oldU = (0L to 9L).toDF("id")
-    val prior = Dedup.componentAssignments(oldU, "id", oldEdges, "a", "b")
+    val prior = Dedup.componentAssignments(oldU, "id", oldEdges, "a", "b",
+      localBound = bound)
     val newEdges = Seq((2L, 10L), (9L, 12L)).toDF("a", "b")
     val newU = (10L to 12L).toDF("id")
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     val scoped = rows(Dedup.incrementalComponentAssignmentsScoped(prior, newU,
-      "id", newEdges, "a", "b"))
+      "id", newEdges, "a", "b", localBound = bound))
     val unscoped = rows(Dedup.incrementalComponentAssignments(prior, newU,
-      "id", newEdges, "a", "b"))
+      "id", newEdges, "a", "b", localBound = bound))
     val full = rows(Dedup.componentAssignments((0L to 12L).toDF("id"), "id",
-      oldEdges.unionByName(newEdges), "a", "b"))
+      oldEdges.unionByName(newEdges), "a", "b", localBound = bound))
     assert(scoped == full && unscoped == full)
     val priorRows = rows(prior)
     Seq(3L, 4L, 5L, 6L, 7L, 8L).foreach { v =>
