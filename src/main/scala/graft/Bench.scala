@@ -366,31 +366,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        // match Engine.session: AQE coalescing under persisted frames too
-        // (partition count follows data size; see Engine.scala)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_EVENTLOG_DIR=<dir>: write a Spark event log, which
-      // tools.EventLogTrace converts into a replayable gridmix trace — any
-      // logged run becomes a load mix (the Rumen role end-to-end). Each
-      // query sets its name as the job description (timeOnce below), so the
-      // converter can attribute jobs to queries.
-      sys.env.get("SPARK_GRAFT_EVENTLOG_DIR").fold(b) { d =>
-        new java.io.File(d).mkdirs()
-        b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", d)
-      }.getOrCreate()
-    }
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench")
 
     // Untimed warmup: pay executor spin-up, codegen compiler init, and first
     // shuffle setup once, outside any query's timing — otherwise the
@@ -416,14 +392,12 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "1").toInt)
     // Dev knob: SPARK_GRAFT_ONLY="q25,q31" runs a subset (and skips
     // tera/micro AND the scaling pass — scaling runs on full suites only).
-    // Matching is exact name or name prefix up to an underscore: a bare
-    // "q11" selects q11_datajoin, NOT q110–q119 (plain startsWith pulled in
-    // every three-digit query sharing the two-digit prefix).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) =>
-        only.forall(_.exists(o => n == o || n.startsWith(o + "_") ||
-          (o.endsWith("_") && n.startsWith(o)))) }
+    // Matching is SparkEntry.select: exact name or name prefix up to an
+    // underscore, so a bare "q11" selects q11_datajoin, NOT q110–q119 (plain
+    // startsWith pulled in every three-digit query sharing the two-digit
+    // prefix).
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val selected = SparkEntry.select(only)
     // Stage warmup (untimed): entries whose DECLARED measurement is an
     // increment over a shared per-process staged build (q94's incremental
     // fold over the staged prior, the q95/q99 consumers of the staged

@@ -2,18 +2,25 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** SparkSession factory + table registry over the driver testdata layout.
+/** The one SparkSession factory + table registry over the testdata layout
+  * (TESTDATA.md). Every main (Bench, Verify, PlanDump, DevRun), the perfbench
+  * harness and the spec suite build their session here, so a conf added
+  * once reaches all of them.
   *
   * Scale posture: AQE on (runtime re-plan, skew-join splitting, small-shuffle
-  * coalescing), shuffle partitions sized for local[32] here but overridable —
+  * coalescing), shuffle partitions = local cores here but overridable —
   * on a real cluster set `spark.sql.shuffle.partitions` ~ 2-3x total cores.
   */
 object Engine {
 
+  /** Local cores for the mains' master and shuffle partition count:
+    * SPARK_GRAFT_CPUS, default 4. */
+  private val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   def session(appName: String = "graft",
-              master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-              shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+              master: String = s"local[$cpus]",
+              shufflePartitions: Int = cpus): SparkSession = {
+    val b = SparkSession.builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -37,7 +44,15 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_GRAFT_EVENTLOG_DIR=<dir>: write a Spark event log, which
+    // tools.EventLogTrace converts into a replayable gridmix trace — any
+    // logged run becomes a load mix (the Rumen role end-to-end). Bench sets
+    // each query's name as its job description, so the converter can
+    // attribute jobs to queries.
+    val spark = sys.env.get("SPARK_GRAFT_EVENTLOG_DIR").fold(b) { d =>
+      new java.io.File(d).mkdirs()
+      b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", d)
+    }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -48,14 +63,14 @@ object Engine {
     /** events.ts normalized to TimestampType regardless of how the driver
       * generated the parquet column — the physical type has changed across
       * testdata generations: TIMESTAMP(NANOS) (unreadable by the vectorized
-      * reader; the legacy conf surfaces it as a nanos long we integer-divide
-      * to micros — double division would lose precision above 2^53 ns) and
-      * TIMESTAMP(MICROS) without UTC adjustment (reads as TIMESTAMP_NTZ; the
-      * cast re-interprets the wall-clock in the session's UTC zone, the same
-      * instant the nanos path produced). Queries downstream always see
-      * TimestampType with identical epoch micros. */
+      * reader; the legacy conf set in `session` surfaces it as a nanos long
+      * we integer-divide to micros — double division would lose precision
+      * above 2^53 ns) and TIMESTAMP(MICROS) without UTC adjustment (reads
+      * as TIMESTAMP_NTZ; the cast re-interprets the wall-clock in the
+      * session's UTC zone, the same instant the nanos path produced).
+      * Queries downstream always see TimestampType with identical epoch
+      * micros. */
     def events: DataFrame = {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = table("events")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

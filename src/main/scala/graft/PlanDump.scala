@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write the formatted physical plan of every declared query (or a
   * comma-separated subset) to `<outDir>/<query>_<suffix>.txt` — the
   * measurement artifact the optimization rounds commit under `plans/rNN/`
@@ -22,24 +20,10 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else "before"
-    val only = if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
+    val spark = Engine.session("graft-plandump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.exists(o => n == o || n.startsWith(o + "_")))
-    }
+    val selected = SparkEntry.select(only)
     selected.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"plandump:$name")
       try {

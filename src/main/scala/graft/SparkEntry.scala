@@ -612,6 +612,16 @@ object SparkEntry {
     "q124_stream_span_takedown" -> Queries.streamingSpanTakedownLifecycle _
   )
 
+  /** The declared queries a main runs, sorted by name. `None` selects every
+    * entry. Otherwise a name is selected when some `o` in `only` equals it,
+    * is its prefix up to an underscore (`q11` selects `q11_datajoin`, not
+    * `q110`–`q119`), or ends in `_` and is its prefix (`q11_`). */
+  def select(only: Option[Set[String]]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1).filter { case (n, _) =>
+      only.forall(_.exists(o => n == o || n.startsWith(o + "_") ||
+        (o.endsWith("_") && n.startsWith(o))))
+    }
+
   /** First 64 hex digits of π — computed independently of the BBP code via
     * Machin-formula big-int arithmetic; matches the published expansion. */
   private val PiHex64 =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,19 +6,7 @@ import java.util.concurrent.TimeUnit
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-verify")
     new java.io.File(outDir).mkdirs()
 
     // Write the oracle SQL FIRST: if a query later hangs or the process is
@@ -58,10 +45,8 @@ object Verify {
     }
     // Dev aid: SPARK_GRAFT_ONLY=q56_range_join,q31_sim_topk restricts the run
     // to named queries (the driver never sets it, so its runs stay complete).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.select(
+      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet))
     val futures = selected.map { case (name, fn) =>
       name -> pool.submit(new Runnable {
         def run(): Unit = {

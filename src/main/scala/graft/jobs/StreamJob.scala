@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.operators.{KeyFieldSort, Pipe}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** The hadoop-streaming job facade: `-mapper cmd [-combiner cmd] -reducer cmd`
@@ -90,9 +90,4 @@ object StreamJob {
     if (spec.reducer.isEmpty) shuffled
     else Pipe.pipeLines(shuffled, spec.reducer)
   }
-
-  /** Convenience: run over text files (TextInputFormat's value stream). */
-  def runText(spark: SparkSession, inputPath: String, spec: Spec): Dataset[String] =
-    run(graft.sources.Sources.text(spark, inputPath)
-      .select(col("value")).as(Encoders.STRING), spec)
 }

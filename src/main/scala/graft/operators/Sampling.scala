@@ -5,11 +5,13 @@ import org.apache.spark.sql.functions._
 
 /** Record-sampling filters.
   *
-  * Re-expresses SequenceFileInputFilter's three filter classes
+  * Re-expresses SequenceFileInputFilter's filter classes
   * (hadoop-mapreduce-client-core .../lib/input/SequenceFileInputFilter.java:
-  * RegexFilter :111, PercentFilter :154, MD5Filter :203) plus InputSampler's
-  * strategies (.../lib/partition/InputSampler.java:97-249) as pure column
-  * predicates / built-in sampling — all pushdown-friendly, no extra pass.
+  * RegexFilter :111, MD5Filter :203) as pure column predicates —
+  * pushdown-friendly, no extra pass. PercentFilter (:154) samples by record
+  * order, which Spark has no stable index for; md5Filter is the
+  * content-deterministic 1/f sample in its place. InputSampler's split
+  * points are Spark's orderBy range partitioning.
   */
 object Sampling {
 
@@ -28,17 +30,4 @@ object Sampling {
   def md5HashBucket(keyCol: Column, frequency: Int): Column =
     pmod(conv(substring(md5(keyCol.cast("binary")), 1, 8), 16, 10).cast("long"),
       lit(frequency.toLong))
-
-  /** PercentFilter ≙ hash-mod sampling on record order isn't reproducible in
-    * Spark (no stable record index); the honest equivalents are md5Filter
-    * (content-deterministic) or Bernoulli sampling: */
-  def bernoulliSample(df: DataFrame, fraction: Double, seed: Long): DataFrame =
-    df.sample(withReplacement = false, fraction, seed)
-
-  /** InputSampler.RandomSampler ≙ reservoir-style key sampling for range
-    * partitioning — built into Spark's orderBy; exposed here as explicit
-    * split-point computation for diagnostic use. */
-  def splitPoints(df: DataFrame, keyCol: String, numPartitions: Int): Array[Double] =
-    df.stat.approxQuantile(keyCol,
-      (1 until numPartitions).map(_.toDouble / numPartitions).toArray, 0.01)
 }

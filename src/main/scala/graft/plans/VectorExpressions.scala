@@ -274,12 +274,6 @@ object VectorExpressions {
   def vec_dot(a: Column, b: Column): Column =
     Shim.column(VectorDot(Shim.expression(a), Shim.expression(b)))
 
-  /** Cosine similarity built on the native dot. */
-  def vec_cosine(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    vec_dot(a, b) / (sqrt(vec_dot(a, a)) * sqrt(vec_dot(b, b)))
-  }
-
   /** All multi-table LSH signatures of `vec` as one array<long> column —
     * `planes` is the flat per-table/per-plane layout
     * (table-major: plane (t, p) occupies [(t*numPlanes+p)*dim, +dim)),

@@ -42,14 +42,6 @@ object Streams {
       .groupBy(window(col("ts"), window_).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
-  /** Sliding-window variant. */
-  def slidingCounts(events: DataFrame, window_ : String, slide: String,
-                    lateness: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), window_, slide).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-
   /** Streaming exact dedup on `keyCols` — the continuous-ingest counterpart
     * of `Dedup.exactDedup` for an always-on corpus pipeline. State is bounded
     * by the watermark: a key is remembered only `lateness` past its event

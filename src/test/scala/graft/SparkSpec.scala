@@ -3,15 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session). */
+/** Shared local SparkSession for all suites (one JVM-wide session), built by
+  * the same factory as every main so the specs run the production config. */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Engine.session("graft-test", "local[4]", 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
