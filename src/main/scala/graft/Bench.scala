@@ -7,24 +7,32 @@ import java.util.concurrent.Executors
   * per-query seconds, in the shape BASELINE.md prescribes.
   *
   * Queries execute their FULL plan into the noop sink (a bare count() would
-  * let Catalyst prune sorts/projections and under-measure). The suite runs
-  * sequentially by default: concurrent jobs in one local JVM serialize on
-  * driver planning + janino codegen locks (measured 2.5x slower wall with a
-  * 4-thread pool). TeraGen/TeraSort/TeraValidate and the MRBench-style
-  * micro-job loop are reported as additional entries (graft.bench.TeraBench).
+  * let Catalyst prune sorts/projections and under-measure), one at a time.
+  * TeraGen/TeraSort/TeraValidate, DFSIO, DistCp, the MRBench-style
+  * micro-job loop, gridmix-lite, the calibration probes and the soak legs
+  * are reported as additional entries.
+  *
+  * One measurement path: every entry is recorded in one
+  * [[graft.bench.SampleLog]] under a kind its leg declares — `Seconds`
+  * (additive work), `Stat` (seconds that summarize other work: mrbench
+  * min/max, gridmix percentiles, calib probes) or `Count` (rounds, rows).
+  * Every JSON statistic is computed from that log, and every non-query leg
+  * runs through its one runner, `SampleLog.leg`.
   *
   * Stall defense: the host shows multi-minute slow windows (a query measured
   * 233 s in one round benched ~2 s in every local run; round 4's whole suite
   * doubled on a byte-identical binary). Any query whose first measurement
   * exceeds SPARK_GRAFT_REBENCH_SEC (default 4 s; 0 disables) is re-run after
   * the first pass and the MINIMUM is reported — a stall window inflates one
-  * pass, not both. So a stall can never masquerade as a regression (or vice
-  * versa), the JSON reports BOTH statistics: "queries"/"value" are the
-  * per-entry minima (what the engine costs), "first"/"first_total" are the
-  * untouched first-pass numbers (what this host run actually saw) — a large
-  * first_total/value gap IS the stall signature. Failures are never silent:
-  * "failed" counts entries that errored (their names in "failed_entries"),
-  * so a partially-failed run can't look fast.
+  * pass, not both; legs re-run once past their own threshold. So a stall can
+  * never masquerade as a regression (or vice versa), the JSON reports BOTH
+  * statistics: "queries" are the per-entry minima (what the engine costs),
+  * "first" the untouched first-pass numbers (what this host run actually
+  * saw) — a large first_total/value gap IS the stall signature. "value",
+  * "first_total" and "median_total" sum the `Seconds` entries only; `Count`
+  * entries appear only under "counts". Failures are never silent: "failed"
+  * counts entries that errored (their names in "failed_entries"), so a
+  * partially-failed run can't look fast.
   *
   * Scaling check: after the main suite, every query is also timed once at
   * sf0.01 and "scaling" reports the sf-dir/sf0.01 time ratio per query
@@ -41,11 +49,11 @@ import java.util.concurrent.Executors
   * queries; extra passes are tagged "rebench:" in the event log like all
   * re-measurements.
   *
-  * Tera stage attribution: the TeraGen/TeraSort legs run under a listener
-  * that records per-stage wall times ("tera_stages" in the JSON, keyed
-  * p<pass>_<phase>_s<ordinal>), so a slow terasort_validate is attributable
-  * to its sampling / shuffle-write / sort+validate stage instead of being
-  * one opaque number.
+  * Tera stage attribution: each TeraGen/TeraSort phase tags its jobs, and
+  * [[graft.tools.StageLog]] records per-stage wall times ("tera_stages" in
+  * the JSON, keyed p<pass>_<phase>_s<ordinal>), so a slow terasort_validate
+  * is attributable to its sampling / shuffle-write / sort+validate stage
+  * instead of being one opaque number.
   */
 object Bench {
   /** Baseline-persistence rule for the scaling tracker. A REGRESSED query
@@ -364,9 +372,28 @@ object Bench {
       .orderBy(col("k"))
   }
 
+  /** Stall-defense re-passes over the slow queries: a stall window can
+    * cover two consecutive passes (one full-suite run measured a query at
+    * 55.9 s whose isolated rerun minutes later took 14.6 s). */
+  private val RebenchPasses = 2
+  /** Wall budget for those re-passes: if the host is slow for the WHOLE
+    * run (not a window), re-running everything twice more would triple the
+    * wall-clock, so re-passes stop once the budget is spent and keep
+    * whatever measurements exist. */
+  private val RebenchBudgetSec = 600.0
+  /** Gridmix-lite's contended pool and its default mix size. */
+  private val GridmixPools = 3
+  private val GridmixJobs = 24
+
   def main(args: Array[String]): Unit = {
+    import graft.bench.Kind.{Count, Seconds, Stat}
+    type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session("graft-bench")
+    // Attached for the whole run: tera_stages is read from it at the end,
+    // long after the tera phases' last stage events were delivered.
+    val stageLog = new graft.tools.StageLog
+    spark.sparkContext.addSparkListener(stageLog)
 
     // Untimed warmup: pay executor spin-up, codegen compiler init, and first
     // shuffle setup once, outside any query's timing — otherwise the
@@ -378,18 +405,7 @@ object Bench {
     }
 
     val t0 = System.nanoTime()
-    val results = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    // First-pass measurements, never overwritten by re-benching: the honest
-    // "what this run saw" statistic next to the stall-filtered minimum.
-    val firstPass = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    // EVERY successful measurement per entry — the sample the medians are
-    // computed from (minima come from `results`, which min-folds in place).
-    val allRuns = new java.util.concurrent.ConcurrentHashMap[String, java.util.Queue[Double]]()
-    def recordRun(name: String, v: Double): Unit =
-      if (v > 0) allRuns.computeIfAbsent(name,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[Double]()).add(v)
-    val pool = Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "1").toInt)
+    val sampleLog = new graft.bench.SampleLog
     // Dev knob: SPARK_GRAFT_ONLY="q25,q31" runs a subset (and skips
     // tera/micro AND the scaling pass — scaling runs on full suites only).
     // Matching is SparkEntry.select: exact name or name prefix up to an
@@ -398,6 +414,16 @@ object Bench {
     // prefix).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.select(only)
+    // Every job of `body` carries `desc` in the event log, so EventLogTrace
+    // can rebuild a replayable trace from it and StageLog can attribute
+    // stages. Prefixed re-runs ("rebench:", "gridmix:", "scaling:",
+    // "rescale:", "reabs:") keep one bare-name span per query: a re-run
+    // under the bare name would stretch the query's (first submission,
+    // last completion) span by the whole inter-pass wall time.
+    def described[T](desc: String)(body: => T): T = {
+      spark.sparkContext.setJobDescription(desc)
+      try body finally spark.sparkContext.setJobDescription(null)
+    }
     // Stage warmup (untimed): entries whose DECLARED measurement is an
     // increment over a shared per-process staged build (q94's incremental
     // fold over the staged prior, the q95/q99 consumers of the staged
@@ -418,46 +444,43 @@ object Bench {
     // q118/q119), so a full-query warmup would pay an extra untimed rebuild
     // whose only reusable side effect is the staging itself.
     val stagedConsumers = Seq("q94_", "q95_", "q99_", "q117_", "q118_", "q119_")
-    def stageWarm(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  dir: String): Unit =
-      if (stagedConsumers.exists(name.startsWith)) {
-        spark.sparkContext.setJobDescription(s"stagewarm:$name")
+    def stageWarm(name: String, fn: Query, dir: String): Unit =
+      if (stagedConsumers.exists(name.startsWith)) described(s"stagewarm:$name") {
         try {
           if (!Queries.warmStagedState(spark, dir, name))
             fn(spark, dir).write.mode("overwrite").format("noop").save()
         } catch { case e: Throwable =>
           System.err.println(s"[bench] stage warmup $name failed: ${e.getMessage}")
-        } finally spark.sparkContext.setJobDescription(null)
+        }
       }
     selected.foreach { case (name, fn) => stageWarm(name, fn, sfDir) }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // The one query timer: seconds to run the full plan into the noop sink
+    // under job description `name`, or -1 if it failed.
+    def timeOnce(name: String, fn: Query, dir: String = sfDir): Double = described(name) {
       val q0 = System.nanoTime()
-      // thread-local job description: tags this query's jobs in the Spark
-      // event log so EventLogTrace can rebuild a replayable trace from it
-      spark.sparkContext.setJobDescription(name)
       try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        fn(spark, dir).write.mode("overwrite").format("noop").save()
         (System.nanoTime() - q0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0
-      } finally spark.sparkContext.setJobDescription(null)
+      }
     }
+    val rebenchSec = sys.env.getOrElse("SPARK_GRAFT_REBENCH_SEC", "4").toDouble
+    // a leg's re-run threshold, unless re-benching is switched off
+    def slow(sec: Double): Option[Double] = Some(sec).filter(_ => rebenchSec > 0)
     // Fixed-work calibration probes, run at the START and END of the run so
     // the record brackets the whole window (first = start sample, min =
     // best, median = the two-sample mean — a large first/min gap IS
     // within-run drift). calib_cpu times the pinned in-memory kernel (host
     // speed, no Spark); calib_spark times a pinned 4M-row synthesized
     // global sort through the same timeOnce/noop path every query uses
-    // (scheduler + shuffle + codegen fixed work, no data dir). Neither is
-    // additive work — excluded from the totals below — and neither enters
-    // the scaling probe (not in `selected`). Round-over-round, the
-    // driver-window/quiet-window speed question becomes ONE division:
-    // window_a.calib / window_b.calib.
-    val calibSparkFn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      (s, _) => calibSparkPlan(s)
+    // (scheduler + shuffle + codegen fixed work, no data dir). Both are
+    // Stat entries, and neither enters the scaling probe (not in
+    // `selected`). Round-over-round, the driver-window/quiet-window speed
+    // question becomes ONE division: window_a.calib / window_b.calib.
     def runCalib(initial: Boolean): Unit = {
-      try {
+      sampleLog.leg(Seq("calib_cpu" -> Stat)) { _ =>
         if (initial) calibrationWork(1) // untimed JIT warm of the kernel loop
         val t = System.nanoTime()
         val acc = calibrationWork(CalibReps)
@@ -465,174 +488,71 @@ object Bench {
         require(acc == CalibExpected,
           s"calibration kernel produced $acc, expected $CalibExpected — " +
             "the probe is not running its pinned work")
-        recordRun("calib_cpu", c)
-        firstPass.putIfAbsent("calib_cpu", c)
-        if (c < results.getOrDefault("calib_cpu", Double.MaxValue))
-          results.put("calib_cpu", c)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] calib_cpu failed: ${e.getMessage}")
-        results.putIfAbsent("calib_cpu", -1.0)
+        Seq("calib_cpu" -> c)
       }
-      val sp = timeOnce(if (initial) "calib_spark" else "rebench:calib_spark",
-        calibSparkFn)
-      if (sp > 0) {
-        recordRun("calib_spark", sp)
-        firstPass.putIfAbsent("calib_spark", sp)
-        if (sp < results.getOrDefault("calib_spark", Double.MaxValue))
-          results.put("calib_spark", sp)
-      } else results.putIfAbsent("calib_spark", -1.0)
+      sampleLog.leg(Seq("calib_spark" -> Stat)) { _ =>
+        Seq("calib_spark" -> timeOnce(if (initial) "calib_spark" else "rebench:calib_spark",
+          (s, _) => calibSparkPlan(s)))
+      }
     }
     runCalib(initial = true)
-    val futures = selected.map { case (name, fn) =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          val v = timeOnce(name, fn)
-          results.put(name, v)
-          firstPass.put(name, v)
-          recordRun(name, v)
-        }
-      })
+    // The query pass runs sequentially: concurrent jobs in one local JVM
+    // serialize on driver planning + janino codegen locks (measured 2.5x
+    // slower wall with a 4-thread pool).
+    selected.foreach { case (name, fn) =>
+      sampleLog.declare(name, Seconds)
+      sampleLog.record(name, timeOnce(name, fn))
     }
-    futures.foreach(_.get())
-    pool.shutdown()
     // Optional extra full passes (SPARK_GRAFT_BENCH_PASSES=N): the median
     // then rests on N samples for every query, not just the re-benched slow
-    // ones. Tagged "rebench:" so the event-log trace keeps one bare-name
-    // span per query.
+    // ones.
     val benchPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "1").toInt
     (1 until benchPasses).foreach { _ =>
-      selected.foreach { case (name, fn) =>
-        val v = timeOnce(s"rebench:$name", fn)
-        recordRun(name, v)
-        if (v > 0 && v < results.getOrDefault(name, Double.MaxValue))
-          results.put(name, v)
-      }
+      selected.foreach { case (name, fn) => sampleLog.record(name, timeOnce(s"rebench:$name", fn)) }
     }
     // Re-measure suspiciously slow queries (host stall defense — see
-    // scaladoc): up to REBENCH_MAX extra passes, keeping the best, stopping
-    // once a query measures under the threshold. (A stall window can cover
-    // two consecutive passes — one full-suite run measured a query at 55.9 s
-    // whose isolated rerun minutes later took 14.6 s.)
-    val rebenchSec = sys.env.getOrElse("SPARK_GRAFT_REBENCH_SEC", "4").toDouble
-    val rebenchMax = sys.env.getOrElse("SPARK_GRAFT_REBENCH_MAX", "2").toInt
-    // Global wall budget for re-measurement: if the host is slow for the
-    // WHOLE run (not a window), re-running everything 2x more would triple
-    // the wall-clock — stop re-running once the budget is spent and keep
-    // whatever measurements exist.
-    val rebenchBudgetSec = sys.env.getOrElse("SPARK_GRAFT_REBENCH_BUDGET_SEC", "600").toDouble
-    val rebenchDeadline = System.nanoTime() + (rebenchBudgetSec * 1e9).toLong
-    var pass = 0
-    var anySlow = true
-    while (rebenchSec > 0 && anySlow && pass < rebenchMax &&
-           System.nanoTime() < rebenchDeadline) {
-      val slow = selected.filter { case (n, _) => results.getOrDefault(n, -1.0) > rebenchSec }
-      anySlow = slow.nonEmpty
-      slow.foreach { case (name, fn) =>
-        if (System.nanoTime() < rebenchDeadline) {
-          val best = results.get(name)
-          // "rebench:" prefix: a re-run under the bare name would extend the
-          // query's (first submission, last completion) span in the event
-          // log by the whole inter-pass wall time, corrupting the trace
-          // EventLogTrace derives (the gridmix/rescale legs prefix likewise)
-          val again = timeOnce(s"rebench:$name", fn)
-          recordRun(name, again)
-          if (again > 0 && again < best) results.put(name, again)
-        }
-      }
-      pass += 1
+    // scaladoc): up to RebenchPasses passes within RebenchBudgetSec, each
+    // over the queries whose minimum is still over the threshold.
+    if (rebenchSec > 0) {
+      val deadline = System.nanoTime() + (RebenchBudgetSec * 1e9).toLong
+      Iterator.range(0, RebenchPasses)
+        .map(_ => selected.filter { case (n, _) => sampleLog.min(n) > rebenchSec })
+        .takeWhile(_.nonEmpty)
+        .foreach(_.foreach { case (name, fn) =>
+          if (System.nanoTime() < deadline) sampleLog.record(name, timeOnce(s"rebench:$name", fn))
+        })
     }
 
-    // A failed harness leg (validation require, I/O error) must surface as a
-    // failed entry in the JSON, never abort main before the JSON is written —
-    // the same never-silent contract the query entries have.
-    def guarded(names: Seq[String])(body: => Unit): Unit =
-      try body catch { case e: Throwable =>
-        System.err.println(s"[bench] ${names.head} family failed: ${e.getMessage}")
-        names.foreach(n => results.putIfAbsent(n, -1.0))
-      }
     // TeraGen → TeraSort → TeraValidate chain (1M rows ≙ 100 MB teradata),
     // with the same stall defense as the queries (a 73 s terasort was once
     // measured during a host slow window; local norm is ~6 s).
-    val teraStages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    if (only.isEmpty) guarded(Seq("teragen", "terasort_validate")) {
+    if (only.isEmpty) {
       import graft.bench.TeraBench._
       // 10M rows = 1 GB of teradata: enough to exercise real shuffle
       // spill/merge (1M = 100 MB finished in 0.4 s and measured overhead,
       // not sorting)
       val rows = sys.env.getOrElse("SPARK_GRAFT_TERA_ROWS", "10000000").toLong
-      // Stage attribution: while a tera phase runs, record each completed
-      // stage's wall time keyed p<pass>_<phase>_s<ordinal> (submission
-      // order). terasort_validate's three stages are the range-boundary
-      // SAMPLING scan, the shuffle-WRITE map stage, and the sorted
-      // VALIDATE scan — so a slow run names its culprit. Listener events
-      // post asynchronously: the tag is read at event delivery, which can
-      // in principle mis-tag a stage completing exactly at a phase
-      // boundary — fine for a diagnostic (phases end with a collect that
-      // drains the last stage before the next phase's first job).
-      @volatile var phaseTag = ""
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val tag = phaseTag
-          if (tag.nonEmpty)
-            for (sub <- e.stageInfo.submissionTime; done <- e.stageInfo.completionTime)
-              teraStages.synchronized {
-                val ord = teraStages.count(_._1.startsWith(tag))
-                teraStages += ((f"${tag}_s$ord%02d", (done - sub) / 1000.0))
-              }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      def teraOnce(pass: Int): (Double, Double) = try {
-        var t = System.nanoTime()
+      // Stage attribution: each phase runs under job description
+      // p<pass>_<phase>, so StageLog files its stages as tera_stages
+      // p<pass>_<phase>_s<ordinal>. terasort_validate's three stages are
+      // the range-boundary SAMPLING scan, the shuffle-WRITE map stage, and
+      // the sorted VALIDATE scan — so a slow run names its culprit.
+      sampleLog.leg(Seq("teragen" -> Seconds, "terasort_validate" -> Seconds), slow(rebenchSec)) { pass =>
         // gensort-bit-compatible records (GenSortParity); checksum protocol =
         // sum of per-record CRC32, as the reference's CHECKSUM counter.
         // No cache: regenerating 1M records is cheaper than caching 100 MB.
-        phaseTag = s"p${pass}_teragen"
-        val gen = graft.bench.GenSortParity.teraGen(spark, rows)
-        val genSum = checksum(gen)
+        var t = System.nanoTime()
+        val (gen, genSum) = described(s"p${pass}_teragen") {
+          val gen = graft.bench.GenSortParity.teraGen(spark, rows)
+          (gen, checksum(gen))
+        }
         val tGen = (System.nanoTime() - t) / 1e9
         t = System.nanoTime()
-        phaseTag = s"p${pass}_terasort"
-        val sorted = teraSort(gen)
-        val (n, sortSum, ordered) = validate(sorted)
+        val (n, sortSum, ordered) = described(s"p${pass}_terasort")(validate(teraSort(gen)))
         val tSort = (System.nanoTime() - t) / 1e9
         require(n == rows && sortSum == genSum && ordered,
           s"terasort validation failed: n=$n ordered=$ordered sums $genSum/$sortSum")
-        (tGen, tSort)
-      } finally phaseTag = ""
-      try {
-        val (tGen, tSort) = teraOnce(0)
-        firstPass.put("teragen", tGen)
-        firstPass.put("terasort_validate", tSort)
-        recordRun("teragen", tGen); recordRun("terasort_validate", tSort)
-        // first-pass values land in results BEFORE any re-bench attempt: a
-        // re-bench failure must degrade to the measured first pass, never
-        // discard it (same pattern in the dfsio/mrbench blocks below)
-        results.put("teragen", tGen)
-        results.put("terasort_validate", tSort)
-        if (rebenchSec > 0 && (tGen > rebenchSec || tSort > rebenchSec)) {
-          try {
-            val (g2, s2) = teraOnce(1)
-            recordRun("teragen", g2); recordRun("terasort_validate", s2)
-            results.put("teragen", math.min(tGen, g2))
-            results.put("terasort_validate", math.min(tSort, s2))
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] tera re-bench failed (keeping first pass): ${e.getMessage}")
-          }
-        }
-      } finally {
-        // listener events post asynchronously — wait for the stage log to
-        // go quiet before removing, or the final (often slowest) validate
-        // stage would nondeterministically vanish from tera_stages
-        val deadline = System.currentTimeMillis + 2000
-        var last = -1; var stable = 0
-        while (System.currentTimeMillis < deadline && stable < 2) {
-          val n = teraStages.synchronized(teraStages.size)
-          if (n == last) stable += 1 else { stable = 0; last = n }
-          Thread.sleep(100)
-        }
-        spark.sparkContext.removeSparkListener(listener)
+        Seq("teragen" -> tGen, "terasort_validate" -> tSort)
       }
     }
     // TestDFSIO-equivalent throughput legs (BASELINE.md's remaining metric
@@ -640,108 +560,73 @@ object Bench {
     // records; mb/sec = MB / seconds.
     if (only.isEmpty) {
       val mb = sys.env.getOrElse("SPARK_GRAFT_DFSIO_MB", "256").toInt
-      val legNames = Seq("write", "read", "append", "random_read",
-        "backward_read", "skip_read").map(l => s"dfsio_${l}_${mb}mb")
-      guarded(legNames) {
-        def dfsioOnce(): Seq[(String, Double)] = graft.bench.DfsioBench.run(spark, mb)
-          .map { case (leg, sec) => s"dfsio_${leg}_${mb}mb" -> sec }
-        val io = dfsioOnce()
-        io.foreach { case (k, v) => firstPass.put(k, v); results.put(k, v); recordRun(k, v) }
-        if (rebenchSec > 0 && io.exists(_._2 > rebenchSec)) {
-          try {
-            val again = dfsioOnce().toMap
-            again.foreach { case (k, v) => recordRun(k, v) }
-            io.foreach { case (k, v) => results.put(k, math.min(v, again(k))) }
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] dfsio re-bench failed (keeping first pass): ${e.getMessage}")
-          }
-        }
+      def entry(leg: String) = s"dfsio_${leg}_${mb}mb"
+      sampleLog.leg(Seq("write", "read", "append", "random_read", "backward_read", "skip_read")
+          .map(entry(_) -> Seconds), slow(rebenchSec)) { _ =>
+        graft.bench.DfsioBench.run(spark, mb).map { case (leg, sec) => entry(leg) -> sec }
       }
     }
     // DistCp-equivalent leg: copy a generated tree of SPARK_GRAFT_DISTCP_MB
     // MiB with per-file checksum validation (graft.tools.DistCopy) — the
     // operational-tool throughput number next to the DFSIO family.
     if (only.isEmpty) {
+      import org.apache.spark.sql.functions._
       val mb = sys.env.getOrElse("SPARK_GRAFT_DISTCP_MB", "256").toInt
       val name = s"distcp_${mb}mb"
       val updName = s"distcp_update_${mb}mb"
-      guarded(Seq(name, updName)) {
-        import org.apache.spark.sql.functions._
-        val dir = graft.sources.Scratch.dir(spark,
-          s"graft_distcp_${spark.sparkContext.applicationId}")
-        val srcDir = s"$dir/src"
-        try {
+      // created by the first pass, so a failure to create it fails the leg
+      lazy val dir = graft.sources.Scratch.dir(spark,
+        s"graft_distcp_${spark.sparkContext.applicationId}")
+      def srcDir = s"$dir/src"
+      def actionsOf(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+        df.groupBy("action").agg(count(lit(1)).as("n")).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      try {
+        sampleLog.leg(Seq(name -> Seconds), slow(rebenchSec)) { i =>
           // untimed setup: the same 1 KiB-record dataset shape DFSIO uses,
           // written as a multi-file tree (one file per write task)
-          val rows = mb.toLong * 1024L
-          val filler = "x" * (1024 - 19 - 1)
-          spark.range(rows)
-            .select(concat(lpad(col("id").cast("string"), 19, "0"), lit(filler)).as("value"))
-            .write.mode("overwrite").text(srcDir)
-          def actionsOf(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
-            df.groupBy("action").agg(count(lit(1)).as("n")).collect()
-              .map(r => r.getString(0) -> r.getLong(1)).toMap
-          def distcpOnce(i: Int): Double = {
-            val dstDir = s"$dir/dst$i"
-            val t0 = System.nanoTime()
-            val actions = actionsOf(graft.tools.DistCopy.copy(spark, srcDir, dstDir))
-            val sec = (System.nanoTime() - t0) / 1e9
-            require(actions.keySet == Set("copy") && actions("copy") > 0,
-              s"distcp unexpected actions: $actions")
-            sec
+          if (i == 0) {
+            val filler = "x" * (1024 - 19 - 1)
+            spark.range(mb.toLong * 1024L)
+              .select(concat(lpad(col("id").cast("string"), 19, "0"), lit(filler)).as("value"))
+              .write.mode("overwrite").text(srcDir)
           }
-          val v = distcpOnce(0)
-          firstPass.put(name, v); results.put(name, v); recordRun(name, v)
-          if (rebenchSec > 0 && v > rebenchSec) {
-            try {
-              val v2 = distcpOnce(1)
-              recordRun(name, v2)
-              results.put(name, math.min(v, v2))
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] distcp re-bench failed (keeping first pass): ${e.getMessage}")
-            }
-          }
-          // -update re-run over the tree just copied: every file must SKIP,
-          // but both sides are fully checksummed — the incremental-copy
-          // (read-dominated) throughput number
-          val tu = System.nanoTime()
+          val c0 = System.nanoTime()
+          val actions = actionsOf(graft.tools.DistCopy.copy(spark, srcDir, s"$dir/dst$i"))
+          val sec = (System.nanoTime() - c0) / 1e9
+          require(actions.keySet == Set("copy") && actions("copy") > 0,
+            s"distcp unexpected actions: $actions")
+          Seq(name -> sec)
+        }
+        // -update re-run over the tree just copied: every file must SKIP,
+        // but both sides are fully checksummed — the incremental-copy
+        // (read-dominated) throughput number
+        sampleLog.leg(Seq(updName -> Seconds)) { _ =>
+          val c0 = System.nanoTime()
           val upd = actionsOf(graft.tools.DistCopy.copy(spark, srcDir, s"$dir/dst0",
             update = true))
-          val updSec = (System.nanoTime() - tu) / 1e9
+          val sec = (System.nanoTime() - c0) / 1e9
           require(upd.keySet == Set("skip"), s"distcp update unexpected actions: $upd")
-          firstPass.put(updName, updSec); results.put(updName, updSec); recordRun(updName, updSec)
-        } finally {
-          try graft.sources.Scratch.delete(spark.sparkContext.hadoopConfiguration, dir)
-          catch { case e: Exception =>
-            System.err.println(s"[bench] distcp cleanup failed: ${e.getMessage}")
-          }
+          Seq(updName -> sec)
+        }
+      } finally {
+        try graft.sources.Scratch.delete(spark.sparkContext.hadoopConfiguration, dir)
+        catch { case e: Exception =>
+          System.err.println(s"[bench] distcp cleanup failed: ${e.getMessage}")
         }
       }
     }
-    if (only.isEmpty) guarded(Seq("mrbench_avg")) {
-      // MRBench report shape = the reference's avg/min/max over the run loop
-      // (MRBench.java:223-235), per input order asc/desc/random (:305-341).
-      // min/max are statistics OF the avg runs, not extra work — they are
-      // excluded from the additive totals below.
-      def mrbenchOnce(): Seq[(String, Double)] = {
-        val (avg, mn, mx) = graft.bench.TeraBench.microJobLoop(spark, runs = 5, inputLines = 100000)
-        val (descAvg, descMn, descMx) = graft.bench.TeraBench.microJobLoop(spark, runs = 2,
-          inputLines = 100000, order = "desc")
-        val (rndAvg, rndMn, rndMx) = graft.bench.TeraBench.microJobLoop(spark, runs = 2,
-          inputLines = 100000, order = "random")
-        Seq("mrbench_avg" -> avg, "mrbench_min" -> mn, "mrbench_max" -> mx,
-          "mrbench_desc_avg" -> descAvg, "mrbench_desc_min" -> descMn, "mrbench_desc_max" -> descMx,
-          "mrbench_random_avg" -> rndAvg, "mrbench_random_min" -> rndMn, "mrbench_random_max" -> rndMx)
-      }
-      val mr = mrbenchOnce()
-      mr.foreach { case (k, v) => firstPass.put(k, v); results.put(k, v); recordRun(k, v) }
-      if (rebenchSec > 0 && mr.exists(_._2 > rebenchSec)) {
-        try {
-          val again = mrbenchOnce().toMap
-          again.foreach { case (k, v) => recordRun(k, v) }
-          mr.foreach { case (k, v) => results.put(k, math.min(v, again(k))) }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] mrbench re-bench failed (keeping first pass): ${e.getMessage}")
+    // MRBench report shape = the reference's avg/min/max over the run loop
+    // (MRBench.java:223-235), per input order asc/desc/random (:305-341).
+    // min/max are statistics OF the avg runs, not extra work: Stat entries.
+    if (only.isEmpty) {
+      val orders = Seq(("", "asc", 5), ("_desc", "desc", 2), ("_random", "random", 2))
+      sampleLog.leg(for ((o, _, _) <- orders; (s, k) <- Seq("avg" -> Seconds, "min" -> Stat, "max" -> Stat))
+          yield s"mrbench${o}_$s" -> k, slow(rebenchSec)) { _ =>
+        orders.flatMap { case (o, order, runs) =>
+          val (avg, mn, mx) = graft.bench.TeraBench.microJobLoop(spark, runs = runs,
+            inputLines = 100000, order = order)
+          Seq(s"mrbench${o}_avg" -> avg, s"mrbench${o}_min" -> mn, s"mrbench${o}_max" -> mx)
         }
       }
     }
@@ -757,16 +642,16 @@ object Bench {
     //    logs; here every gridmix run WRITES gridmix_trace.json, so any
     //    run's mix can be replayed and compared).
     // gridmix_p50/p95 are latency ORDER STATISTICS over the mixed jobs, not
-    // extra sequential work — excluded from the additive totals below.
-    if (only.isEmpty && sys.env.getOrElse("SPARK_GRAFT_GRIDMIX", "1") == "1") {
-      val pools = sys.env.getOrElse("SPARK_GRAFT_GRIDMIX_POOLS", "3").toInt
+    // extra sequential work: Stat entries.
+    if (only.isEmpty) {
       val byName = selected.toMap
       // One gridmix leg: build the mix (trace replay or stride sample), run
       // it on the contended pool, optionally capture the executed mix as a
-      // replayable trace, return (p50, p95) latency order statistics.
-      def runMix(traceFile: Option[String], captureTo: Option[String]): (Double, Double) = {
+      // replayable trace, return the <prefix>_p50/_p95 latency statistics.
+      def runMix(prefix: String, traceFile: Option[String],
+                 captureTo: Option[String]): Seq[(String, Double)] = {
         // (query, submit-offset-ms) pairs: trace order, or stride sample at 0
-        val mix: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame, Long)] =
+        val mix: Seq[(String, Query, Long)] =
           traceFile match {
             case Some(path) =>
               val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
@@ -793,8 +678,7 @@ object Bench {
               // copies of one query must never run concurrently. The stride
               // is coprime with the suite size so the walk visits distinct
               // queries across the whole suite, not the alphabetical head.
-              val jobs = math.min(selected.size,
-                sys.env.getOrElse("SPARK_GRAFT_GRIDMIX_JOBS", "24").toInt)
+              val jobs = math.min(selected.size, GridmixJobs)
               val stride = Iterator.from(7)
                 .find(s => BigInt(s).gcd(BigInt(selected.size)) == 1).get
               (0 until jobs).map { i =>
@@ -805,7 +689,7 @@ object Bench {
           "gridmix: empty job mix (a trace file must contain this bench's own " +
             "gridmix_trace.json format and name queries that exist)")
         val lat = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, java.lang.Double)]()
-        val gpool = Executors.newFixedThreadPool(pools)
+        val gpool = Executors.newFixedThreadPool(GridmixPools)
         val g0 = System.nanoTime()
         // submit in offset order from this thread: trace replay preserves
         // the recorded arrival pattern, the default all-at-zero mix degrades
@@ -842,46 +726,28 @@ object Bench {
         val xs = done.map(_._3.doubleValue()).sorted
         def pct(p: Double): Double = xs(math.min(xs.size - 1,
           math.max(0, math.ceil(p * xs.size).toInt - 1)))
-        (pct(0.50), pct(0.95))
+        Seq(s"${prefix}_p50" -> pct(0.50), s"${prefix}_p95" -> pct(0.95))
       }
+      def stats(prefix: String) = Seq(s"${prefix}_p50" -> Stat, s"${prefix}_p95" -> Stat)
 
       val envTrace = sys.env.get("SPARK_GRAFT_GRIDMIX_TRACE")
-      guarded(Seq("gridmix_p50", "gridmix_p95")) {
-        // capture the executed mix as a replayable trace (the Rumen role).
-        // A REPLAY run writes only when TRACE_OUT is explicitly set:
-        // defaulting the capture to gridmix_trace.json would overwrite the
-        // very trace being replayed (and each generation's offsets are the
-        // ACTUAL submit times, so repeated replays would drift later).
-        val captureTo = sys.env.get("SPARK_GRAFT_GRIDMIX_TRACE_OUT")
-          .orElse(if (envTrace.isDefined) None else Some("gridmix_trace.json"))
-        val (p50, p95) = runMix(envTrace, captureTo)
-        firstPass.put("gridmix_p50", p50); results.put("gridmix_p50", p50)
-        firstPass.put("gridmix_p95", p95); results.put("gridmix_p95", p95)
-        recordRun("gridmix_p50", p50); recordRun("gridmix_p95", p95)
-      }
+      // capture the executed mix as a replayable trace (the Rumen role).
+      // A REPLAY run writes only when TRACE_OUT is explicitly set:
+      // defaulting the capture to gridmix_trace.json would overwrite the
+      // very trace being replayed (and each generation's offsets are the
+      // ACTUAL submit times, so repeated replays would drift later).
+      val captureTo = sys.env.get("SPARK_GRAFT_GRIDMIX_TRACE_OUT")
+        .orElse(if (envTrace.isDefined) None else Some("gridmix_trace.json"))
+      sampleLog.leg(stats("gridmix")) { _ => runMix("gridmix", envTrace, captureTo) }
       // Replay leg: re-drive the COMMITTED reference trace (a prior round's
       // captured mix) so every round reports latency under an identical
       // arrival pattern next to the fresh mix — round-over-round comparable
       // where the fresh mix's stride changes whenever the suite grows. Same
-      // stall defense as the query entries: a slow first pass is re-run once
-      // and the minimum reported.
+      // stall defense as the query entries.
       val refTrace = sys.env.getOrElse("SPARK_GRAFT_GRIDMIX_REF", "gridmix_trace_ref.json")
       if (envTrace.isEmpty && java.nio.file.Files.exists(java.nio.file.Paths.get(refTrace)))
-        guarded(Seq("gridmix_replay_p50", "gridmix_replay_p95")) {
-          val (p50, p95) = runMix(Some(refTrace), None)
-          firstPass.put("gridmix_replay_p50", p50); results.put("gridmix_replay_p50", p50)
-          firstPass.put("gridmix_replay_p95", p95); results.put("gridmix_replay_p95", p95)
-          recordRun("gridmix_replay_p50", p50); recordRun("gridmix_replay_p95", p95)
-          if (rebenchSec > 0 && p95 > rebenchSec) {
-            try {
-              val (p50b, p95b) = runMix(Some(refTrace), None)
-              recordRun("gridmix_replay_p50", p50b); recordRun("gridmix_replay_p95", p95b)
-              results.put("gridmix_replay_p50", math.min(p50, p50b))
-              results.put("gridmix_replay_p95", math.min(p95, p95b))
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] gridmix replay re-bench failed (keeping first pass): ${e.getMessage}")
-            }
-          }
+        sampleLog.leg(stats("gridmix_replay"), slow(rebenchSec)) { _ =>
+          runMix("gridmix_replay", Some(refTrace), None)
         }
     }
 
@@ -907,25 +773,14 @@ object Bench {
     val soakMode = sys.env.getOrElse("SPARK_GRAFT_SOAK", "1")
     if (soakMode != "0" && (only.isEmpty || soakMode == "force")) {
       import org.apache.spark.sql.functions._
-      // house stall defense: first pass recorded as-is; a pass slower than
-      // the leg's OWN threshold (~2x its quiet-window wall — the 4 s query
-      // threshold would re-run the CC leg every time) is re-measured once
-      // back-to-back (per memory: this host shows 2-4x stall windows) and
-      // the minimum reported
-      def soakLeg(name: String, slowSec: Double)(once: () => Double): Unit =
-        guarded(Seq(name)) {
-          spark.sparkContext.setJobDescription(name)
-          try {
-            val first = once()
-            firstPass.put(name, first); recordRun(name, first)
-            val best = if (rebenchSec > 0 && first > slowSec) {
-              spark.sparkContext.setJobDescription(s"rebench:$name")
-              val again = once()
-              recordRun(name, again)
-              math.min(first, again)
-            } else first
-            results.put(name, best)
-          } finally spark.sparkContext.setJobDescription(null)
+      // A soak leg's re-run threshold is its OWN (~2x its quiet-window wall
+      // — the 4 s query threshold would re-run the CC leg every time); its
+      // jobs carry the leg name, "rebench:"-prefixed on the re-run. `counts`
+      // names the leg's Count entries.
+      def soakLeg(name: String, slowSec: Double, counts: String*)
+                 (once: => Seq[(String, Double)]): Unit =
+        sampleLog.leg((name -> Seconds) +: counts.map(_ -> Count), slow(slowSec)) { pass =>
+          described(if (pass == 0) name else s"rebench:$name")(once)
         }
       val ccN = sys.env.getOrElse("SPARK_GRAFT_SOAK_CC_N", "131072").toLong
       // one chain 0-1-…-(n-1) as a (src, dst) edge list, and the check that a
@@ -940,7 +795,8 @@ object Bench {
             && agg.getLong(2) == 0L,
           s"$what wrong structure: ${agg.toString}")
       }
-      soakLeg("soak_cc_chain", slowSec = 45.0) { () =>
+      soakLeg("soak_cc_chain", 45.0,
+          "soak_cc_chain_rounds", "soak_cc_chain_rounds_warm") {
         // one chain 0-1-2-…-(n-1): a single component of diameter n-1 —
         // the adversarial shape for label propagation (one giant near-dup
         // cluster), converging only via pointer jumping. Wall is dominated
@@ -960,10 +816,6 @@ object Bench {
         val bound = 2 * (64 - java.lang.Long.numberOfLeadingZeros(n - 1)) + 2
         require(rounds <= bound,
           s"CC soak took $rounds rounds on a $n-node chain (bound $bound)")
-        val r = rounds.toDouble
-        results.put("soak_cc_chain_rounds", r)
-        firstPass.putIfAbsent("soak_cc_chain_rounds", r)
-        recordRun("soak_cc_chain_rounds", r)
         // WARM-START measurement on the same graph (round 12): the prior
         // assignment covers all but the last m nodes (their true label 0 —
         // ≤ node and reachable, the documented seed contract), the tail m
@@ -986,13 +838,10 @@ object Bench {
         require(warmRounds <= warmBound,
           s"warm CC took $warmRounds rounds on an m=$m tail (bound $warmBound" +
             s" — rounds are tracking corpus size, not new structure)")
-        val wr = warmRounds.toDouble
-        results.put("soak_cc_chain_rounds_warm", wr)
-        firstPass.putIfAbsent("soak_cc_chain_rounds_warm", wr)
-        recordRun("soak_cc_chain_rounds_warm", wr)
-        sec + warmSec
+        Seq("soak_cc_chain" -> (sec + warmSec), "soak_cc_chain_rounds" -> rounds.toDouble,
+          "soak_cc_chain_rounds_warm" -> warmRounds.toDouble)
       }
-      soakLeg("soak_cc_chain_local", slowSec = 10.0) { () =>
+      soakLeg("soak_cc_chain_local", slowSec = 10.0) {
         // the same chain through the default path: its snapshot is under the
         // heap-derived bound, so union-find on the driver closes it in 0
         // rounds — the per-round job latency the distributed legs pay is
@@ -1006,9 +855,9 @@ object Bench {
         require(rounds == 0, s"local CC soak ran $rounds distributed rounds: " +
           s"the ${2 * (n - 1)}-row snapshot exceeds the local bound " +
           s"${graft.operators.Dedup.localComponentsBound}")
-        sec
+        Seq("soak_cc_chain_local" -> sec)
       }
-      soakLeg("soak_lsh_sigs", slowSec = 25.0) { () =>
+      soakLeg("soak_lsh_sigs", slowSec = 25.0) {
         // The LSH bucket-cap claim: a degenerate corpus slice (boilerplate,
         // empty docs) lands in ONE band bucket, and without the maxBucket
         // guard that bucket alone emits a quadratic pair set. Synthetic
@@ -1050,9 +899,9 @@ object Bench {
         require(agg.getDouble(1) == 1.0,
           s"LSH soak min est_jaccard ${agg.getDouble(1)} != 1.0 " +
             "(a non-duplicate pair passed the threshold)")
-        sec
+        Seq("soak_lsh_sigs" -> sec)
       }
-      soakLeg("soak_emb_clusters", slowSec = 40.0) { () =>
+      soakLeg("soak_emb_clusters", slowSec = 40.0) {
         // The embedding-cluster-tier scale claim, MEASURED: a million-vector
         // corpus driven through the PRUNED multi-table LSH candidate
         // generator into full-coverage component assignments — the q103/q104
@@ -1102,9 +951,9 @@ object Bench {
             s"5-clusters, expected all $n (candidates lost or spurious merge)")
         require(agg.getLong(2) == n / 5,
           s"soak_emb_clusters: ${agg.getLong(2)} canonicals != ${n / 5}")
-        sec
+        Seq("soak_emb_clusters" -> sec)
       }
-      soakLeg("soak_cluster_service", slowSec = 25.0) { () =>
+      soakLeg("soak_cluster_service", 25.0, "soak_cluster_delta_rows") {
         // The MAINTENANCE SERVICE at synthetic scale: the soak_emb_clusters
         // corpus (5-member identical-vector clusters, exact expected
         // structure) arriving as THREE ascending-id batches through
@@ -1175,17 +1024,14 @@ object Bench {
         require(d2rows >= batch2 && d2rows <= batch2 + 4,
           s"service soak: fold-2 delta wrote $d2rows rows, expected " +
             s"[$batch2, ${batch2 + 4}] (batch tercile + straddled members)")
-        results.put("soak_cluster_delta_rows", d2rows.toDouble)
-        firstPass.putIfAbsent("soak_cluster_delta_rows", d2rows.toDouble)
-        recordRun("soak_cluster_delta_rows", d2rows.toDouble)
         val cdirs = new java.io.File(corpusDir).listFiles()
           .map(_.getName).filter(n => n.startsWith("b=") || n.startsWith("gen="))
           .sorted.toSeq
         require(cdirs == Seq("b=2", "gen=1"),
           s"service soak: corpus compaction left $cdirs, expected [b=2, gen=1]")
-        sec
+        Seq("soak_cluster_service" -> sec, "soak_cluster_delta_rows" -> d2rows.toDouble)
       }
-      soakLeg("soak_pack_10m", slowSec = 16.0) { () =>
+      soakLeg("soak_pack_10m", slowSec = 16.0) {
         val n = 10000000L
         val docs = spark.range(0, n).select(col("id").as("doc_id"),
           (lit(1L) + pmod(col("id") * 2654435761L, lit(997L))).as("n_tokens"))
@@ -1219,7 +1065,7 @@ object Bench {
         // bases or a broken intra-bucket sum cannot conserve this
         require(stats.getLong(0) == n && stats.getLong(1) == stats.getLong(2),
           s"pack soak broke conservation: ${stats.toString}")
-        sec
+        Seq("soak_pack_10m" -> sec)
       }
     }
 
@@ -1227,9 +1073,10 @@ object Bench {
     // main-dir/sf0.01 ratio. ~10x data should cost ~10x at worst for linear
     // operators; a ratio far above ~15 is a latent quadratic. Diagnostic
     // only — never folded into the headline value.
-    val scaling = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    val scalingSmall = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val scaling = scala.collection.mutable.Map[String, Double]()
+    val scalingSmall = scala.collection.mutable.Map[String, Double]()
     val scalingDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_DIR", "/root/testdata/sf0.01")
+    def timeSmall(name: String, fn: Query): Double = timeOnce(s"scaling:$name", fn, scalingDir)
     // Queries whose work is independent of the data dir (pi, puzzle searches,
     // digit extraction): a second run costs full constant time for a ratio of
     // ~1.0 that carries no quadratic-detection signal — skip them.
@@ -1245,17 +1092,11 @@ object Bench {
       // increment, not (clean big) / (build+read small)
       selected.foreach { case (name, fn) => stageWarm(name, fn, scalingDir) }
       selected.filterNot(q => dirIndependent(q._1)).foreach { case (name, fn) =>
-        val q0 = System.nanoTime()
-        try {
-          fn(spark, scalingDir).write.mode("overwrite").format("noop").save()
-          val small = (System.nanoTime() - q0) / 1e9
-          val big = results.getOrDefault(name, -1.0)
-          if (small > 0 && big > 0) {
-            scaling.put(name, big / small)
-            scalingSmall.put(name, small)
-          }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] scaling $name failed: ${e.getMessage}")
+        val small = timeSmall(name, fn)
+        val big = sampleLog.min(name)
+        if (small > 0 && big > 0) {
+          scaling(name) = big / small
+          scalingSmall(name) = small
         }
       }
     }
@@ -1305,58 +1146,45 @@ object Bench {
         System.err.println(s"[bench] scaling baseline read failed: ${e.getMessage}")
         (Map.empty, Map.empty, None)
       }
-    import scala.jdk.CollectionConverters._
     // The run's SLOWEST successful calib_cpu probe — the statistic the
     // reseed gate judges (a window that turned noisy mid-run cannot
     // certify itself with its quiet opening bracket) and the absolute
     // tracker normalizes by.
-    def worstProbe(): Double = Option(allRuns.get("calib_cpu"))
-      .map(_.asScala.filter(_ > 0)) match {
-      case Some(xs) if xs.nonEmpty => xs.max
-      case _                       => -1.0
-    }
-    if (!scaling.isEmpty) {
-      // Candidate regressions get the same stall defense the absolute
-      // numbers have: re-measure BOTH scales and recompute the ratio from
-      // per-scale minima/medians — a single host slow window inflating
-      // either side must persist across two passes to flag. (A real plan
-      // regression reproduces; noise doesn't — one observed false positive
-      // was a first pass 3.98 s sitting just under the re-bench threshold.)
-      // The whole screen -> confirm composition lives in ratchetVerdict
-      // (pure over the timing thunks, spec-driven); this loop only wires
-      // the real timers in.
-      scaling.forEach { (name, ratio0) =>
-        prev.get(name).foreach { p =>
-          val fn = selected.toMap.apply(name)
-          val (ratio2, flagged) = ratchetVerdict(
-            ratio0, p,
-            big0 = results.getOrDefault(name, 0.0),
-            small0 = scalingSmall.getOrDefault(name, -1.0),
-            retimeBig = () => {
-              val t = timeOnce(s"rescale:$name", fn); recordRun(name, t); t
-            },
-            retimeSmall = n => (1 to n).flatMap { _ =>
-              val q0 = System.nanoTime()
-              try {
-                fn(spark, scalingDir).write.mode("overwrite").format("noop").save()
-                Some((System.nanoTime() - q0) / 1e9)
-              } catch { case _: Throwable => None }
-            })
-          scaling.put(name, ratio2)
-          if (flagged) {
-            // denominator-improvement screen (see scaladoc): the flag
-            // stands only if the main-scale leg also GREW past its
-            // probe-normalized absolute baseline — a ratio doubled by a
-            // faster sf0.01 leg is an optimization, not a regression
-            val norm = probeNormalize(results.getOrDefault(name, -1.0),
-              prevCalib, worstProbe())
-            if (denominatorImprovement(norm, prevAbs.get(name)))
-              System.err.println(f"[bench] scaling ratio of $name rose to " +
-                f"$ratio2%.2f (baseline $p%.2f) but its main-scale time " +
-                f"$norm%.3f s is within the absolute baseline " +
-                f"${prevAbs(name)}%.3f s — denominator improvement, not flagged")
-            else scalingRegressions += name
-          }
+    def worstProbe(): Double = sampleLog.samples("calib_cpu").maxOption.getOrElse(-1.0)
+    // Candidate regressions get the same stall defense the absolute
+    // numbers have: re-measure BOTH scales and recompute the ratio from
+    // per-scale minima/medians — a single host slow window inflating
+    // either side must persist across two passes to flag. (A real plan
+    // regression reproduces; noise doesn't — one observed false positive
+    // was a first pass 3.98 s sitting just under the re-bench threshold.)
+    // The whole screen -> confirm composition lives in ratchetVerdict
+    // (pure over the timing thunks, spec-driven); this loop only wires
+    // the real timers in. The main-scale re-time enters the entry's median
+    // but not its minimum: ratchetVerdict takes its own minimum.
+    scaling.toSeq.sortBy(_._1).foreach { case (name, ratio0) =>
+      prev.get(name).foreach { p =>
+        val fn = selected.toMap.apply(name)
+        val (ratio2, flagged) = ratchetVerdict(
+          ratio0, p,
+          big0 = sampleLog.min(name),
+          small0 = scalingSmall(name),
+          retimeBig = () => {
+            val t = timeOnce(s"rescale:$name", fn); sampleLog.record(name, t, inMin = false); t
+          },
+          retimeSmall = n => (1 to n).map(_ => timeSmall(name, fn)).filter(_ > 0))
+        scaling(name) = ratio2
+        if (flagged) {
+          // denominator-improvement screen (see scaladoc): the flag
+          // stands only if the main-scale leg also GREW past its
+          // probe-normalized absolute baseline — a ratio doubled by a
+          // faster sf0.01 leg is an optimization, not a regression
+          val norm = probeNormalize(sampleLog.min(name), prevCalib, worstProbe())
+          if (denominatorImprovement(norm, prevAbs.get(name)))
+            System.err.println(f"[bench] scaling ratio of $name rose to " +
+              f"$ratio2%.2f (baseline $p%.2f) but its main-scale time " +
+              f"$norm%.3f s is within the absolute baseline " +
+              f"${prevAbs(name)}%.3f s — denominator improvement, not flagged")
+          else scalingRegressions += name
         }
       }
     }
@@ -1376,12 +1204,12 @@ object Bench {
     // their own in-harness bounds and stage attribution.
     val absRegressions = scala.collection.mutable.ArrayBuffer[String]()
     val absNorm = scala.collection.mutable.Map[String, Double]()
-    if (!scaling.isEmpty) {
+    if (scaling.nonEmpty) {
       val selMap = selected.toMap
       val probe0 = worstProbe()
       var retimed = false
       selMap.keys.toSeq.sorted.foreach { name =>
-        val v = results.getOrDefault(name, -1.0)
+        val v = sampleLog.min(name)
         if (v > 0) {
           val (norm, flagged) = absVerdict(v,
             prevAbs.getOrElse(name, Double.PositiveInfinity),
@@ -1389,11 +1217,7 @@ object Bench {
             retime = () => {
               retimed = true
               val t = timeOnce(s"reabs:$name", selMap(name))
-              if (t > 0) {
-                recordRun(name, t)
-                if (t < results.getOrDefault(name, Double.MaxValue))
-                  results.put(name, t)
-              }
+              sampleLog.record(name, t)
               t
             })
           absNorm(name) = norm
@@ -1414,7 +1238,7 @@ object Bench {
     // reseedRefused records the gate FIRING for the run record (r16 verdict
     // item 3: refusals were stderr-only; the JSON must carry them).
     var reseedRefused: Option[(Double, Double)] = None
-    if (!scaling.isEmpty) {
+    if (scaling.nonEmpty) {
       try {
         // Probe-gated: a noisy-window run (calib_cpu outside the band of
         // the baseline's recorded probe) may tighten and introduce entries
@@ -1423,7 +1247,7 @@ object Bench {
         // verdict); nextCalib is identical from both calls, keep the first.
         val worst = worstProbe()
         val (reseeded, nextCalib) = gatedRatchetBaseline(prev,
-          scaling.asScala.toMap, scalingRegressions.toSet, prevCalib, worst)
+          scaling.toMap, scalingRegressions.toSet, prevCalib, worst)
         val (reseededAbs, _) = gatedRatchetBaseline(prevAbs,
           absNorm.toMap, absRegressions.toSet, prevCalib, worst)
         val quiet = worst > 0 && prevCalib.forall(pc => worst <= pc * CalibReseedBand)
@@ -1451,39 +1275,9 @@ object Bench {
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def jmap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
-    val entries = results.asScala.toSeq.sortBy(_._1)
-    val failed = entries.filter(_._2 < 0).map(_._1).sorted
-    val qs = jmap(entries.filter(_._2 > 0))
-    val firsts = firstPass.asScala.toSeq.filter(_._2 > 0).sortBy(_._1)
-    // mrbench_*_min/max are order statistics over the SAME runs mrbench_*_avg
-    // summarizes — summing them would triple-count the micro-job loops; the
-    // gridmix percentiles are latency statistics, not sequential work; the
-    // soak rounds/rows entries are COUNT observables, not seconds ("_rounds"
-    // must match infix too: soak_cc_chain_rounds_warm leaked 11 "seconds"
-    // into the additive totals from the run it landed until this fix).
-    // calib_* are host-speed observables, not engine work — additive totals
-    // must stay comparable with pre-probe rounds
-    def additive(name: String): Boolean =
-      !(name.startsWith("mrbench") && (name.endsWith("_min") || name.endsWith("_max"))) &&
-        !name.startsWith("gridmix") && !name.contains("_rounds") &&
-        !name.endsWith("_rows") && !name.startsWith("calib_")
-    val total = entries.filter(e => e._2 > 0 && additive(e._1)).map(_._2).sum
-    val firstTotal = firsts.filter(e => additive(e._1)).map(_._2).sum
-    // Median over every recorded measurement of each entry (single-sample
-    // entries report that sample): the round-over-round comparison statistic
-    // a stall window cannot drag and a lucky pass cannot flatter.
-    val medians = allRuns.asScala.toSeq.map { case (name, q) =>
-      val xs = q.asScala.toSeq.sorted
-      val m = if (xs.size % 2 == 1) xs(xs.size / 2)
-              else (xs(xs.size / 2 - 1) + xs(xs.size / 2)) / 2.0
-      name -> m
-    }.sortBy(_._1)
-    val medianTotal = medians.filter(e => additive(e._1)).map(_._2).sum
-    val allFailed = failed ++ scalingRegressions.sorted.map("scaling_regression:" + _) ++
+    def jlist(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val allFailed = sampleLog.failed ++ scalingRegressions.sorted.map("scaling_regression:" + _) ++
       absRegressions.sorted.map("abs_regression:" + _)
-    val failedJson = allFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val regressionsJson = scalingRegressions.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val absRegressionsJson = absRegressions.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     // reseed_refused: the probe gate fired — this window could tighten but
     // not loosen the persisted baselines (probe/ref quoted for the record)
     val reseedJson = reseedRefused match {
@@ -1491,14 +1285,15 @@ object Bench {
         s""""reseed_refused":true,"reseed_probe":${num(rp)},"reseed_ref":${num(rr)},"""
       case None => s""""reseed_refused":false,"""
     }
-    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,""" +
-      s""""first":${jmap(firsts)},"first_total":${num(firstTotal)},""" +
-      s""""median":${jmap(medians)},"median_total":${num(medianTotal)},""" +
-      s""""tera_stages":${jmap(teraStages.toSeq)},""" +
-      s""""failed":${allFailed.size},"failed_entries":$failedJson,""" +
-      s""""scaling":${jmap(scaling.asScala.toSeq.sortBy(_._1))},""" +
-      s""""scaling_regressions":$regressionsJson,""" +
-      s""""abs_regressions":$absRegressionsJson,""" + reseedJson +
+    val line = s"""{"metric":"total","value":${num(sampleLog.total)},"unit":"sec","queries":${jmap(sampleLog.queries)},""" +
+      s""""first":${jmap(sampleLog.first)},"first_total":${num(sampleLog.firstTotal)},""" +
+      s""""median":${jmap(sampleLog.median)},"median_total":${num(sampleLog.medianTotal)},""" +
+      s""""counts":${jmap(sampleLog.counts)},""" +
+      s""""tera_stages":${jmap(stageLog.stageTimes(_.matches("p[0-9]+_tera(gen|sort)")))},""" +
+      s""""failed":${allFailed.size},"failed_entries":${jlist(allFailed)},""" +
+      s""""scaling":${jmap(scaling.toSeq.sortBy(_._1))},""" +
+      s""""scaling_regressions":${jlist(scalingRegressions.sorted.toSeq)},""" +
+      s""""abs_regressions":${jlist(absRegressions.sorted.toSeq)},""" + reseedJson +
       s""""wall":${num(wall)},"sf":"$sfDir"}"""
     // Durable copy: round 1's JSON line was buried in sbt [info] noise and the
     // driver recorded parsed:null. Write the line to a file as well, and print

@@ -1,0 +1,50 @@
+package graft.tools
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import scala.jdk.CollectionConverters._
+
+/** The one stage listener: records every completed stage under its owning
+  * job's description (`spark.job.description`, else the job's short call
+  * site), read from the job's properties when the job STARTED. A stage is
+  * therefore filed under the phase that submitted it, however late its
+  * completion event is delivered. Bench reads `tera_stages` from it;
+  * DevRun prints a query's slowest stages. */
+final class StageLog extends SparkListener {
+  import StageLog.Stage
+  private val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  private val done = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
+
+  override def onJobStart(js: SparkListenerJobStart): Unit = {
+    val props = Option(js.properties)
+    val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+      .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
+      .getOrElse("")
+    js.stageIds.foreach(jobOf.put(_, desc))
+  }
+
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+    val si = sc.stageInfo
+    for (sub <- si.submissionTime; end <- si.completionTime)
+      done.add(Stage(si.stageId, si.name.takeWhile(_ != '\n'),
+        jobOf.getOrDefault(si.stageId, ""), end - sub, si.numTasks))
+  }
+
+  /** Completed stages in delivery order. */
+  def stages: Seq[Stage] = done.asScala.toSeq
+
+  /** Wall seconds of the stages whose job description `keep` accepts, keyed
+    * `<description>_s<ordinal>`, the ordinal counting completions within
+    * one description. */
+  def stageTimes(keep: String => Boolean): Seq[(String, Double)] = {
+    val seen = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    stages.filter(s => keep(s.job)).map { s =>
+      val i = seen(s.job)
+      seen(s.job) = i + 1
+      f"${s.job}_s$i%02d" -> s.ms / 1000.0
+    }
+  }
+}
+
+object StageLog {
+  final case class Stage(id: Int, name: String, job: String, ms: Long, tasks: Int)
+}

@@ -1,0 +1,37 @@
+package graft.tools
+
+import graft.SparkSpec
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
+
+/** The one stage listener files each stage under the description its job
+  * carried when it STARTED: back-to-back phases keep their own stages, and
+  * stages of jobs outside the selected descriptions stay out. */
+class StageLogSpec extends SparkSpec with Eventually {
+
+  test("stages are keyed <description>_s<ordinal> by their job's start-time description") {
+    val sc = spark.sparkContext
+    val log = new StageLog
+    sc.addSparkListener(log)
+    try {
+      def twoStages(): Unit = sc.parallelize(1 to 100, 2)
+        .map(x => (x % 3, x)).reduceByKey(_ + _).count()
+      sc.setJobDescription("p0_phase_a")
+      twoStages()
+      sc.setJobDescription("p0_phase_b")
+      sc.parallelize(1 to 10, 2).count()
+      sc.setJobDescription(null)
+      twoStages() // no description: never keyed as a phase
+      eventually(timeout(Span(10, Seconds))) {
+        assert(log.stages.count(!_.job.startsWith("p0_")) >= 2)
+      }
+      val keyed = log.stageTimes(_.startsWith("p0_phase_"))
+      assert(keyed.map(_._1) == Seq("p0_phase_a_s00", "p0_phase_a_s01", "p0_phase_b_s00"))
+      assert(keyed.forall(_._2 >= 0.0))
+      assert(log.stages.filter(_.job.startsWith("p0_")).forall(_.tasks == 2))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(log)
+    }
+  }
+}
