@@ -1862,7 +1862,7 @@ object Queries {
     * batch in by replacing each AFFECTED old cluster with its star and
     * passing untouched clusters through verbatim — provably the same
     * components, and with append-only ids the same labels, as a full
-    * recompute (scoped == unscoped == full equality spec-gated in
+    * recompute (scoped == full equality spec-gated in
     * DedupSimilaritySpec). At 100 TB this is the difference between a
     * daily corpus² re-cluster and a daily batch-sized one — and the scoped
     * form keeps even the CC rounds off the corpus. */
@@ -1945,7 +1945,7 @@ object Queries {
     * append-only-id discipline the incremental theorem needs). Each
     * micro-batch runs the PRUNED candidate generator
     * (`cosineNearDupPairsAgainst`, 16x4-bit radius-1 — batch probes the
-    * accumulated bucket table, never corpus x corpus) and folds the new
+    * accumulated corpus's buckets, never corpus x corpus) and folds the new
     * pairs into a VERSIONED parquet assignment state:
     * state/v=N = `incrementalComponentAssignmentsScoped`(state/v=N-1,
     * batch, pairs), corpus/b=N = the batch vectors. Every write is

@@ -30,16 +30,13 @@ import org.apache.spark.sql.functions._
   *    corpus every batch probes is read as ONE generation dir plus the
   *    few batch dirs after it — per-fold listing and small-file overhead
   *    stay bounded by `compactEvery` at any stream length, instead of
-  *    growing linearly with batch count;
-  *  - `corpusDir/bk=N` / `corpusDir/bkgen=G` — batch N's LSH bucket rows
-  *    ([[Similarity.lshBucketTable]]: id, table, signature) and their
-  *    compacted generation, maintained in lockstep with the vector dirs.
-  *    A fold whose bucket dirs are all committed probes the PERSISTED
-  *    table instead of recomputing numTables·numPlanes·dim signature
-  *    multiplies over the whole corpus — the per-fold corpus cost drops
-  *    to one vector scan (the exact cosine gate). Any missing dir
-  *    (legacy layout, crash window) degrades that fold to the direct
-  *    recomputation with identical results.
+  *    growing linearly with batch count.
+  *
+  * Any other entry under the dirs (for instance the per-batch LSH bucket
+  * tables and their geometry stamp that earlier versions kept beside the
+  * corpus) is ignored: every reader parses exact name prefixes
+  * ([[StateProtocol.numericSuffix]]), and each fold recomputes its
+  * candidate signatures from the vectors.
   *
   * Commit protocol: a state version or generation dir is COMMITTED iff it
   * contains the `_SUCCESS` marker Spark's file committer writes last — a
@@ -51,8 +48,8 @@ import org.apache.spark.sql.functions._
   * Contracts:
   *  - batches carry APPEND-ONLY ids (every id in batch N greater than all
   *    ids in batches < N) — the precondition under which
-  *    [[Dedup.incrementalComponentAssignments]] equals a full recompute
-  *    exactly (star-replacement theorem, spec-gated);
+  *    [[Dedup.incrementalComponentAssignmentsScopedParts]] equals a full
+  *    recompute exactly (star-replacement theorem, spec-gated);
   *  - [[foldBatch]] is IDEMPOTENT per (batchId, batch content): every
   *    write is a keyed overwrite, so a replay after a mid-fold crash
   *    rewrites the same state — exactly-once for a foreachBatch caller
@@ -75,10 +72,10 @@ import org.apache.spark.sql.functions._
   * untouched prior clusters pass through verbatim, the CC loop iterates
   * only over (affected-cluster star edges + new pairs), warm-started from
   * the prior labels, and the state write is the recomputed DELTA alone.
-  * The per-fold corpus terms left are sequential scans only (one vector
-  * scan for the cosine gate, broadcast-probe scans of the reconstructed
-  * prior) plus the amortized 1/snapshotEvery snapshot write — nothing
-  * corpus-sized is shuffled, iterated, or written per fold.
+  * The per-fold corpus terms left are sequential scans only (the corpus
+  * vectors' signature and cosine-gate scans, broadcast-probe scans of the
+  * reconstructed prior) plus the amortized 1/snapshotEvery snapshot write
+  * — nothing corpus-sized is iterated or written per fold.
   */
 object ClusterMaintenance {
 
@@ -87,31 +84,27 @@ object ClusterMaintenance {
     * defaults gets exactly the recall the correctness gates measure.
     * `compactEvery = 8`: consolidate the corpus once the latest committed
     * generation trails the fold by this many batch dirs (≤ 0 disables).
-    * `scopedFold = true`: run each fold's component closure on the AFFECTED
-    * subgraph only ([[Dedup.incrementalComponentAssignmentsScoped]] —
-    * untouched prior clusters pass through verbatim, provably identical
-    * output), so the iterative CC cost tracks the batch, not the corpus.
-    * Set false only when a batch's candidate-pair endpoint set is too large
-    * to broadcast (≳10⁸ pairs) — results are identical either way.
     * `snapshotEvery = 8`: write a full-coverage snapshot once the newest
     * snapshot trails the fold by this many deltas; in between, folds write
     * batch-proportional deltas only. `≤ 1` restores the legacy
-    * snapshot-every-fold layout; `scopedFold = false` implies it (the
-    * unscoped fold has no delta decomposition). Reconstruction is exact at
-    * every cadence — the knob trades per-fold write volume against
-    * read-side merge fan-in, never results. */
+    * snapshot-every-fold layout. Reconstruction is exact at every cadence
+    * — the knob trades per-fold write volume against read-side merge
+    * fan-in, never results. Every fold runs its component closure on the
+    * AFFECTED subgraph only
+    * ([[Dedup.incrementalComponentAssignmentsScopedParts]]), so the
+    * iterative CC cost tracks the batch, not the corpus. */
   final case class Config(threshold: Double = 0.35, numPlanes: Int = 4,
                           dim: Int = 64, probeRadius: Int = 1,
                           numTables: Int = 16, compactEvery: Int = 8,
-                          scopedFold: Boolean = true,
                           snapshotEvery: Int = 8)
 
   /** Fold one ingest batch — (idCol: integral, vecCol: array<float>) —
-    * into the versioned state. Reads `stateDir/v=${batchId-1}` and the
-    * accumulated corpus (latest committed generation + later batch dirs);
-    * writes `stateDir/v=$batchId` and `corpusDir/b=$batchId`; deletes
-    * `stateDir/v=${batchId-2}`; compacts the corpus when the generation
-    * lag reaches `cfg.compactEvery`. */
+    * into the versioned state. Reads the assignment as of fold
+    * `batchId-1` and the accumulated corpus (latest committed generation +
+    * later batch dirs); writes `stateDir/v=$batchId` (snapshot folds) or
+    * `stateDir/d=$batchId`, then `corpusDir/b=$batchId`; deletes the state
+    * dirs retention no longer needs; compacts the corpus when the
+    * generation lag reaches `cfg.compactEvery`. */
   def foldBatch(batch: DataFrame, batchId: Long,
                 stateDir: String, corpusDir: String,
                 idCol: String, vecCol: String,
@@ -135,8 +128,8 @@ object ClusterMaintenance {
       // config that built it (threshold + LSH candidate geometry decide
       // which pairs were adopted, and adoption is forever) — validate the
       // `_CLCONF` stamp before reading anything; a mismatch fails loudly
-      // prescribing the rebuild recompute, never a sweep (unlike the
-      // bucket cache below, the state IS the record)
+      // prescribing the rebuild recompute, never a sweep (the state IS
+      // the record)
       ensureClusterConfig(sfs, spath, cfg)
       val gen = StateProtocol.latestGeneration(fs, cpath, maxGen = batchId - 1)
       val batchParts =
@@ -144,9 +137,7 @@ object ClusterMaintenance {
       // fold-side read gate (the generation is _SUCCESS-gated by
       // latestGeneration): a torn prior b=i would read as EMPTY parquet and
       // this fold's near-dup pass would silently miss batch i's whole
-      // corpus contribution — fail fast naming the replay instead (the
-      // bucket CACHE below already degrades on torn dirs because exactness
-      // never rides on it; the corpus read is the record itself)
+      // corpus contribution — fail fast naming the replay instead
       StateProtocol.requireCommitted(fs, batchParts,
         "ClusterMaintenance.foldBatch",
         "a prior fold crashed mid-write; replay that fold first (its keyed " +
@@ -161,67 +152,33 @@ object ClusterMaintenance {
             col("vec_id").as("cluster_id"),
             lit(1L).as("cluster_size"), lit(1).as("is_canonical"))
         else reconstructAssignment(sess, stateDir, upTo = batchId - 1)
-      // Accumulated corpus BUCKET state (bk=N / bkgen=G beside the corpus
-      // dirs): when every needed dir is committed, the fold probes the
-      // persisted (id, t, sig) rows instead of recomputing
-      // numTables·numPlanes·dim signature multiplies over the whole
-      // corpus — the per-fold corpus term drops to one vector scan (the
-      // exact cosine gate). Any missing or TORN dir (pre-upgrade layout,
-      // crash between commits) degrades that fold to the direct
-      // recomputation with identical results — exactness never rides on
-      // the cache ([[committedBucketParts]], spec-gated counterfactually).
-      // the persisted signatures are joinable only under the LSH geometry
-      // that built them — stamp/validate the config fingerprint first (a
-      // mismatch sweeps the stale cache dirs; this fold then recomputes)
-      ensureBucketConfig(fs, cpath, cfg)
-      val bkCover = if (corpusParts.nonEmpty)
-        committedBucketParts(fs, corpusDir, batchId, cfg) else None
-      val pairs = bkCover match {
-        case Some(bkParts) =>
-          Similarity.cosineNearDupPairsAgainstBucketed(b, corpus,
-            sess.read.schema("id long, t int, sig long").parquet(bkParts: _*),
-            "vec_id", "embedding", threshold = cfg.threshold,
-            numPlanes = cfg.numPlanes, dim = cfg.dim,
-            probeRadius = cfg.probeRadius, numTables = cfg.numTables)
-        case None => Similarity.cosineNearDupPairsAgainst(b, corpus,
-          "vec_id", "embedding", threshold = cfg.threshold,
-          numPlanes = cfg.numPlanes, dim = cfg.dim,
-          probeRadius = cfg.probeRadius, numTables = cfg.numTables)
-      }
+      // batch × (corpus ∪ batch) candidates: the batch's signatures probe
+      // the multi-table buckets recomputed from the corpus vectors
+      val pairs = Similarity.cosineNearDupPairsAgainst(b, corpus,
+        "vec_id", "embedding", threshold = cfg.threshold,
+        numPlanes = cfg.numPlanes, dim = cfg.dim,
+        probeRadius = cfg.probeRadius, numTables = cfg.numTables)
       val lastSnap = StateProtocol.committedDirs(sfs, spath, "v=")
         .filter(_ <= batchId - 1).reduceOption(_ max _)
       // Snapshot folds write full coverage; in between, the scoped fold's
       // recomputed half alone IS the exact change set (see
       // incrementalComponentAssignmentsScopedParts) and is all that hits
       // disk — the batch-proportional state write. Fold 0 always snapshots
-      // (its delta is full coverage anyway, and it anchors reconstruction).
-      val snapshotFold = batchId == 0 || !cfg.scopedFold ||
-        cfg.snapshotEvery <= 1 ||
+      // (its delta is full coverage anyway, and it anchors reconstruction);
+      // lastSnap ≤ batchId-1, so snapshotEvery ≤ 1 snapshots every fold.
+      val snapshotFold = batchId == 0 ||
         batchId - lastSnap.getOrElse(-1L) >= cfg.snapshotEvery
-      if (cfg.scopedFold) {
-        val (untouched, rec) = Dedup.incrementalComponentAssignmentsScopedParts(
-          prior, b.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
-        if (snapshotFold)
-          untouched.unionByName(rec)
-            .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        else rec.write.mode("overwrite").parquet(s"$stateDir/d=$batchId")
-      } else
-        Dedup.incrementalComponentAssignments(prior,
-            b.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
+      val (untouched, rec) = Dedup.incrementalComponentAssignmentsScopedParts(
+        prior, b.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
+      if (snapshotFold)
+        untouched.unionByName(rec)
           .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-      // The corpus batch and its bucket rows are INDEPENDENT writes over
-      // the persisted batch (guide §2.6: overlap independent jobs — the
-      // scheduler back-fills the other's tail). Ordering contracts hold:
-      // both land AFTER the state commit above (the rebuild's
-      // state-before-corpus coverage check), and each is individually
-      // _SUCCESS-gated — a crash can now also tear b= with bk= committed
-      // (or either with the other), all states the committed-only readers
-      // already resolve and a fold replay overwrites.
-      StateProtocol.parallelJobs(
-        () => b.write.mode("overwrite").parquet(s"$corpusDir/b=$batchId"),
-        () => Similarity.lshBucketTable(b, "vec_id", "embedding",
-            cfg.numPlanes, cfg.dim, cfg.numTables)
-          .write.mode("overwrite").parquet(s"$corpusDir/bk=$batchId"))
+      else rec.write.mode("overwrite").parquet(s"$stateDir/d=$batchId")
+      // the corpus batch lands AFTER the state commit above (the rebuild's
+      // state-before-corpus coverage check); a crash between the two
+      // leaves a torn or missing b= that the fold-side gate reports and a
+      // replay overwrites
+      b.write.mode("overwrite").parquet(s"$corpusDir/b=$batchId")
       // Retention: keep exactly what a replay of THIS fold or the next one
       // needs — the newest snapshot ≤ batchId-1 and the deltas after it
       // (reconstruction at batchId-1), plus whatever this fold just wrote.
@@ -243,27 +200,12 @@ object ClusterMaintenance {
       if (cfg.compactEvery > 0 &&
           (batchId - 1) - gen.getOrElse(-1L) >= cfg.compactEvery) {
         val newGen = batchId - 1
-        // the bucket state compacts alongside: bucket rows are row state
-        // (no aggregation), so the generation is just the committed
-        // union of the dirs this fold read — or a recomputation from the
-        // corpus when a dir is missing (legacy layout)
-        val bkGenDf = bkCover match {
-          case Some(bkParts) =>
-            sess.read.schema("id long, t int, sig long").parquet(bkParts: _*)
-          case None => Similarity.lshBucketTable(corpus, "vec_id", "embedding",
-            cfg.numPlanes, cfg.dim, cfg.numTables)
-        }
-        // independent consolidation writes over already-committed dirs
-        // (§2.6 overlap; the sweep below runs only after BOTH commit, so
-        // no source dir is deleted under a concurrent reader)
-        StateProtocol.parallelJobs(
-          () => corpus.write.mode("overwrite").parquet(s"$corpusDir/gen=$newGen"),
-          () => bkGenDf.write.mode("overwrite").parquet(s"$corpusDir/bkgen=$newGen"))
+        // the sweep below runs only after the generation commits, so no
+        // source dir is deleted under a concurrent reader
+        corpus.write.mode("overwrite").parquet(s"$corpusDir/gen=$newGen")
         val stale = fs.listStatus(cpath).map(_.getPath.getName).filter { nm =>
           StateProtocol.numericSuffix(nm, "b=").exists(_ <= newGen) ||
-            StateProtocol.numericSuffix(nm, "gen=").exists(_ < newGen) ||
-            StateProtocol.numericSuffix(nm, "bk=").exists(_ <= newGen) ||
-            StateProtocol.numericSuffix(nm, "bkgen=").exists(_ < newGen)
+            StateProtocol.numericSuffix(nm, "gen=").exists(_ < newGen)
         }
         stale.foreach(nm => fs.delete(new Path(s"$corpusDir/$nm"), true))
       }
@@ -424,18 +366,9 @@ object ClusterMaintenance {
       val aside = new Path(s"$corpusDir/.gen=$v.old")
       StateProtocol.swapIn(cfs, fin, aside, tmp, "rebuildWithoutTombstones")
       StateProtocol.discardAside(cfs, aside)
-      // the bucket state MUST be rebuilt too: stale bk= dirs reference
-      // tombstoned ids, and a later fold probing them would resurrect
-      // retracted vectors as candidates
-      ensureBucketConfig(cfs, cpath, cfg)
-      Similarity.lshBucketTable(keep, "vec_id", "embedding",
-          cfg.numPlanes, cfg.dim, cfg.numTables)
-        .write.mode("overwrite").parquet(s"$corpusDir/bkgen=$v")
       val stale = cfs.listStatus(cpath).map(_.getPath.getName).filter { nm =>
         StateProtocol.numericSuffix(nm, "b=").exists(_ <= v) ||
-          StateProtocol.numericSuffix(nm, "gen=").exists(_ < v) ||
-          StateProtocol.numericSuffix(nm, "bk=").exists(_ <= v) ||
-          StateProtocol.numericSuffix(nm, "bkgen=").exists(_ < v)
+          StateProtocol.numericSuffix(nm, "gen=").exists(_ < v)
       }
       stale.foreach(nm => cfs.delete(new Path(s"$corpusDir/$nm"), true))
       // the rebuilt v=$v snapshot supersedes every older snapshot AND all
@@ -452,52 +385,6 @@ object ClusterMaintenance {
     spark.read.parquet(s"$stateDir/v=$v")
   }
 
-  /** The LSH geometry fingerprint persisted beside the bucket tables
-    * (`_BKCONF`): planes/dim/tables determine the signature layout, so
-    * rows persisted under one geometry are NOT joinable against batch
-    * signatures computed under another — without the stamp, a config
-    * change between service runs would silently collapse candidate recall
-    * (old-plane corpus signatures never colliding with new-plane batch
-    * signatures). threshold/probeRadius are deliberately excluded: they
-    * are query-time knobs over the same persisted rows. */
-  private def bucketFingerprint(cfg: Config): String =
-    s"planes=${cfg.numPlanes},dim=${cfg.dim},tables=${cfg.numTables}"
-
-  // the read side shares the protocol primitive; the WRITE below stays
-  // inline because its failure policy deliberately differs from
-  // [[StateProtocol.writeStamp]] — `_BKCONF` stamps a CACHE, so a failed
-  // rename is tolerated (the next fold just sweeps and recomputes),
-  // whereas a lost SEMANTIC stamp must raise
-  private def readBucketConfig(fs: FileSystem, corpusDir: Path): Option[String] =
-    StateProtocol.readStamp(fs, corpusDir, "_BKCONF")
-
-  /** Stamp the current LSH geometry beside the bucket state; on a MISSING
-    * stamp (pre-fingerprint layout — the dirs' geometry is unknown) or a
-    * mismatch, sweep every `bk=`/`bkgen=` dir first: they are pure cache
-    * (exactness never rides on them), and probing them under a different
-    * geometry is the silent-recall-collapse failure mode. Affected folds
-    * recompute signatures directly until coverage rebuilds under the new
-    * stamp. No-op when the stamp already matches. */
-  private[jobs] def ensureBucketConfig(fs: FileSystem, corpusDir: Path,
-                                       cfg: Config): Unit = {
-    val fp = bucketFingerprint(cfg)
-    if (!readBucketConfig(fs, corpusDir).contains(fp)) {
-      if (fs.exists(corpusDir))
-        fs.listStatus(corpusDir).map(_.getPath.getName).foreach { nm =>
-          if (StateProtocol.numericSuffix(nm, "bk=").nonEmpty ||
-              StateProtocol.numericSuffix(nm, "bkgen=").nonEmpty)
-            fs.delete(new Path(corpusDir, nm), true)
-        }
-      val tmp = new Path(corpusDir, "._BKCONF.tmp")
-      val out = fs.create(tmp, true)
-      try out.write((fp + "\n").getBytes("UTF-8")) finally out.close()
-      val fin = new Path(corpusDir, "_BKCONF")
-      if (fs.exists(fin)) fs.delete(fin, false)
-      if (!fs.rename(tmp, fin)) fs.delete(tmp, false)
-      ()
-    }
-  }
-
   /** The cluster-state SEMANTIC config fingerprint persisted beside the
     * assignment state (`_CLCONF`): the threshold and the full LSH
     * candidate geometry (planes/dim/probeRadius/tables) together determine
@@ -508,14 +395,9 @@ object ClusterMaintenance {
     * another. Without the stamp, a service restarted with, say, a
     * tightened threshold keeps every looser-threshold cluster it ever
     * merged, and the drift is silent and permanent.
-    * `compactEvery`/`scopedFold`/`snapshotEvery` are deliberately
-    * excluded: layout/cadence knobs with spec-pinned result identity.
-    *
-    * Layering vs [[bucketFingerprint]]/`_BKCONF`: `_BKCONF` protects the
-    * bucket CACHE's joinability (sweep-on-mismatch — exactness never rides
-    * on a cache), and still stands alone when a fresh service adopts an
-    * existing shared corpus dir; `_CLCONF` protects the STATE's semantics,
-    * where a sweep is meaningless and the only honest answers are the
+    * `compactEvery`/`snapshotEvery` are deliberately excluded:
+    * layout/cadence knobs with spec-pinned result identity. A sweep is
+    * meaningless here; the only honest answers to a mismatch are the
     * original config or the rebuild recompute. */
   private def clusterFingerprint(cfg: Config): String =
     s"threshold=${cfg.threshold},planes=${cfg.numPlanes},dim=${cfg.dim}," +
@@ -551,30 +433,6 @@ object ClusterMaintenance {
           "tombstones under the new config — it recomputes the " +
           "assignment from the retained corpus and re-stamps.")
     }
-  }
-
-  /** The persisted bucket-table dirs a fold of `batchId` may probe, or
-    * None when coverage is incomplete — a missing OR torn (`_SUCCESS`-less,
-    * crash mid-overwrite with the fold not replayed by a non-checkpointed
-    * caller) `bk=i` is NOT committed coverage, and the fold must degrade
-    * to direct signature recomputation rather than probe a partial bucket
-    * table as if it were complete. Coverage also requires the persisted
-    * `_BKCONF` fingerprint to match `cfg`'s LSH geometry — rows built
-    * under different planes/dim/tables are not joinable, so a mismatch
-    * (or a pre-fingerprint layout with no stamp at all) is NOT coverage.
-    * Results are identical either way. */
-  private[jobs] def committedBucketParts(fs: FileSystem, corpusDir: String,
-                                         batchId: Long,
-                                         cfg: Config): Option[Seq[String]] = {
-    if (!readBucketConfig(fs, new Path(corpusDir)).contains(bucketFingerprint(cfg)))
-      return None
-    val bgen = StateProtocol.latestGeneration(fs, new Path(corpusDir),
-      maxGen = batchId - 1, prefix = "bkgen=")
-    val ids = (bgen.getOrElse(-1L) + 1) until batchId
-    if (ids.forall(i => fs.exists(new Path(s"$corpusDir/bk=$i/_SUCCESS"))))
-      Some(bgen.map(g => s"$corpusDir/bkgen=$g").toSeq ++
-        ids.map(i => s"$corpusDir/bk=$i"))
-    else None
   }
 
   /** The contiguous committed delta chain starting at `from` (bounded by
@@ -662,20 +520,12 @@ object ClusterMaintenance {
     * (threshold + LSH candidate geometry) — the fact an operator checks
     * before restarting the service with a given `Config` (None =
     * pre-stamp layout; the next fold adopts and stamps its configured
-    * fingerprint). `bucketConfigStamp` reports the `_BKCONF` CACHE stamp
-    * beside the bucket tables — which LSH geometry built the persisted
-    * buckets — so an operator diagnosing recall (cache swept? geometry
-    * mismatch pending a sweep?) reads it here instead of listing the
-    * corpus dir by hand (None = no bucket cache yet, or the pre-stamp
-    * layout the next fold sweeps). */
+    * fingerprint). */
   final case class Status(headFold: Long, snapshots: Seq[Long],
                           deltas: Seq[Long], corpusGeneration: Option[Long],
                           corpusBatches: Seq[Long],
-                          bucketGeneration: Option[Long],
-                          bucketBatches: Seq[Long],
                           rebuildInProgress: Boolean,
-                          configStamp: Option[String],
-                          bucketConfigStamp: Option[String])
+                          configStamp: Option[String])
 
   def status(spark: SparkSession, stateDir: String, corpusDir: String): Status = {
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -688,8 +538,6 @@ object ClusterMaintenance {
       s"ClusterMaintenance.status: no committed snapshot under $stateDir")
     val chain = committedDeltaChain(sfs, stateDir, from = snaps.max + 1)
     val cgen = StateProtocol.latestGeneration(cfs, cpath, maxGen = Long.MaxValue)
-    val bkgen = StateProtocol.latestGeneration(cfs, cpath, maxGen = Long.MaxValue,
-      prefix = "bkgen=")
     // batch listings are post-generation only (what readers actually
     // consume — same semantics as SpanDedupMaintenance.status): dirs at or
     // below the generation are sweep leftovers every reader already ignores
@@ -700,11 +548,7 @@ object ClusterMaintenance {
       corpusGeneration = cgen,
       corpusBatches = StateProtocol.committedDirs(cfs, cpath, "b=").sorted.toSeq
         .filter(_ > cgen.getOrElse(-1L)),
-      bucketGeneration = bkgen,
-      bucketBatches = StateProtocol.committedDirs(cfs, cpath, "bk=").sorted.toSeq
-        .filter(_ > bkgen.getOrElse(-1L)),
       rebuildInProgress = sfs.exists(StateProtocol.rebuildLeasePath(spath)),
-      configStamp = StateProtocol.readStamp(sfs, spath, "_CLCONF"),
-      bucketConfigStamp = readBucketConfig(cfs, cpath))
+      configStamp = StateProtocol.readStamp(sfs, spath, "_CLCONF"))
   }
 }

@@ -83,7 +83,7 @@ object SpanDedupMaintenance {
     // the accumulated counts are joinable only under the gram length that
     // built them — validate the `_GRAMCONF` stamp before reading anything
     // (a mismatch fails loudly prescribing the rebuildState recount; gram
-    // state is the ONLY record, never sweepable like the bucket cache)
+    // state is the ONLY record, never sweepable)
     ensureGramConfig(fs, gpath, cfg)
     val gen = StateProtocol.latestGeneration(fs, gpath, maxGen = batchId - 1)
     val genPart = gen.map(g => s"$gramDir/gen=$g").toSeq
@@ -194,9 +194,9 @@ object SpanDedupMaintenance {
     StateProtocol.writeStamp(fs, gpath, "_GRAMCONF", fp)
 
   /** Validate (or establish) the `_GRAMCONF` stamp before a fold touches
-    * the state. Unlike the cluster side's `_BKCONF` bucket CACHE, gram
-    * counts are the ONLY record — the service never stores text, so a
-    * sweep on mismatch would destroy the corpus history permanently. The
+    * the state. Gram counts are the ONLY record — the service never
+    * stores text, so a sweep on mismatch would destroy the corpus history
+    * permanently. The
     * mismatch behavior is therefore FAIL LOUDLY, prescribing either the
     * original `n` or a [[rebuildState]] recount of the retained corpus
     * under the new one ([[rebuildState]] is the one writer allowed to

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The on-disk commit/recovery protocol SHARED by graft's parquet-state
   * services — [[ClusterMaintenance]] (versioned cluster assignments +
-  * corpus/bucket generations) and [[SpanDedupMaintenance]] (gram-count
+  * corpus generations) and [[SpanDedupMaintenance]] (gram-count
   * generations + persisted Bloom filters). One implementation, two
   * callers: the services keep their own FOLD semantics (assignment deltas
   * vs mergeable counts — deliberately not abstracted), but every
@@ -13,8 +13,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * The rules (settled across rounds 9–12, spec-pinned in both service
   * specs):
-  *  - a numeric state dir (`v=N`, `d=N`, `b=N`, `gen=G`, `bk=N`,
-  *    `bkgen=G`) is COMMITTED iff it contains the `_SUCCESS` marker
+  *  - a numeric state dir (`v=N`, `d=N`, `b=N`, `gen=G`) is COMMITTED
+  *    iff it contains the `_SUCCESS` marker
   *    Spark's file committer writes last; every reader gates on it
   *    ([[committedDirs]], [[latestGeneration]]) — a bare `fs.exists`
   *    mistakes a torn overwrite for committed coverage;
@@ -79,7 +79,7 @@ private[graft] object StateProtocol {
 
   /** COMMITTED (`_SUCCESS`-marked) numeric dirs with the given prefix under
     * `dir` — the shared gate for snapshot (`v=`), delta (`d=`), batch
-    * (`b=`/`bk=`) and generation (`gen=`/`bkgen=`) reads. */
+    * (`b=`) and generation (`gen=`) reads. */
   def committedDirs(fs: FileSystem, dir: Path, prefix: String): Array[Long] =
     if (!fs.exists(dir)) Array.empty[Long]
     else fs.listStatus(dir).map(_.getPath)
@@ -125,12 +125,9 @@ private[graft] object StateProtocol {
   /** Latest COMMITTED generation ≤ `maxGen` under the state dir: a
     * `gen=G` dir counts only with its `_SUCCESS` marker (a torn dir from
     * a crash mid-compaction is invisible — readers fall back to the
-    * previous generation plus the still-present batch dirs). `prefix`
-    * selects the state namespace: `gen=` for corpus/gram generations,
-    * `bkgen=` for the bucket-table generations beside them. */
-  def latestGeneration(fs: FileSystem, dir: Path, maxGen: Long,
-                       prefix: String = "gen="): Option[Long] = {
-    val gens = committedDirs(fs, dir, prefix).filter(_ <= maxGen)
+    * previous generation plus the still-present batch dirs). */
+  def latestGeneration(fs: FileSystem, dir: Path, maxGen: Long): Option[Long] = {
+    val gens = committedDirs(fs, dir, "gen=").filter(_ <= maxGen)
     if (gens.isEmpty) None else Some(gens.max)
   }
 
@@ -334,13 +331,10 @@ private[graft] object StateProtocol {
     * (fail vs adopt vs re-stamp) stays with each caller — that is the
     * part that genuinely differs per state kind.
     *
-    * Contrast with the `_BKCONF` bucket-CACHE stamp, which the cluster
-    * service keeps inline with sweep-on-mismatch and a tolerated silent
-    * write failure: exactness never rides on a cache, so the worst a lost
-    * cache stamp costs is a recompute. A lost SEMANTIC stamp costs the
-    * adopt-and-stamp path recording the WRONG config over real state —
-    * [[writeStamp]] therefore throws on a failed rename instead of
-    * swallowing it. */
+    * A lost SEMANTIC stamp costs the adopt-and-stamp path recording the
+    * WRONG config over real state — [[writeStamp]] therefore throws on a
+    * failed rename instead of swallowing it (unlike [[writeBloom]], whose
+    * file only ever skips work). */
   def readStamp(fs: FileSystem, dir: Path, name: String): Option[String] = {
     val p = new Path(dir, name)
     if (!fs.exists(p)) None

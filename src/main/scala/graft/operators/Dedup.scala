@@ -670,10 +670,11 @@ object Dedup {
   /** Incremental (cross-batch) component closure: fold a NEW batch's edges
     * into an EXISTING full-coverage assignment without re-running the old
     * corpus's pairwise similarity. `assignment` is prior
-    * [[componentAssignments]] output (or any (id, cluster_id) table whose
-    * labels are component minima); `newEdges` is every similarity pair that
-    * TOUCHES a new id (new-new and new-old — the candidate generator runs
-    * batch × accumulated, never accumulated × accumulated).
+    * [[componentAssignments]] output (id, cluster_id, cluster_size,
+    * is_canonical) whose labels are component minima; `newEdges` is every
+    * similarity pair that TOUCHES a new id (new-new and new-old — the
+    * candidate generator runs batch × accumulated, never accumulated ×
+    * accumulated).
     *
     * Correctness: a component of a graph is unchanged when each old cluster
     * is replaced by its star (member — label), because the star has exactly
@@ -684,87 +685,40 @@ object Dedup {
     * bridge doc take the smaller (older) label — so incremental == full
     * recompute EXACTLY, not approximately (spec-gated in DedupSimilaritySpec).
     *
-    * This is the 100 TB maintenance story: a daily batch pays
-    * |batch| × candidate-bucket similarity plus CC over
-    * (|corpus| star edges + new pairs), instead of corpus × corpus.
-    *
-    * `warmStart` (default on) seeds the label propagation from the prior
-    * assignment itself instead of self-labels — valid EXACTLY (not
-    * approximately) because the prior labels satisfy the seed contract of
-    * [[connectedComponentsWithRounds]] under this method's own input
-    * contract: each prior label is the min of its old cluster, hence
-    * ≤ the member id, and the star edge (member → label) this method adds
-    * makes it reachable by construction. The fold then converges in the
-    * few rounds needed to merge NEW bridges (label distance already 0
-    * inside unchanged old clusters) instead of re-walking every old
-    * cluster's diameter — warm==cold equality is spec-gated in
-    * DedupSimilaritySpec alongside the incremental==full gate. */
-  def incrementalComponentAssignments(assignment: DataFrame,
-                                      newUniverse: DataFrame, idCol: String,
-                                      newEdges: DataFrame, srcCol: String,
-                                      dstCol: String,
-                                      maxIter: Int = 64,
-                                      warmStart: Boolean = true,
-                                      localBound: Long = localComponentsBound): DataFrame = {
-    val star = assignment
-      .select(col("id").cast("long").as("s"), col("cluster_id").cast("long").as("d"))
-    val fresh = newEdges
-      .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
-    val universe = assignment.select(col("id").cast("long").as("id"))
-      .unionByName(newUniverse.select(col(idCol).cast("long").as("id")))
-      .distinct()
-    val seed =
-      if (warmStart)
-        Some(assignment.select(col("id").cast("long").as("node"),
-          col("cluster_id").cast("long").as("lbl")))
-      else None
-    componentAssignments(universe, "id", star.unionByName(fresh), "s", "d",
-      maxIter, seed, localBound)
-  }
-
-  /** SCOPED form of [[incrementalComponentAssignments]]: restrict the fold's
-    * CC loop to the AFFECTED subgraph and pass every untouched prior row
-    * through verbatim. Same inputs, same output, same exactness — but the
-    * per-fold iterative cost becomes batch-proportional instead of
-    * corpus-proportional.
-    *
-    * Why this is exact (and not an approximation): in the star-reduced
-    * graph G = star(all old clusters) ∪ `newEdges`, an old cluster NONE of
-    * whose members touches a new edge is a connected component of G all by
-    * itself — its members connect only through its own star edges (other
-    * clusters' stars are disjoint by definition, and the new edges miss it
-    * by assumption). So components of G split into (a) untouched old
-    * clusters, exactly as the prior assignment records them — same members,
-    * same min-label, same size, same canonical — and (b) components of the
+    * Scoping: in the star-reduced graph G = star(all old clusters) ∪
+    * `newEdges`, an old cluster NONE of whose members touches a new edge is
+    * a connected component of G all by itself — its members connect only
+    * through its own star edges (other clusters' stars are disjoint by
+    * definition, and the new edges miss it by assumption). So components of
+    * G split into (a) untouched old clusters, exactly as the prior
+    * assignment records them — same members, same min-label, same size,
+    * same canonical — passed through verbatim, and (b) components of the
     * scoped graph star(affected clusters) ∪ newEdges over
     * (affected members ∪ new ids), which is the IDENTICAL subgraph a full
     * build would see for those nodes. Affected = prior clusters containing
-    * any endpoint of a new edge. Hence scoped == unscoped == full recompute
-    * row-for-row (three-way equality spec-gated in DedupSimilaritySpec).
+    * any endpoint of a new edge. The CC loop runs on (b) only, warm-started
+    * from the prior labels: valid exactly because each prior label is the
+    * min of its old cluster, hence ≤ the member id, and the star edge
+    * (member → label) makes it reachable — the seed contract of
+    * [[connectedComponentsWithRounds]].
     *
-    * Scale shape per fold: the unscoped form shuffles the WHOLE corpus star
-    * set through every label-propagation round and runs the corpus-wide
-    * distinct/size-groupBy — O(rounds × |corpus|) shuffle rows per fold
-    * even when the batch touches almost nothing. Here the corpus appears
-    * only as broadcast-probe SCANS of the prior assignment (affected-cluster
-    * semi/anti joins — map-side, no corpus shuffle); everything iterative
-    * runs on |affected ∪ batch| rows. The irreducible corpus term left in a
-    * fold is sequential scans + the full-coverage state write.
+    * Scale shape per fold: the corpus appears only as broadcast-probe SCANS
+    * of the prior assignment (affected-cluster semi/anti joins — map-side,
+    * no corpus shuffle); everything iterative runs on |affected ∪ batch|
+    * rows. This is the 100 TB maintenance story: a daily batch pays
+    * |batch| × candidate-bucket similarity plus CC over the affected
+    * subgraph, instead of corpus × corpus.
     *
-    * Preconditions (the first two inherited from the unscoped form, where
-    * they are needed for exactness anyway):
+    * Preconditions:
     *  - append-only ids — every `newUniverse` id greater than all prior ids
     *    (label preservation), and every `newEdges` endpoint present in
     *    `assignment` ∪ `newUniverse`;
-    *  - `assignment` carries the FULL coverage schema
-    *    (id, cluster_id, cluster_size, is_canonical) — untouched rows pass
-    *    through verbatim, so all four columns must exist (the unscoped form
-    *    reads only id/cluster_id because it recomputes the rest);
+    *  - `assignment` carries the FULL coverage schema — untouched rows pass
+    *    through verbatim, so all four columns must exist;
     *  - `newEdges` is batch-proportional: its endpoint set and the affected
-    *    clusters' member rows are collected into BROADCAST relations here.
-    *    For a batch so large that its candidate-pair endpoints cannot
-    *    broadcast (≳10⁸ pairs), fall back to the unscoped form — exactness
-    *    never depends on the choice. */
+    *    clusters' member rows are collected into BROADCAST relations here,
+    *    so a batch whose candidate-pair endpoints cannot broadcast (≳10⁸
+    *    pairs) needs a full [[componentAssignments]] recompute instead. */
   def incrementalComponentAssignmentsScoped(assignment: DataFrame,
                                             newUniverse: DataFrame, idCol: String,
                                             newEdges: DataFrame, srcCol: String,
@@ -992,23 +946,15 @@ object Dedup {
     val bf = corpusGrams.select(col("gram_md5"))
       .stat.bloomFilter("gram_md5", math.max(1L, expectedCorpusGrams), fpp)
     removeDuplicateSpansIncrementalOfTokens(batch, idCol, toksCol, n,
-      corpusGrams, bf)
+      corpusGrams, Seq(bf))
   }
 
-  /** [[removeDuplicateSpansIncrementalOfTokens]] with a PREBUILT Bloom
-    * filter over the corpus gram digests — the service form (build the
-    * filter once per corpus generation, reuse across batches). */
-  def removeDuplicateSpansIncrementalOfTokens(batch: DataFrame, idCol: String,
-                                              toksCol: String, n: Int,
-                                              corpusGrams: DataFrame,
-                                              corpusBloom: org.apache.spark.util.sketch.BloomFilter): DataFrame =
-    removeDuplicateSpansIncrementalOfTokens(batch, idCol, toksCol, n,
-      corpusGrams, Seq(corpusBloom))
-
-  /** [[removeDuplicateSpansIncrementalOfTokens]] whose corpus Bloom
-    * coverage is SPLIT across several prebuilt filters — the compacted
-    * service's shape: one persisted filter covering the committed
-    * generation plus a small fresh one covering the batch dirs after it.
+  /** [[removeDuplicateSpansIncrementalOfTokens]] with PREBUILT Bloom
+    * filters over the corpus gram digests — the service form (build the
+    * filters once per corpus generation, reuse across batches). Coverage
+    * may be SPLIT across several filters — the compacted service's shape:
+    * one persisted filter covering the committed generation plus a small
+    * fresh one covering the batch dirs after it.
     * A gram is a possible corpus hit iff ANY filter might contain it, so
     * the union of filters covers exactly the union of the state dirs; the
     * definite-miss guarantee (hence exactness) is preserved filter-wise.

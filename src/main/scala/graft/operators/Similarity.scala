@@ -381,9 +381,12 @@ object Similarity {
   /** Embedding-cosine near-dup pairs of a NEW BATCH against an accumulated
     * corpus — every returned pair touches a batch row (batch × corpus and
     * batch × batch; never corpus × corpus). This is the candidate generator
-    * behind [[graft.operators.Dedup.incrementalComponentAssignments]]: its
-    * output plus the prior assignment's stars is exactly the connectivity a
-    * full recompute would see, at |batch|-proportional cost.
+    * behind [[graft.operators.Dedup.incrementalComponentAssignmentsScoped]]
+    * and the one [[graft.jobs.ClusterMaintenance]] fold path: its output
+    * plus the prior assignment's stars is exactly the connectivity a full
+    * recompute would see. The corpus side's signatures are recomputed from
+    * its vectors on every call (one scan); nothing is persisted between
+    * calls.
     *
     * Candidate completeness relies on probe-mask SYMMETRY: the multi-table
     * probe set is a Hamming ball, so sig(x) ∈ ball(sig(y)) ⇔
@@ -431,72 +434,6 @@ object Similarity {
       .select(least(col("bid"), col("id")).as("id_a"),
         greatest(col("bid"), col("id")).as("id_b"))
       .distinct()
-    val v = normFiltered(full.select(col("id"), col("vec"),
-      sqrt(vec_dot(col("vec"), col("vec"))).as("norm")), "norm")
-    pairs
-      .join(v.select(col("id").as("id_a"), col("vec").as("va"), col("norm").as("na")), Seq("id_a"))
-      .join(v.select(col("id").as("id_b"), col("vec").as("vb"), col("norm").as("nb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (vec_dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** Per-row multi-table LSH bucket rows — (id, t ∈ 0..numTables-1,
-    * sig) — the PRECOMPUTABLE corpus side of
-    * [[cosineNearDupPairsAgainst]]. The hyperplanes are deterministic in
-    * (numPlanes, numTables, dim) (seeded [[randomPlanes]]), so rows
-    * persisted beside a corpus stay valid for every later call with the
-    * same configuration: a maintenance service appends one batch-sized
-    * bucket table per fold and the accumulated state replaces the
-    * corpus-wide signature recomputation (numTables·numPlanes·dim
-    * multiplies PER CORPUS ROW PER FOLD) with a compact parquet read. */
-  def lshBucketTable(df: DataFrame, idCol: String, vecCol: String,
-                     numPlanes: Int, dim: Int, numTables: Int): DataFrame = {
-    val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius = 0)
-    df.select(col(idCol).as("id"), lsh.sigs(col(vecCol)).as("sigs"))
-      .select(col("id"), posexplode_outer(col("sigs")).as(Seq("t", "sig")))
-  }
-
-  /** [[cosineNearDupPairsAgainst]] with a PREBUILT corpus bucket table —
-    * the service form. `corpusBuckets` must be [[lshBucketTable]] rows
-    * (id, t, sig) covering EXACTLY the rows of `corpus` at the same
-    * (numPlanes, dim, numTables): the fold then computes signatures only
-    * for the batch, and the corpus's vectors are read once (the exact
-    * cosine gate), not twice. Candidate completeness is unchanged —
-    * probe-mask symmetry cares only about which (t, sig) rows exist,
-    * not how they were produced. The exhaustive configuration
-    * (numTables=1, probeRadius ≥ numPlanes) has no bucket table to
-    * reuse and delegates to the direct form. */
-  def cosineNearDupPairsAgainstBucketed(batch: DataFrame, corpus: DataFrame,
-                                        corpusBuckets: DataFrame,
-                                        idCol: String, vecCol: String,
-                                        threshold: Double, numPlanes: Int,
-                                        dim: Int, probeRadius: Int,
-                                        numTables: Int): DataFrame = {
-    import graft.plans.VectorExpressions.vec_dot
-    if (numTables == 1 && probeRadius >= numPlanes)
-      return cosineNearDupPairsAgainst(batch, corpus, idCol, vecCol,
-        threshold, numPlanes, dim, probeRadius, numTables)
-    val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
-    val batchBk = lshBucketTable(spread(batch, idCol), idCol, vecCol,
-      numPlanes, dim, numTables)
-    // spread the bucket rows too: the candidate fan-out below runs on this
-    // side's partitions, and a compacted bkgen often reads as few splits
-    val base = spread(corpusBuckets.select(col("id"), col("t"), col("sig"))
-      .unionByName(batchBk), "id")
-    val probed = batchBk
-      .select(col("id").as("bid"), col("t"), lsh.probes(col("sig")).as("sig"))
-    val cand = base.join(probed, Seq("t", "sig"))
-      .filter(col("bid") =!= col("id"))
-      .select(col("bid"), col("id"))
-    // deliberately NO spreadEager — the fold path, see the note in
-    // [[cosineNearDupPairsAgainst]]
-    val pairs = cand
-      .select(least(col("bid"), col("id")).as("id_a"),
-        greatest(col("bid"), col("id")).as("id_b"))
-      .distinct()
-    val full = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .unionByName(batch.select(col(idCol).as("id"), col(vecCol).as("vec")))
     val v = normFiltered(full.select(col("id"), col("vec"),
       sqrt(vec_dot(col("vec"), col("vec"))).as("norm")), "norm")
     pairs

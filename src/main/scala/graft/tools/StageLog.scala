@@ -4,8 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import scala.jdk.CollectionConverters._
 
 /** The one stage listener: records every completed stage under its owning
-  * job's description (`spark.job.description`, else the job's short call
-  * site), read from the job's properties when the job STARTED. A stage is
+  * job's description (`spark.job.description`, else the job's own call
+  * site — its result stage's name, e.g. `count at Foo.scala:12`), read
+  * when the job STARTED. A stage is
   * therefore filed under the phase that submitted it, however late its
   * completion event is delivered. Bench reads `tera_stages` from it;
   * DevRun prints a query's slowest stages. */
@@ -15,10 +16,9 @@ final class StageLog extends SparkListener {
   private val done = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
 
   override def onJobStart(js: SparkListenerJobStart): Unit = {
-    val props = Option(js.properties)
-    val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
-      .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
-      .getOrElse("")
+    val desc = Option(js.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description")))
+      .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
     js.stageIds.foreach(jobOf.put(_, desc))
   }
 

@@ -50,10 +50,8 @@ class ClusterMaintenanceSpec extends SparkSpec {
     val st = ClusterMaintenance.status(spark, state, corpus)
     assert(st == ClusterMaintenance.Status(headFold = 2, snapshots = Seq(0),
       deltas = Seq(1, 2), corpusGeneration = None, corpusBatches = Seq(0, 1, 2),
-      bucketGeneration = None, bucketBatches = Seq(0, 1, 2),
       rebuildInProgress = false,
-      configStamp = Some("threshold=0.35,planes=4,dim=64,probe=1,tables=16"),
-      bucketConfigStamp = Some("planes=4,dim=64,tables=16")),
+      configStamp = Some("threshold=0.35,planes=4,dim=64,probe=1,tables=16")),
       s"unexpected service status: $st")
   }
 
@@ -170,23 +168,6 @@ class ClusterMaintenanceSpec extends SparkSpec {
       s"gap error message unhelpful: ${e.getMessage}")
   }
 
-  test("scopedFold=false folds to identical state (the giant-batch fallback)") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .filter(col("vec_id") < 120)
-    def batch(w: Int) = emb.filter(col("vec_id") >= w * 40 && col("vec_id") < (w + 1) * 40)
-    def foldAll(scoped: Boolean): Set[(Long, Long, Long, Int)] = {
-      val cfg = ClusterMaintenance.Config(threshold = 0.35, numPlanes = 4,
-        dim = 64, probeRadius = 1, numTables = 16, scopedFold = scoped)
-      val root = java.nio.file.Files.createTempDirectory("cmaint_sc").toString
-      (0 until 3).foreach(w => ClusterMaintenance.foldBatch(batch(w), w.toLong,
-        s"$root/state", s"$root/corpus", "vec_id", "embedding", cfg))
-      rows(ClusterMaintenance.latestAssignment(spark, s"$root/state"))
-    }
-    assert(foldAll(scoped = true) == foldAll(scoped = false),
-      "scoped and unscoped service folds must produce identical state")
-  }
-
   test("corpus compaction mid-sequence changes nothing and bounds the dir count") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
@@ -214,55 +195,64 @@ class ClusterMaintenanceSpec extends SparkSpec {
     val cdirs = new java.io.File(corpus).listFiles()
       .map(_.getName).filter(n => n.startsWith("b=") || n.startsWith("gen=")).sorted.toSeq
     assert(cdirs == Seq("b=4", "b=5", "gen=3"), s"unexpected corpus dirs: $cdirs")
-    // the bucket state compacts in lockstep and is equally bounded
-    val bdirs = new java.io.File(corpus).listFiles()
-      .map(_.getName).filter(n => n.startsWith("bk=") || n.startsWith("bkgen=")).sorted.toSeq
-    assert(bdirs == Seq("bk=4", "bk=5", "bkgen=3"), s"unexpected bucket dirs: $bdirs")
   }
 
-  test("missing bucket dirs degrade a fold to direct recomputation with identical results") {
+  test("a corpus dir holding legacy bucket-cache entries folds, compacts and rebuilds like a clean one") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .filter(col("vec_id") < 60)
+      .filter(col("vec_id") < 100)
     val cfg = ClusterMaintenance.Config(threshold = 0.35, numPlanes = 4,
-      dim = 64, probeRadius = 1, numTables = 16)
+      dim = 64, probeRadius = 1, numTables = 16, compactEvery = 2)
     def batch(w: Int) = emb.filter(col("vec_id") >= w * 20 && col("vec_id") < (w + 1) * 20)
-    val root = java.nio.file.Files.createTempDirectory("cmaint_nobk").toString
-    val (state, corpus) = (s"$root/state", s"$root/corpus")
-    (0 until 2).foreach(w => ClusterMaintenance.foldBatch(batch(w), w.toLong,
-      state, corpus, "vec_id", "embedding", cfg))
-    // The coverage gate, counterfactually: with bk=0/bk=1 committed, fold 2
-    // would probe them; tearing ONLY bk=1's _SUCCESS (its parquet data
-    // stays on disk — exactly what a crash mid-overwrite leaves, and
-    // exactly what a bare exists() check would mistake for coverage) must
-    // flip the decision to the degrade path.
-    val fs = new org.apache.hadoop.fs.Path(corpus)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(ClusterMaintenance.committedBucketParts(fs, corpus, 2L, cfg).isDefined,
-      "premise: both bucket dirs committed -> coverage")
-    assert(new java.io.File(s"$corpus/bk=1/_SUCCESS").delete(),
-      "premise: bk=1 was committed")
-    assert(ClusterMaintenance.committedBucketParts(fs, corpus, 2L, cfg).isEmpty,
-      "a torn bucket dir (data present, no _SUCCESS) was treated as committed coverage")
-    // fold 2 runs through the degrade decision above — results identical
-    ClusterMaintenance.foldBatch(batch(2), 2L, state, corpus, "vec_id", "embedding", cfg)
-    // and a pre-upgrade layout (bucket tables absent wholesale) degrades too
-    new java.io.File(corpus).listFiles()
-      .filter(f => f.getName.startsWith("bk=") || f.getName.startsWith("bkgen="))
-      .foreach(f => { def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete(); () }
-        rm(f) })
-    val embAll = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-    ClusterMaintenance.foldBatch(embAll.filter(col("vec_id") >= 60), 3L,
-      state, corpus, "vec_id", "embedding", cfg)
-    val got = rows(ClusterMaintenance.latestAssignment(spark, state))
+    import spark.implicits._
+    val tomb = (0L until 80L).filter(_ % 7 == 0).toDF("vec_id")
+    // Earlier versions kept per-batch LSH bucket rows (id, t, sig) in
+    // `bk=N`, their compacted `bkgen=G` and a `_BKCONF` geometry stamp
+    // beside the corpus. Such entries, committed and naming ids the
+    // takedown retracts, must change nothing: the folds, the compaction
+    // (gen=1 at fold 2) and the rebuild (gen=3) read exact name prefixes.
+    val legacyNames = (0 to 4).map(i => s"bk=$i") ++ Seq("bkgen=1", "bkgen=3", "_BKCONF")
+    def run(legacy: Boolean) = {
+      val root = java.nio.file.Files.createTempDirectory("cmaint_legacy").toString
+      val (state, corpus) = (s"$root/state", s"$root/corpus")
+      if (legacy) {
+        val bucketRows = spark.range(0, 100).select(col("id"),
+          (col("id") % 16).cast("int").as("t"), (col("id") * 31).as("sig"))
+        legacyNames.filter(_.contains("=")).foreach(nm =>
+          bucketRows.write.parquet(s"$corpus/$nm"))
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$corpus/_BKCONF"),
+          "planes=4,dim=64,tables=16\n".getBytes("UTF-8"))
+      }
+      def observe() = (rows(ClusterMaintenance.latestAssignment(spark, state)),
+        ClusterMaintenance.status(spark, state, corpus))
+      val folded = (0 until 4).map { w =>
+        ClusterMaintenance.foldBatch(batch(w), w.toLong, state, corpus,
+          "vec_id", "embedding", cfg)
+        observe()
+      }
+      ClusterMaintenance.rebuildWithoutTombstones(spark, state, corpus, tomb,
+        "vec_id", cfg)
+      val rebuilt = observe()
+      ClusterMaintenance.foldBatch(batch(4), 4L, state, corpus, "vec_id", "embedding", cfg)
+      val resumed = observe()
+      val left = new java.io.File(corpus).list().toSet
+      (folded :+ rebuilt :+ resumed, left)
+    }
+    val (clean, _) = run(legacy = false)
+    val (legacy, left) = run(legacy = true)
+    clean.zip(legacy).zipWithIndex.foreach { case ((c, l), step) =>
+      assert(l._1 == c._1, s"step $step: assignment diverged from the clean dir")
+      assert(l._2 == c._2, s"step $step: status diverged from the clean dir: ${l._2} vs ${c._2}")
+    }
+    assert(legacyNames.forall(left.contains),
+      s"premise: the legacy entries stayed beside the corpus throughout: $left")
+    val retained = emb.filter(col("vec_id") >= 80 || col("vec_id") % 7 =!= 0)
     val full = rows(Dedup.componentAssignments(
-      embAll.select(col("vec_id")), "vec_id",
-      Similarity.cosineNearDupPairs(embAll, "vec_id", "embedding",
+      retained.select(col("vec_id")), "vec_id",
+      Similarity.cosineNearDupPairs(retained, "vec_id", "embedding",
         threshold = 0.35, numPlanes = 4, dim = 64, probeRadius = 1, numTables = 16),
       "id_a", "id_b"))
-    assert(got == full, "fallback fold diverged from the full pruned build")
+    assert(legacy.last._1 == full, "the legacy-layout service diverged from the full pruned build")
   }
 
   test("tombstone rebuild == from-scratch on the filtered corpus; the stream resumes exactly") {
@@ -365,60 +355,39 @@ class ClusterMaintenanceSpec extends SparkSpec {
     assert(got == Set(1L, 2L), "latestAssignment read a torn version")
   }
 
-  test("persisted bucket state is config-fingerprinted: a different LSH geometry is not coverage and the fold self-heals the cache") {
+  test("a changed LSH geometry fails fast against the _CLCONF stamp; the rebuild under the new geometry lets the next fold land") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .filter(col("vec_id") < 60)
     val cfgA = ClusterMaintenance.Config(threshold = 0.35, numPlanes = 4,
       dim = 64, probeRadius = 1, numTables = 4)
     def batch(w: Int) = emb.filter(col("vec_id") >= w * 20 && col("vec_id") < (w + 1) * 20)
-    val root = java.nio.file.Files.createTempDirectory("cmaint_bkconf").toString
+    val root = java.nio.file.Files.createTempDirectory("cmaint_geom").toString
     val (state, corpus) = (s"$root/state", s"$root/corpus")
     (0 until 2).foreach(w => ClusterMaintenance.foldBatch(batch(w), w.toLong,
       state, corpus, "vec_id", "embedding", cfgA))
-    val fs = new org.apache.hadoop.fs.Path(corpus)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(ClusterMaintenance.committedBucketParts(fs, corpus, 2L, cfgA).isDefined,
-      "premise: coverage under the geometry that built the dirs")
-    // the decision, counterfactually: SAME committed dirs, different LSH
-    // geometry — the persisted signatures are not joinable against batch
-    // signatures computed under cfgB, so offering them as coverage would
-    // silently collapse candidate recall. Pre-fingerprint, this returned
-    // Some and the fold probed them.
-    val cfgB = cfgA.copy(numTables = 8)
-    assert(ClusterMaintenance.committedBucketParts(fs, corpus, 2L, cfgB).isEmpty,
-      "bucket rows persisted under geometry A were offered as coverage for geometry B")
-    // geometry is part of the STATE's semantic fingerprint too (`_CLCONF`):
-    // a fold under cfgB refuses up front — the geometry decides which
+    // geometry is part of the STATE's semantic fingerprint (`_CLCONF`): a
+    // fold under cfgB refuses up front — the geometry decides which
     // candidate pairs entered the accumulated assignment
+    val cfgB = cfgA.copy(numTables = 8)
     intercept[IllegalStateException] {
       ClusterMaintenance.foldBatch(batch(2), 2L, state, corpus, "vec_id", "embedding", cfgB)
     }
-    // the prescribed path to the new geometry is the rebuild recompute; it
-    // sweeps the geometry-A cache dirs (pure cache — exactness never rode
-    // on them), re-stamps `_BKCONF` to B, and writes the bucket generation
-    // under B
+    // the prescribed path to the new geometry is the rebuild recompute,
+    // which re-stamps; folds then proceed under B on the rebuilt state
     import spark.implicits._
     ClusterMaintenance.rebuildWithoutTombstones(spark, state, corpus,
       Seq.empty[Long].toDF("vec_id"), "vec_id", cfgB)
-    val bkNames = new java.io.File(corpus).listFiles()
-      .map(_.getName).filter(n => n.startsWith("bk=") || n.startsWith("bkgen=")).sorted.toSeq
-    assert(bkNames == Seq("bkgen=1"),
-      s"the rebuild must sweep geometry-A bucket dirs and rebuild under B: $bkNames")
-    // the operator's recall-diagnosis view: status surfaces WHICH geometry
-    // built the persisted buckets, through the geometry-change rebuild
-    // (r14 verdict item 4 — previously only discoverable by listing the
-    // corpus dir by hand)
-    assert(ClusterMaintenance.status(spark, state, corpus).bucketConfigStamp
-      .contains("planes=4,dim=64,tables=8"),
-      "status must report the re-stamped bucket-cache geometry")
-    // coverage is claimable under B now — and never again under A
-    assert(ClusterMaintenance.committedBucketParts(fs, corpus, 2L, cfgB).isDefined,
-      "post-rebuild bucket coverage must be claimable under the new geometry")
-    assert(ClusterMaintenance.committedBucketParts(fs, corpus, 2L, cfgA).isEmpty,
-      "the superseded geometry must not claim coverage after the re-stamp")
-    // folds proceed under B on the rebuilt state
+    assert(ClusterMaintenance.status(spark, state, corpus).configStamp
+      .contains("threshold=0.35,planes=4,dim=64,probe=1,tables=8"),
+      "the rebuild must re-stamp the new geometry")
     ClusterMaintenance.foldBatch(batch(2), 2L, state, corpus, "vec_id", "embedding", cfgB)
+    val full = rows(Dedup.componentAssignments(emb.select(col("vec_id")), "vec_id",
+      Similarity.cosineNearDupPairs(emb, "vec_id", "embedding", threshold = 0.35,
+        numPlanes = 4, dim = 64, probeRadius = 1, numTables = 8),
+      "id_a", "id_b"))
+    assert(rows(ClusterMaintenance.latestAssignment(spark, state)) == full,
+      "the fold after the geometry-change rebuild diverged from the full build under B")
   }
 
   test("a changed threshold fails fast against the _CLCONF stamp; the prescribed rebuild recomputes and re-stamps") {

@@ -5,8 +5,9 @@ import org.scalatest.concurrent.Eventually
 import org.scalatest.time.{Seconds, Span}
 
 /** The one stage listener files each stage under the description its job
-  * carried when it STARTED: back-to-back phases keep their own stages, and
-  * stages of jobs outside the selected descriptions stay out. */
+  * carried when it STARTED: back-to-back phases keep their own stages,
+  * stages of jobs outside the selected descriptions stay out, and a job
+  * without a description is filed under its own call site. */
 class StageLogSpec extends SparkSpec with Eventually {
 
   test("stages are keyed <description>_s<ordinal> by their job's start-time description") {
@@ -29,6 +30,12 @@ class StageLogSpec extends SparkSpec with Eventually {
       assert(keyed.map(_._1) == Seq("p0_phase_a_s00", "p0_phase_a_s01", "p0_phase_b_s00"))
       assert(keyed.forall(_._2 >= 0.0))
       assert(log.stages.filter(_.job.startsWith("p0_")).forall(_.tasks == 2))
+      // the undescribed job's stages are owned by its call site: the result
+      // stage's name, which points at this file
+      val undescribed = log.stages.filterNot(_.job.startsWith("p0_"))
+      assert(undescribed.forall(_.job.nonEmpty) &&
+        undescribed.count(_.job.contains("StageLogSpec.scala")) >= 2,
+        s"undescribed stages lack a call-site owner: ${undescribed.map(_.job)}")
     } finally {
       sc.setJobDescription(null)
       sc.removeSparkListener(log)
