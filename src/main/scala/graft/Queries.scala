@@ -2428,12 +2428,14 @@ object Queries {
     * mergeable state a service persists beside the corpus); the high-id
     * 20% arrives as today's batch and is span-deduped against
     * batch ∪ corpus without re-scanning corpus text —
-    * [[Dedup.removeDuplicateSpansIncrementalOfTokens]], whose Bloom
-    * prefilter proves mostly-novel grams unique without shuffling toward
-    * the gram table. The oracle replays the FULL recompute over all
-    * documents restricted to batch ids — exactly what the incremental
-    * path must equal (the split identity: covered-ness depends only on a
-    * gram's total count, which splits as batch + corpus). Both dup paths
+    * [[Dedup.removeDuplicateSpansIncrementalOfTokens]], whose exact semi
+    * join against the gram table decides every batch-unique gram (an
+    * empty corpus side, possible when doc_ids don't start near 0, gives
+    * the single-corpus dedup through the same path). The oracle replays
+    * the FULL recompute over all documents restricted to batch ids —
+    * exactly what the incremental path must equal (the split identity:
+    * covered-ness depends only on a gram's total count, which splits as
+    * batch + corpus). Both dup paths
     * are data-exercised at the gate SFs: grams duplicated within the
     * batch alone AND batch-unique grams covered only via the corpus
     * (measured 88/386 grams at sf0.001, 76/299 at sf0.01). */
@@ -2446,20 +2448,8 @@ object Queries {
     val corpus = toks(docs.filter(col("doc_id") < h))
     val batch = toks(docs.filter(col("doc_id") >= h))
     val grams = Dedup.spanGramCounts(corpus, "doc_id", "toks", n = 8)
-    // Bloom sizing: token count bounds gram count from above (one gram per
-    // window start, at most one start per token) — a bounded scalar read.
-    // sum() over an EMPTY corpus side is SQL NULL (possible when doc_ids
-    // don't start near 0 and the 80% split captures nothing), so the read
-    // is Option-guarded and an empty corpus falls back to the plain
-    // single-corpus dedup — the incremental path's exact degenerate case.
-    val expected = Option(corpus.agg(sum(size(col("toks"))).cast("long"))
-      .head().get(0)).fold(0L)(_.asInstanceOf[Long])
-    val deduped =
-      if (expected == 0L)
-        Dedup.removeDuplicateSpansOfTokens(batch, "doc_id", "toks", n = 8)
-      else Dedup.removeDuplicateSpansIncrementalOfTokens(batch, "doc_id", "toks",
-        n = 8, grams, expectedCorpusGrams = expected)
-    deduped
+    Dedup.removeDuplicateSpansIncrementalOfTokens(batch, "doc_id", "toks",
+        n = 8, grams)
       .select(col("id").as("doc_id"), col("n_tokens"), col("n_dup_starts"),
         col("n_spans"), col("n_covered"),
         md5(to_binary(concat_ws(" ", col("clean_toks")), lit("utf-8")))
@@ -2683,15 +2673,15 @@ object Queries {
     * LIFECYCLE under one oracle. Two tercile folds commit their gram
     * counts; every ingested doc_id % 7 == 0 is then retracted via
     * [[jobs.SpanDedupMaintenance.rebuildState]] (the recount of the
-    * retained prefix becomes a single superseding generation with a FRESH
-    * persisted Bloom filter); the stream resumes with the third tercile
-    * folded on top. The resumed fold's clean output must equal the full
-    * span-dedup recompute over (retained ∪ batch) restricted to the
-    * batch — the operator's split identity on the filtered corpus. A
-    * retraction that is invisible to the next fold (a doc whose only
-    * duplicates were retracted must come back UNCOVERED), a stale filter
-    * paired with the rebuilt generation, or a rebuild that kept a
-    * tombstoned doc's grams all change coverage and hash-fail here. */
+    * retained prefix becomes a single superseding generation); the
+    * stream resumes with the third tercile folded on top. The resumed
+    * fold's clean output must equal the full span-dedup recompute over
+    * (retained ∪ batch) restricted to the batch — the operator's split
+    * identity on the filtered corpus. A retraction that is invisible to
+    * the next fold (a doc whose only duplicates were retracted must come
+    * back UNCOVERED), a superseded dir read beside the rebuilt
+    * generation, or a rebuild that kept a tombstoned doc's grams all
+    * change coverage and hash-fail here. */
   def spanTakedownResume(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir).documents
     def toks(d: DataFrame) = d.select(col("doc_id").cast("long").as("doc_id"),
@@ -2769,11 +2759,10 @@ object Queries {
     * wave files (the SAME split as q115, so this query answers to q115's
     * oracle verbatim); each micro-batch tokenizes its slice and folds it
     * through [[jobs.SpanDedupMaintenance.foldBatch]] — gram-count state,
-    * persisted-generation Bloom, compactEvery=1 (the tightest cadence):
-    * fold 1 commits `gen=0` + its filter, so the POST-RESTART fold
-    * resolves its prior through a committed generation and probes the
-    * persisted Bloom in-stream, and fold 2's own compaction also runs
-    * UNDER this oracle. Run 1 is killed once batch 1 commits (stop can
+    * compactEvery=1 (the tightest cadence): fold 1 commits `gen=0`, so
+    * the POST-RESTART fold resolves its prior through a committed
+    * generation and semi-joins against it in-stream, and fold 2's own
+    * compaction also runs UNDER this oracle. Run 1 is killed once batch 1 commits (stop can
     * land mid-batch); run 2 resumes from the checkpoint, replays any
     * in-flight batch (foldBatch's keyed overwrites make the replay
     * byte-identical — idempotence IS the exactly-once story), and
@@ -2938,15 +2927,14 @@ object Queries {
     * the quiesced window the rebuild lease enforces);
     * [[jobs.SpanDedupMaintenance.rebuildState]] then recounts the
     * retained corpus (every ingested doc_id % 7 == 0 retracted) into a
-    * single superseding generation with a fresh persisted Bloom filter;
-    * the SAME stream resumes from the SAME checkpoint with the third
-    * tercile staged, so the restart's fold (batchId 2) resolves the
-    * rebuilt generation — probing the fresh filter, never the stale
-    * one — and its clean output must equal the full span-dedup recompute
+    * single superseding generation; the SAME stream resumes from the
+    * SAME checkpoint with the third tercile staged, so the restart's fold
+    * (batchId 2) resolves the rebuilt generation — never a superseded
+    * dir — and its clean output must equal the full span-dedup recompute
     * over (retained ∪ batch) restricted to the batch: q122's oracle
     * VERBATIM. A lease left behind, a head derived past the rebuilt
-    * generation, or a stale filter's wrong definite-miss all change
-    * coverage and hash-fail here through the streaming machinery. */
+    * generation, or a stale dir read beside it all change coverage and
+    * hash-fail here through the streaming machinery. */
   def streamingSpanTakedownLifecycle(spark: SparkSession, dir: String): DataFrame = {
     val runId = streamRunCounter.getAndIncrement()
     val tag = s"q124_${Integer.toHexString(dir.hashCode)}_$runId"
@@ -3004,7 +2992,7 @@ object Queries {
       jobs.SpanDedupMaintenance.rebuildState(retained, gramDir,
         "doc_id", "toks", cfg)
       // resume: third tercile staged, the SAME checkpoint continues at
-      // batchId 2 over the rebuilt generation + fresh filter
+      // batchId 2 over the rebuilt generation
       writeWave(2)
       drainRun(() => start())
     } finally base.unpersist(false)

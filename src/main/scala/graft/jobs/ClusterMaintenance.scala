@@ -32,11 +32,12 @@ import org.apache.spark.sql.functions._
   *    stay bounded by `compactEvery` at any stream length, instead of
   *    growing linearly with batch count.
   *
-  * Any other entry under the dirs (for instance the per-batch LSH bucket
-  * tables and their geometry stamp that earlier versions kept beside the
-  * corpus) is ignored: every reader parses exact name prefixes
-  * ([[StateProtocol.numericSuffix]]), and each fold recomputes its
-  * candidate signatures from the vectors.
+  * Any other entry under the dirs is ignored: every reader parses exact
+  * name prefixes ([[StateProtocol.numericSuffix]]), and each fold
+  * recomputes its candidate signatures from the vectors. The per-batch
+  * LSH bucket tables and their geometry stamp that earlier versions kept
+  * beside the corpus are removed by the first compaction or rebuild
+  * ([[StateProtocol.sweepSuperseded]]).
   *
   * Commit protocol: a state version or generation dir is COMMITTED iff it
   * contains the `_SUCCESS` marker Spark's file committer writes last — a
@@ -203,11 +204,7 @@ object ClusterMaintenance {
         // the sweep below runs only after the generation commits, so no
         // source dir is deleted under a concurrent reader
         corpus.write.mode("overwrite").parquet(s"$corpusDir/gen=$newGen")
-        val stale = fs.listStatus(cpath).map(_.getPath.getName).filter { nm =>
-          StateProtocol.numericSuffix(nm, "b=").exists(_ <= newGen) ||
-            StateProtocol.numericSuffix(nm, "gen=").exists(_ < newGen)
-        }
-        stale.foreach(nm => fs.delete(new Path(s"$corpusDir/$nm"), true))
+        StateProtocol.sweepSuperseded(fs, cpath, newGen)
       }
     } finally b.unpersist(false)
     ()
@@ -366,11 +363,7 @@ object ClusterMaintenance {
       val aside = new Path(s"$corpusDir/.gen=$v.old")
       StateProtocol.swapIn(cfs, fin, aside, tmp, "rebuildWithoutTombstones")
       StateProtocol.discardAside(cfs, aside)
-      val stale = cfs.listStatus(cpath).map(_.getPath.getName).filter { nm =>
-        StateProtocol.numericSuffix(nm, "b=").exists(_ <= v) ||
-          StateProtocol.numericSuffix(nm, "gen=").exists(_ < v)
-      }
-      stale.foreach(nm => cfs.delete(new Path(s"$corpusDir/$nm"), true))
+      StateProtocol.sweepSuperseded(cfs, cpath, v)
       // the rebuilt v=$v snapshot supersedes every older snapshot AND all
       // deltas ≤ v (reconstruction only applies deltas newer than the
       // latest snapshot, so these are dead weight at best and, for a

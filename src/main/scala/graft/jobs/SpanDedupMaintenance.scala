@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.operators.Dedup
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Continuous exact-substring (span-level) dedup as a batch-fold SERVICE —
@@ -41,23 +41,19 @@ import org.apache.spark.sql.functions._
   * batch count + accumulated count (the operator's split identity, folded).
   *
   * Scale shape per fold: the batch's own gram counts are one map-side-
-  * combined groupBy; the committed generation's Bloom filter is built ONCE
-  * at compaction, persisted beside the generation (`bloom=G.bin`), and
-  * probed by every later fold — a fold's only scan of the generation gram
-  * state is the operator's exact semi join, and its Bloom-build work is
-  * bounded by the ≤ compactEvery post-generation batch dirs (presence is
-  * all the dedup needs — the union of dirs is passed unmerged, no
-  * corpus-wide groupBy per fold). A mostly-novel batch shuffles
-  * ~fpp·|batch grams| toward the state table. Exactness never rides on a
-  * filter file: a missing `bloom=G.bin` (old layout, crash between the
-  * generation commit and the filter write) degrades that fold to the
-  * scan-and-build path with identical results. */
+  * combined groupBy, and a batch-unique gram is a duplicate iff the
+  * operator's exact semi join finds it in the committed gram dirs — the
+  * fold's only scan of the generation gram state. Presence is all the
+  * dedup needs, so the union of dirs is passed unmerged (no corpus-wide
+  * groupBy per fold). Nothing derived is persisted beside a generation;
+  * the Bloom filters earlier versions kept there (`bloom=G.bin`) are
+  * never read and go with the next compaction or rebuild. */
 object SpanDedupMaintenance {
 
   /** `n = 8` matches the q109/q111/q113 gated gram length.
     * `compactEvery`: sum-merge the gram dirs once the latest committed
     * generation trails the fold by this many batch dirs (≤ 0 disables). */
-  final case class Config(n: Int = 8, fpp: Double = 0.01, compactEvery: Int = 8)
+  final case class Config(n: Int = 8, compactEvery: Int = 8)
 
   /** Fold one ingest batch — (idCol: integral, toksCol: array<string>) —
     * through the span dedup and into the gram state. Reads the accumulated
@@ -98,43 +94,16 @@ object SpanDedupMaintenance {
       "a prior fold crashed mid-write; replay that fold first (its keyed " +
         "overwrite converges), then fold later batches")
     val priorParts = genPart ++ batchParts
-    val gramSchema = "gram_md5 string, cnt long"
+    val gramSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "gram_md5 string, cnt long")
+    // no prior state (the first fold, or a fresh dir) is an empty local
+    // relation, which the optimizer folds out of the semi join
     val prior =
       if (priorParts.isEmpty)
-        sess.createDataFrame(sess.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(gramSchema))
+        sess.createDataFrame(java.util.Collections.emptyList[Row](), gramSchema)
       else sess.read.schema(gramSchema).parquet(priorParts: _*)
-    val clean =
-      if (priorParts.isEmpty)
-        Dedup.removeDuplicateSpansOfTokens(batch, idCol, toksCol, cfg.n)
-      else {
-        // Bloom coverage for the prior state: the committed generation's
-        // PERSISTED filter (built once at compaction, reused by every fold
-        // after it — the generation is never re-scanned to prove novelty)
-        // plus a fresh filter over only the ≤ compactEvery post-generation
-        // batch dirs. A fold therefore scans the generation gram state
-        // exactly once (the exact semi join inside the operator), and its
-        // Bloom work is bounded by compactEvery batches, not |corpus|.
-        // Missing filter file (pre-filter layout, or a crash between the
-        // generation commit and the filter write) ⇒ that part joins the
-        // scan-and-build side — slower fold, identical results.
-        val persisted = gen.flatMap(g => StateProtocol.readBloom(fs, gramDir, g))
-        val uncovered = (if (persisted.isEmpty) genPart else Nil) ++ batchParts
-        val blooms =
-          if (uncovered.isEmpty) persisted.toSeq
-          else {
-            val unc = sess.read.schema(gramSchema).parquet(uncovered: _*)
-            // sizing: state rows upper-bound distinct grams (the unmerged
-            // union may repeat a gram across dirs — a roomier filter,
-            // never a tighter one); parquet-metadata count over only the
-            // uncovered (batch-bounded) dirs
-            val bf = unc.stat.bloomFilter("gram_md5",
-              math.max(1L, unc.count()), cfg.fpp)
-            persisted.toSeq :+ bf
-          }
-        Dedup.removeDuplicateSpansIncrementalOfTokens(batch, idCol, toksCol,
-          cfg.n, prior, blooms)
-      }
+    val clean = Dedup.removeDuplicateSpansIncrementalOfTokens(batch, idCol,
+      toksCol, cfg.n, prior)
     // the deduped output and the batch's own gram counts are INDEPENDENT
     // writes (guide §2.6 — overlap them; neither reads the other, both are
     // individually _SUCCESS-gated keyed overwrites, and a replay after any
@@ -151,21 +120,7 @@ object SpanDedupMaintenance {
       val newGen = batchId - 1
       prior.groupBy("gram_md5").agg(sum(col("cnt")).as("cnt"))
         .write.mode("overwrite").parquet(s"$gramDir/gen=$newGen")
-      // Build + persist the generation's Bloom filter from the compacted
-      // dir it just committed — ONE scan of the gen state here (plus a
-      // parquet-metadata row count for sizing; post-groupBy rows ARE the
-      // distinct grams), amortized over the next compactEvery folds, each
-      // of which then probes the filter instead of re-scanning the state.
-      val genDf = sess.read.schema(gramSchema).parquet(s"$gramDir/gen=$newGen")
-      StateProtocol.writeBloom(fs, gramDir, newGen,
-        genDf.stat.bloomFilter("gram_md5", math.max(1L, genDf.count()), cfg.fpp))
-      val stale = fs.listStatus(gpath).map(_.getPath.getName).filter { nm =>
-        StateProtocol.numericSuffix(nm, "b=").exists(_ <= newGen) ||
-          StateProtocol.numericSuffix(nm, "gen=").exists(_ < newGen) ||
-          // stale persisted filters follow their generations out
-          StateProtocol.bloomGen(nm).exists(_ < newGen)
-      }
-      stale.foreach(nm => fs.delete(new Path(s"$gramDir/$nm"), true))
+      StateProtocol.sweepSuperseded(fs, gpath, newGen)
     }
     sess.read.parquet(s"$cleanDir/b=$batchId")
   }
@@ -177,10 +132,9 @@ object SpanDedupMaintenance {
     * the stamp, a service restarted with a different `n` would md5-join
     * (say) 6-gram batch digests against 8-gram corpus digests, nothing
     * would ever collide, every batch would look fully novel, and dedup
-    * coverage would silently collapse to zero. `fpp`/`compactEvery` are
-    * deliberately excluded: the Bloom filter is a prefilter exactness
-    * never rides on, and the compaction cadence is layout, not semantics —
-    * both can change freely over the same counts. */
+    * coverage would silently collapse to zero. `compactEvery` is
+    * deliberately excluded: the compaction cadence is layout, not
+    * semantics, and can change freely over the same counts. */
   private def gramFingerprint(cfg: Config): String = s"n=${cfg.n}"
 
   // writes through the shared semantic-stamp primitive
@@ -231,9 +185,10 @@ object SpanDedupMaintenance {
     * monoid state (a fold never decrements), so removing documents is an
     * explicit OFFLINE rebuild — recount the grams of the RETAINED corpus
     * (caller-provided: the service never stores text) into a single
-    * generation that supersedes every existing dir, with a fresh
-    * persisted Bloom filter. Afterwards the stream resumes unchanged:
-    * the next fold (batchId = maxIngested+1) resolves the rebuilt
+    * generation that supersedes every existing dir (the closing sweep also
+    * removes any derived entries an earlier version left beside the
+    * state). Afterwards the stream resumes unchanged: the next fold
+    * (batchId = maxIngested+1) resolves the rebuilt
     * generation and dedupes against retained-only counts — equal to the
     * full recompute over (retained ∪ batch), the same split identity as
     * always. The head id is derived from COMMITTED dirs only, so a torn
@@ -251,10 +206,10 @@ object SpanDedupMaintenance {
     * old generation swapped ASIDE (never deleted) until the rebuilt one
     * commits, with an aside-restore pass at rebuild start — so re-running
     * the rebuild with the same retained corpus converges from EVERY crash
-    * window (spec-pinned), and a crash can at worst leave stale batch
-    * dirs or a missing filter; readers degrade (scan-and-build, or stale
-    * counts) but never read torn parquet or lose the only committed
-    * state.
+    * window (spec-pinned), and a crash can at worst leave superseded
+    * batch dirs that every reader ignores (they are ≤ the rebuilt
+    * generation); readers never read torn parquet or lose the only
+    * committed state.
     *
     * Quiesce contract, ENFORCED: the rebuild takes the `_REBUILD` lease
     * ([[StateProtocol.acquireRebuildLease]]) before its first slow or
@@ -304,13 +259,6 @@ object SpanDedupMaintenance {
     val tmp = new Path(s"$gramDir/.gen=$g.rebuild")
     Dedup.spanGramCounts(retained, idCol, toksCol, cfg.n)
       .write.mode("overwrite").parquet(tmp.toString)
-    // the OLD filter at the same id must go BEFORE the rebuilt generation
-    // appears: a crash after the gen swap but before the new filter write
-    // would otherwise pair gen=$g with a stale filter whose definite-miss
-    // answers are wrong for grams only the rebuilt corpus contains (a
-    // MISSING filter merely degrades folds to scan-and-build — safe)
-    val bp = StateProtocol.bloomPath(gramDir, g)
-    if (fs.exists(bp)) fs.delete(bp, false)
     // Swap via ASIDE, never delete-then-rename ([[StateProtocol.swapIn]]):
     // the old generation is moved aside (not destroyed) until the rebuilt
     // one is committed, so a crash or failed rename at any point leaves
@@ -319,9 +267,6 @@ object SpanDedupMaintenance {
     val fin = new Path(s"$gramDir/gen=$g")
     val aside = new Path(s"$gramDir/.gen=$g.old")
     StateProtocol.swapIn(fs, fin, aside, tmp, "rebuildState")
-    val genDf = sess.read.schema("gram_md5 string, cnt long").parquet(fin.toString)
-    StateProtocol.writeBloom(fs, gramDir, g,
-      genDf.stat.bloomFilter("gram_md5", math.max(1L, genDf.count()), cfg.fpp))
     // re-stamp the gram geometry AFTER the swap committed: the rebuild is
     // the one writer allowed to CHANGE `n` (it recounts from the retained
     // corpus, so any length is valid), and ordering the stamp after the
@@ -331,12 +276,7 @@ object SpanDedupMaintenance {
     // state would wave mismatched folds through
     writeGramConfig(fs, gpath, gramFingerprint(cfg))
     StateProtocol.discardAside(fs, aside)
-    val stale = fs.listStatus(gpath).map(_.getPath.getName).filter { nm =>
-      StateProtocol.numericSuffix(nm, "b=").exists(_ <= g) ||
-        StateProtocol.numericSuffix(nm, "gen=").exists(_ < g) ||
-        StateProtocol.bloomGen(nm).exists(_ < g)
-    }
-    stale.foreach(nm => fs.delete(new Path(s"$gramDir/$nm"), true))
+    StateProtocol.sweepSuperseded(fs, gpath, g)
     StateProtocol.releaseRebuildLease(fs, gpath)
     ()
   }
@@ -379,17 +319,9 @@ object SpanDedupMaintenance {
 
   /** Operational snapshot of the service's on-disk state (the
     * [[ClusterMaintenance.status]] counterpart): newest ingested fold,
-    * committed generation, post-generation batch dirs, and whether the
-    * generation's persisted Bloom filter is present (absent = folds run
-    * the documented scan-and-build fallback — correct but slower, the
-    * signal an operator acts on). `degradedFilterCount` counts filter
-    * files that are PRESENT but fail to load (status attempts the read):
-    * [[StateProtocol.readBloom]]'s degrade path is stderr-only inside a
-    * fold, so a persistently corrupt filter would otherwise re-scan the
-    * generation every fold forever with `bloomPresent = true` masking it
-    * (r16 verdict) — a nonzero count here is the rebuild-the-filter
-    * signal, observable from any process. `rebuildInProgress` reports the
-    * `_REBUILD` lease — a crashed rebuild deliberately leaves it held, so
+    * committed generation and post-generation batch dirs.
+    * `rebuildInProgress` reports the `_REBUILD` lease — a crashed rebuild
+    * deliberately leaves it held, so
     * this is the one field that explains every fold failing after an
     * incident, and the check an operator makes BEFORE resuming the
     * stream. `configStamp` reports the `_GRAMCONF` semantic stamp the
@@ -398,9 +330,7 @@ object SpanDedupMaintenance {
     * layout; the next fold adopts and stamps its configured geometry).
     * Committed dirs only; all listings bounded by compactEvery. */
   final case class Status(headFold: Long, generation: Option[Long],
-                          batchDirs: Seq[Long], bloomPresent: Boolean,
-                          degradedFilterCount: Long,
-                          rebuildInProgress: Boolean,
+                          batchDirs: Seq[Long], rebuildInProgress: Boolean,
                           configStamp: Option[String])
 
   def status(spark: SparkSession, gramDir: String): Status = {
@@ -410,16 +340,10 @@ object SpanDedupMaintenance {
     val bs = StateProtocol.committedDirs(fs, gpath, "b=").sorted.toSeq
     require(gen.nonEmpty || bs.nonEmpty,
       s"SpanDedupMaintenance.status: no committed gram state under $gramDir")
-    val present = gen.filter(g => fs.exists(StateProtocol.bloomPath(gramDir, g)))
     Status(
       headFold = (gen.toSeq ++ bs).max,
       generation = gen,
       batchDirs = bs.filter(_ > gen.getOrElse(-1L)),
-      bloomPresent = present.nonEmpty,
-      // attempted load of each PRESENT filter: present-but-unreadable is
-      // the silent re-scan-forever state bloomPresent alone masks
-      degradedFilterCount =
-        present.count(g => StateProtocol.readBloom(fs, gramDir, g).isEmpty).toLong,
       rebuildInProgress = fs.exists(StateProtocol.rebuildLeasePath(gpath)),
       configStamp = StateProtocol.readStamp(fs, gpath, "_GRAMCONF"))
   }

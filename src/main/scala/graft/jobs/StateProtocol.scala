@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** The on-disk commit/recovery protocol SHARED by graft's parquet-state
   * services — [[ClusterMaintenance]] (versioned cluster assignments +
   * corpus generations) and [[SpanDedupMaintenance]] (gram-count
-  * generations + persisted Bloom filters). One implementation, two
+  * generations). One implementation, two
   * callers: the services keep their own FOLD semantics (assignment deltas
   * vs mergeable counts — deliberately not abstracted), but every
   * protocol-level rule lives here so a change to the commit story cannot
@@ -28,10 +28,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    start of every rebuild so a re-run converges from EVERY crash
   *    window — Hadoop `fs.rename` reports failures as `false`, so every
   *    rename outcome is `require`d before anything destructive;
-  *  - a generation's Bloom filter (`bloom=G.bin`) is DERIVED state
-  *    written tmp + atomic-rename AFTER its generation commits
-  *    ([[writeBloom]]); exactness never rides on the file — a missing
-  *    filter degrades readers to scan-and-build with identical results.
+  *  - nothing derived is persisted beside a generation: once `gen=G`
+  *    commits, [[sweepSuperseded]] removes the dirs it covers and every
+  *    derived entry earlier versions kept there.
   */
 private[graft] object StateProtocol {
 
@@ -163,8 +162,8 @@ private[graft] object StateProtocol {
     * exception) at any point leaves either the committed old dir or a
     * restorable aside, and the [[restoreAsides]] pass at the next rebuild
     * start converges from both. The caller deletes `aside` only after
-    * everything that must outlive the swap (e.g. the fresh Bloom filter)
-    * has committed. */
+    * everything that must outlive the swap (e.g. the semantic stamp) has
+    * committed. */
   def swapIn(fs: FileSystem, fin: Path, aside: Path, tmp: Path,
              ctx: String): Unit = {
     if (fs.exists(fin)) require(fs.rename(fin, aside),
@@ -244,82 +243,26 @@ private[graft] object StateProtocol {
         "and resumeCrashedRebuild = true (it converges and releases the " +
         "lease); folds resume after that.")
 
-  /** Serialized Bloom filter beside its generation: `bloom=G.bin` is the
-    * filter over `gen=G`'s key digests, written (tmp + atomic rename)
-    * AFTER the generation commits. Validity rides on the generation's own
-    * `_SUCCESS` protocol: the filter is consulted only when `gen=G`
-    * resolved as the committed generation, and a crash between the
-    * generation commit and the filter write just leaves the next fold on
-    * the scan-and-build fallback — exactness never depends on the file. */
-  def bloomPath(dir: String, gen: Long): Path =
-    new Path(s"$dir/bloom=$gen.bin")
-
-  /** `Some(G)` iff `name` is exactly the `bloom=G.bin` form [[bloomPath]]
-    * writes — the single owner of the filter-file naming convention, so
-    * the stale-sweep filters in the services cannot drift from the writer
-    * (a sweep matching a name the writer never produces, or missing one
-    * it does). Foreign names (`bloom=3.bin.tmp`, `bloom=.bin`) parse to
-    * None, same contract as [[numericSuffix]]. */
-  def bloomGen(name: String): Option[Long] =
-    if (name.endsWith(".bin"))
-      numericSuffix(name.stripSuffix(".bin"), "bloom=")
-    else None
-
-  def writeBloom(fs: FileSystem, dir: String, gen: Long,
-                 bf: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    val fin = bloomPath(dir, gen)
-    val tmp = new Path(s"$dir/.bloom=$gen.bin.tmp")
-    val out = fs.create(tmp, true)
-    try bf.writeTo(out) finally out.close()
-    if (fs.exists(fin)) fs.delete(fin, false)
-    // a failed rename must not fail the fold — a missing filter only
-    // degrades the NEXT folds to the scan-and-build path — but it must
-    // not leave tmp cruft either
-    if (!fs.rename(tmp, fin)) fs.delete(tmp, false)
-    ()
-  }
-
-  def readBloom(fs: FileSystem, dir: String,
-                gen: Long): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = bloomPath(dir, gen)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      // An UNREADABLE filter degrades exactly like a missing one (the
-      // readers fall back to scan-and-build with identical results) — it
-      // must not throw out of a fold. The concrete upgrade case: Spark's
-      // sketch format is version-stamped and `readFrom` raises on a
-      // version it does not speak, so a filter written by a LATER Spark
-      // (rollback) or a corrupted file would otherwise abort the service
-      // where the design explicitly prices in filterless folds. The
-      // degrade must hold END TO END: NonFatal (not just Exception)
-      // because a corrupt size field can surface as OutOfMemoryError on a
-      // huge declared bit-array length, and close() on a truncated
-      // checksummed stream can itself throw out of the finally block —
-      // both were abort paths the comment above promised away (r16
-      // ADVICE).
-      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[state] bloom gen=$gen unreadable (${e.getMessage}) — " +
-              "degrading to scan-and-build")
-          None
-        case e: OutOfMemoryError =>
-          // the one VM error with a benign cause here: readFrom allocates
-          // the DECLARED bit-array length before validating it, so a
-          // corrupt size field asks for an absurd allocation. The filter
-          // is advisory; degrade like any other unreadable payload.
-          System.err.println(
-            s"[state] bloom gen=$gen declared an unallocatable size " +
-              s"(${e.getMessage}) — degrading to scan-and-build")
-          None
-      } finally {
-        try in.close()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
-  }
+  /** The one sweep every compaction and rebuild ends with, once `gen=g`
+    * has committed under `dir`: batch dirs `b=N` with N ≤ g and older
+    * generations `gen=G` with G < g are covered by `gen=g`. Derived
+    * entries that earlier versions kept beside the state and nothing
+    * reads any more go too, matched by exact name: the cluster side's LSH
+    * bucket tables (`bk=N`), their compactions (`bkgen=G`) and geometry
+    * stamp (`_BKCONF`), and the span side's generation Bloom filters
+    * (`bloom=G.bin`). Everything else stays: the semantic stamps, the
+    * rebuild lease, asides, a rebuild's staging dir and foreign names
+    * that merely share a prefix (`gen=3.tmp`). */
+  def sweepSuperseded(fs: FileSystem, dir: Path, g: Long): Unit =
+    fs.listStatus(dir).map(_.getPath).filter { p =>
+      val nm = p.getName
+      numericSuffix(nm, "b=").exists(_ <= g) ||
+        numericSuffix(nm, "gen=").exists(_ < g) ||
+        numericSuffix(nm, "bk=").nonEmpty ||
+        numericSuffix(nm, "bkgen=").nonEmpty || nm == "_BKCONF" ||
+        (nm.endsWith(".bin") &&
+          numericSuffix(nm.stripSuffix(".bin"), "bloom=").nonEmpty)
+    }.foreach(fs.delete(_, true))
 
   /** SEMANTIC config stamps (`_GRAMCONF`, `_CLCONF`): a one-line
     * fingerprint of the config the accumulated state was built under,
@@ -333,8 +276,7 @@ private[graft] object StateProtocol {
     *
     * A lost SEMANTIC stamp costs the adopt-and-stamp path recording the
     * WRONG config over real state — [[writeStamp]] therefore throws on a
-    * failed rename instead of swallowing it (unlike [[writeBloom]], whose
-    * file only ever skips work). */
+    * failed rename instead of swallowing it. */
   def readStamp(fs: FileSystem, dir: Path, name: String): Option[String] = {
     val p = new Path(dir, name)
     if (!fs.exists(p)) None

@@ -927,51 +927,18 @@ object Dedup {
     * batch count + corpus count (spec-gated in DedupSimilaritySpec).
     *
     * Scale shape per batch: the batch's own gram counts are one map-side-
-    * combined groupBy; a broadcast Bloom over the corpus gram table (the
-    * [[novelAgainst]] pattern) then prefilters the corpus join — a gram
-    * occurring once in the batch and DEFINITELY absent from the corpus is
-    * proven unique without shuffling toward the corpus table, so a
-    * mostly-novel daily batch pays ~|batch| local work plus an exact semi
-    * join sized by fpp·|batch grams| + true cross-batch dups — never
-    * |corpus|. (The Bloom build itself scans the gram table once per
-    * call; a long-running service should build it once per corpus
-    * generation and use the prebuilt-filter overload.) The result is
-    * EXACT either way — the Bloom only ever skips work, never decides
-    * dup-ness (false positives fall through to the exact join). */
+    * combined groupBy; a gram occurring more than once in the batch is a
+    * duplicate outright, and a batch-unique gram is a duplicate iff the
+    * exact `left_semi` join against `corpusGrams` finds it. Nothing
+    * prefilters that join: it scans the corpus gram table once per call
+    * whatever is filtered, and its batch side is already batch-sized. (A
+    * [[novelAgainst]]-style Bloom over the corpus grams would trim only
+    * that batch side, at ~1.2 GiB of driver-built filter per 10⁹ grams
+    * shipped to every task.) An empty `corpusGrams` is the single-corpus
+    * dedup of the batch. */
   def removeDuplicateSpansIncrementalOfTokens(batch: DataFrame, idCol: String,
                                               toksCol: String, n: Int,
-                                              corpusGrams: DataFrame,
-                                              expectedCorpusGrams: Long,
-                                              fpp: Double = 0.01): DataFrame = {
-    val bf = corpusGrams.select(col("gram_md5"))
-      .stat.bloomFilter("gram_md5", math.max(1L, expectedCorpusGrams), fpp)
-    removeDuplicateSpansIncrementalOfTokens(batch, idCol, toksCol, n,
-      corpusGrams, Seq(bf))
-  }
-
-  /** [[removeDuplicateSpansIncrementalOfTokens]] with PREBUILT Bloom
-    * filters over the corpus gram digests — the service form (build the
-    * filters once per corpus generation, reuse across batches). Coverage
-    * may be SPLIT across several filters — the compacted service's shape:
-    * one persisted filter covering the committed generation plus a small
-    * fresh one covering the batch dirs after it.
-    * A gram is a possible corpus hit iff ANY filter might contain it, so
-    * the union of filters covers exactly the union of the state dirs; the
-    * definite-miss guarantee (hence exactness) is preserved filter-wise.
-    *
-    * Containment contract — the direction matters: a unanimous
-    * definite-miss is TRUSTED without consulting the semi join, so the
-    * union of `corpusBlooms` must cover AT LEAST every gram present in
-    * `corpusGrams` (filters may over-cover — extra keys only cost false
-    * positives the exact semi join absorbs — but must never under-cover:
-    * a filter set missing a corpus gram silently misses the duplicates
-    * that gram would have flagged). */
-  def removeDuplicateSpansIncrementalOfTokens(batch: DataFrame, idCol: String,
-                                              toksCol: String, n: Int,
-                                              corpusGrams: DataFrame,
-                                              corpusBlooms: Seq[org.apache.spark.util.sketch.BloomFilter]): DataFrame = {
-    require(corpusBlooms.nonEmpty,
-      "removeDuplicateSpansIncrementalOfTokens: at least one corpus Bloom filter")
+                                              corpusGrams: DataFrame): DataFrame = {
     // not spread: the batch is fold-sized by contract (batch-proportional
     // service cost); an extra exchange per fold measured as a net loss
     val base = batch.select(col(idCol).as("id"), col(toksCol).as("toks"))
@@ -979,13 +946,8 @@ object Dedup {
     val batchCnt = starts.groupBy("gram_md5").agg(count(lit(1)).as("cnt"))
     // ≥2 in the batch alone: duplicated regardless of the corpus
     val dupInBatch = batchCnt.filter(col("cnt") > 1).select("gram_md5")
-    // exactly 1 in the batch: duplicated iff the corpus has it — Bloom
-    // prefilter (definite-miss ⇒ provably unique), exact semi join for
-    // the possible hits
-    val mightContain = udf((s: String) =>
-      s != null && corpusBlooms.exists(_.mightContainString(s)))
+    // exactly 1 in the batch: duplicated iff the corpus has it
     val viaCorpus = batchCnt.filter(col("cnt") === 1)
-      .filter(mightContain(col("gram_md5")))
       .join(corpusGrams.select("gram_md5"), Seq("gram_md5"), "left_semi")
     val dupGrams = dupInBatch.unionByName(viaCorpus.select("gram_md5"))
     val dupStarts = starts.join(dupGrams, Seq("gram_md5")).select("id", "start")

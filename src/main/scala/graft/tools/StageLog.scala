@@ -1,23 +1,41 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import scala.jdk.CollectionConverters._
 
 /** The one stage listener: records every completed stage under its owning
-  * job's description (`spark.job.description`, else the job's own call
-  * site — its result stage's name, e.g. `count at Foo.scala:12`), read
-  * when the job STARTED. A stage is
+  * job's description (`spark.job.description`; else, for a job run by a
+  * SQL execution, that execution's description — its root's, for a nested
+  * one — so a broadcast exchange's job, submitted from a pool thread, is
+  * filed under the action that needed it; else the job's own call site,
+  * its result stage's name, e.g. `count at Foo.scala:12`), read when the
+  * job STARTED. A stage is
   * therefore filed under the phase that submitted it, however late its
   * completion event is delivered. Bench reads `tera_stages` from it;
   * DevRun prints a query's slowest stages. */
 final class StageLog extends SparkListener {
   import StageLog.Stage
   private val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  private val sqlOf = new java.util.concurrent.ConcurrentHashMap[Long, String]()
   private val done = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
 
+  override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+    case e: SparkListenerSQLExecutionStart =>
+      val root = e.rootExecutionId.filter(_ != e.executionId)
+        .flatMap(r => Option(sqlOf.get(r)))
+      sqlOf.put(e.executionId, root.getOrElse(e.description))
+      ()
+    case e: SparkListenerSQLExecutionEnd => sqlOf.remove(e.executionId); ()
+    case _ => ()
+  }
+
   override def onJobStart(js: SparkListenerJobStart): Unit = {
-    val desc = Option(js.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description")))
+    val props = Option(js.properties)
+    def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+    val desc = prop("spark.job.description")
+      .orElse(prop("spark.sql.execution.id").flatMap(_.toLongOption)
+        .flatMap(id => Option(sqlOf.get(id))))
       .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
     js.stageIds.foreach(jobOf.put(_, desc))
   }

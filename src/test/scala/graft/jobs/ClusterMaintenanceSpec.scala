@@ -210,7 +210,8 @@ class ClusterMaintenanceSpec extends SparkSpec {
     // `bk=N`, their compacted `bkgen=G` and a `_BKCONF` geometry stamp
     // beside the corpus. Such entries, committed and naming ids the
     // takedown retracts, must change nothing: the folds, the compaction
-    // (gen=1 at fold 2) and the rebuild (gen=3) read exact name prefixes.
+    // (gen=1 at fold 2) and the rebuild (gen=3) read exact name prefixes,
+    // and the first compaction sweeps them.
     val legacyNames = (0 to 4).map(i => s"bk=$i") ++ Seq("bkgen=1", "bkgen=3", "_BKCONF")
     def run(legacy: Boolean) = {
       val root = java.nio.file.Files.createTempDirectory("cmaint_legacy").toString
@@ -224,7 +225,8 @@ class ClusterMaintenanceSpec extends SparkSpec {
           "planes=4,dim=64,tables=16\n".getBytes("UTF-8"))
       }
       def observe() = (rows(ClusterMaintenance.latestAssignment(spark, state)),
-        ClusterMaintenance.status(spark, state, corpus))
+        ClusterMaintenance.status(spark, state, corpus),
+        new java.io.File(corpus).list().toSet)
       val folded = (0 until 4).map { w =>
         ClusterMaintenance.foldBatch(batch(w), w.toLong, state, corpus,
           "vec_id", "embedding", cfg)
@@ -235,17 +237,21 @@ class ClusterMaintenanceSpec extends SparkSpec {
       val rebuilt = observe()
       ClusterMaintenance.foldBatch(batch(4), 4L, state, corpus, "vec_id", "embedding", cfg)
       val resumed = observe()
-      val left = new java.io.File(corpus).list().toSet
-      (folded :+ rebuilt :+ resumed, left)
+      folded :+ rebuilt :+ resumed
     }
-    val (clean, _) = run(legacy = false)
-    val (legacy, left) = run(legacy = true)
+    val clean = run(legacy = false)
+    val legacy = run(legacy = true)
     clean.zip(legacy).zipWithIndex.foreach { case ((c, l), step) =>
       assert(l._1 == c._1, s"step $step: assignment diverged from the clean dir")
       assert(l._2 == c._2, s"step $step: status diverged from the clean dir: ${l._2} vs ${c._2}")
     }
-    assert(legacyNames.forall(left.contains),
-      s"premise: the legacy entries stayed beside the corpus throughout: $left")
+    assert(legacyNames.forall(legacy.head._3.contains),
+      s"premise: the legacy entries sat beside fold 0's corpus: ${legacy.head._3}")
+    // gone after the first compaction (fold 2 is step 2) and never back
+    legacy.drop(2).zipWithIndex.foreach { case (l, i) =>
+      assert(!legacyNames.exists(l._3.contains),
+        s"step ${i + 2}: legacy entries still beside the corpus: ${l._3}")
+    }
     val retained = emb.filter(col("vec_id") >= 80 || col("vec_id") % 7 =!= 0)
     val full = rows(Dedup.componentAssignments(
       retained.select(col("vec_id")), "vec_id",

@@ -44,36 +44,12 @@ class SpanDedupMaintenanceSpec extends SparkSpec {
       .map(_.getName).filter(_.startsWith("b=")).sorted.toSeq
     assert(cdirs == (0 until 6).map(k => s"b=$k").sorted)
     // the operator-facing status mirror of the same facts: head fold,
-    // committed generation, post-generation batch dirs, filter present
+    // committed generation, post-generation batch dirs
     val st = SpanDedupMaintenance.status(spark, grams)
     assert(st == SpanDedupMaintenance.Status(headFold = 5,
-      generation = Some(3), batchDirs = Seq(4, 5), bloomPresent = true,
-      degradedFilterCount = 0, rebuildInProgress = false,
+      generation = Some(3), batchDirs = Seq(4, 5), rebuildInProgress = false,
       configStamp = Some("n=8")),
       s"unexpected service status: $st")
-
-    // r17: corrupt the committed generation's PERSISTED filter in place
-    // (readFrom raises on the bogus version stamp). Status — where
-    // bloomPresent=true alone would mask the corruption forever — must
-    // count the present-but-unreadable filter, and the next fold must
-    // degrade to scan-and-build with IDENTICAL results.
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$grams/bloom=3.bin"),
-      Array[Byte](0, 0, 0, 99, 9, 9, 9, 9))
-    val stc = SpanDedupMaintenance.status(spark, grams)
-    assert(stc.bloomPresent && stc.degradedFilterCount == 1L,
-      s"present-but-corrupt filter not surfaced: $stc")
-    val docs7 = toks(spark.read.parquet(s"$sf/documents.parquet"))
-      .filter(col("doc_id") < 70)
-    val got6 = key(SpanDedupMaintenance.foldBatch(
-      docs7.filter(col("doc_id") >= 60), 6L, grams, clean, "doc_id", "toks", cfg))
-    val want6 = key(Dedup.removeDuplicateSpansOfTokens(docs7, "doc_id", "toks", n = 8)
-      .filter(col("id") >= 60))
-    assert(got6 == want6, "fold over a corrupt filter diverged from its recompute")
-    // fold 6 compacted (gen=5) and re-persisted a fresh filter — the
-    // documented remedy; the degrade observable clears on its own
-    val sth = SpanDedupMaintenance.status(spark, grams)
-    assert(sth.bloomPresent && sth.degradedFilterCount == 0L,
-      s"compaction did not heal the degraded filter: $sth")
   }
 
   /** Executions (SQL actions) whose physical plan scans a `gen=` parquet
@@ -121,7 +97,7 @@ class SpanDedupMaintenanceSpec extends SparkSpec {
     last
   }
 
-  test("post-generation folds probe the persisted filter: gen state scanned once, not rebuilt") {
+  test("a post-generation fold scans the generation gram state exactly once") {
     // Synthetic docs with GUARANTEED cross-batch duplicate spans: phrase P
     // (10 tokens) recurs in batches 0 and 3, phrase Q recurs twice WITHIN
     // batch 3 — both dup paths (via-corpus semi join, in-batch count) are
@@ -140,20 +116,18 @@ class SpanDedupMaintenanceSpec extends SparkSpec {
     import spark.implicits._
     val docs = toks((0L until 40L).map(doc).toDF("doc_id", "text"))
     def batch(k: Int) = docs.filter(col("doc_id") >= k * 10 && col("doc_id") < (k + 1) * 10)
-    val root = java.nio.file.Files.createTempDirectory("sdm_bloom").toString
+    val root = java.nio.file.Files.createTempDirectory("sdm_scan").toString
     val (grams, clean) = (s"$root/grams", s"$root/clean")
     val cfg = SpanDedupMaintenance.Config(n = 8, compactEvery = 2)
     (0 until 3).foreach(k => SpanDedupMaintenance.foldBatch(batch(k), k.toLong,
       grams, clean, "doc_id", "toks", cfg))
-    // fold 2 compacted gen=1 and persisted its filter beside it
-    assert(new java.io.File(grams, "bloom=1.bin").exists(),
-      "compaction must persist the generation Bloom filter")
-    // fold 3 (prior = gen=1 + b=2): with the persisted filter, the ONLY
-    // execution that scans the generation gram state is the exact semi
-    // join — no sizing count, no filter rebuild over the generation
+    assert(new java.io.File(grams, "gen=1/_SUCCESS").exists(),
+      "premise: fold 2 compacted gen=1")
+    // fold 3 (prior = gen=1 + b=2): the ONLY execution that scans the
+    // generation gram state is the operator's exact semi join
     val (hits, l) = genScanCounter()
     spark.listenerManager.register(l)
-    val withBloom =
+    val scans =
       try {
         val got = key(SpanDedupMaintenance.foldBatch(batch(3), 3L,
           grams, clean, "doc_id", "toks", cfg))
@@ -169,24 +143,66 @@ class SpanDedupMaintenanceSpec extends SparkSpec {
           "in-batch dup premise broken: Q spans not covered")
         stableCount(hits)
       } finally spark.listenerManager.unregister(l)
-    assert(withBloom == 1,
-      s"expected exactly 1 gen-state scan with the persisted filter, saw $withBloom")
-    // fallback: delete the filter file and replay the same fold — results
-    // identical (exactness never rides on the file), but the fold pays
-    // the scan-and-build path (sizing count + filter build see the gen)
-    assert(new java.io.File(grams, "bloom=1.bin").delete())
-    val (hits2, l2) = genScanCounter()
-    spark.listenerManager.register(l2)
-    val withoutBloom =
-      try {
-        val replay = key(SpanDedupMaintenance.foldBatch(batch(3), 3L,
+    assert(scans == 1, s"expected exactly 1 gen-state scan, saw $scans")
+  }
+
+  test("a gram dir holding legacy Bloom filter files folds, compacts and rebuilds like a clean one") {
+    val docs = toks(spark.read.parquet(s"$sf/documents.parquet"))
+      .filter(col("doc_id") < 50)
+    def batch(k: Int) = docs.filter(col("doc_id") >= k * 10 && col("doc_id") < (k + 1) * 10)
+    def prefix(k: Int) = docs.filter(col("doc_id") < (k + 1) * 10)
+    val cfg = SpanDedupMaintenance.Config(n = 8, compactEvery = 2)
+    // Earlier versions persisted a Bloom filter over each generation's
+    // grams beside it (`bloom=G.bin`). A dir upgraded from that layout
+    // holds a readable one and, say, a corrupt one; neither may change a
+    // result, and the first compaction (gen=1 at fold 2) sweeps both.
+    val legacyNames = Seq("bloom=0.bin", "bloom=1.bin")
+    def run(legacy: Boolean) = {
+      val root = java.nio.file.Files.createTempDirectory("sdm_legacy").toString
+      val (grams, clean) = (s"$root/grams", s"$root/clean")
+      if (legacy) {
+        new java.io.File(grams).mkdirs()
+        val bf = org.apache.spark.util.sketch.BloomFilter.create(100L, 0.01)
+        Dedup.spanGramCounts(prefix(0), "doc_id", "toks", n = 8)
+          .collect().foreach(r => bf.putString(r.getString(0)))
+        val out = new java.io.FileOutputStream(s"$grams/bloom=0.bin")
+        try bf.writeTo(out) finally out.close()
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$grams/bloom=1.bin"),
+          Array[Byte](0, 0, 0, 99, 9, 9, 9, 9))
+      }
+      // each step: its output (a fold's clean rows, the rebuild's gram
+      // counts), the status and the entries beside the state
+      def observe(out: Set[_ <: Product]) = (out.toSet[Any],
+        SpanDedupMaintenance.status(spark, grams), new java.io.File(grams).list().toSet)
+      def fold(k: Int, corpus: org.apache.spark.sql.DataFrame) = {
+        val got = key(SpanDedupMaintenance.foldBatch(batch(k), k.toLong,
           grams, clean, "doc_id", "toks", cfg))
-        val first = key(spark.read.parquet(s"$clean/b=3"))
-        assert(replay == first, "fallback replay diverged")
-        stableCount(hits2)
-      } finally spark.listenerManager.unregister(l2)
-    assert(withoutBloom >= 2,
-      s"scan-and-build fallback should scan the gen state more than once, saw $withoutBloom")
+        val want = key(Dedup.removeDuplicateSpansOfTokens(
+            corpus.unionByName(batch(k)), "doc_id", "toks", n = 8)
+          .filter(col("id") >= k * 10))
+        assert(got == want, s"fold $k diverged from its prefix recompute (legacy=$legacy)")
+        observe(got)
+      }
+      val folded = (0 until 4).map(k => fold(k, docs.filter(col("doc_id") < k * 10)))
+      val retained = prefix(3).filter(col("doc_id") % 7 =!= 0)
+      SpanDedupMaintenance.rebuildState(retained, grams, "doc_id", "toks", cfg)
+      val rebuilt = observe(SpanDedupMaintenance.gramCounts(spark, grams)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet)
+      folded :+ rebuilt :+ fold(4, retained)
+    }
+    val plain = run(legacy = false)
+    val legacy = run(legacy = true)
+    assert(legacyNames.forall(legacy.head._3.contains),
+      s"premise: the legacy filters sat beside fold 0's state: ${legacy.head._3}")
+    plain.zip(legacy).zipWithIndex.foreach { case ((c, l), step) =>
+      assert(l._1 == c._1, s"step $step: clean output diverged from the clean dir")
+      assert(l._2 == c._2, s"step $step: status diverged from the clean dir: ${l._2} vs ${c._2}")
+    }
+    // gone from the first compaction on (fold 2 is index 2)
+    legacy.drop(2).zipWithIndex.foreach { case (l, i) =>
+      assert(!legacyNames.exists(l._3.contains),
+        s"step ${i + 2}: legacy filters still beside the state: ${l._3}")
+    }
   }
 
   test("tombstone rebuild recounts the retained corpus; retraction semantics reach the next fold") {
@@ -221,12 +237,10 @@ class SpanDedupMaintenanceSpec extends SparkSpec {
     val want = Dedup.spanGramCounts(retained, "doc_id", "toks", n = 8)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(got == want, "rebuilt gram state != recount of the retained corpus")
-    // a single filtered generation with its fresh persisted filter
+    // a single filtered generation
     val gdirs = new java.io.File(grams).listFiles()
       .map(_.getName).filter(n => n.startsWith("b=") || n.startsWith("gen=")).sorted.toSeq
     assert(gdirs == Seq("gen=2"), s"unexpected gram dirs after rebuild: $gdirs")
-    assert(new java.io.File(grams, "bloom=2.bin").exists(),
-      "rebuild must persist the generation filter")
     // the stream resumes: fold 3 == full recompute over retained ∪ batch 3
     val folded = key(SpanDedupMaintenance.foldBatch(batch(3), 3L,
       grams, clean, "doc_id", "toks", cfg))

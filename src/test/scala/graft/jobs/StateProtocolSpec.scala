@@ -40,21 +40,6 @@ class StateProtocolSpec extends AnyFunSuite {
       .contains(999999999999999999L))
   }
 
-  test("bloomGen parses exactly the bloom=G.bin form writeBloom produces") {
-    assert(StateProtocol.bloomGen("bloom=7.bin").contains(7L))
-    assert(StateProtocol.bloomGen("bloom=0.bin").contains(0L))
-    // foreign names — tmp staging, missing id, wrong extension, a dir
-    // prefix-sharing the name — parse to None, never throw
-    assert(StateProtocol.bloomGen(".bloom=7.bin.tmp").isEmpty)
-    assert(StateProtocol.bloomGen("bloom=.bin").isEmpty)
-    assert(StateProtocol.bloomGen("bloom=7").isEmpty)
-    assert(StateProtocol.bloomGen("bloom=7.binx").isEmpty)
-    assert(StateProtocol.bloomGen("gen=7").isEmpty)
-    // round-trip with the writer's own naming
-    assert(StateProtocol.bloomGen(StateProtocol.bloomPath("/s", 42L).getName)
-      .contains(42L))
-  }
-
   test("ensureStamp: match is a lazy no-op, mismatch-over-state is surfaced, mismatch-over-empty re-stamps, missing adopts") {
     withFs { (fs, dir) =>
       fs.mkdirs(dir)
@@ -176,31 +161,30 @@ class StateProtocolSpec extends AnyFunSuite {
     }
   }
 
-  test("writeBloom/readBloom round-trip beside a generation; missing file reads None") {
+  test("sweepSuperseded removes covered dirs and retired derived entries, nothing else") {
     withFs { (fs, dir) =>
-      fs.mkdirs(dir)
-      assert(StateProtocol.readBloom(fs, dir.toString, 7L).isEmpty)
-      val bf = org.apache.spark.util.sketch.BloomFilter.create(100L, 0.01)
-      bf.putString("abc")
-      StateProtocol.writeBloom(fs, dir.toString, 7L, bf)
-      val back = StateProtocol.readBloom(fs, dir.toString, 7L)
-      assert(back.isDefined, "persisted filter not read back")
-      assert(back.get.mightContainString("abc"))
-      // no tmp cruft left behind
-      assert(!fs.exists(new Path(dir, ".bloom=7.bin.tmp")))
-    }
-  }
-
-  test("an unreadable bloom file degrades to None like a missing one (r16)") {
-    withFs { (fs, dir) =>
-      fs.mkdirs(dir)
-      // a filter a FUTURE sketch format (or corruption) produced: readFrom
-      // raises on its version stamp, and the service must fall back to the
-      // scan-and-build path instead of aborting the fold
-      val out = fs.create(new Path(dir, "bloom=3.bin"), true)
-      try out.write(Array[Byte](0, 0, 0, 99, 1, 2, 3, 4)) finally out.close()
-      assert(StateProtocol.readBloom(fs, dir.toString, 3L).isEmpty,
-        "unreadable filter must degrade, not throw")
+      def mkFile(name: String): Unit = fs.create(new Path(dir, name), true).close()
+      // g = 2: batch dirs ≤ 2 and generations < 2 are covered by gen=2;
+      // bucket tables, their compactions and stamp (cluster side) and
+      // generation Bloom filters (span side) are retired at any id
+      val gone = Seq("b=0", "b=2", "gen=1", "bk=0", "bk=7", "bkgen=3",
+        "_BKCONF", "bloom=1.bin", "bloom=2.bin")
+      // the covering generation, later batches, semantic stamps, the
+      // lease, asides, a rebuild's staging dir and foreign names that
+      // merely share a prefix with something swept
+      val kept = Seq("gen=2", "b=3", "gen=3", "_CLCONF", "_GRAMCONF",
+        "_REBUILD", ".gen=2.old", ".gen=2.rebuild", "gen=3.tmp", "b=1.tmp",
+        "bk=", "bkgen=1.tmp", "bloom=2.bin.tmp", ".bloom=2.bin.tmp",
+        "bloom=2", "_BKCONF.bak")
+      (gone ++ kept).foreach { nm =>
+        if (nm.startsWith("_") || nm.contains("bloom")) mkFile(nm)
+        else mkCommitted(fs, dir, nm)
+      }
+      StateProtocol.sweepSuperseded(fs, dir, 2L)
+      val left = fs.listStatus(dir).map(_.getPath.getName)
+        .filterNot(_.endsWith(".crc")).toSet
+      assert(left == kept.toSet,
+        s"swept ${kept.toSet -- left}, left ${left -- kept.toSet}")
     }
   }
 

@@ -377,7 +377,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (10L, s"x $a y"),            // covered only VIA THE CORPUS (batch count 1)
       (11L, s"$b p q"),            // covered via the batch's own other doc
       (12L, s"r s $b"),
-      (13L, "wholly novel tokens never seen in either side at all")) // bloom definite-miss path
+      (13L, "wholly novel tokens never seen in either side at all")) // batch-unique, absent from the corpus
       .toDF("doc_id", "text")
     import graft.functions.TextFunctions.tokens
     def toks(d: org.apache.spark.sql.DataFrame) =
@@ -392,8 +392,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .filter(col("id") >= 10L))
     val grams = Dedup.spanGramCounts(toks(corpus), "id", "toks", n = 8)
     val incr = key(Dedup.removeDuplicateSpansIncrementalOfTokens(
-      toks(batch), "id", "toks", n = 8, grams,
-      expectedCorpusGrams = 100L))
+      toks(batch), "id", "toks", n = 8, grams))
     assert(incr == full, s"incremental diverged:\n$incr\nvs full:\n$full")
     // the crafted rows did exercise all three paths
     val byId = incr.map(t => t._1 -> t._4).toMap

@@ -6,8 +6,9 @@ import org.scalatest.time.{Seconds, Span}
 
 /** The one stage listener files each stage under the description its job
   * carried when it STARTED: back-to-back phases keep their own stages,
-  * stages of jobs outside the selected descriptions stay out, and a job
-  * without a description is filed under its own call site. */
+  * stages of jobs outside the selected descriptions stay out, a job
+  * without a description is filed under its own call site, and a job a
+  * SQL action ran from another thread under that action. */
 class StageLogSpec extends SparkSpec with Eventually {
 
   test("stages are keyed <description>_s<ordinal> by their job's start-time description") {
@@ -36,6 +37,34 @@ class StageLogSpec extends SparkSpec with Eventually {
       assert(undescribed.forall(_.job.nonEmpty) &&
         undescribed.count(_.job.contains("StageLogSpec.scala")) >= 2,
         s"undescribed stages lack a call-site owner: ${undescribed.map(_.job)}")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(log)
+    }
+  }
+
+  test("an undescribed broadcast join files every stage under the action that ran it") {
+    import org.apache.spark.sql.functions.broadcast
+    val sc = spark.sparkContext
+    val log = new StageLog
+    sc.addSparkListener(log)
+    try {
+      // the broadcast side is collected by a job submitted from a pool
+      // thread, whose own call site names no query
+      val small = spark.range(0, 50).toDF("k")
+      val big = spark.range(0, 5000).selectExpr("id % 50 as k", "id")
+      assert(big.join(broadcast(small), "k").collect().length == 5000)
+      sc.setJobDescription("p0_marker")
+      sc.parallelize(1 to 10, 2).count()
+      // events arrive in order: once the marker's stage is in, so is
+      // every stage the join ran
+      eventually(timeout(Span(10, Seconds))) {
+        assert(log.stages.exists(_.job == "p0_marker"))
+      }
+      val joined = log.stages.filterNot(_.job == "p0_marker")
+      assert(joined.size >= 2, s"premise: the join ran its broadcast job: $joined")
+      assert(joined.forall(_.job.contains("StageLogSpec.scala")),
+        s"a stage's owner names no action in this spec: ${joined.map(_.job)}")
     } finally {
       sc.setJobDescription(null)
       sc.removeSparkListener(log)
