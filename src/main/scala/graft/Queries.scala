@@ -1831,8 +1831,9 @@ object Queries {
     * q93 clustering re-run with candidates from the REAL multi-table LSH
     * bucket join — 16 tables x 4 hyperplane bits, probe radius 1, the
     * q59/q98 ANN configuration — instead of the declared-exhaustive
-    * all-pairs branch. This is the 100 TB plan shape: candidate volume
-    * scales with bucket populations, never O(n²); no crossJoin appears
+    * all-pairs branch. This is the 100 TB plan shape, but not a 100 TB
+    * candidate volume: on these near-random embeddings the geometry makes
+    * ≈ 0.9975 of all pairs candidates, about n²/2. No crossJoin appears
     * anywhere in the plan (spec-asserted). The oracle replays the ENTIRE
     * pruned pipeline — seeded plane signatures, {0,1,2,4,8} probe masks,
     * the bucketed candidate join, the exact cosine gate, the recursive

@@ -222,9 +222,9 @@ object CorpusPipeline {
     * is individually easy, jointly they rot; spec-pinned):
     *  - ONE tokenize: `tokens(text)` is projected once into `toks`; the
     *    quality gate (qualityMetricsOfTokens), the MinHash sketch
-    *    (minhashCandidatePairsOfTokens), the chunker (chunkTokens) and the
-    *    packer's token counts all consume that attribute. No stage
-    *    re-derives split().
+    *    (minhashCandidatePairsOfTokensReleasable), the chunker
+    *    (chunkTokens) and the packer's token counts all consume that
+    *    attribute. No stage re-derives split().
     *  - Bounded caches, released before return: the exact-dedup survivor
     *    frame (with toks) backs the sketch, the survivor join and the
     *    chunker — persisted for the duration of the write, unpersisted in

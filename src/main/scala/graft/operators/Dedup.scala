@@ -147,32 +147,24 @@ object Dedup {
                             threshold: Double = 0.5,
                             maxBucket: Int = 1000,
                             tokenHash: Column => Column = tokenHash32): DataFrame =
-    candidatePairsFromSigs(
+    candidatePairsOfSignatures(
       minhashSignatures(df, idCol, textCol, numHashes, tokenHash = tokenHash),
       numHashes, bands, threshold, maxBucket)._1
 
   /** [[minhashCandidatePairs]] over an already-tokenized corpus (see
-    * [[minhashSignaturesOfTokens]]) — identical pairs, no second tokenize. */
-  def minhashCandidatePairsOfTokens(df: DataFrame, idCol: String, toksCol: String,
-                                    numHashes: Int = 64, bands: Int = 16,
-                                    threshold: Double = 0.5,
-                                    maxBucket: Int = 1000,
-                                    tokenHash: Column => Column = tokenHash32): DataFrame =
-    minhashCandidatePairsOfTokensReleasable(df, idCol, toksCol, numHashes,
-      bands, threshold, maxBucket, tokenHash)._1
-
-  /** [[minhashCandidatePairsOfTokens]] plus a thunk releasing the internal
-    * signature cache (~520 B/doc, persisted because the pair plan references
-    * it four times). A composed job that consumes the pairs EAGERLY — e.g.
-    * closes them into components, whose output is checkpoint-backed — should
-    * release as soon as that action completes; one-shot callers can rely on
-    * the retained-cache policy ([[minhashCandidatePairs]] scaladoc). */
+    * [[minhashSignaturesOfTokens]]) — identical pairs, no second tokenize —
+    * plus a thunk releasing the internal signature cache (~520 B/doc,
+    * persisted because the pair plan references it four times). A composed
+    * job that consumes the pairs EAGERLY — e.g. closes them into
+    * components, whose output is checkpoint-backed — should release as soon
+    * as that action completes; one-shot callers can rely on the
+    * retained-cache policy ([[minhashCandidatePairs]] scaladoc). */
   def minhashCandidatePairsOfTokensReleasable(
       df: DataFrame, idCol: String, toksCol: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 1000,
       tokenHash: Column => Column = tokenHash32): (DataFrame, () => Unit) =
-    candidatePairsFromSigs(
+    candidatePairsOfSignatures(
       minhashSignaturesOfTokens(df, idCol, toksCol, numHashes, tokenHash = tokenHash),
       numHashes, bands, threshold, maxBucket)
 
@@ -185,12 +177,7 @@ object Dedup {
     * ([[minhashCandidatePairsOfTokensReleasable]] semantics). */
   def candidatePairsOfSignatures(sigs: DataFrame, numHashes: Int = 64,
                                  bands: Int = 16, threshold: Double = 0.5,
-                                 maxBucket: Int = 1000): (DataFrame, () => Unit) =
-    candidatePairsFromSigs(sigs, numHashes, bands, threshold, maxBucket)
-
-  private def candidatePairsFromSigs(rawSigs: DataFrame, numHashes: Int,
-                                     bands: Int, threshold: Double,
-                                     maxBucket: Int): (DataFrame, () => Unit) = {
+                                 maxBucket: Int = 1000): (DataFrame, () => Unit) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // Parameter sanity: the (bands, rows) s-curve should put its steep section
@@ -209,10 +196,10 @@ object Dedup {
     // of the bucket join, both signature joins); persist so the shingle
     // explosion + 64-way min aggregation runs once. ~520 B/doc — at 100 TB
     // input this is n_docs * 0.5 KB, safely cacheable/spillable.
-    val sigs = rawSigs
+    val cached = sigs
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Explode band buckets; kill skewed buckets before the self-join.
-    val bucketed = sigs
+    val bucketed = cached
       .select(col("id"), col("sig"), explode(lshBuckets(col("sig"), bands, r)).as("bb"))
       .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     val bucketSizes = bucketed.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
@@ -232,12 +219,12 @@ object Dedup {
         .otherwise(0)
     }.reduce(_ + _)
     val out = pairs
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+      .join(cached.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(cached.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         (agree.cast("double") / numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-    (out, () => { sigs.unpersist(blocking = false); () })
+    (out, () => { cached.unpersist(blocking = false); () })
   }
 
   /** Hash-word providers for `simhash`: token → fixed-width hash words whose

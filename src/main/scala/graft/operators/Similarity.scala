@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.VectorExpressions.vec_dot
 
 /** Approximate-nearest-neighbor / similarity search over embedding columns.
   *
@@ -14,7 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale path: LSH bucketing via random hyperplane signs (`rpSignature`) —
   * corpus hashed once, queries probe only their bucket, turning the scan into
-  * an inverted-index join; the 100 TB variant of similarity search.
+  * an inverted-index join; the 100 TB variant of similarity search. How much
+  * a geometry prunes is its collision rate (see `MultiTableLsh`): on
+  * near-random embeddings the 16x4-bit radius-1 geometry still makes
+  * ≈ 0.9975 of all pairs candidates.
   */
 object Similarity {
 
@@ -48,53 +52,60 @@ object Similarity {
   def cosineTopK(corpus: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, qidCol: String, qvecCol: String,
                  k: Int, dim: Int = -1): DataFrame = {
-    // float-array columns go through the native VectorDot expression
-    // (graft.plans): tight codegen'd loop, bit-identical accumulation order.
-    // Zero-norm rows are EXCLUDED at the norm projection (see normFiltered):
-    // cosine is undefined for them, and the raw norm-product division would
-    // otherwise abort the whole job under ANSI on one zero vector.
-    val d = graft.plans.VectorExpressions.vec_dot _
     // spread: the per-corpus-row work below is |queries| dots, not bytes
-    val c = normFiltered(spread(corpus, idCol).select(col(idCol).as("id"), col(vecCol).as("vec"),
-      sqrt(d(col(vecCol), col(vecCol))).as("cnorm")), "cnorm")
-    val q = normFiltered(queries.select(col(qidCol).as("qid"), col(qvecCol).as("qvec"),
-      sqrt(d(col(qvecCol), col(qvecCol))).as("qnorm")), "qnorm")
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id"),
-        (d(col("qvec"), col("vec")) / (col("qnorm") * col("cnorm"))).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val c = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide)
+    val q = normed(queries, qidCol, qvecCol, QuerySide)
+    rankTopK(c.crossJoin(broadcast(q)).filter(col("id") =!= col("qid")), k)
   }
 
-  /** Drop rows whose vector norm is zero — cosine is UNDEFINED for a
+  // the (key, vector, norm) names of the two sides of a top-k search
+  private val CorpusSide = ("id", "vec", "cnorm")
+  private val QuerySide = ("qid", "qvec", "qnorm")
+
+  /** `df`'s `idCol` and `vecCol` renamed to `names` (key, vector, norm),
+    * norm = sqrt(vec_dot(v, v)) — the native VectorDot expression
+    * (graft.plans): tight codegen'd loop, bit-identical accumulation order.
+    * `extra` columns sit between the vector and the norm.
+    *
+    * Rows whose norm is zero are DROPPED: cosine is UNDEFINED for a
     * zero-norm vector (no direction), and under ANSI mode (this engine's
     * default) the norm-product division would abort the entire job on the
     * FIRST zero vector in a 100 TB corpus (a failed encoder emitting
-    * all-zero embeddings is a routine dirty input). Excluding them at the
-    * norm projection keeps every score expression's arithmetic byte-for-
-    * byte unchanged for real vectors — oracle replays are unaffected —
-    * and gives the principled semantics: a direction-less vector is
-    * nobody's neighbor and has no neighbors. (A null vector stays null
-    * through the norm and is dropped by the same predicate.) */
-  private def normFiltered(df: DataFrame, normCol: String): DataFrame =
-    df.filter(col(normCol) > 0)
+    * all-zero embeddings is a routine dirty input). Excluding them here
+    * keeps every score expression's arithmetic byte-for-byte unchanged
+    * for real vectors — oracle replays are unaffected — and gives the
+    * principled semantics: a direction-less vector is nobody's neighbor
+    * and has no neighbors. (A null vector stays null through the norm and
+    * is dropped by the same predicate.) */
+  private def normed(df: DataFrame, idCol: String, vecCol: String,
+                     names: (String, String, String), extra: Column*): DataFrame = {
+    val (id, vec, norm) = names
+    df.select((Seq(col(idCol).as(id), col(vecCol).as(vec)) ++ extra :+
+        sqrt(vec_dot(col(vecCol), col(vecCol))).as(norm)): _*)
+      .filter(col(norm) > 0)
+  }
 
-  /** Floor a scan's parallelism to the cluster's default before a
-    * candidate EXPANSION stage (bucket fan-out, Lloyd scans, brute-force
-    * scoring): per-row work downstream is tables×probes×bucket-population
-    * candidates — orders of magnitude more than the input bytes suggest —
-    * so a corpus that arrives as one parquet split would otherwise run
-    * the whole expansion as ONE task (serial wall; the exact single-task
-    * shape a 100 TB pass must avoid, and the measured 4-7 s serial stage
-    * behind q103's folds at sf0.1). No-op whenever the input already
-    * carries >= defaultParallelism partitions — any real-scale scan — so
-    * this never ADDS a shuffle at scale; the hash repartition on the
-    * (unique) id key is deterministic and skew-free, and partitioning
-    * never changes results. */
-  private def spread(df: DataFrame, key: String): DataFrame =
-    Parallelism.spread(df, key)
+  /** The one top-k step: score (qid, id) rows carrying both sides' vectors
+    * and norms (the [[CorpusSide]] / [[QuerySide]] names) by exact cosine,
+    * then keep each query's `k` best by (cos desc, id asc). */
+  private def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs.select(col("qid"), col("id"),
+      (vec_dot(col("qvec"), col("vec")) / (col("qnorm") * col("cnorm"))).as("cos"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** The one exact cosine gate: join both ends' vectors of each candidate
+    * (id_a, id_b) back from `v` (id, vec, norm) and keep cos >= threshold.
+    * Zero-norm rows are already out of `v` (see [[normed]]), so the inner
+    * joins drop their pairs. */
+  private def cosineGate(pairs: DataFrame, v: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .join(v.select(col("id").as("id_a"), col("vec").as("va"), col("norm").as("na")), Seq("id_a"))
+      .join(v.select(col("id").as("id_b"), col("vec").as("vb"), col("norm").as("nb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        (vec_dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
+      .filter(col("cos") >= threshold)
 
   /** Random-hyperplane sign signature (for cosine LSH): `planes` is a fixed
     * Seq of unit-ish vectors; output = bit-packed sign pattern as long.
@@ -120,7 +131,6 @@ object Similarity {
     // every downstream analyzer/optimizer pass O(tree) — measured as
     // multi-second DRIVER cost per action on plans that carried the
     // signature stage (q104's per-batch folds).
-    import graft.plans.VectorExpressions.vec_dot
     val bits = planes.zipWithIndex.map { case (p, i) =>
       when(vec_dot(vec, typedLit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
     }
@@ -148,14 +158,11 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, qidCol: String, qvecCol: String,
               k: Int, nlist: Int, nprobe: Int, iters: Int = 2): DataFrame = {
-    import graft.plans.VectorExpressions.vec_dot
-    val spark = corpus.sparkSession
     // The corpus projection is scanned once per Lloyd iteration plus once for
     // the final bucketing — persist it so the parquet read + norm computation
     // happens once (id + vec + norm ≈ 300 B/row; spills to disk if large).
     // spread: every Lloyd scan pays nlist centroid dots per row
-    val c = normFiltered(spread(corpus, idCol).select(col(idCol).as("id"), col(vecCol).as("vec"),
-      sqrt(vec_dot(col(vecCol), col(vecCol))).as("cnorm")), "cnorm")
+    val c = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     def centroidLit(v: Array[Double]): Column =
@@ -214,22 +221,23 @@ object Similarity {
 
     val bucketed = c.select(col("id"), col("vec"), col("cnorm"),
       assign(col("vec"), col("cnorm"), cents).as("cid"))
-    // each query probes its nprobe nearest lists
-    val q = normFiltered(queries.select(col(qidCol).as("qid"), col(qvecCol).as("qvec"),
-      sqrt(vec_dot(col(qvecCol), col(qvecCol))).as("qnorm")), "qnorm")
-    val qScores = cents.zipWithIndex.map { case (ct, i) =>
-      struct(try_divide(vec_dot(col("qvec"), centroidLit(ct)),
-        col("qnorm") * lit(math.sqrt(ct.map(x => x * x).sum))).as("s"), lit(i).as("cid"))
-    }
+    probeAndRerank(bucketed, normed(queries, qidCol, qvecCol, QuerySide), cents.map(ct =>
+      try_divide(vec_dot(col("qvec"), centroidLit(ct)),
+        col("qnorm") * lit(math.sqrt(ct.map(x => x * x).sum)))), nprobe, k)
+  }
+
+  /** The IVF query tail shared by [[ivfTopK]] and [[ivfTopKExact]]: each
+    * query of `q` (qid, qvec, qnorm, ...) probes the `nprobe` lists with
+    * the highest `listScores` (one column per list id, over `q`'s columns;
+    * ties to the highest list id), joins the `bucketed` corpus rows (id,
+    * vec, cnorm, cid) of those lists, and re-ranks them by exact cosine. */
+  private def probeAndRerank(bucketed: DataFrame, q: DataFrame, listScores: Seq[Column],
+                             nprobe: Int, k: Int): DataFrame = {
+    val qScores = listScores.zipWithIndex.map { case (s, i) => struct(s.as("s"), lit(i).as("cid")) }
     val probes = q.select(col("qid"), col("qvec"), col("qnorm"),
       explode(slice(reverse(array_sort(array(qScores: _*))), 1, nprobe)).as("p"))
       .select(col("qid"), col("qvec"), col("qnorm"), col("p.cid").as("cid"))
-    val scored = bucketed.join(broadcast(probes), Seq("cid"))
-      .filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id"),
-        (vec_dot(col("qvec"), col("vec")) / (col("qnorm") * col("cnorm"))).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rankTopK(bucketed.join(broadcast(probes), Seq("cid")).filter(col("id") =!= col("qid")), k)
   }
 
   /** IVF top-k with a BIT-DETERMINISTIC, cross-engine-replayable build —
@@ -259,12 +267,10 @@ object Similarity {
   def ivfTopKExact(corpus: DataFrame, idCol: String, vecCol: String,
                    queries: DataFrame, qidCol: String, qvecCol: String,
                    k: Int, nlist: Int, nprobe: Int, iters: Int = 2): DataFrame = {
-    import graft.plans.VectorExpressions.vec_dot
     val md5id = graft.functions.TextFunctions.md5Hash32(col("id").cast("string"))
     // spread: every Lloyd scan pays nlist centroid dots per row
-    val c = normFiltered(spread(corpus, idCol).select(col(idCol).as("id"), col(vecCol).as("vec"),
-      quantizeInt8(col(vecCol)).as("qv"),
-      sqrt(vec_dot(col(vecCol), col(vecCol))).as("cnorm")), "cnorm")
+    val c = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide,
+      quantizeInt8(col(vecCol)).as("qv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // exact double literals (components are integers)
@@ -303,22 +309,9 @@ object Similarity {
 
     val bucketed = c.select(col("id"), col("vec"), col("cnorm"),
       assign(col("qv"), cents).as("cid"))
-    val q = normFiltered(queries.select(col(qidCol).as("qid"), col(qvecCol).as("qvec"),
-      quantizeInt8(col(qvecCol)).as("qqv"),
-      sqrt(vec_dot(col(qvecCol), col(qvecCol))).as("qnorm")), "qnorm")
-    val qScores = cents.zipWithIndex.map { case (s, i) =>
-      struct(try_divide(vec_dot(col("qqv"), centLit(s)), lit(centNorm(s))).as("s"),
-        lit(i).as("cid"))
-    }
-    val probes = q.select(col("qid"), col("qvec"), col("qnorm"),
-      explode(slice(reverse(array_sort(array(qScores: _*))), 1, nprobe)).as("p"))
-      .select(col("qid"), col("qvec"), col("qnorm"), col("p.cid").as("cid"))
-    val scored = bucketed.join(broadcast(probes), Seq("cid"))
-      .filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id"),
-        (vec_dot(col("qvec"), col("vec")) / (col("qnorm") * col("cnorm"))).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val q = normed(queries, qidCol, qvecCol, QuerySide, quantizeInt8(col(qvecCol)).as("qqv"))
+    probeAndRerank(bucketed, q, cents.map(s =>
+      try_divide(vec_dot(col("qqv"), centLit(s)), lit(centNorm(s)))), nprobe, k)
   }
 
   /** Embedding-cosine near-duplicate pairs: all (id_a < id_b) with
@@ -329,64 +322,44 @@ object Similarity {
     * (exact / minhash / simhash / embedding).
     *
     * (numTables=1, probeRadius=numPlanes) makes every pair a candidate —
-    * exhaustive, the oracle-checkable configuration. At scale, candidates ~
-    * bucket populations, never O(n²). */
+    * exhaustive, the oracle-checkable configuration. Otherwise about
+    * n²/2 x the geometry's collision rate (see [[MultiTableLsh]]) pairs are
+    * candidates on near-random vectors: ≈ 0.9975 of all pairs at 4 planes /
+    * 16 tables / radius 1 (still O(n²) candidate work), ≈ 8·10⁻⁶ at
+    * 18/2/0. */
   def cosineNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, numPlanes: Int, dim: Int,
                          probeRadius: Int = 1, numTables: Int = 8): DataFrame = {
-    import graft.plans.VectorExpressions.vec_dot
-    // (numTables=1, probeRadius >= numPlanes) probes EVERY bucket: the
-    // candidate set is all pairs by construction, so skip the probe-mask
-    // fan-out (2^numPlanes rows per id deduped back down) and declare the
-    // pairs directly — same result, none of the pre-distinct blowup. This is
-    // the oracle-checkable exhaustive configuration, not the scale path.
-    // spread once, shared by the candidate branch and the exact-gate side
-    val cs = spread(corpus, idCol)
-    val cand =
-      if (numTables == 1 && probeRadius >= numPlanes) {
-        val ids = cs.select(col(idCol).as("id"))
-        ids.select(col("id").as("id_a"))
-          .crossJoin(ids.select(col("id").as("id_b")))
-          .filter(col("id_a") < col("id_b"))
-      } else {
-        val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
-        val base = cs
-          .select(col(idCol).as("id"), lsh.sigs(col(vecCol)).as("sigs"))
-          .select(col("id"), posexplode_outer(col("sigs")).as(Seq("t", "sig")))
-        val probed = base.select(col("id"), col("t"), lsh.probes(col("sig")).as("sig"))
-        // spreadEager: the distinct's output is ~16 B/pair, so AQE
-        // coalesces it toward one partition — and the exact gate below
-        // pays a dim-width dot PER PAIR on those partitions (guide §2:
-        // bytes-based coalescing is compute-blind). The crossJoin branch
-        // above is already left-side-parallel and skips the exchange.
-        // Results are partitioning-independent.
-        Parallelism.spreadEager(
-          base.select(col("t"), col("sig"), col("id").as("id_a"))
-            .join(probed.select(col("t"), col("sig"), col("id").as("id_b")), Seq("t", "sig"))
-            .filter(col("id_a") < col("id_b"))
-            .select(col("id_a"), col("id_b")).distinct(), "id_a")
-      }
-    // zero-norm rows excluded (see normFiltered): their cosine is
-    // undefined, and the inner joins below then drop their candidate pairs
-    val v = normFiltered(cs.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      sqrt(vec_dot(col(vecCol), col(vecCol))).as("norm")), "norm")
-    cand
-      .join(v.select(col("id").as("id_a"), col("vec").as("va"), col("norm").as("na")), Seq("id_a"))
-      .join(v.select(col("id").as("id_b"), col("vec").as("vb"), col("norm").as("nb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (vec_dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
-      .filter(col("cos") >= threshold)
+    // spread once, shared by the candidate step and the exact gate
+    val cs = Parallelism.spread(corpus, idCol)
+    def side(id: String) = cs.select(col(idCol).as(id), col(vecCol).as("vec"))
+    val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
+    // spreadEager: the distinct's output is ~16 B/pair, so AQE coalesces it
+    // toward one partition — and the exact gate below pays a dim-width dot
+    // PER PAIR on those partitions (guide §2: bytes-based coalescing is
+    // compute-blind). The exhaustive cross join is already
+    // left-side-parallel and skips the exchange. Results are
+    // partitioning-independent.
+    val cand = lsh.distinctHits(
+      lsh.candidates(side("id_a"), side("id_b"), shipQuery = false)
+        .filter(col("id_a") < col("id_b")).select(col("id_a"), col("id_b")),
+      Parallelism.spreadEager(_, "id_a"))
+    cosineGate(cand, normed(cs, idCol, vecCol, ("id", "vec", "norm")), threshold)
   }
 
   /** Embedding-cosine near-dup pairs of a NEW BATCH against an accumulated
     * corpus — every returned pair touches a batch row (batch × corpus and
-    * batch × batch; never corpus × corpus). This is the candidate generator
-    * behind [[graft.operators.Dedup.incrementalComponentAssignmentsScoped]]
-    * and the one [[graft.jobs.ClusterMaintenance]] fold path: its output
-    * plus the prior assignment's stars is exactly the connectivity a full
-    * recompute would see. The corpus side's signatures are recomputed from
-    * its vectors on every call (one scan); nothing is persisted between
-    * calls.
+    * batch × batch; no corpus × corpus pair is returned). This is the
+    * candidate generator behind
+    * [[graft.operators.Dedup.incrementalComponentAssignmentsScoped]] and the
+    * one [[graft.jobs.ClusterMaintenance]] fold path: its output plus the
+    * prior assignment's stars is exactly the connectivity a full recompute
+    * would see. The corpus side's signatures are recomputed from its
+    * vectors on every call (one scan); nothing is persisted between calls.
+    * Candidate work is about |batch| x |corpus ∪ batch| x the geometry's
+    * collision rate (see [[MultiTableLsh]]) on near-random vectors — at
+    * the service default of 4 planes / 16 tables / radius 1 (rate
+    * ≈ 0.9975) that is about |batch| x |corpus|.
     *
     * Candidate completeness relies on probe-mask SYMMETRY: the multi-table
     * probe set is a Hamming ball, so sig(x) ∈ ball(sig(y)) ⇔
@@ -401,47 +374,23 @@ object Similarity {
                                 threshold: Double, numPlanes: Int, dim: Int,
                                 probeRadius: Int = 1,
                                 numTables: Int = 8): DataFrame = {
-    import graft.plans.VectorExpressions.vec_dot
-    val full = spread(corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val full = Parallelism.spread(corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .unionByName(batch.select(col(idCol).as("id"), col(vecCol).as("vec"))), "id")
-    val cand =
-      if (numTables == 1 && probeRadius >= numPlanes) {
-        batch.select(col(idCol).as("bid"))
-          .crossJoin(full.select(col("id")))
-          .filter(col("bid") =!= col("id"))
-      } else {
-        val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
-        val base = full
-          .select(col("id"), lsh.sigs(col("vec")).as("sigs"))
-          .select(col("id"), posexplode_outer(col("sigs")).as(Seq("t", "sig")))
-        val probed = batch
-          .select(col(idCol).as("bid"), lsh.sigs(col(vecCol)).as("sigs"))
-          .select(col("bid"), posexplode_outer(col("sigs")).as(Seq("t", "sig0")))
-          .select(col("bid"), col("t"), lsh.probes(col("sig0")).as("sig"))
-        base.join(probed, Seq("t", "sig"))
-          .filter(col("bid") =!= col("id"))
-          .select(col("bid"), col("id"))
-      }
     // canonical orientation + dedup (a batch-batch pair is found from both
     // ends; a multi-table hit repeats) BEFORE the vector joins.
     // Deliberately NO spreadEager here (unlike cosineNearDupPairs): this
-    // is the per-fold maintenance path, where the pair set is
-    // batch-proportional — the extra exchange pins its partition count
-    // into the fold's checkpointed lineage and every downstream tiny CC
-    // stage pays the task fan-out (measured r18: folds +15-30% with it,
-    // while the corpus-sized batch builds gained).
-    val pairs = cand
+    // is the per-fold maintenance path — the extra exchange pins its
+    // partition count into the fold's checkpointed lineage and every
+    // downstream tiny CC stage pays the task fan-out (measured r18: folds
+    // +15-30% with it, while the corpus-sized batch builds gained).
+    val pairs = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
+      .candidates(full, batch.select(col(idCol).as("bid"), col(vecCol).as("vec")),
+        shipQuery = false)
+      .filter(col("bid") =!= col("id"))
       .select(least(col("bid"), col("id")).as("id_a"),
         greatest(col("bid"), col("id")).as("id_b"))
       .distinct()
-    val v = normFiltered(full.select(col("id"), col("vec"),
-      sqrt(vec_dot(col("vec"), col("vec"))).as("norm")), "norm")
-    pairs
-      .join(v.select(col("id").as("id_a"), col("vec").as("va"), col("norm").as("na")), Seq("id_a"))
-      .join(v.select(col("id").as("id_b"), col("vec").as("vb"), col("norm").as("nb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (vec_dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
-      .filter(col("cos") >= threshold)
+    cosineGate(pairs, normed(full, "id", "vec", ("id", "vec", "norm")), threshold)
   }
 
   /** Per-query recall of an ANN result against a ground-truth top-k: for each
@@ -560,13 +509,26 @@ object Similarity {
     Seq.fill(numPlanes)(Array.fill(dim)(next()))
   }
 
-  /** Shared multi-table LSH plumbing for `lshCosineTopK` and
-    * `cosineNearDupPairs` (ONE implementation so their bucketings can never
-    * drift apart): `sig(vec)` = per-table signature array; `masks` = all
-    * probe offsets within `probeRadius` bits. */
+  /** Multi-table LSH plumbing shared by `lshCosineTopK`,
+    * `cosineNearDupPairs` and `cosineNearDupPairsAgainst` (ONE
+    * implementation so their bucketings can never drift apart): `sigs(vec)`
+    * = per-table signature array; `masks` = all probe offsets within
+    * `probeRadius` bits; [[candidates]] = the one candidate step.
+    *
+    * Collision rate: a pair of independent uniformly random vectors is a
+    * candidate with probability 1 − (1 − Σ_{i≤r} C(k,i)/2^k)^T for
+    * k = numPlanes, r = probeRadius, T = numTables (each plane splits such
+    * a pair with probability 1/2) — ≈ 0.9975 at 4/16/1, ≈ 8·10⁻⁶ at
+    * 18/2/0, 1 when exhaustive. On near-random embeddings that is the
+    * fraction of |query| x |corpus| the step returns. */
   private final case class MultiTableLsh(numPlanes: Int, numTables: Int,
                                          dim: Int, probeRadius: Int) {
-    require(numPlanes <= 20, "probe mask enumeration is 2^numPlanes bounded")
+    /** One table probed at radius >= numPlanes reaches every bucket: every
+      * pair is a candidate, so the step declares the cross join instead of
+      * enumerating 2^numPlanes probe masks per row and deduping. This is
+      * the oracle-checkable configuration, not the scale path. */
+    private val exhaustive = numTables == 1 && probeRadius >= numPlanes
+    require(exhaustive || numPlanes <= 20, "probe mask enumeration is 2^numPlanes bounded")
     private val planes = randomPlanes(numPlanes * numTables, dim)
     /** Per-table signature array for a vector column — ONE native
       * expression ([[graft.plans.RpSignatures]]) instead of numTables
@@ -576,12 +538,40 @@ object Similarity {
       * measured ~10x on the signature pass) and the plan carries one
       * opaque node instead of ~4k literal nodes (driver planning cost on
       * every fold that re-plans a signature stage). */
-    def sigs(vec: Column): Column =
+    private def sigs(vec: Column): Column =
       graft.plans.VectorExpressions.rp_signatures(vec, planes, numTables, numPlanes, dim)
-    val masks: Seq[Int] = (0 until (1 << numPlanes))
+    private lazy val masks: Seq[Int] = (0 until (1 << numPlanes))
       .filter(m => java.lang.Integer.bitCount(m) <= probeRadius)
-    def probes(sig: Column): Column =
+    private def probes(sig: Column): Column =
       explode(array(masks.map(m => sig.bitwiseXOR(lit(m.toLong))): _*))
+
+    /** The one candidate step. `corpus` and `query` are (key, vec) frames;
+      * the result is (query key, corpus key) under the frames' own key
+      * names, one row per hit: a pair is a candidate iff some table t has
+      * popcount(sig_q[t] xor sig_c[t]) <= probeRadius — the corpus side's
+      * signatures joined on (t, sig) to the query side's probed ones, or
+      * the cross join when the geometry is exhaustive. Self-pairs are
+      * kept; `shipQuery` broadcasts the query side. */
+    def candidates(corpus: DataFrame, query: DataFrame, shipQuery: Boolean): DataFrame = {
+      val (id, qid) = (corpus.columns(0), query.columns(0))
+      def ship(df: DataFrame) = if (shipQuery) broadcast(df) else df
+      def signed(side: DataFrame, sig: String) = side
+        .select(col(side.columns(0)), sigs(col("vec")).as("sigs"))
+        .select(col(side.columns(0)), posexplode_outer(col("sigs")).as(Seq("t", sig)))
+      val hits =
+        if (exhaustive) corpus.select(col(id)).crossJoin(ship(query.select(col(qid))))
+        else signed(corpus, "sig").join(ship(signed(query, "sig0")
+          .select(col(qid), col("t"), probes(col("sig0")).as("sig"))), Seq("t", "sig"))
+      hits.select(col(qid), col(id))
+    }
+
+    /** `pairs` (derived from [[candidates]]) with each pair once: a bucket
+      * join finds a pair once per (table, probe) that hits it, so it is
+      * deduped and handed to `after`; the exhaustive cross join finds each
+      * pair once and passes through as is. */
+    def distinctHits(pairs: DataFrame,
+                     after: DataFrame => DataFrame = identity): DataFrame =
+      if (exhaustive) pairs else after(pairs.distinct())
   }
 
   /** Multi-table, multi-probe LSH cosine top-k.
@@ -602,46 +592,23 @@ object Similarity {
     *
     * (numTables=1, probeRadius=numPlanes) probes every bucket of the single
     * table and is EXACTLY brute force — the oracle-checkable configuration
-    * (q32). Cost scales with probed bucket population, never
-    * O(|corpus| x |queries|) unless exhaustive. */
+    * (q32). Candidate work is about |corpus| x |queries| x the geometry's
+    * collision rate (see [[MultiTableLsh]]; p = 1/2 above): ≈ 0.9975 of the
+    * brute-force pairs at the 16x4-bit radius-1 config on near-random
+    * embeddings, ≈ 8·10⁻⁶ at 18/2/0. */
   def lshCosineTopK(corpus: DataFrame, idCol: String, vecCol: String,
                     queries: DataFrame, qidCol: String, qvecCol: String,
                     k: Int, numPlanes: Int, dim: Int,
                     probeRadius: Int = 1, numTables: Int = 8): DataFrame = {
-    import graft.plans.VectorExpressions.vec_dot
-    // Exhaustive configuration (see cosineNearDupPairs): every (query,
-    // corpus) pair is a candidate — declare that directly instead of
-    // enumerating 2^numPlanes probe masks per query and deduping.
-    val cs = spread(corpus, idCol) // see spread: bucket fan-out parallelism
-    val cand =
-      if (numTables == 1 && probeRadius >= numPlanes)
-        cs.select(col(idCol).as("id"))
-          .crossJoin(broadcast(queries.select(col(qidCol).as("qid"))))
-          .filter(col("id") =!= col("qid"))
-          .select(col("qid"), col("id"))
-      else {
-        val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
-        val c = cs
-          .select(col(idCol).as("id"), lsh.sigs(col(vecCol)).as("sigs"))
-          .select(col("id"), posexplode_outer(col("sigs")).as(Seq("t", "sig")))
-        val q = queries
-          .select(col(qidCol).as("qid"), lsh.sigs(col(qvecCol)).as("sigs"))
-          .select(col("qid"), posexplode_outer(col("sigs")).as(Seq("t", "sig0")))
-          .select(col("qid"), col("t"), lsh.probes(col("sig0")).as("sig"))
-        // candidate ids first (a pair found in several tables/probes must
-        // score once), then vectors join back for the exact re-rank
-        c.join(broadcast(q), Seq("t", "sig"))
-          .filter(col("id") =!= col("qid"))
-          .select(col("qid"), col("id")).distinct()
-      }
-    val cv = normFiltered(cs.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      sqrt(vec_dot(col(vecCol), col(vecCol))).as("cnorm")), "cnorm")
-    val qv = normFiltered(queries.select(col(qidCol).as("qid"), col(qvecCol).as("qvec"),
-      sqrt(vec_dot(col(qvecCol), col(qvecCol))).as("qnorm")), "qnorm")
-    val scored = cand.join(broadcast(qv), Seq("qid")).join(cv, Seq("id"))
-      .select(col("qid"), col("id"),
-        (vec_dot(col("qvec"), col("vec")) / (col("qnorm") * col("cnorm"))).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    val cs = Parallelism.spread(corpus, idCol) // bucket fan-out parallelism
+    val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
+    // candidate ids first (a pair found in several tables/probes must
+    // score once), then vectors join back for the exact re-rank
+    val cand = lsh.distinctHits(lsh.candidates(
+        cs.select(col(idCol).as("id"), col(vecCol).as("vec")),
+        queries.select(col(qidCol).as("qid"), col(qvecCol).as("vec")), shipQuery = true)
+      .filter(col("id") =!= col("qid")))
+    rankTopK(cand.join(broadcast(normed(queries, qidCol, qvecCol, QuerySide)), Seq("qid"))
+      .join(normed(cs, idCol, vecCol, CorpusSide), Seq("id")), k)
   }
 }

@@ -228,6 +228,12 @@ object Compact {
     dstFs.mkdirs(new Path(dstDir))
     val qdst = dstFs.makeQualified(new Path(dstDir))
     val newGen = nextGen(dstFs, qdst)
+    // reserve the generation before any part task starts: an attempt that
+    // aborts before its first part lands still leaves this name, so a
+    // retry's `nextGen` never hands out a generation a straggler task of
+    // the aborted job may still be writing under. The index write fills
+    // the dir; `cleanupSuperseded` sweeps it once a later generation commits.
+    dstFs.mkdirs(new Path(qdst, indexDirName(newGen)))
 
     val it = TreeListing.list(srcFs, qsrc)
     val head = scala.collection.mutable.ArrayBuffer[(String, Long)]()

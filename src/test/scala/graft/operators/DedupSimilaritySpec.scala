@@ -865,6 +865,63 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  test("LSH candidates of all three operators are exactly the Hamming-ball predicate") {
+    // generated 16-d vectors: 16 random bases, each with an exact copy, a
+    // close and a far neighbour, so narrow geometries still see hits
+    val dim = 16
+    val rnd = new scala.util.Random(11)
+    val bases = Seq.fill(16)(Array.fill(dim)(rnd.nextGaussian()))
+    def near(b: Array[Double], eps: Double): Seq[Float] =
+      b.map(x => (x + eps * rnd.nextGaussian()).toFloat).toSeq
+    val corpusRows = bases.zipWithIndex.flatMap { case (b, i) =>
+      Seq(3L * i -> near(b, 0), (3L * i + 1) -> near(b, 0.02), (3L * i + 2) -> near(b, 0.2))
+    }
+    // queries: three corpus rows (self-matches must be excluded) and eight
+    // perturbed bases under ids the corpus does not hold
+    val queryRows = Seq(0, 7, 20).map(i => corpusRows(i)) ++
+      bases.take(8).zipWithIndex.map { case (b, i) => (100L + i) -> near(b, 0.05) }
+    val corpus = corpusRows.toDF("id", "vec")
+    val queries = queryRows.toDF("qid", "qvec")
+    val h = 36L // Against: ids >= h are the batch, the rest its prior corpus
+    val ids = corpusRows.map(_._1)
+    def check(what: String, d: org.apache.spark.sql.DataFrame, a: String, b: String,
+              want: Seq[(Long, Long)]): Unit = {
+      val got = d.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val (missing, extra) = (want.toSet -- got, got -- want.toSet)
+      if (missing.nonEmpty || extra.nonEmpty)
+        fail(s"$what: ${missing.size} pairs missing (${missing.take(3)}), " +
+          s"${extra.size} extra (${extra.take(3)}) of ${want.size}")
+    }
+    for ((planes, tables, radius) <- Seq((4, 16, 1), (18, 2, 0), (6, 4, 0), (8, 1, 8))) {
+      val geometry = s"$planes planes / $tables tables / radius $radius"
+      def sigs(rows: Seq[(Long, Seq[Float])]): Map[Long, Seq[Long]] =
+        rows.toDF("id", "vec").select(col("id"),
+            graft.plans.VectorExpressions.rp_signatures(col("vec"),
+              Similarity.randomPlanes(planes * tables, dim), tables, planes, dim))
+          .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val (cs, qs) = (sigs(corpusRows), sigs(queryRows))
+      def hit(x: Seq[Long], y: Seq[Long]) =
+        x.zip(y).exists { case (u, v) => java.lang.Long.bitCount(u ^ v) <= radius }
+      val self = for (a <- ids; b <- ids if a < b && hit(cs(a), cs(b))) yield (a, b)
+      val against = self.filter { case (a, b) => a >= h || b >= h }
+      val topK = for ((q, _) <- queryRows; id <- ids if q != id && hit(qs(q), cs(id)))
+        yield (q, id)
+      assert(self.nonEmpty && against.nonEmpty && topK.nonEmpty, geometry)
+      // a threshold below -1 passes every candidate through the cosine gate
+      check(s"cosineNearDupPairs, $geometry", Similarity.cosineNearDupPairs(corpus, "id",
+        "vec", threshold = -2.0, numPlanes = planes, dim = dim, probeRadius = radius,
+        numTables = tables), "id_a", "id_b", self)
+      check(s"cosineNearDupPairsAgainst, $geometry", Similarity.cosineNearDupPairsAgainst(
+        corpus.filter(col("id") >= h), corpus.filter(col("id") < h), "id", "vec",
+        threshold = -2.0, numPlanes = planes, dim = dim, probeRadius = radius,
+        numTables = tables), "id_a", "id_b", against)
+      // k >= |corpus|: the rank window keeps every candidate
+      check(s"lshCosineTopK, $geometry", Similarity.lshCosineTopK(corpus, "id", "vec",
+        queries, "qid", "qvec", k = ids.size, numPlanes = planes, dim = dim,
+        probeRadius = radius, numTables = tables), "qid", "id", topK)
+    }
+  }
+
   test("cluster-keyed split: no near-dup pair ever crosses a split boundary (q95 leakage property)") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val pairs = Similarity.cosineNearDupPairs(emb, "vec_id", "embedding",

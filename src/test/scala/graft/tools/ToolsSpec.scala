@@ -196,6 +196,39 @@ class ToolsSpec extends SparkSpec {
     assert(!names.exists(n => n.startsWith("part-") && !n.startsWith("part-g2-")), names)
   }
 
+  test("Compact: a re-compaction killed before any part lands still reserves its generation") {
+    val src = Files.createTempDirectory("graft_atomic_src").toString
+    val dst = Files.createTempDirectory("graft_atomic_dst").toString + "/packed"
+    val v1 = (0 until 40).map { i =>
+      val rel = f"f$i%03d.txt"
+      val body = (s"v1 doc $i " * (1 + i % 7)).getBytes(UTF_8)
+      write(src, rel, body)
+      rel -> body
+    }.toMap
+    Compact.compact(spark, src, dst, targetPartBytes = 512L)
+    v1.keys.foreach(rel => write(src, rel, (s"v2 $rel " * 20).getBytes(UTF_8)))
+    // the fault fires at EVERY part, so the aborted attempt writes no part
+    intercept[Exception] {
+      Compact.compactWithFault(spark, src, dst, targetPartBytes = 512L,
+        spillThreshold = 1 << 20,
+        beforePart = _ => throw new RuntimeException("injected crash before every part"))
+    }
+    def names = new java.io.File(dst).listFiles().map(_.getName).toSet
+    assert(!names.exists(_.startsWith("part-g1-")), names)
+    v1.foreach { case (rel, body) =>
+      assert(Compact.readEntry(spark, dst, rel).sameElements(body), rel)
+    }
+    // the retry still gets a generation the aborted attempt never had
+    Compact.compact(spark, src, dst, targetPartBytes = 512L)
+    v1.keys.foreach { rel =>
+      assert(Compact.readEntry(spark, dst, rel)
+        .sameElements((s"v2 $rel " * 20).getBytes(UTF_8)), rel)
+    }
+    assert(names.filter(_.startsWith("_index")) == Set("_index-g2"), names)
+    assert(names.exists(_.startsWith("part-g2-")), names)
+    assert(!names.exists(n => n.startsWith("part-") && !n.startsWith("part-g2-")), names)
+  }
+
   test("Compact.pack: 100k-file listing packs in bounded time, deterministically, within capacity") {
     val rnd = new scala.util.Random(99)
     val target = 256L << 20
