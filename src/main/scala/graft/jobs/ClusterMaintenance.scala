@@ -66,22 +66,32 @@ import org.apache.spark.sql.functions._
   *    the long-running service holds at most two snapshots plus
   *    `snapshotEvery` deltas at any stream length.
   *
-  * Scale shape per fold: batch-vs-corpus candidate similarity
-  * ([[Similarity.cosineNearDupPairsAgainst]], the multi-table LSH probe:
-  * no corpus x corpus pair is ever a candidate) plus connected components
-  * SCOPED to the affected subgraph
-  * ([[Dedup.incrementalComponentAssignmentsScoped]]): untouched prior
-  * clusters pass through verbatim, the CC loop iterates only over
-  * (affected-cluster star edges + new pairs), warm-started from the prior
-  * labels, and the state write is the recomputed DELTA alone. The
-  * candidate count is |batch| x |corpus ∪ batch| x the geometry's
-  * collision rate for a random pair, 1 − (1 − Σ_{i≤r} C(k,i)/2^k)^T
-  * (k planes, radius r, T tables): ≈ 0.9975 at the default 4/16/1, so on
-  * near-random embeddings a fold does about |batch| x |corpus| candidate
-  * work; ≈ 8·10⁻⁶ at 18/2/0. The other per-fold corpus terms are
-  * sequential scans (the corpus vectors' signature and cosine-gate scans,
-  * broadcast-probe scans of the reconstructed prior) plus the amortized
-  * 1/snapshotEvery snapshot write.
+  * Scale shape per fold: the batch is read once and kept on the driver
+  * as a local relation (it is broadcast anyway). The batch-vs-corpus
+  * candidate step ([[Similarity.cosineNearDupPairsAgainst]]) broadcasts
+  * the batch's vectors, norms and probed signatures and reads
+  * corpus ∪ batch in ONE map-side pass that applies the exact cosine gate
+  * in place: the corpus is scanned, never shuffled, and only gated pairs
+  * leave the pass. The connected components are SCOPED to the affected
+  * subgraph ([[Dedup.incrementalComponentAssignmentsScopedParts]]): the
+  * gated pairs, the affected cluster ids and their member rows are each
+  * collected once (broadcast-free filtered scans of the reconstructed
+  * prior), union-find closes them on the driver, and untouched prior
+  * clusters pass through verbatim; the state write is the recomputed
+  * DELTA alone. A fold is therefore about eight Spark jobs (batch read,
+  * broadcast, pair scan, two prior scans, state write, batch write, and
+  * the compaction write when due) and shuffles only the delta rows of its
+  * prior's reconstruction, whatever the corpus size (spec-gated: per-fold
+  * shuffle and task-result bytes equal at corpora of N and 8N). The corpus terms are the sequential scans —
+  * the pair scan's signatures and gate dots, the prior scans, the
+  * amortized 1/snapshotEvery snapshot write and 1/compactEvery
+  * compaction — and the gate's dot count: |batch| x |corpus ∪ batch| x
+  * the geometry's collision rate for a random pair,
+  * 1 − (1 − Σ_{i≤r} C(k,i)/2^k)^T (k planes, radius r, T tables):
+  * ≈ 0.9975 at the default 4/16/1, so on near-random embeddings a fold
+  * computes about |batch| x |corpus| dot products; ≈ 8·10⁻⁶ at 18/2/0.
+  * Above `Dedup.localComponentsBound` rows per batch-sized frame the CC
+  * falls back to checkpointed frames and distributed rounds.
   */
 object ClusterMaintenance {
 
@@ -117,102 +127,103 @@ object ClusterMaintenance {
                 cfg: Config = Config()): Unit = {
     val b0 = batch.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).as("embedding"))
-    val b = b0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sess = b.sparkSession
-      val hconf = sess.sparkContext.hadoopConfiguration
-      val cpath = new Path(corpusDir)
-      val fs = cpath.getFileSystem(hconf)
-      val spath = new Path(stateDir)
-      val sfs = spath.getFileSystem(hconf)
-      // the ENFORCED half of the takedown quiesce contract: a rebuild in
-      // progress (or crashed mid-run) holds the `_REBUILD` lease, and a
-      // fold racing it could read a mid-swap generation or commit a batch
-      // dir the rebuild's sweep then deletes — fail fast instead
-      StateProtocol.requireNoRebuildLease(sfs, spath, "ClusterMaintenance.foldBatch")
-      // the accumulated assignment is joinable only under the SEMANTIC
-      // config that built it (threshold + LSH candidate geometry decide
-      // which pairs were adopted, and adoption is forever) — validate the
-      // `_CLCONF` stamp before reading anything; a mismatch fails loudly
-      // prescribing the rebuild recompute, never a sweep (the state IS
-      // the record)
-      ensureClusterConfig(sfs, spath, cfg)
-      val gen = StateProtocol.latestGeneration(fs, cpath, maxGen = batchId - 1)
-      val batchParts =
-        ((gen.getOrElse(-1L) + 1) until batchId).map(i => s"$corpusDir/b=$i")
-      // fold-side read gate (the generation is _SUCCESS-gated by
-      // latestGeneration): a torn prior b=i would read as EMPTY parquet and
-      // this fold's near-dup pass would silently miss batch i's whole
-      // corpus contribution — fail fast naming the replay instead
-      StateProtocol.requireCommitted(fs, batchParts,
-        "ClusterMaintenance.foldBatch",
-        "a prior fold crashed mid-write; replay that fold first (its keyed " +
-          "overwrite converges), then fold later batches")
-      val corpusParts = gen.map(g => s"$corpusDir/gen=$g").toSeq ++ batchParts
-      val corpus =
-        if (corpusParts.isEmpty) b.limit(0)
-        else sess.read.schema(b.schema).parquet(corpusParts: _*)
-      val prior =
-        if (batchId == 0)
-          b.limit(0).select(col("vec_id").as("id"),
-            col("vec_id").as("cluster_id"),
-            lit(1L).as("cluster_size"), lit(1).as("is_canonical"))
-        else reconstructAssignment(sess, stateDir, upTo = batchId - 1)
-      // batch × (corpus ∪ batch) candidates: the batch's signatures probe
-      // the multi-table buckets recomputed from the corpus vectors
-      val pairs = Similarity.cosineNearDupPairsAgainst(b, corpus,
-        "vec_id", "embedding", threshold = cfg.threshold,
-        numPlanes = cfg.numPlanes, dim = cfg.dim,
-        probeRadius = cfg.probeRadius, numTables = cfg.numTables)
-      val lastSnap = StateProtocol.committedDirs(sfs, spath, "v=")
-        .filter(_ <= batchId - 1).reduceOption(_ max _)
-      // Snapshot folds write full coverage; in between, the scoped fold's
-      // recomputed half alone IS the exact change set (see
-      // incrementalComponentAssignmentsScopedParts) and is all that hits
-      // disk — the batch-proportional state write. Fold 0 always snapshots
-      // (its delta is full coverage anyway, and it anchors reconstruction);
-      // lastSnap ≤ batchId-1, so snapshotEvery ≤ 1 snapshots every fold.
-      val snapshotFold = batchId == 0 ||
-        batchId - lastSnap.getOrElse(-1L) >= cfg.snapshotEvery
-      val (untouched, rec) = Dedup.incrementalComponentAssignmentsScopedParts(
-        prior, b.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
-      if (snapshotFold)
-        untouched.unionByName(rec)
-          .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-      else rec.write.mode("overwrite").parquet(s"$stateDir/d=$batchId")
-      // the corpus batch lands AFTER the state commit above (the rebuild's
-      // state-before-corpus coverage check); a crash between the two
-      // leaves a torn or missing b= that the fold-side gate reports and a
-      // replay overwrites
-      b.write.mode("overwrite").parquet(s"$corpusDir/b=$batchId")
-      // Retention: keep exactly what a replay of THIS fold or the next one
-      // needs — the newest snapshot ≤ batchId-1 and the deltas after it
-      // (reconstruction at batchId-1), plus whatever this fold just wrote.
-      // Everything at or before that snapshot is garbage. With
-      // snapshotEvery ≤ 1 this reduces to the legacy delete of v=batchId-2.
-      lastSnap.foreach { pv =>
-        sfs.listStatus(spath).map(_.getPath.getName).foreach { nm =>
-          if (StateProtocol.numericSuffix(nm, "v=").exists(_ < pv) ||
-              StateProtocol.numericSuffix(nm, "d=").exists(_ <= pv))
-            sfs.delete(new Path(s"$stateDir/$nm"), true)
-        }
+    val sess = batch.sparkSession
+    val hconf = sess.sparkContext.hadoopConfiguration
+    val cpath = new Path(corpusDir)
+    val fs = cpath.getFileSystem(hconf)
+    val spath = new Path(stateDir)
+    val sfs = spath.getFileSystem(hconf)
+    // the ENFORCED half of the takedown quiesce contract: a rebuild in
+    // progress (or crashed mid-run) holds the `_REBUILD` lease, and a
+    // fold racing it could read a mid-swap generation or commit a batch
+    // dir the rebuild's sweep then deletes — fail fast instead
+    StateProtocol.requireNoRebuildLease(sfs, spath, "ClusterMaintenance.foldBatch")
+    // the accumulated assignment is joinable only under the SEMANTIC
+    // config that built it (threshold + LSH candidate geometry decide
+    // which pairs were adopted, and adoption is forever) — validate the
+    // `_CLCONF` stamp before reading anything; a mismatch fails loudly
+    // prescribing the rebuild recompute, never a sweep (the state IS
+    // the record)
+    ensureClusterConfig(sfs, spath, cfg)
+    val gen = StateProtocol.latestGeneration(fs, cpath, maxGen = batchId - 1)
+    val batchParts =
+      ((gen.getOrElse(-1L) + 1) until batchId).map(i => s"$corpusDir/b=$i")
+    // fold-side read gate (the generation is _SUCCESS-gated by
+    // latestGeneration): a torn prior b=i would read as EMPTY parquet and
+    // this fold's near-dup pass would silently miss batch i's whole
+    // corpus contribution — fail fast naming the replay instead
+    StateProtocol.requireCommitted(fs, batchParts,
+      "ClusterMaintenance.foldBatch",
+      "a prior fold crashed mid-write; replay that fold first (its keyed " +
+        "overwrite converges), then fold later batches")
+    // The batch is read ONCE: collected to the driver (the candidate step
+    // broadcasts it, so it must fit there anyway), it feeds the broadcast,
+    // the new-id set and the b= write as a local relation
+    val b = sess.createDataFrame(java.util.Arrays.asList(b0.collect(): _*), b0.schema)
+    val corpusParts = gen.map(g => s"$corpusDir/gen=$g").toSeq ++ batchParts
+    val corpus =
+      if (corpusParts.isEmpty) b.limit(0)
+      else sess.read.schema(b.schema).parquet(corpusParts: _*)
+    val prior =
+      if (batchId == 0)
+        b.limit(0).select(col("vec_id").as("id"),
+          col("vec_id").as("cluster_id"),
+          lit(1L).as("cluster_size"), lit(1).as("is_canonical"))
+      else reconstructAssignment(sess, stateDir, upTo = batchId - 1)
+    // batch × (corpus ∪ batch) candidates: the batch's signatures probe
+    // the multi-table buckets recomputed from the corpus vectors
+    val pairs = Similarity.cosineNearDupPairsAgainst(b, corpus,
+      "vec_id", "embedding", threshold = cfg.threshold,
+      numPlanes = cfg.numPlanes, dim = cfg.dim,
+      probeRadius = cfg.probeRadius, numTables = cfg.numTables)
+    val lastSnap = StateProtocol.committedDirs(sfs, spath, "v=")
+      .filter(_ <= batchId - 1).reduceOption(_ max _)
+    // Snapshot folds write full coverage; in between, the scoped fold's
+    // recomputed half alone IS the exact change set (see
+    // incrementalComponentAssignmentsScopedParts) and is all that hits
+    // disk — the batch-proportional state write. Fold 0 always snapshots
+    // (its delta is full coverage anyway, and it anchors reconstruction);
+    // lastSnap ≤ batchId-1, so snapshotEvery ≤ 1 snapshots every fold.
+    val snapshotFold = batchId == 0 ||
+      batchId - lastSnap.getOrElse(-1L) >= cfg.snapshotEvery
+    val (untouched, rec) = Dedup.incrementalComponentAssignmentsScopedParts(
+      prior, b.select(col("vec_id")), "vec_id", pairs, "id_a", "id_b")
+    if (snapshotFold)
+      untouched.unionByName(rec)
+        .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
+    else rec.write.mode("overwrite").parquet(s"$stateDir/d=$batchId")
+    // the corpus batch lands AFTER the state commit above (the rebuild's
+    // state-before-corpus coverage check); a crash between the two
+    // leaves a torn or missing b= that the fold-side gate reports and a
+    // replay overwrites. One file, as the batch's own scan wrote: a local
+    // relation spans up to defaultParallelism partitions.
+    b.coalesce(1).write.mode("overwrite").parquet(s"$corpusDir/b=$batchId")
+    // Retention: keep exactly what a replay of THIS fold or the next one
+    // needs — the newest snapshot ≤ batchId-1 and the deltas after it
+    // (reconstruction at batchId-1), plus whatever this fold just wrote.
+    // Everything at or before that snapshot is garbage. With
+    // snapshotEvery ≤ 1 this reduces to the legacy delete of v=batchId-2.
+    lastSnap.foreach { pv =>
+      sfs.listStatus(spath).map(_.getPath.getName).foreach { nm =>
+        if (StateProtocol.numericSuffix(nm, "v=").exists(_ < pv) ||
+            StateProtocol.numericSuffix(nm, "d=").exists(_ <= pv))
+          sfs.delete(new Path(s"$stateDir/$nm"), true)
       }
-      // Compact AFTER the fold's own commits, consolidating exactly the
-      // corpus this fold just read (batches 0..batchId-1 — never b=batchId,
-      // so a replay of THIS fold still finds a generation ≤ batchId-1 and
-      // reads a corpus that excludes its own batch). The write re-reads the
-      // same paths once — one extra corpus read+write per compactEvery
-      // folds, amortized O(1/compactEvery) per fold.
-      if (cfg.compactEvery > 0 &&
-          (batchId - 1) - gen.getOrElse(-1L) >= cfg.compactEvery) {
-        val newGen = batchId - 1
-        // the sweep below runs only after the generation commits, so no
-        // source dir is deleted under a concurrent reader
-        corpus.write.mode("overwrite").parquet(s"$corpusDir/gen=$newGen")
-        StateProtocol.sweepSuperseded(fs, cpath, newGen)
-      }
-    } finally b.unpersist(false)
-    ()
+    }
+    // Compact AFTER the fold's own commits, consolidating exactly the
+    // corpus this fold just read (batches 0..batchId-1 — never b=batchId,
+    // so a replay of THIS fold still finds a generation ≤ batchId-1 and
+    // reads a corpus that excludes its own batch). The write re-reads the
+    // same paths once — one extra corpus read+write per compactEvery
+    // folds, amortized O(1/compactEvery) per fold.
+    if (cfg.compactEvery > 0 &&
+        (batchId - 1) - gen.getOrElse(-1L) >= cfg.compactEvery) {
+      val newGen = batchId - 1
+      // the sweep below runs only after the generation commits, so no
+      // source dir is deleted under a concurrent reader
+      corpus.write.mode("overwrite").parquet(s"$corpusDir/gen=$newGen")
+      StateProtocol.sweepSuperseded(fs, cpath, newGen)
+    }
   }
 
   /** Takedown / retraction escape hatch: both service contracts are

@@ -41,13 +41,17 @@ import org.apache.spark.sql.functions._
   * batch count + accumulated count (the operator's split identity, folded).
   *
   * Scale shape per fold: the batch's own gram counts are one map-side-
-  * combined groupBy, and a batch-unique gram is a duplicate iff the
-  * operator's exact semi join finds it in the committed gram dirs — the
-  * fold's only scan of the generation gram state. Presence is all the
-  * dedup needs, so the union of dirs is passed unmerged (no corpus-wide
-  * groupBy per fold). Nothing derived is persisted beside a generation;
-  * the Bloom filters earlier versions kept there (`bloom=G.bin`) are
-  * never read and go with the next compaction or rebuild. */
+  * combined groupBy, written first as `b=N` and read back by the span
+  * dedup, so the batch's grams are counted once. A batch-unique gram is a
+  * duplicate iff the operator's exact semi join finds it in the committed
+  * gram dirs — the fold's only scan of the generation gram state, read in
+  * place with the batch's unique grams on the build side (broadcast while
+  * they are small), so neither the driver nor a shuffle sees the gram
+  * state. Presence is all the dedup needs, so the union of dirs is passed
+  * unmerged (no corpus-wide groupBy per fold). Nothing derived is
+  * persisted beside a generation; the Bloom filters earlier versions kept
+  * there (`bloom=G.bin`) are never read and go with the next compaction
+  * or rebuild. */
 object SpanDedupMaintenance {
 
   /** `n = 8` matches the q109/q111/q113 gated gram length.
@@ -58,7 +62,7 @@ object SpanDedupMaintenance {
   /** Fold one ingest batch — (idCol: integral, toksCol: array<string>) —
     * through the span dedup and into the gram state. Reads the accumulated
     * gram dirs (latest committed generation + later batch dirs); writes
-    * `cleanDir/b=$batchId` and `gramDir/b=$batchId` (both keyed
+    * `gramDir/b=$batchId`, then `cleanDir/b=$batchId` (both keyed
     * overwrites — a replay after a mid-fold crash rewrites the same
     * state); compacts the gram dirs when the generation lag reaches
     * `cfg.compactEvery`. Returns the deduped batch as written. */
@@ -102,16 +106,15 @@ object SpanDedupMaintenance {
       if (priorParts.isEmpty)
         sess.createDataFrame(java.util.Collections.emptyList[Row](), gramSchema)
       else sess.read.schema(gramSchema).parquet(priorParts: _*)
-    val clean = Dedup.removeDuplicateSpansIncrementalOfTokens(batch, idCol,
-      toksCol, cfg.n, prior)
-    // the deduped output and the batch's own gram counts are INDEPENDENT
-    // writes (guide §2.6 — overlap them; neither reads the other, both are
-    // individually _SUCCESS-gated keyed overwrites, and a replay after any
-    // torn combination rewrites both)
-    StateProtocol.parallelJobs(
-      () => clean.write.mode("overwrite").parquet(s"$cleanDir/b=$batchId"),
-      () => Dedup.spanGramCounts(batch, idCol, toksCol, cfg.n)
-        .write.mode("overwrite").parquet(s"$gramDir/b=$batchId"))
+    // The batch's grams are counted ONCE: its gram counts land first, and
+    // the span dedup reads them back from that batch-sized dir. Both writes
+    // are _SUCCESS-gated keyed overwrites, so a replay after a crash
+    // between them rewrites both.
+    Dedup.spanGramCounts(batch, idCol, toksCol, cfg.n)
+      .write.mode("overwrite").parquet(s"$gramDir/b=$batchId")
+    val clean = Dedup.removeDuplicateSpansIncremental(batch, idCol, toksCol, cfg.n,
+      sess.read.schema(gramSchema).parquet(s"$gramDir/b=$batchId"), prior)
+    clean.write.mode("overwrite").parquet(s"$cleanDir/b=$batchId")
     // Compact AFTER the fold's own commits, sum-merging exactly the state
     // this fold just read (batches 0..batchId-1 — never b=batchId, so a
     // replay of THIS fold still resolves a generation ≤ batchId-1).
@@ -122,7 +125,8 @@ object SpanDedupMaintenance {
         .write.mode("overwrite").parquet(s"$gramDir/gen=$newGen")
       StateProtocol.sweepSuperseded(fs, gpath, newGen)
     }
-    sess.read.parquet(s"$cleanDir/b=$batchId")
+    // the schema is known, so reading the output back infers nothing
+    sess.read.schema(clean.schema).parquet(s"$cleanDir/b=$batchId")
   }
 
   /** The gram-geometry fingerprint persisted beside the state

@@ -343,8 +343,9 @@ object Dedup {
     * jobs (count, collect) over the snapshot's blocks instead of ~6 AQE
     * materialization jobs per round — the per-round cost of the
     * distributed path is scheduling latency, not compute, so every
-    * batch-proportional graph (q74, the scoped service folds) takes this
-    * path.
+    * batch-proportional graph (q74, the rebuilds) takes this path; the
+    * scoped service folds close theirs on the driver before any
+    * checkpoint ([[incrementalComponentAssignmentsScopedParts]]).
     *
     * DISTRIBUTED path — larger snapshots, or `localBound = 0`: min-label
     * propagation with pointer jumping. The edge table is seeded with one
@@ -592,23 +593,10 @@ object Dedup {
     val ids = new Array[Long](parts.map(_.length / 2).sum)
     var n = 0
     for (p <- parts; j <- p.indices by 2) { ids(n) = p(j); n += 1 }
-    java.util.Arrays.sort(ids)
-    var m = 0
-    for (j <- ids.indices if j == 0 || ids(j) != ids(j - 1)) { ids(m) = ids(j); m += 1 }
-    val parent = Array.range(0, m)
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    def root(v: Long): Int = find(java.util.Arrays.binarySearch(ids, 0, m, v))
-    // each undirected edge is in the snapshot in both orientations
-    for (p <- parts; j <- p.indices by 2 if p(j) < p(j + 1)) {
-      val (a, b) = (root(p(j)), root(p(j + 1)))
-      if (a < b) parent(b) = a else if (b < a) parent(a) = b
-    }
-    val out = new java.util.ArrayList[Row](m)
-    for (i <- 0 until m) out.add(Row(ids(i), ids(find(i))))
+    val nodes = sortedUnique(ids)
+    val comp = componentMins(nodes, parts.toSeq)
+    val out = new java.util.ArrayList[Row](nodes.length)
+    for (i <- nodes.indices) out.add(Row(nodes(i), comp(i)))
     spark.createDataFrame(out, StructType(Seq(
       StructField("node", LongType), StructField("component", LongType))))
   }
@@ -689,12 +677,14 @@ object Dedup {
     * (member → label) makes it reachable — the seed contract of
     * [[connectedComponentsWithRounds]].
     *
-    * Scale shape per fold: the corpus appears only as broadcast-probe SCANS
-    * of the prior assignment (affected-cluster semi/anti joins — map-side,
-    * no corpus shuffle); everything iterative runs on |affected ∪ batch|
-    * rows. This is the 100 TB maintenance story: a daily batch pays
-    * |batch| × candidate-bucket similarity plus CC over the affected
-    * subgraph, instead of corpus × corpus.
+    * Scale shape per fold: the corpus appears only as filtered SCANS of
+    * the prior assignment (the affected-cluster selections — map-side, no
+    * corpus shuffle); everything iterative runs on |affected ∪ batch|
+    * rows, on the driver while they fit (see
+    * [[incrementalComponentAssignmentsScopedParts]]). This is the 100 TB
+    * maintenance story: a daily batch pays |batch| × candidate-bucket
+    * similarity plus CC over the affected subgraph, instead of corpus ×
+    * corpus.
     *
     * Preconditions:
     *  - append-only ids — every `newUniverse` id greater than all prior ids
@@ -703,9 +693,10 @@ object Dedup {
     *  - `assignment` carries the FULL coverage schema — untouched rows pass
     *    through verbatim, so all four columns must exist;
     *  - `newEdges` is batch-proportional: its endpoint set and the affected
-    *    clusters' member rows are collected into BROADCAST relations here,
-    *    so a batch whose candidate-pair endpoints cannot broadcast (≳10⁸
-    *    pairs) needs a full [[componentAssignments]] recompute instead. */
+    *    clusters' member rows are collected to the driver (within
+    *    `localBound` rows) or into BROADCAST relations here, so a batch
+    *    whose candidate-pair endpoints cannot broadcast (≳10⁸ pairs) needs
+    *    a full [[componentAssignments]] recompute instead. */
   def incrementalComponentAssignmentsScoped(assignment: DataFrame,
                                             newUniverse: DataFrame, idCol: String,
                                             newEdges: DataFrame, srcCol: String,
@@ -730,20 +721,85 @@ object Dedup {
     * maintaining versioned state can therefore persist `recomputed` alone
     * as a batch-proportional DELTA and reconstruct full coverage later by
     * latest-fold-wins merge over (snapshot, deltas) — the contract
-    * [[graft.jobs.ClusterMaintenance]] builds its delta state layout on. */
+    * [[graft.jobs.ClusterMaintenance]] builds its delta state layout on.
+    *
+    * Two paths, one result (spec-gated), chosen like
+    * [[connectedComponentsWithRounds]]'s: while each batch-sized frame —
+    * the new edges, the new ids, the affected clusters' ids and their
+    * member rows — stays within `localBound` rows, each is collected to
+    * the driver once, the prior assignment is filtered by the collected
+    * id and cluster sets, and union-find closes the scoped graph straight
+    * from the collected arrays; `recomputed` is a one-partition local
+    * relation. That is one job per frame (none for a local relation, none
+    * for `affected`/`touched` when no new edge exists) and no checkpoint.
+    * Above the bound, or with `localBound = 0`, each frame is checkpointed
+    * instead and the CC runs on the checkpointed scoped graph. */
   def incrementalComponentAssignmentsScopedParts(
       assignment: DataFrame, newUniverse: DataFrame, idCol: String,
       newEdges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 64,
       localBound: Long = localComponentsBound): (DataFrame, DataFrame) = {
+    val edges = newEdges
+      .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
+    val ids = newUniverse.select(col(idCol).cast("long").as("id"))
+    val onDriver = if (localBound > 0) scopedOnDriver(assignment, ids, edges, localBound) else None
+    onDriver.getOrElse(scopedCheckpointed(assignment, ids, edges, maxIter, localBound))
+  }
+
+  /** The prior rows of `assignment` whose cluster is not `affected`, in
+    * the assignment schema. */
+  private def untouchedRows(assignment: DataFrame, affected: DataFrame => DataFrame): DataFrame =
+    affected(assignment).select(col("id").cast("long").as("id"),
+      col("cluster_id").cast("long").as("cluster_id"),
+      col("cluster_size").cast("long").as("cluster_size"),
+      col("is_canonical").cast("int").as("is_canonical"))
+
+  /** The driver path of [[incrementalComponentAssignmentsScopedParts]], or
+    * None once a collected frame exceeds `bound` rows. */
+  private def scopedOnDriver(assignment: DataFrame, ids: DataFrame, edges: DataFrame,
+                             bound: Long): Option[(DataFrame, DataFrame)] = {
+    def prior(c: String) = col(c).cast("long")
+    def priorWhere(c: String, in: Array[Long], cols: String*) =
+      if (in.isEmpty) Some(Array.empty[Long])
+      else collectLongs(assignment.filter(prior(c).isInCollection(in.toSeq))
+        .select(cols.map(prior): _*), bound)
+    for {
+      fresh <- collectLongs(edges, bound)
+      batch <- collectLongs(ids, bound)
+      // prior clusters containing any fresh endpoint, then all their rows
+      affected <- priorWhere("id", sortedUnique(fresh.clone()), "cluster_id").map(sortedUnique)
+      touched <- priorWhere("cluster_id", affected, "id", "cluster_id")
+    } yield {
+      val spark = assignment.sparkSession
+      // the scoped graph: star(affected clusters) ∪ fresh edges
+      val nodes = sortedUnique(fresh ++ touched ++ batch)
+      val label = componentMins(nodes, Seq(fresh, touched))
+      val universe = sortedUnique(Array.tabulate(touched.length / 2)(i => touched(2 * i)) ++ batch)
+      val lbl = universe.map(v => label(java.util.Arrays.binarySearch(nodes, v)))
+      val size = new scala.collection.mutable.LongMap[Long]()
+      lbl.foreach(l => size(l) = size.getOrElse(l, 0L) + 1L)
+      val rows = new java.util.ArrayList[Row](universe.length)
+      for (i <- universe.indices)
+        rows.add(Row(universe(i), lbl(i), size(lbl(i)), if (universe(i) == lbl(i)) 1 else 0))
+      val rec = spark.createDataFrame(rows, StructType(Seq(
+        StructField("id", LongType), StructField("cluster_id", LongType),
+        StructField("cluster_size", LongType), StructField("is_canonical", IntegerType))))
+        .coalesce(1)
+      val untouched = untouchedRows(assignment, a =>
+        if (affected.isEmpty) a else a.filter(!prior("cluster_id").isInCollection(affected.toSeq)))
+      (untouched, rec)
+    }
+  }
+
+  /** The checkpointed path of [[incrementalComponentAssignmentsScopedParts]]. */
+  private def scopedCheckpointed(assignment: DataFrame, ids: DataFrame, edges: DataFrame,
+                                 maxIter: Int, localBound: Long): (DataFrame, DataFrame) = {
     // Materialize the candidate pairs once (they feed the endpoint set, the
     // scoped edge graph, and — via the broadcast builds — would otherwise
     // re-run the whole LSH candidate generator per consumer). localCheckpoint
     // rather than persist: the downstream CC loop plans over these many
     // times, and a persisted frame still carries the generator's plan
     // (see the note in connectedComponentsWithRounds).
-    val fresh = newEdges
-      .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
-      .localCheckpoint(true)
+    val fresh = edges.localCheckpoint(true)
     val eps = fresh.select(col("s").as("id"))
       .unionByName(fresh.select(col("d").as("id"))).distinct()
     // Prior clusters containing any fresh endpoint. Corpus side is scanned,
@@ -762,24 +818,73 @@ object Dedup {
         col("cluster_id").cast("long").as("cluster_id"))
       .localCheckpoint(true)
     val star = touched.select(col("id").as("s"), col("cluster_id").as("d"))
-    val scopedU = touched.select(col("id"))
-      .unionByName(newUniverse.select(col(idCol).cast("long").as("id")))
-      .distinct()
+    val scopedU = touched.select(col("id")).unionByName(ids).distinct()
     val seed = Some(touched.select(col("id").as("node"),
       col("cluster_id").as("lbl")))
     val rec = componentAssignments(scopedU, "id", star.unionByName(fresh),
       "s", "d", maxIter, seed, localBound)
-    val untouched = assignment
-      .join(broadcast(affected), Seq("cluster_id"), "left_anti")
-      .select(col("id").cast("long").as("id"),
-        col("cluster_id").cast("long").as("cluster_id"),
-        col("cluster_size").cast("long").as("cluster_size"),
-        col("is_canonical").cast("int").as("is_canonical"))
     // rec's CC ran eagerly above (local relation or checkpointed labels), so
     // consumers re-run only the cheap scoped joins on top of it — the
     // corpus-sized side is the untouched scan, read once by whatever action
     // consumes the result.
-    (untouched, rec)
+    (untouchedRows(assignment, _.join(broadcast(affected), Seq("cluster_id"), "left_anti")), rec)
+  }
+
+  /** `df`'s rows, every column read as a long, flattened row-major on the
+    * driver by one job (none when `df` plans to a local relation), or None
+    * when they may exceed `bound` rows: each of the P tasks ships at most
+    * bound / P rows (+1 to detect overflow), so the driver never holds much
+    * more than `bound` rows, and one partition over its share means None
+    * (a caller's fallback is exact, so skew costs time, never results). */
+  private def collectLongs(df: DataFrame, bound: Long): Option[Array[Long]] = {
+    val w = df.schema.length
+    def flat(rows: Iterator[InternalRow], cap: Long): Array[Long] = {
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0L
+      while (n <= cap && rows.hasNext) {
+        val r = rows.next()
+        var i = 0
+        while (i < w) { b += r.getLong(i); i += 1 }
+        n += 1
+      }
+      b.result()
+    }
+    df.queryExecution.executedPlan match {
+      case l: org.apache.spark.sql.execution.LocalTableScanExec =>
+        Some(flat(l.executeCollect().iterator, bound)).filter(_.length / w <= bound)
+      case _ =>
+        val rdd = df.queryExecution.toRdd
+        val cap = math.max(bound / math.max(rdd.partitions.length, 1), 1L)
+        val parts = df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => flat(it, cap))
+        if (parts.exists(_.length / w > cap)) None else Some(Array.concat(parts.toSeq: _*))
+    }
+  }
+
+  /** `a` sorted with repeats removed (sorts `a` in place). */
+  private def sortedUnique(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var m = 0
+    for (j <- a.indices if j == 0 || a(j) != a(j - 1)) { a(m) = a(j); m += 1 }
+    java.util.Arrays.copyOf(a, m)
+  }
+
+  /** Union-find over the sorted unique `nodes`: every (p(j), p(j+1)) pair
+    * of each flattened edge array is united toward the smaller root (path
+    * halving); indices follow id order, so the returned label of each node
+    * is its component's min id. */
+  private def componentMins(nodes: Array[Long], edges: Seq[Array[Long]]): Array[Long] = {
+    val parent = Array.range(0, nodes.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def root(v: Long): Int = find(java.util.Arrays.binarySearch(nodes, v))
+    for (p <- edges; j <- p.indices by 2) {
+      val (a, b) = (root(p(j)), root(p(j + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    Array.tabulate(nodes.length)(i => nodes(find(i)))
   }
 
   /** Exact SUBSTRING (span-level) dedup — the within-document member of
@@ -916,28 +1021,41 @@ object Dedup {
     * Scale shape per batch: the batch's own gram counts are one map-side-
     * combined groupBy; a gram occurring more than once in the batch is a
     * duplicate outright, and a batch-unique gram is a duplicate iff the
-    * exact `left_semi` join against `corpusGrams` finds it. Nothing
-    * prefilters that join: it scans the corpus gram table once per call
-    * whatever is filtered, and its batch side is already batch-sized. (A
-    * [[novelAgainst]]-style Bloom over the corpus grams would trim only
-    * that batch side, at ~1.2 GiB of driver-built filter per 10⁹ grams
-    * shipped to every task.) An empty `corpusGrams` is the single-corpus
-    * dedup of the batch. */
+    * corpus gram table holds it — a `left_semi` join that scans
+    * `corpusGrams` in place and keeps the batch on its build side, so the
+    * planner broadcasts the batch's unique grams when they are small and
+    * sort-merges when they are not; its output is at most the batch's
+    * unique grams (once per gram dir holding them). Only presence matters,
+    * so the window starts semi-join the duplicate grams and repeats are
+    * harmless. (A [[novelAgainst]]-style Bloom over the corpus grams would
+    * cost ~1.2 GiB of driver-built filter per 10⁹ grams shipped to every
+    * task.) An empty `corpusGrams` is the single-corpus dedup of the batch.
+    * Building the result launches no job. */
   def removeDuplicateSpansIncrementalOfTokens(batch: DataFrame, idCol: String,
                                               toksCol: String, n: Int,
-                                              corpusGrams: DataFrame): DataFrame = {
+                                              corpusGrams: DataFrame): DataFrame =
+    removeDuplicateSpansIncremental(batch, idCol, toksCol, n,
+      spanGramCounts(batch, idCol, toksCol, n), corpusGrams)
+
+  /** [[removeDuplicateSpansIncrementalOfTokens]] with the batch's own
+    * [[spanGramCounts]] `batchCnt` given — the span service passes the
+    * counts it has just written, so the batch's grams are counted once per
+    * fold. */
+  private[graft] def removeDuplicateSpansIncremental(batch: DataFrame, idCol: String,
+                                                     toksCol: String, n: Int,
+                                                     batchCnt: DataFrame,
+                                                     corpusGrams: DataFrame): DataFrame = {
     // not spread: the batch is fold-sized by contract (batch-proportional
     // service cost); an extra exchange per fold measured as a net loss
     val base = batch.select(col(idCol).as("id"), col(toksCol).as("toks"))
-    val starts = windowStarts(base, n)
-    val batchCnt = starts.groupBy("gram_md5").agg(count(lit(1)).as("cnt"))
     // ≥2 in the batch alone: duplicated regardless of the corpus
     val dupInBatch = batchCnt.filter(col("cnt") > 1).select("gram_md5")
     // exactly 1 in the batch: duplicated iff the corpus has it
-    val viaCorpus = batchCnt.filter(col("cnt") === 1)
-      .join(corpusGrams.select("gram_md5"), Seq("gram_md5"), "left_semi")
-    val dupGrams = dupInBatch.unionByName(viaCorpus.select("gram_md5"))
-    val dupStarts = starts.join(dupGrams, Seq("gram_md5")).select("id", "start")
+    val viaCorpus = corpusGrams.select("gram_md5")
+      .join(batchCnt.filter(col("cnt") === 1).select("gram_md5"), Seq("gram_md5"), "left_semi")
+    val dupStarts = windowStarts(base, n)
+      .join(dupInBatch.unionByName(viaCorpus), Seq("gram_md5"), "left_semi")
+      .select("id", "start")
     spanOutput(base, dupStarts, n)
   }
 

@@ -95,10 +95,10 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** The one exact cosine gate: join both ends' vectors of each candidate
-    * (id_a, id_b) back from `v` (id, vec, norm) and keep cos >= threshold.
-    * Zero-norm rows are already out of `v` (see [[normed]]), so the inner
-    * joins drop their pairs. */
+  /** The exact cosine gate of [[cosineNearDupPairs]]: join both ends'
+    * vectors of each candidate (id_a, id_b) back from `v` (id, vec, norm)
+    * and keep cos >= threshold. Zero-norm rows are already out of `v` (see
+    * [[normed]]), so the inner joins drop their pairs. */
   private def cosineGate(pairs: DataFrame, v: DataFrame, threshold: Double): DataFrame =
     pairs
       .join(v.select(col("id").as("id_a"), col("vec").as("va"), col("norm").as("na")), Seq("id_a"))
@@ -354,12 +354,28 @@ object Similarity {
     * [[graft.operators.Dedup.incrementalComponentAssignmentsScoped]] and the
     * one [[graft.jobs.ClusterMaintenance]] fold path: its output plus the
     * prior assignment's stars is exactly the connectivity a full recompute
-    * would see. The corpus side's signatures are recomputed from its
-    * vectors on every call (one scan); nothing is persisted between calls.
-    * Candidate work is about |batch| x |corpus ∪ batch| x the geometry's
-    * collision rate (see [[MultiTableLsh]]) on near-random vectors — at
-    * the service default of 4 planes / 16 tables / radius 1 (rate
-    * ≈ 0.9975) that is about |batch| x |corpus|.
+    * would see.
+    *
+    * Plan: the batch side — ids, vectors, norms and probed signatures —
+    * is broadcast, and corpus ∪ batch is read in ONE map-side pass that
+    * joins on (t, sig) against it (the cross join when the geometry is
+    * exhaustive) and applies the exact cosine gate in place, with
+    * [[cosineGate]]'s vec_dot(a, b) / (na * nb) arithmetic (vec_dot is
+    * symmetric bit for bit: the same products summed in the same order).
+    * Only gated pairs leave the pass; the corpus is never shuffled and no
+    * vector is joined back. A pair is emitted once: a bucket join keeps
+    * only its hit in the first table the pair collides in (tested last,
+    * on rows that passed the gate), and a batch × batch pair, met from
+    * both ends, only from its smaller id. The candidate set stays exactly the
+    * Hamming-ball predicate of [[MultiTableLsh]] (spec-gated).
+    *
+    * Cost: one scan of corpus ∪ batch computing every row's signatures
+    * and norm, plus |batch| x |corpus ∪ batch| x the geometry's collision
+    * rate (see [[MultiTableLsh]]) gate dots — at the service default of
+    * 4 planes / 16 tables / radius 1 (rate ≈ 0.9975) that is about
+    * |batch| x |corpus| on near-random vectors. The broadcast holds
+    * |batch| x numTables x Σ_{i≤r} C(k,i) probe rows, each with its
+    * batch vector, so the batch must fit the driver and every executor.
     *
     * Candidate completeness relies on probe-mask SYMMETRY: the multi-table
     * probe set is a Hamming ball, so sig(x) ∈ ball(sig(y)) ⇔
@@ -374,23 +390,17 @@ object Similarity {
                                 threshold: Double, numPlanes: Int, dim: Int,
                                 probeRadius: Int = 1,
                                 numTables: Int = 8): DataFrame = {
-    val full = Parallelism.spread(corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .unionByName(batch.select(col(idCol).as("id"), col(vecCol).as("vec"))), "id")
-    // canonical orientation + dedup (a batch-batch pair is found from both
-    // ends; a multi-table hit repeats) BEFORE the vector joins.
-    // Deliberately NO spreadEager here (unlike cosineNearDupPairs): this
-    // is the per-fold maintenance path — the extra exchange pins its
-    // partition count into the fold's checkpointed lineage and every
-    // downstream tiny CC stage pays the task fan-out (measured r18: folds
-    // +15-30% with it, while the corpus-sized batch builds gained).
-    val pairs = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
-      .candidates(full, batch.select(col(idCol).as("bid"), col(vecCol).as("vec")),
-        shipQuery = false)
-      .filter(col("bid") =!= col("id"))
+    val lsh = MultiTableLsh(numPlanes, numTables, dim, probeRadius)
+    def side(df: DataFrame, inBatch: Boolean) =
+      df.select(col(idCol).as("id"), col(vecCol).as("vec"), lit(inBatch).as("in_batch"))
+    val full = normed(side(corpus, inBatch = false).unionByName(side(batch, inBatch = true)),
+      "id", "vec", ("id", "vec", "norm"), col("in_batch"))
+    val cos = vec_dot(col("bvec"), col("vec")) / (col("bnorm") * col("norm"))
+    lsh.hits(full, normed(batch, idCol, vecCol, ("bid", "bvec", "bnorm")), shipQuery = true)
+      .filter(col("bid") =!= col("id") && (!col("in_batch") || col("bid") < col("id")) &&
+        cos >= threshold && lsh.firstHit)
       .select(least(col("bid"), col("id")).as("id_a"),
-        greatest(col("bid"), col("id")).as("id_b"))
-      .distinct()
-    cosineGate(pairs, normed(full, "id", "vec", ("id", "vec", "norm")), threshold)
+        greatest(col("bid"), col("id")).as("id_b"), cos.as("cos"))
   }
 
   /** Per-query recall of an ANN result against a ground-truth top-k: for each
@@ -545,25 +555,40 @@ object Similarity {
     private def probes(sig: Column): Column =
       explode(array(masks.map(m => sig.bitwiseXOR(lit(m.toLong))): _*))
 
-    /** The one candidate step. `corpus` and `query` are (key, vec) frames;
-      * the result is (query key, corpus key) under the frames' own key
-      * names, one row per hit: a pair is a candidate iff some table t has
-      * popcount(sig_q[t] xor sig_c[t]) <= probeRadius — the corpus side's
-      * signatures joined on (t, sig) to the query side's probed ones, or
-      * the cross join when the geometry is exhaustive. Self-pairs are
-      * kept; `shipQuery` broadcasts the query side. */
-    def candidates(corpus: DataFrame, query: DataFrame, shipQuery: Boolean): DataFrame = {
-      val (id, qid) = (corpus.columns(0), query.columns(0))
+    /** The one candidate step. `corpus` and `query` lead with their key
+      * and vector columns; the result is (query key, corpus key) under the
+      * frames' own key names, one row per hit: a pair is a candidate iff
+      * some table t has popcount(sig_q[t] xor sig_c[t]) <= probeRadius —
+      * see [[hits]]. Self-pairs are kept; `shipQuery` broadcasts the query
+      * side. */
+    def candidates(corpus: DataFrame, query: DataFrame, shipQuery: Boolean): DataFrame =
+      hits(corpus, query, shipQuery).select(col(query.columns(0)), col(corpus.columns(0)))
+
+    /** [[candidates]] with every column of both sides: the corpus side's
+      * signatures (`sigs`, exploded to `t`, `sig`) joined on (t, sig) to
+      * the query side's probed ones (`qsigs`), or the cross join when the
+      * geometry is exhaustive. A column the caller reads afterwards must
+      * be named on one side only. */
+    def hits(corpus: DataFrame, query: DataFrame, shipQuery: Boolean): DataFrame = {
       def ship(df: DataFrame) = if (shipQuery) broadcast(df) else df
-      def signed(side: DataFrame, sig: String) = side
-        .select(col(side.columns(0)), sigs(col("vec")).as("sigs"))
-        .select(col(side.columns(0)), posexplode_outer(col("sigs")).as(Seq("t", sig)))
-      val hits =
-        if (exhaustive) corpus.select(col(id)).crossJoin(ship(query.select(col(qid))))
-        else signed(corpus, "sig").join(ship(signed(query, "sig0")
-          .select(col(qid), col("t"), probes(col("sig0")).as("sig"))), Seq("t", "sig"))
-      hits.select(col(qid), col(id))
+      def signed(side: DataFrame, sigsCol: String, sig: String) = side
+        .select(col("*"), sigs(col(side.columns(1))).as(sigsCol))
+        .select(col("*"), posexplode_outer(col(sigsCol)).as(Seq("t", sig)))
+      if (exhaustive) corpus.crossJoin(ship(query))
+      else signed(corpus, "sigs", "sig").join(ship(signed(query, "qsigs", "sig0")
+        .select((query.columns.toSeq.map(col) :+ col("qsigs") :+ col("t") :+
+          probes(col("sig0")).as("sig")): _*)), Seq("t", "sig"))
     }
+
+    /** True on exactly one row per (query, corpus) pair of [[hits]]: the
+      * hit in the first table the pair collides in (within one table only
+      * one probe mask can match). Every cross-join row is its pair's only
+      * hit. */
+    def firstHit: Column =
+      if (exhaustive) lit(true)
+      else !array_contains(zip_with(slice(col("sigs"), lit(1), col("t")),
+        slice(col("qsigs"), lit(1), col("t")),
+        (a, b) => bit_count(a.bitwiseXOR(b)) <= probeRadius), true)
 
     /** `pairs` (derived from [[candidates]]) with each pair once: a bucket
       * join finds a pair once per (table, probe) that hits it, so it is

@@ -12,11 +12,14 @@ import scala.jdk.CollectionConverters._
   * its result stage's name, e.g. `count at Foo.scala:12`), read when the
   * job STARTED. A stage is
   * therefore filed under the phase that submitted it, however late its
-  * completion event is delivered. Bench reads `tera_stages` from it;
-  * DevRun prints a query's slowest stages. */
+  * completion event is delivered. Each record also carries the owning
+  * job's id and the stage's shuffle write (records, bytes) and task-result
+  * bytes (what its tasks sent back to the driver). Bench reads
+  * `tera_stages` from it; DevRun prints a query's slowest stages; the fold
+  * shape specs count jobs, shuffle and driver-bound bytes per fold. */
 final class StageLog extends SparkListener {
   import StageLog.Stage
-  private val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  private val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, (Int, String)]()
   private val sqlOf = new java.util.concurrent.ConcurrentHashMap[Long, String]()
   private val done = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
 
@@ -37,14 +40,17 @@ final class StageLog extends SparkListener {
       .orElse(prop("spark.sql.execution.id").flatMap(_.toLongOption)
         .flatMap(id => Option(sqlOf.get(id))))
       .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
-    js.stageIds.foreach(jobOf.put(_, desc))
+    js.stageIds.foreach(jobOf.put(_, (js.jobId, desc)))
   }
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     val si = sc.stageInfo
+    val (jobId, job) = jobOf.getOrDefault(si.stageId, (-1, ""))
+    val m = si.taskMetrics
     for (sub <- si.submissionTime; end <- si.completionTime)
-      done.add(Stage(si.stageId, si.name.takeWhile(_ != '\n'),
-        jobOf.getOrDefault(si.stageId, ""), end - sub, si.numTasks))
+      done.add(Stage(si.stageId, si.name.takeWhile(_ != '\n'), job, end - sub,
+        si.numTasks, jobId, m.shuffleWriteMetrics.recordsWritten,
+        m.shuffleWriteMetrics.bytesWritten, m.resultSize))
   }
 
   /** Completed stages in delivery order. */
@@ -64,5 +70,7 @@ final class StageLog extends SparkListener {
 }
 
 object StageLog {
-  final case class Stage(id: Int, name: String, job: String, ms: Long, tasks: Int)
+  final case class Stage(id: Int, name: String, job: String, ms: Long, tasks: Int,
+                         jobId: Int, shuffleRecords: Long, shuffleBytes: Long,
+                         resultBytes: Long)
 }

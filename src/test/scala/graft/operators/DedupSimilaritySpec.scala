@@ -922,6 +922,35 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  test("rp_signatures equals the per-table literal-tree rpSignature, zero and negative components included") {
+    // generated 16-d vectors: gaussian components (half negative), exact
+    // zeros sprinkled in, an all-zero vector (every dot is 0, so every bit
+    // is set on both sides) and an all-negative one
+    val dim = 16
+    val rnd = new scala.util.Random(17)
+    val vecs = (0L until 60L).map {
+      case 0L => 0L -> Seq.fill(dim)(0f)
+      case 1L => 1L -> Seq.fill(dim)(-1f)
+      case i => i -> Seq.fill(dim)(if (rnd.nextInt(4) == 0) 0f else rnd.nextGaussian().toFloat)
+    }.toDF("id", "vec")
+    for ((planes, tables) <- Seq((4, 16), (18, 2), (8, 1))) {
+      val ps = Similarity.randomPlanes(planes * tables, dim)
+      // table t owns planes [t * planes, (t + 1) * planes), bit i = its plane i
+      val tree = (0 until tables).map(t =>
+        Similarity.rpSignature(col("vec"), ps.slice(t * planes, (t + 1) * planes)))
+      val got = vecs.select(col("id"),
+          graft.plans.VectorExpressions.rp_signatures(col("vec"), ps, tables, planes, dim),
+          array(tree: _*))
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
+      assert(got.length == 60)
+      val diff = got.filter { case (_, native, literal) => native != literal }
+      assert(diff.isEmpty, s"$planes planes / $tables tables: ${diff.length} rows differ, " +
+        s"first ${diff.headOption}")
+      assert(got.find(_._1 == 0L).get._2.forall(_ == (1L << planes) - 1),
+        "premise: the zero vector sets every bit")
+    }
+  }
+
   test("cluster-keyed split: no near-dup pair ever crosses a split boundary (q95 leakage property)") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val pairs = Similarity.cosineNearDupPairs(emb, "vec_id", "embedding",

@@ -70,4 +70,28 @@ class StageLogSpec extends SparkSpec with Eventually {
       sc.removeSparkListener(log)
     }
   }
+  test("a stage records its job id, shuffle write and task-result bytes") {
+    val sc = spark.sparkContext
+    val log = new StageLog
+    sc.addSparkListener(log)
+    try {
+      sc.setJobDescription("p0_shuffle")
+      sc.parallelize(1 to 100, 2).map(x => (x % 7, x)).reduceByKey(_ + _, 3).collect()
+      sc.setJobDescription("p0_marker")
+      sc.parallelize(1 to 10, 2).count()
+      eventually(timeout(Span(10, Seconds))) {
+        assert(log.stages.exists(_.job == "p0_marker"))
+      }
+      val stages = log.stages.filter(_.job == "p0_shuffle")
+      assert(stages.size == 2 && stages.map(_.jobId).distinct.size == 1, s"$stages")
+      val (map, result) = (stages.minBy(_.id), stages.maxBy(_.id))
+      // map-side combine: each of the 2 map tasks writes one record per key
+      assert(map.shuffleRecords == 14 && map.shuffleBytes > 0, s"$map")
+      assert(result.shuffleRecords == 0 && result.resultBytes > 0, s"$result")
+      assert(log.stages.find(_.job == "p0_marker").get.jobId != map.jobId)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(log)
+    }
+  }
 }
