@@ -44,6 +44,9 @@ object Engine {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the local filesystem without a chmod/readlink process per file,
+      // under both Hadoop APIs (sources.LocalFs)
+      .config(sources.LocalFs.sparkConf)
     // SPARK_GRAFT_EVENTLOG_DIR=<dir>: write a Spark event log, which
     // tools.EventLogTrace converts into a replayable gridmix trace — any
     // logged run becomes a load mix (the Rumen role end-to-end). Bench sets
@@ -54,6 +57,7 @@ object Engine {
       b.config("spark.eventLog.enabled", "true").config("spark.eventLog.dir", d)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    sources.LocalFs.claimCache(spark.sparkContext.hadoopConfiguration)
     spark
   }
 

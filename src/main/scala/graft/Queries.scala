@@ -211,7 +211,9 @@ object Queries {
 
   /** MinHash-LSH near-dup candidates. threshold 0.5 matches the (16 bands x
     * 4 rows) s-curve midpoint (j ≈ 0.55); the md5 token hash makes the whole
-    * sketch DuckDB-reproducible, so this query is hash-checked end to end. */
+    * sketch DuckDB-reproducible, so this query is hash-checked end to end.
+    * Eager: building the frame runs one job, the signature checkpoint
+    * ([[Dedup.candidatePairsOfSignatures]]). */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashCandidatePairs(t(spark, dir).documents, "doc_id", "text",
         numHashes = 64, bands = 16, threshold = 0.5, tokenHash = md5Hash32)
@@ -226,9 +228,12 @@ object Queries {
     * graph — and therefore the clustering — is hash-checked end to end
     * (oracle: recursive-CTE min-label closure over the same edges). */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.minhashCandidatePairs(t(spark, dir).documents, "doc_id", "text",
-      numHashes = 64, bands = 16, threshold = 0.5, tokenHash = md5Hash32)
-    val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    val (pairs, release) = Dedup.candidatePairsOfSignatures(
+      Dedup.minhashSignatures(t(spark, dir).documents, "doc_id", "text",
+        numHashes = 64, tokenHash = md5Hash32),
+      numHashes = 64, bands = 16, threshold = 0.5)
+    // the CC consumes the pairs eagerly into a materialized frame
+    val cc = try Dedup.connectedComponents(pairs, "id_a", "id_b") finally release()
     val sz = cc.groupBy("component").agg(count(lit(1)).as("cluster_size"))
     cc.join(sz, Seq("component"))
       .select(col("node").as("doc_id"), col("component").as("cluster_id"),
@@ -280,7 +285,7 @@ object Queries {
     val emb = t(spark, dir).embeddings
     val queries = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    Similarity.cosineTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", k = 5, dim = 64)
+    Similarity.cosineTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", k = 5)
       .select(col("qid"), col("rank"), col("id"), round(col("cos"), 4).as("cos"))
       .orderBy("qid", "rank")
   }
@@ -353,7 +358,7 @@ object Queries {
     val lsh = Similarity.lshCosineTopK(emb, "vec_id", "embedding", queries, "qid", "qvec",
       k = 5, numPlanes = 4, dim = 64, probeRadius = 1, numTables = 16)
     val bf = Similarity.cosineTopK(emb, "vec_id", "embedding", queries, "qid", "qvec",
-      k = 5, dim = 64)
+      k = 5)
     Similarity.topKRecall(bf, lsh).orderBy("qid")
   }
 
@@ -377,7 +382,7 @@ object Queries {
     val ivf = Similarity.ivfTopKExact(emb, "vec_id", "embedding", queries, "qid", "qvec",
       k = 5, nlist = 16, nprobe = 12)
     val bf = Similarity.cosineTopK(emb, "vec_id", "embedding", queries, "qid", "qvec",
-      k = 5, dim = 64)
+      k = 5)
     // The replayed rows prove Spark == oracle; the flag columns ADD the
     // absolute quality claim (the oracle hardcodes 1, so if a retune ever
     // tanks recall on both engines identically, Spark computes 0 and the
@@ -420,9 +425,9 @@ object Queries {
     val qqueries = qemb.filter(col("vec_id") % 50 === 41)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"))
     val quant = Similarity.cosineTopK(qemb, "vec_id", "qv", qqueries, "qid", "qvec",
-      k = 5, dim = 64)
+      k = 5)
     val full = Similarity.cosineTopK(emb, "vec_id", "embedding", queries, "qid", "qvec",
-      k = 5, dim = 64)
+      k = 5)
     Similarity.topKRecall(full, quant).orderBy("qid")
   }
 
@@ -2303,7 +2308,7 @@ object Queries {
     val lsh = Similarity.lshCosineTopK(emb, "vec_id", "embedding", queries,
       "qid", "qvec", k = 5, numPlanes = 4, dim = 64, probeRadius = 1, numTables = 16)
     val bf = Similarity.cosineTopK(emb, "vec_id", "embedding", queries,
-      "qid", "qvec", k = 5, dim = 64)
+      "qid", "qvec", k = 5)
     Similarity.rankMetrics(bf, lsh, k = 5).orderBy("qid")
   }
 
@@ -2394,7 +2399,7 @@ object Queries {
     val lsh = Similarity.lshCosineTopK(emb, "vec_id", "embedding", queries,
       "qid", "qvec", k = 5, numPlanes = 4, dim = 64, probeRadius = 1, numTables = 16)
     val bf = Similarity.cosineTopK(emb, "vec_id", "embedding", queries,
-      "qid", "qvec", k = 10, dim = 64)
+      "qid", "qvec", k = 10)
     val truth = bf.select(col("qid"), col("id"), (col("id") % 3).as("rel"))
     Similarity.rankMetricsGraded(truth, lsh, k = 5).orderBy("qid")
   }
@@ -3025,14 +3030,14 @@ object Queries {
     val queries = emb.filter(col("vec_id") % 50 === 13)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val full = Similarity.cosineTopK(emb, "vec_id", "embedding", queries,
-        "qid", "qvec", k = 5, dim = 64)
+        "qid", "qvec", k = 5)
       .select(col("qid"), col("id"), col("rank"))
     val qemb = emb.select(col("vec_id"),
       Similarity.quantizeInt8(col("embedding")).as("qv"))
     val qqueries = qemb.filter(col("vec_id") % 50 === 13)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"))
     val quant = Similarity.cosineTopK(qemb, "vec_id", "qv", qqueries,
-        "qid", "qvec", k = 5, dim = 64)
+        "qid", "qvec", k = 5)
       .select(col("qid"), col("id"), col("rank"))
     val wf = Window.partitionBy("qid").orderBy(col("rrf").desc, col("id"))
     Relevance.rrfFuse(Seq(full, quant), k0 = 60)

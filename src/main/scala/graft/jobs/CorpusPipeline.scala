@@ -159,7 +159,8 @@ object CorpusPipeline {
     * Scale shape: each stage count is a per-language aggregate (5 rows) of
     * the stage frame; `gated`/`exact` are persisted so the upstream stages
     * compute once, not once per downstream count (the MinHash signature
-    * cache inside `minhashCandidatePairs` handles the sketch the same way).
+    * checkpoint inside `minhashCandidatePairs` does the same for the
+    * sketch).
     * Nothing beyond the per-language count rows ever concentrates.
     *
     * EAGER by design (unlike the operator library): a stage-count report is
@@ -229,8 +230,8 @@ object CorpusPipeline {
     *    frame (with toks) backs the sketch, the survivor join and the
     *    chunker — persisted for the duration of the write, unpersisted in
     *    a finally. The packer's internal (id, cnt) cache is taken through
-    *    [[Packing.packSequencesReleasable]], the sketch's signature cache
-    *    through [[Dedup.minhashCandidatePairsOfTokensReleasable]] (dropped
+    *    [[Packing.packSequencesReleasable]], the sketch's signature
+    *    checkpoint through [[Dedup.minhashCandidatePairsOfTokensReleasable]] (dropped
     *    the moment the component closure — checkpoint-backed — returns);
     *    both released the same way.
     *  - Cluster dedup, not pair dedup: dropping one side of each PAIR
@@ -324,7 +325,7 @@ object CorpusPipeline {
     // non-canonical cluster members (node ≠ its component's min label).
     // connectedComponents consumes the pairs eagerly and returns a
     // materialized frame (a local relation or a checkpoint), so the
-    // sketch's signature cache can be released as soon as it returns.
+    // sketch's signature checkpoint can be released as soon as it returns.
     val losers =
       try Dedup.connectedComponents(pairs, "id_a", "id_b")
         .filter(col("node") =!= col("component"))

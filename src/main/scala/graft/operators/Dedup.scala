@@ -141,6 +141,11 @@ object Dedup {
     * 16x4 suits thresholds ≥ ~0.5, 32x2 reaches down to ~0.2. A threshold
     * far below the midpoint is accepted but logs a warning: such pairs
     * rarely ever become candidates.
+    *
+    * Eager: the signatures are checkpointed while the frame is built (one
+    * job; see [[candidatePairsOfSignatures]]). This entry drops the release
+    * thunk, so Spark's context cleaner frees the snapshot once the pairs
+    * frame is garbage.
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 64, bands: Int = 16,
@@ -153,12 +158,12 @@ object Dedup {
 
   /** [[minhashCandidatePairs]] over an already-tokenized corpus (see
     * [[minhashSignaturesOfTokens]]) — identical pairs, no second tokenize —
-    * plus a thunk releasing the internal signature cache (~520 B/doc,
-    * persisted because the pair plan references it four times). A composed
-    * job that consumes the pairs EAGERLY — e.g. closes them into
+    * plus a thunk releasing the internal signature snapshot (~520 B/doc,
+    * checkpointed because the pair plan references it four times). A
+    * composed job that consumes the pairs EAGERLY — e.g. closes them into
     * components, whose output is checkpoint-backed — should release as soon
-    * as that action completes; one-shot callers can rely on the
-    * retained-cache policy ([[minhashCandidatePairs]] scaladoc). */
+    * as that action completes; a caller that drops the thunk leaves the
+    * snapshot to Spark's context cleaner ([[minhashCandidatePairs]]). */
   def minhashCandidatePairsOfTokensReleasable(
       df: DataFrame, idCol: String, toksCol: String,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
@@ -173,8 +178,14 @@ object Dedup {
     * entries. Public for callers that bring their own sketch (and for the
     * synthetic-scale soak, which drives the bucket-cap skew guard with
     * adversarial signature sets no real tokenizer run could shape
-    * precisely). Returns the pairs plus the signature-cache release thunk
-    * ([[minhashCandidatePairsOfTokensReleasable]] semantics). */
+    * precisely). Returns the pairs plus the signature-snapshot release
+    * thunk ([[minhashCandidatePairsOfTokensReleasable]] semantics).
+    *
+    * The signatures are taken through [[truncate]], the checkpoint the CC
+    * loop uses, not `persist`: a persisted frame is a CacheManager entry
+    * keyed by its plan, and a file scan's plan compares by root path only,
+    * so a later build over a rewritten input at the same path would read
+    * the old signatures. A checkpoint belongs to this call alone. */
   def candidatePairsOfSignatures(sigs: DataFrame, numHashes: Int = 64,
                                  bands: Int = 16, threshold: Double = 0.5,
                                  maxBucket: Int = 1000): (DataFrame, () => Unit) = {
@@ -193,13 +204,12 @@ object Dedup {
           f"the threshold will rarely become candidates; re-band (more bands, " +
           f"fewer rows) or raise the threshold")
     // The signature table is referenced four times in this plan (both sides
-    // of the bucket join, both signature joins); persist so the shingle
-    // explosion + 64-way min aggregation runs once. ~520 B/doc — at 100 TB
-    // input this is n_docs * 0.5 KB, safely cacheable/spillable.
-    val cached = sigs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // of the bucket join, both signature joins); checkpoint it so the
+    // shingle explosion + 64-way min aggregation runs once. ~520 B/doc — at
+    // 100 TB input this is n_docs * 0.5 KB.
+    val snap = truncate(sigs)
     // Explode band buckets; kill skewed buckets before the self-join.
-    val bucketed = cached
+    val bucketed = snap
       .select(col("id"), col("sig"), explode(lshBuckets(col("sig"), bands, r)).as("bb"))
       .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     val bucketSizes = bucketed.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
@@ -219,12 +229,12 @@ object Dedup {
         .otherwise(0)
     }.reduce(_ + _)
     val out = pairs
-      .join(cached.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(cached.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+      .join(snap.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(snap.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         (agree.cast("double") / numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-    (out, () => { cached.unpersist(blocking = false); () })
+    (out, () => release(snap))
   }
 
   /** Hash-word providers for `simhash`: token → fixed-width hash words whose
@@ -439,6 +449,16 @@ object Dedup {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
     else df.localCheckpoint(true)
 
+  /** Deterministic release of a [[truncate]]d frame's persisted blocks:
+    * the checkpointed Dataset is backed by a LogicalRDD leaf whose RDD
+    * holds the storage. (Dataset.unpersist goes through the CacheManager
+    * and does not know about checkpoint RDDs; without this, snapshots
+    * linger until driver GC happens to collect the Dataset.) */
+  private def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+    case _ => ()
+  }
+
   /** [[connectedComponents]] plus the number of label-propagation rounds the
     * build ran (including the final confirming round whose label sum was
     * unchanged; 0 on the local path) — the observable the O(log diameter)
@@ -500,15 +520,6 @@ object Dedup {
           struct(col("s"), col("d")),
           struct(col("d").as("s"), col("s").as("d")))).as("e"))
         .select(col("e.s").as("s"), col("e.d").as("d")))
-    // Deterministic release of a localCheckpoint's persisted blocks: the
-    // checkpointed Dataset is backed by a LogicalRDD leaf whose RDD holds
-    // the storage. (Dataset.unpersist goes through the CacheManager and
-    // does not know about checkpoint RDDs; without this, snapshots linger
-    // until driver GC happens to collect the Dataset.)
-    def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
     if (localBound > 0) {
       // counted over the checkpoint's blocks, not the upstream plan
       val snapshot = real.queryExecution.toRdd

@@ -51,7 +51,7 @@ object Similarity {
     * dot/(norm_a*norm_b) per pair, so oracle results are unchanged. */
   def cosineTopK(corpus: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, qidCol: String, qvecCol: String,
-                 k: Int, dim: Int = -1): DataFrame = {
+                 k: Int): DataFrame = {
     // spread: the per-corpus-row work below is |queries| dots, not bytes
     val c = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide)
     val q = normed(queries, qidCol, qvecCol, QuerySide)
@@ -115,7 +115,7 @@ object Similarity {
     * takes a min-length dot, so a ragged corpus would otherwise hash short
     * rows by a truncated projection — different buckets than any oracle
     * replay expects). Full-length vectors pay one `size()` comparison. */
-  def rpSignature(vec: Column, planes: Seq[Array[Double]], dim: Int = -1): Column = {
+  def rpSignature(vec: Column, planes: Seq[Array[Double]]): Column = {
     require(planes.nonEmpty && planes.size <= 63)
     val planeDim = planes.head.length
     require(planes.forall(_.length == planeDim),

@@ -145,14 +145,14 @@ class RelevanceStatsSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 50 === 13)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val full = Similarity.cosineTopK(emb, "vec_id", "embedding", queries,
-        "qid", "qvec", k = 5, dim = 64)
+        "qid", "qvec", k = 5)
       .select("qid", "id")
     val qemb = emb.select(col("vec_id"),
       Similarity.quantizeInt8(col("embedding")).as("qv"))
     val qq = qemb.filter(col("vec_id") % 50 === 13)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"))
     val quant = Similarity.cosineTopK(qemb, "vec_id", "qv", qq,
-        "qid", "qvec", k = 5, dim = 64)
+        "qid", "qvec", k = 5)
       .select("qid", "id")
     val both = full.join(quant, Seq("qid", "id")).count()
     val fullN = full.count()
