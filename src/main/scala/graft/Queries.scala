@@ -3,6 +3,7 @@ package graft
 import graft.Engine.Tables
 import graft.functions.TextFunctions._
 import graft.operators._
+import graft.streaming.{StreamRun, Streams}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -464,44 +465,45 @@ object Queries {
 
   private val streamRunCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Stamp every not-yet-stamped data file under `stage` to slot `w` of a
-    * fixed minute ladder — the staging half of the kill/restart streaming
-    * harnesses (q104/q116/q123/q124): the file source orders batches by
-    * modification time, so an explicit ladder makes batch order (hence the
-    * append-only fold discipline) deterministic regardless of write-clock
-    * granularity. ONE implementation so a change to the stamp filter
-    * cannot silently diverge between harnesses. */
-  private def stampWave(sfs: org.apache.hadoop.fs.FileSystem,
-                        stagePath: org.apache.hadoop.fs.Path,
-                        stamped: scala.collection.mutable.Set[String],
-                        w: Int): Unit =
-    sfs.listStatus(stagePath).foreach { f =>
-      val n = f.getPath.getName
-      if (f.isFile && !n.startsWith("_") && !n.startsWith(".") && stamped.add(n))
-        sfs.setTimes(f.getPath, 1704067200000L + w * 60000L, -1)
+  /** The staged-wave stream of the service harnesses (q104/q116/q123/q124).
+    * `stageWave(w)` appends `wave(w)` to the stage as one file and stamps
+    * its modification time to slot `w` of a fixed minute ladder: the file
+    * source orders batches by modification time, so the ladder makes batch
+    * order (hence the append-only fold discipline) deterministic regardless
+    * of write-clock granularity. `start()` starts the checkpointed stream
+    * that hands each one-file micro-batch to `fold`. The plain derived
+    * session ([[derivedSessions]]), not [[streamSession]]: the query has no
+    * stateful operator (the fold owns all state as parquet dirs), so the
+    * 8-partition state-store tuning would only slow the fold's batch jobs. */
+  private def serviceStream(spark: SparkSession, tag: String, wave: Int => DataFrame)
+                           (fold: (DataFrame, Long) => Unit)
+      : (Int => Unit, () => org.apache.spark.sql.streaming.StreamingQuery) = {
+    val stage = scratchDir(spark, s"${tag}_src")
+    val chk = scratchDir(spark, s"${tag}_chk")
+    val ss = derivedSessions(spark)._1
+    val stagePath = new org.apache.hadoop.fs.Path(stage)
+    val sfs = stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stamped = scala.collection.mutable.Set[String]()
+    def stageWave(w: Int): Unit = {
+      wave(w).coalesce(1).write.mode("append").parquet(stage)
+      sfs.listStatus(stagePath).foreach { f =>
+        val n = f.getPath.getName
+        if (f.isFile && !n.startsWith("_") && !n.startsWith(".") && stamped.add(n))
+          sfs.setTimes(f.getPath, 1704067200000L + w * 60000L, -1)
+      }
     }
-
-  /** The kill/outage/restart choreography shared by the streaming-service
-    * harnesses: run 1 is stopped once batch `killAfter` commits (the stop
-    * free to land with the NEXT batch in flight — the restart then replays
-    * it idempotently through the checkpoint), run 2 resumes from the same
-    * checkpoint and drains everything staged. */
-  private def killRestartDrain(start: () => org.apache.spark.sql.streaming.StreamingQuery,
-                               killAfter: Long): Unit = {
-    val sq1 = start()
-    try {
-      val deadline = System.nanoTime() + 120L * 1000L * 1000L * 1000L
-      while (sq1.isActive && System.nanoTime() < deadline &&
-             Option(sq1.lastProgress).forall(_.batchId < killAfter)) Thread.sleep(20)
-    } finally sq1.stop()
-    drainRun(start)
+    val schema = wave(0).schema
+    def start() = ss.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(stage)
+      .writeStream.option("checkpointLocation", chk)
+      .foreachBatch(fold)
+      .start()
+    (stageWave, () => start())
   }
 
-  /** One clean run: start from the checkpoint, drain, stop. */
-  private def drainRun(start: () => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val sq = start()
-    try sq.processAllAvailable() finally sq.stop()
-  }
+  /** Slice `w` of `n` equal ascending slices of the ids 0..maxId. */
+  private def idSlice(id: Column, maxId: Long, n: Int, w: Int): Column =
+    id >= (maxId + 1) * w / n && id < (maxId + 1) * (w + 1) / n
 
   /** A fresh per-CALL scratch root for queries that MUTATE their state
     * (the service fold sequences and takedown/lifecycle gates) — repeat
@@ -511,19 +513,43 @@ object Queries {
   private def freshScratchDir(spark: SparkSession, tag: String): String =
     scratchDir(spark, s"${tag}_${streamRunCounter.getAndIncrement()}")
 
-  /** Isolated session for the streaming parity harnesses, with state-store
+  /** The derived session of the stateful stream harnesses, with state-store
     * parallelism sized to the harness: every stateful micro-batch pays a
     * per-partition state-store open/commit per trigger, so 32 shuffle
     * partitions x 6+ file-wave triggers is ~200 store commits to hold a few
     * thousand keys — pure fixed cost. 8 partitions carry identical
     * semantics at a quarter of it. A PRODUCTION stream sizes this to
-    * cluster cores exactly like any shuffle; the clone also keeps the
-    * setting (and the memory-sink temp view) out of the shared session that
-    * Verify runs concurrent queries on. */
-  private def streamSession(spark: SparkSession): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    ss
+    * cluster cores exactly like any shuffle; the derived session also
+    * keeps the setting (and the memory-sink temp views, see [[sinkTable]])
+    * out of the shared session that Verify runs concurrent queries on. */
+  private def streamSession(spark: SparkSession): SparkSession =
+    derivedSessions(spark)._2
+
+  private val derivedByParent =
+    new java.util.WeakHashMap[SparkSession, (SparkSession, SparkSession)]()
+
+  /** The two sessions the stream harnesses run in, derived once per parent
+    * session and kept for its life: a plain one ([[serviceStream]]) and the
+    * state-store-tuned one ([[streamSession]]). Not one per call: every
+    * session that runs a job registers an artifact-dir cleanup that starts
+    * an `rm -rf` process when GC frees the session, at GC's time, not the
+    * harness's. */
+  private def derivedSessions(spark: SparkSession): (SparkSession, SparkSession) =
+    derivedByParent.synchronized {
+      derivedByParent.computeIfAbsent(spark, _ => {
+        val tuned = spark.newSession()
+        tuned.conf.set("spark.sql.shuffle.partitions", "8")
+        (spark.newSession(), tuned)
+      })
+    }
+
+  /** The memory sink `name`'s rows, its temp view dropped: the frame holds
+    * the sink itself, and a view left in the long-lived [[streamSession]]
+    * would hold every call's rows for the session's life. */
+  private def sinkTable(ss: SparkSession, name: String): DataFrame = {
+    val rows = ss.table(name)
+    ss.catalog.dropTempView(name)
+    rows
   }
 
   /** Staged curation corpus + a dedup lateness sized to its ingest span.
@@ -596,6 +622,34 @@ object Queries {
       .repartition(2)
       .write.mode("append").parquet(stage)
 
+  /** The curation memory-stream body of q66 and q70: `base` (through
+    * [[curationIngest]]) staged as four files and streamed two files per
+    * trigger through `CorpusPipeline.curateStream` into a memory sink; once
+    * drained, a re-ingest wave of every 20th document lands inside the
+    * watermark horizon and is drained too. Returns the sink's table. */
+  private def curationMemoryStream(spark: SparkSession, dir: String, tag: String,
+                                   base: DataFrame): DataFrame = {
+    val runId = streamRunCounter.getAndIncrement()
+    val ss = streamSession(spark)
+    val stage = scratchDir(spark, s"${tag}_${Integer.toHexString(dir.hashCode)}_$runId")
+    val name = s"${tag}_stream_$runId"
+    val (docs, lateness) = curationIngest(base)
+    try {
+      docs.repartition(4).write.mode("overwrite").parquet(stage)
+      val stream = ss.readStream
+        .schema(docs.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(stage)
+      StreamRun.run(() => jobs.CorpusPipeline.curateStream(stream, lateness = lateness)
+          .writeStream.format("memory").queryName(name).outputMode("append").start()) { sq =>
+        sq.processAllAvailable()
+        reIngestWave(docs, stage)
+        sq.processAllAvailable()
+      }
+    } finally docs.unpersist(false)
+    sinkTable(ss, name)
+  }
+
   /** Streaming curation parity (q66): the curation pipeline (quality gate +
     * watermarked content dedup) on the PRODUCTION file-source ingest path,
     * checked with a survivor-INDEPENDENT global aggregate. The file source
@@ -608,30 +662,74 @@ object Queries {
     * duplicate texts excluded. A second file wave re-ingests every 20th
     * document inside the watermark horizon; the dedup state must drop all
     * of them or the counts diverge from the batch oracle. */
-  def streamingCurationParity(spark: SparkSession, dir: String): DataFrame = {
-    val runId = streamRunCounter.getAndIncrement()
-    val ss = streamSession(spark)
-    val stage = scratchDir(spark,
-      s"q66_${Integer.toHexString(dir.hashCode)}_$runId")
-    val (docs, lateness) = curationIngest(t(spark, dir).documents)
-    docs.repartition(4).write.mode("overwrite").parquet(stage)
-    val stream = ss.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(stage)
-    val name = s"q66_stream_$runId"
-    val sq = jobs.CorpusPipeline.curateStream(stream, lateness = lateness)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      sq.processAllAvailable()
-      reIngestWave(docs, stage)
-      sq.processAllAvailable()
-    } finally { sq.stop(); docs.unpersist(false) }
-    ss.table(name)
+  def streamingCurationParity(spark: SparkSession, dir: String): DataFrame =
+    curationMemoryStream(spark, dir, "q66", t(spark, dir).documents)
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("n_tokens")).cast("long").as("sum_tokens"),
         min(col("n_tokens")).cast("long").as("min_tokens"),
         max(col("n_tokens")).cast("long").as("max_tokens"))
+
+  /** The event slice a stream harness replays (q67/q68/q69/q72/q90):
+    * `events` filtered to `slice` and projected to `cols` (which name a
+    * `ts` column), persisted while `body` runs and unpersisted after. The
+    * persist keeps the min/max aggregate and every wave filter off the
+    * events parquet: those scans are harness cost, and the operator under
+    * test reads only the staged files. `body` gets the slice and its
+    * [min, max] `ts` in epoch millis; an empty slice returns `empty`, the
+    * empty result the oracle yields. */
+  private def eventSlice(spark: SparkSession, dir: String, slice: Column, cols: Column*)
+                        (empty: => DataFrame)
+                        (body: (DataFrame, Long, Long) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val evs = t(spark, dir).events.filter(slice).select(cols: _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (lo, hi) = evs.agg(min(col("ts")), max(col("ts")))
+        .as[(java.sql.Timestamp, java.sql.Timestamp)].head()
+      if (lo == null) empty else body(evs, lo.getTime, hi.getTime)
+    } finally evs.unpersist(false)
+  }
+
+  /** [[eventSlice]] for the sessionizer harnesses (q67/q72/q90): the
+    * `user_id % 10 = sliceMod` events as `Streams.Event` rows, timestamps
+    * second-truncated so the stream's millisecond gap predicate and the
+    * oracle's whole-second one are identical. */
+  private def sessionSlice(spark: SparkSession, dir: String, sliceMod: Int)
+                          (body: (DataFrame, Long, Long) => DataFrame): DataFrame = {
+    import spark.implicits._
+    eventSlice(spark, dir, col("user_id") % 10 === sliceMod,
+        col("user_id").cast("long").as("user_id"),
+        date_trunc("second", col("ts")).cast("timestamp").as("ts"),
+        col("event_type"), col("value").cast("double").as("value"))(
+      spark.emptyDataset[(Long, String, Long, Double)]
+        .toDF("user_id", "session_start", "n_events", "sum_value"))(body)
+  }
+
+  /** The sessionizer harnesses' result: the sessions without the sentinel,
+    * in the oracle's shape and order. */
+  private def sessionRows(sessions: DataFrame): DataFrame =
+    sessions.filter(col("user_id") >= 0)
+      .select(col("user_id"),
+        date_format(col("start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        col("n_events"),
+        round(col("sum_value"), 6).as("sum_value"))
+      .orderBy("user_id", "session_start")
+
+  /** The two far-future sentinel waves of the event harnesses: each lands
+    * one `user_id = -1` event `k * stepMs` past `hi0` and is drained. The
+    * first advances the watermark past every open (end + gap) or window
+    * end; the second runs the pass that emits them (watermarks update at
+    * end-of-batch). The results filter the sentinel out. */
+  private def sentinelWaves(spark: SparkSession,
+                            sq: org.apache.spark.sql.streaming.StreamingQuery,
+                            stage: String, hi0: Long, stepMs: Long): Unit = {
+    import spark.implicits._
+    Seq(1, 2).foreach { k =>
+      Seq((-1L, new java.sql.Timestamp(hi0 + k * stepMs), "sentinel", 0.0))
+        .toDF("user_id", "ts", "event_type", "value")
+        .write.mode("append").parquet(stage)
+      sq.processAllAvailable()
+    }
   }
 
   /** Shared file-source replay for the stateful sessionizer (q67/q72): the
@@ -645,59 +743,28 @@ object Queries {
     * StreamsSpec's adversarial-lateness test.) Two far-future sentinel
     * waves advance the watermark and fire the timeouts that close every
     * session. Oracle = the batch window-function formulation over the same
-    * slice; second-truncated timestamps make the stream's millisecond gap
-    * predicate and the oracle's whole-second one identical. */
+    * slice. */
   private def fileSessionParity(spark: SparkSession, dir: String, tag: String,
                                 sliceMod: Int, nWaves: Int): DataFrame = {
     import spark.implicits._
-    import graft.streaming.Streams
     val runId = streamRunCounter.getAndIncrement()
     val stage = scratchDir(spark,
       s"${tag}_${Integer.toHexString(dir.hashCode)}_$runId")
-    // persisted: the minMax agg + every wave filter otherwise re-scan the
-    // full events parquet — nWaves+1 scans of the biggest table, all fixed
-    // harness cost (the operator under test reads only the staged files)
-    val evs = t(spark, dir).events
-      .filter(col("user_id") % 10 === sliceMod)
-      .select(col("user_id").cast("long").as("user_id"),
-        date_trunc("second", col("ts")).cast("timestamp").as("ts"),
-        col("event_type"), col("value").cast("double").as("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val minMax = evs.agg(min(col("ts")), max(col("ts")))
-      .as[(java.sql.Timestamp, java.sql.Timestamp)].head()
-    if (minMax._1 == null) { // empty slice → the empty result the oracle yields
-      evs.unpersist(false)
-      return spark.emptyDataset[(Long, String, Long, Double)]
-        .toDF("user_id", "session_start", "n_events", "sum_value")
-    }
-    val (lo0, hi0) = (minMax._1.getTime, minMax._2.getTime)
-    val ss = streamSession(spark)
-    val stream = ss.readStream
-      .schema(evs.schema)
-      .option("maxFilesPerTrigger", 256) // each wave lands as ONE trigger
-      .parquet(stage)
-      .as[Streams.Event]
-    val name = s"${tag}_stream_$runId"
-    val sq = Streams.sessionize(stream, gapMillis = 1800 * 1000L)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      writeWaves(sq, lo0, hi0, nWaves, Seq((evs, "ts", stage)))
-      // sentinel waves: advance the watermark past every (end + gap), then
-      // trigger the timeout pass (watermarks update at end-of-batch)
-      Seq(1, 2).foreach { k =>
-        Seq((-1L, new java.sql.Timestamp(hi0 + k * 3600000L), "sentinel", 0.0))
-          .toDF("user_id", "ts", "event_type", "value")
-          .write.mode("append").parquet(stage)
-        sq.processAllAvailable()
+    sessionSlice(spark, dir, sliceMod) { (evs, lo0, hi0) =>
+      val ss = streamSession(spark)
+      val stream = ss.readStream
+        .schema(evs.schema)
+        .option("maxFilesPerTrigger", 256) // each wave lands as ONE trigger
+        .parquet(stage)
+        .as[Streams.Event]
+      val name = s"${tag}_stream_$runId"
+      StreamRun.run(() => Streams.sessionize(stream, gapMillis = 1800 * 1000L)
+          .writeStream.format("memory").queryName(name).outputMode("append").start()) { sq =>
+        writeWaves(sq, lo0, hi0, nWaves, Seq((evs, "ts", stage)))
+        sentinelWaves(spark, sq, stage, hi0, stepMs = 3600000L)
       }
-    } finally { sq.stop(); evs.unpersist(false) }
-    ss.table(name)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"),
-        date_format(col("start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        col("n_events"),
-        round(col("sum_value"), 6).as("sum_value"))
-      .orderBy("user_id", "session_start")
+      sessionRows(sinkTable(ss, name))
+    }
   }
 
   /** Streaming stateful sessionization parity (q67) on the file-source
@@ -717,49 +784,33 @@ object Queries {
     * the bounded-state emission path with no driver-side collect. */
   def streamingWindowParity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.streaming.Streams
     val runId = streamRunCounter.getAndIncrement()
     val stage = scratchDir(spark,
       s"q68_${Integer.toHexString(dir.hashCode)}_$runId")
-    // persisted for the same reason as fileSessionParity: the wave filters
-    // must not re-scan the events parquet once per wave
-    val evs = t(spark, dir).events
-      .filter(col("user_id") % 10 === 1)
-      .select(col("user_id").cast("long").as("user_id"),
+    eventSlice(spark, dir, col("user_id") % 10 === 1,
+        col("user_id").cast("long").as("user_id"),
         col("ts").cast("timestamp").as("ts"),
-        col("event_type"), col("value").cast("double").as("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val minMax = evs.agg(min(col("ts")), max(col("ts")))
-      .as[(java.sql.Timestamp, java.sql.Timestamp)].head()
-    if (minMax._1 == null) { // empty slice → the empty result the oracle yields
-      evs.unpersist(false)
-      return spark.emptyDataset[(String, String, Long, Double)]
-        .toDF("h", "event_type", "n", "sum_value")
-    }
-    val (lo0, hi0) = (minMax._1.getTime, minMax._2.getTime)
-    val ss = streamSession(spark)
-    val stream = ss.readStream
-      .schema(evs.schema)
-      .option("maxFilesPerTrigger", 256) // each wave lands as ONE trigger
-      .parquet(stage)
-    val name = s"q68_stream_$runId"
-    val sq = Streams.windowedCounts(stream)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      writeWaves(sq, lo0, hi0, nWaves = 3, Seq((evs, "ts", stage)))
-      Seq(1, 2).foreach { k =>
-        Seq((-1L, new java.sql.Timestamp(hi0 + k * 7200000L), "sentinel", 0.0))
-          .toDF("user_id", "ts", "event_type", "value")
-          .write.mode("append").parquet(stage)
-        sq.processAllAvailable()
+        col("event_type"), col("value").cast("double").as("value"))(
+      spark.emptyDataset[(String, String, Long, Double)]
+        .toDF("h", "event_type", "n", "sum_value")) { (evs, lo0, hi0) =>
+      val ss = streamSession(spark)
+      val stream = ss.readStream
+        .schema(evs.schema)
+        .option("maxFilesPerTrigger", 256) // each wave lands as ONE trigger
+        .parquet(stage)
+      val name = s"q68_stream_$runId"
+      StreamRun.run(() => Streams.windowedCounts(stream)
+          .writeStream.format("memory").queryName(name).outputMode("append").start()) { sq =>
+        writeWaves(sq, lo0, hi0, nWaves = 3, Seq((evs, "ts", stage)))
+        sentinelWaves(spark, sq, stage, hi0, stepMs = 7200000L)
       }
-    } finally { sq.stop(); evs.unpersist(false) }
-    ss.table(name)
-      .filter(col("event_type") =!= "sentinel")
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
-        col("event_type"), col("n"),
-        round(col("sum_value"), 4).as("sum_value"))
-      .orderBy("h", "event_type")
+      sinkTable(ss, name)
+        .filter(col("event_type") =!= "sentinel")
+        .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
+          col("event_type"), col("n"),
+          round(col("sum_value"), 4).as("sum_value"))
+        .orderBy("h", "event_type")
+    }
   }
 
   /** Stream-stream interval-join parity (q69): purchases and clicks arrive
@@ -780,47 +831,38 @@ object Queries {
     val hex = Integer.toHexString(dir.hashCode)
     val stageP = scratchDir(spark, s"q69p_${hex}_$runId")
     val stageC = scratchDir(spark, s"q69c_${hex}_$runId")
-    // ONE slice definition for both sides; the split is by event_type
-    // column. Persisted: the minMax agg + 3 waves x 2 sides would
-    // otherwise scan the events parquet seven times — all harness cost.
-    val evs = t(spark, dir).events.filter(col("user_id") % 10 === 2)
-      .filter(col("event_type").isin("purchase", "click"))
-      .select(col("event_id").cast("long").as("event_id"),
+    // ONE slice definition for both sides; the split is by event_type column
+    eventSlice(spark, dir,
+        col("user_id") % 10 === 2 && col("event_type").isin("purchase", "click"),
+        col("event_id").cast("long").as("event_id"),
         col("user_id").cast("long").as("user_id"),
         date_trunc("second", col("ts")).cast("timestamp").as("ts"),
-        col("event_type"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val minMax = evs.agg(min(col("ts")), max(col("ts")))
-      .as[(java.sql.Timestamp, java.sql.Timestamp)].head()
-    if (minMax._1 == null) { // empty slice → the empty result the oracle yields
-      evs.unpersist(false)
-      return spark.emptyDataset[(Long, Long, Long)]
-        .toDF("user_id", "purchase_id", "click_id")
+        col("event_type"))(
+      spark.emptyDataset[(Long, Long, Long)]
+        .toDF("user_id", "purchase_id", "click_id")) { (evs, lo0, hi0) =>
+      val purchases = evs.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
+      val clicks = evs.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").as("click_ts"))
+      val ss = streamSession(spark)
+      val joined = Streams.intervalJoin(
+        ss.readStream.schema(purchases.schema)
+          .option("maxFilesPerTrigger", 256).parquet(stageP),
+        ss.readStream.schema(clicks.schema)
+          .option("maxFilesPerTrigger", 256).parquet(stageC),
+        keys = Seq("user_id"), leftTs = "ts", rightTs = "click_ts",
+        before = "30 minutes", after = "0 seconds")
+      val name = s"q69_stream_$runId"
+      StreamRun.run(() => joined.writeStream.format("memory").queryName(name)
+          .outputMode("append").start()) { sq =>
+        writeWaves(sq, lo0, hi0, nWaves = 3,
+          Seq((purchases, "ts", stageP), (clicks, "click_ts", stageC)))
+      }
+      sinkTable(ss, name)
+        .select(col("user_id"), col("purchase_id"), col("click_id"))
+        .orderBy("user_id", "purchase_id", "click_id")
     }
-    val (lo0, hi0) = (minMax._1.getTime, minMax._2.getTime)
-    val purchases = evs.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-    val clicks = evs.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("click_ts"))
-    val ss = streamSession(spark)
-    val joined = graft.streaming.Streams.intervalJoin(
-      ss.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", 256).parquet(stageP),
-      ss.readStream.schema(clicks.schema)
-        .option("maxFilesPerTrigger", 256).parquet(stageC),
-      keys = Seq("user_id"), leftTs = "ts", rightTs = "click_ts",
-      before = "30 minutes", after = "0 seconds")
-    val name = s"q69_stream_$runId"
-    val sq = joined.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      writeWaves(sq, lo0, hi0, nWaves = 3,
-        Seq((purchases, "ts", stageP), (clicks, "click_ts", stageC)))
-    } finally { sq.stop(); evs.unpersist(false) }
-    ss.table(name)
-      .select(col("user_id"), col("purchase_id"), col("click_id"))
-      .orderBy("user_id", "purchase_id", "click_id")
   }
 
   /** File-source streaming curation parity (q70): the q66 claim re-proven on
@@ -833,31 +875,12 @@ object Queries {
     * of them or the per-language counts diverge from the batch oracle.
     * The dedup lateness is sized to the staged corpus span (curationIngest)
     * so a doc arriving in a later trigger is never "late" at any scale. */
-  def streamingFileSourceParity(spark: SparkSession, dir: String): DataFrame = {
-    val runId = streamRunCounter.getAndIncrement()
-    val stage = scratchDir(spark,
-      s"q70_${Integer.toHexString(dir.hashCode)}_$runId")
-    val (docs, lateness) = curationIngest(singleLangDocs(t(spark, dir).documents))
-    docs.repartition(4).write.mode("overwrite").parquet(stage)
-    val ss = streamSession(spark)
-    val stream = ss.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(stage)
-    val name = s"q70_stream_$runId"
-    val sq = jobs.CorpusPipeline.curateStream(stream, lateness = lateness)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      sq.processAllAvailable()
-      reIngestWave(docs, stage)
-      sq.processAllAvailable()
-    } finally { sq.stop(); docs.unpersist(false) }
-    ss.table(name)
+  def streamingFileSourceParity(spark: SparkSession, dir: String): DataFrame =
+    curationMemoryStream(spark, dir, "q70", singleLangDocs(t(spark, dir).documents))
       .groupBy("lang")
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("n_tokens")).cast("long").as("sum_tokens"))
       .orderBy("lang")
-  }
 
   /** Texts appearing under MORE THAN ONE lang are excluded from the
     * lang-keyed parity corpora (q70/q73): which lang's copy survives the
@@ -898,7 +921,6 @@ object Queries {
     val out = scratchDir(spark, s"${tag}_out")
     val chk = scratchDir(spark, s"${tag}_chk")
     val (docs, lateness) = curationIngest(singleLangDocs(t(spark, dir).documents))
-    docs.repartition(4).write.mode("overwrite").parquet(stage)
     val ss = streamSession(spark)
     def start() = jobs.CorpusPipeline.curateStream(
         ss.readStream.schema(docs.schema)
@@ -907,19 +929,14 @@ object Queries {
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", chk)
       .outputMode("append").start()
-    val sq1 = start()
     try {
+      docs.repartition(4).write.mode("overwrite").parquet(stage)
       // kill after two committed micro-batches, two staged files still
-      // unread; if the host races ahead the restart path still re-proves
-      // the checkpoint recovery (the result is kill-point independent)
-      val deadline = System.nanoTime() + 120L * 1000L * 1000L * 1000L
-      while (sq1.isActive && System.nanoTime() < deadline &&
-             Option(sq1.lastProgress).forall(_.batchId < 1)) Thread.sleep(20)
-    } finally sq1.stop()
-    // outage window: ingest does not pause while the pipeline is down
-    reIngestWave(docs, stage)
-    val sq2 = start()
-    try sq2.processAllAvailable() finally { sq2.stop(); docs.unpersist(false) }
+      // unread (the result is kill-point independent); ingest does not
+      // pause while the pipeline is down
+      StreamRun.killRestartDrain(() => start(), killAfter = 1,
+        outage = reIngestWave(docs, stage))
+    } finally docs.unpersist(false)
     // batch read of the sink dir: Spark reads through _spark_metadata, so
     // only COMMITTED batches are visible
     spark.read.parquet(out)
@@ -1488,10 +1505,9 @@ object Queries {
       .option("maxFilesPerTrigger", 2)
       .parquet(stage)
     val name = s"q87_stream_$runId"
-    val sq = Packing.chunk(stream, "doc_id", "text", size = 64, stride = 48)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try sq.processAllAvailable() finally sq.stop()
-    ss.table(name)
+    StreamRun.drain(() => Packing.chunk(stream, "doc_id", "text", size = 64, stride = 48)
+      .writeStream.format("memory").queryName(name).outputMode("append").start())
+    sinkTable(ss, name)
       .groupBy("chunk_idx")
       .agg(count(lit(1)).as("n_chunks"),
         sum(col("token_cnt")).cast("long").as("sum_tokens"),
@@ -1529,21 +1545,12 @@ object Queries {
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", chk)
       .outputMode("append").start()
-    val sq1 = start()
-    try {
-      // kill after two committed micro-batches, staged files still unread;
-      // if the host races ahead the restart still re-proves checkpoint
-      // recovery (the result is kill-point independent)
-      val deadline = System.nanoTime() + 120L * 1000L * 1000L * 1000L
-      while (sq1.isActive && System.nanoTime() < deadline &&
-             Option(sq1.lastProgress).forall(_.batchId < 1)) Thread.sleep(20)
-    } finally sq1.stop()
-    // outage window: ingest does not pause while the pipeline is down —
-    // every 20th document lands AGAIN as a new file wave
-    docs.filter(col("doc_id") % 20 === 0).repartition(2)
-      .write.mode("append").parquet(stage)
-    val sq2 = start()
-    try sq2.processAllAvailable() finally sq2.stop()
+    // kill after two committed micro-batches, staged files still unread
+    // (the result is kill-point independent); during the outage every 20th
+    // document lands AGAIN as a new file wave
+    StreamRun.killRestartDrain(() => start(), killAfter = 1,
+      outage = docs.filter(col("doc_id") % 20 === 0).repartition(2)
+        .write.mode("append").parquet(stage))
     // batch read through _spark_metadata: only committed batches visible
     spark.read.parquet(out)
       .groupBy("chunk_idx")
@@ -1568,67 +1575,39 @@ object Queries {
     * split session diverges. */
   def streamingSessionFileSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.streaming.Streams
     val runId = streamRunCounter.getAndIncrement()
     val tag = s"q90_${Integer.toHexString(dir.hashCode)}_$runId"
     val stage = scratchDir(spark, s"${tag}_src")
     val out = scratchDir(spark, s"${tag}_out")
     val chk = scratchDir(spark, s"${tag}_chk")
-    val evs = t(spark, dir).events
-      .filter(col("user_id") % 10 === 7)
-      .select(col("user_id").cast("long").as("user_id"),
-        date_trunc("second", col("ts")).cast("timestamp").as("ts"),
-        col("event_type"), col("value").cast("double").as("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val minMax = evs.agg(min(col("ts")), max(col("ts")))
-      .as[(java.sql.Timestamp, java.sql.Timestamp)].head()
-    if (minMax._1 == null) {
-      evs.unpersist(false)
-      return spark.emptyDataset[(Long, String, Long, Double)]
-        .toDF("user_id", "session_start", "n_events", "sum_value")
-    }
-    val (lo0, hi0) = (minMax._1.getTime, minMax._2.getTime)
-    val ss = streamSession(spark)
-    def start() = Streams.sessionize(
-        ss.readStream.schema(evs.schema)
-          .option("maxFilesPerTrigger", 256) // each wave = one trigger
-          .parquet(stage).as[Streams.Event],
-        gapMillis = 1800 * 1000L)
-      .toDF()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", chk)
-      .outputMode("append").start()
-    val sides = Seq((evs: DataFrame, "ts", stage))
-    val sq1 = start()
-    try {
-      // wave 0 committed; wave 1's files land with NO processAllAvailable —
-      // stop() can catch its micro-batch mid-flight (WAL + state-store
-      // version rollback must replay it exactly once after restart)
-      writeWaveRange(Some(sq1), lo0, hi0, 4, 0 until 1, sides)
-      writeWaveRange(None, lo0, hi0, 4, 1 until 2, sides)
-    } finally sq1.stop()
-    // outage window: wave 2 lands while the pipeline is down
-    writeWaveRange(None, lo0, hi0, 4, 2 until 3, sides)
-    val sq2 = start()
-    try {
-      writeWaveRange(Some(sq2), lo0, hi0, 4, 3 until 4, sides)
-      // sentinels: advance the watermark past every (end + gap), then the
-      // timeout pass fires (watermarks update at end-of-batch)
-      Seq(1, 2).foreach { k =>
-        Seq((-1L, new java.sql.Timestamp(hi0 + k * 3600000L), "sentinel", 0.0))
-          .toDF("user_id", "ts", "event_type", "value")
-          .write.mode("append").parquet(stage)
-        sq2.processAllAvailable()
+    sessionSlice(spark, dir, sliceMod = 7) { (evs, lo0, hi0) =>
+      val ss = streamSession(spark)
+      def start() = Streams.sessionize(
+          ss.readStream.schema(evs.schema)
+            .option("maxFilesPerTrigger", 256) // each wave = one trigger
+            .parquet(stage).as[Streams.Event],
+          gapMillis = 1800 * 1000L)
+        .toDF()
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", chk)
+        .outputMode("append").start()
+      val sides = Seq((evs, "ts", stage))
+      StreamRun.run(() => start()) { sq =>
+        // wave 0 committed; wave 1's files land with NO processAllAvailable —
+        // stop() can catch its micro-batch mid-flight (WAL + state-store
+        // version rollback must replay it exactly once after restart)
+        writeWaveRange(Some(sq), lo0, hi0, 4, 0 until 1, sides)
+        writeWaveRange(None, lo0, hi0, 4, 1 until 2, sides)
       }
-    } finally { sq2.stop(); evs.unpersist(false) }
-    // batch read through _spark_metadata: only committed batches visible
-    spark.read.parquet(out)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"),
-        date_format(col("start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        col("n_events"),
-        round(col("sum_value"), 6).as("sum_value"))
-      .orderBy("user_id", "session_start")
+      // outage window: wave 2 lands while the pipeline is down
+      writeWaveRange(None, lo0, hi0, 4, 2 until 3, sides)
+      StreamRun.run(() => start()) { sq =>
+        writeWaveRange(Some(sq), lo0, hi0, 4, 3 until 4, sides)
+        sentinelWaves(spark, sq, stage, hi0, stepMs = 3600000L)
+      }
+      // batch read through _spark_metadata: only committed batches visible
+      sessionRows(spark.read.parquet(out))
+    }
   }
 
   /** Packed-segment map (q85): the materialized writer table for q81's
@@ -1943,70 +1922,48 @@ object Queries {
 
   /** STREAMING incremental cluster maintenance (q104): the production
     * shape of a continuously-ingesting dedup service — q94's incremental
-    * operator driven from the file-source ingest path via foreachBatch,
-    * with a kill/outage/restart through the checkpoint.
+    * fold driven from the file-source ingest path via foreachBatch, with a
+    * kill/outage/restart through the checkpoint.
     *
     * The corpus arrives as three ascending-id wave files (modification
     * times stamped explicitly, so batch order is deterministic — the
     * append-only-id discipline the incremental theorem needs). Each
-    * micro-batch runs the PRUNED candidate generator
-    * (`cosineNearDupPairsAgainst`, 16x4-bit radius-1 — batch probes the
-    * accumulated corpus's buckets, never corpus x corpus) and folds the new
-    * pairs into a VERSIONED parquet assignment state:
-    * state/v=N = `incrementalComponentAssignmentsScoped`(state/v=N-1,
-    * batch, pairs), corpus/b=N = the batch vectors. Every write is
-    * mode(overwrite) keyed by batchId, so a replayed in-flight batch
-    * rewrites v=N byte-identically — idempotence IS the exactly-once
-    * story for a foreachBatch sink, and it makes the final state
-    * kill-point independent. Version RETENTION bounds the state of the
-    * long-running service: a replay reads only v=N-1, so versions
-    * <= N-2 are deleted as each batch commits — two assignments of
-    * state at any stream length. Run 1 is killed once batch 1 commits
-    * (later files unread; stop can land mid-batch); run 2 resumes from
-    * the checkpoint, replays any in-flight batch, and drains.
+    * micro-batch is one [[jobs.ClusterMaintenance.foldBatch]]: the PRUNED
+    * candidate generator (16x4-bit, radius 1) broadcasts the batch's probed
+    * signatures and reads corpus ∪ batch in ONE map-side pass with the
+    * exact cosine gate applied in place (the corpus is scanned, never
+    * paired with itself); the components are closed over the affected
+    * subgraph only; the fold writes an assignment snapshot `state/v=N` or
+    * a batch-proportional delta `state/d=N`, then the batch vectors
+    * `corpus/b=N`. Every write is a keyed overwrite by batchId, so a
+    * replayed in-flight batch rewrites the same state — idempotence IS the
+    * exactly-once story for a foreachBatch sink, and it makes the final
+    * state kill-point independent. Retention bounds the state of the
+    * long-running service: a replay reads only the reconstruction at N-1,
+    * so everything older than the newest snapshot it needs is deleted as
+    * each fold commits. Run 1 is killed once batch 1 commits (later files
+    * unread; stop can land mid-batch); run 2 resumes from the checkpoint,
+    * replays any in-flight batch, and drains.
     *
     * The final assignment equals the BATCH pruned build over the whole
     * corpus (q103's oracle, verbatim): induction over batches on the
     * star-replacement theorem, with candidate completeness from
     * probe-mask symmetry (both spec-gated in DedupSimilaritySpec). At
-    * 100 TB each day pays |batch| x bucket-candidates + CC over
-    * (corpus stars + new pairs) — never corpus². */
+    * 100 TB each day pays one corpus scan against the broadcast batch + CC
+    * over the affected clusters — never corpus². */
   def streamingClusterMaintenance(spark: SparkSession, dir: String): DataFrame = {
     val runId = streamRunCounter.getAndIncrement()
     val tag = s"q104_${Integer.toHexString(dir.hashCode)}_$runId"
-    val stage = scratchDir(spark, s"${tag}_src")
     val state = scratchDir(spark, s"${tag}_state")
     val corpusDir = scratchDir(spark, s"${tag}_corpus")
-    val chk = scratchDir(spark, s"${tag}_chk")
-    // NOT streamSession: this query has no stateful operator (foreachBatch
-    // owns all state as parquet versions), so the 8-partition state-store
-    // tuning would only slow the inner batch jobs
-    val ss = spark.newSession()
     val emb = t(spark, dir).embeddings
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) // bounded scalar
     // three waves = the minimal shape that exercises every tier: a
     // bootstrap fold (empty prior), a committed pre-kill fold, and a
     // post-restart fold (often the replay of an in-flight batch); each
     // extra wave would re-pay the per-fold CC fixed cost for no new claim
     val nWaves = 3
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagePath = new org.apache.hadoop.fs.Path(stage)
-    val sfs = stagePath.getFileSystem(hconf)
-    val stamped = scala.collection.mutable.Set[String]()
-    // one single-file wave per ascending id range; modtimes stamped to a
-    // fixed minute ladder so the file source's timestamp order (hence the
-    // batch order the append-only discipline rides on) never depends on
-    // write-clock granularity
-    def writeWave(w: Int): Unit = {
-      val lo = (maxId + 1) * w / nWaves
-      val hi = (maxId + 1) * (w + 1) / nWaves
-      emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
-        .coalesce(1).write.mode("append").parquet(stage)
-      stampWave(sfs, stagePath, stamped, w)
-    }
-    val embSchema = emb.schema
     // the per-batch fold is the LIBRARY service (jobs.ClusterMaintenance):
     // this harness contributes only the file-source plumbing and the
     // kill/restart choreography. compactEvery=2 makes the THIRD fold run
@@ -2021,22 +1978,19 @@ object Queries {
     val mcfg = jobs.ClusterMaintenance.Config(threshold = 0.35,
       numPlanes = 4, dim = 64, probeRadius = 1, numTables = 16,
       compactEvery = 2, snapshotEvery = 2)
-    def start() = ss.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        jobs.ClusterMaintenance.foldBatch(batch, batchId, state, corpusDir,
-          "vec_id", "embedding", mcfg)
-      }
-      .start()
     // one finally owns the corpus cache: a failure in staging, run 1, or
     // run 2 must not leak the persisted blocks into the rest of the process
     try {
-      (0 until nWaves).foreach(writeWave) // all staged before ingest begins
+      val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) // bounded scalar
+      val (stageWave, start) = serviceStream(spark, tag,
+          w => emb.filter(idSlice(col("vec_id"), maxId, nWaves, w))) { (batch, batchId) =>
+        jobs.ClusterMaintenance.foldBatch(batch, batchId, state, corpusDir,
+          "vec_id", "embedding", mcfg)
+      }
+      (0 until nWaves).foreach(stageWave) // all staged before ingest begins
       // kill once batch 1 commits — files 2/3 unread, stop may land with
       // batch 2 in flight (the restart then replays it idempotently)
-      killRestartDrain(() => start(), killAfter = 1)
+      StreamRun.killRestartDrain(start, killAfter = 1, outage = ())
     } finally emb.unpersist(false)
     jobs.ClusterMaintenance.latestAssignment(spark, state)
       .select(col("id").as("vec_id"), col("cluster_id"), col("cluster_size"),
@@ -2332,16 +2286,15 @@ object Queries {
     val stream = ss.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(stage)
     val name = s"q100_stream_$runId"
-    val sq = Contracts.checkStream(stream, Seq(
+    StreamRun.drain(() => Contracts.checkStream(stream, Seq(
         NotNull("text"),
         Bounds("n_chars", 1, 500),
         AcceptedValues("lang", Seq("en", "zh")),
         Satisfies("ids_nonneg", col("doc_id") >= 0),
         RowCountMin(10)))
       .writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try sq.processAllAvailable() finally sq.stop()
-    ss.table(name).orderBy("check_name", "target")
+      .outputMode("complete").start())
+    sinkTable(ss, name).orderBy("check_name", "target")
   }
 
   /** Deterministic token-budget draw (q102): every document whose span in
@@ -2454,29 +2407,30 @@ object Queries {
     val corpus = toks(docs.filter(col("doc_id") < h))
     val batch = toks(docs.filter(col("doc_id") >= h))
     val grams = Dedup.spanGramCounts(corpus, "doc_id", "toks", n = 8)
-    Dedup.removeDuplicateSpansIncrementalOfTokens(batch, "doc_id", "toks",
-        n = 8, grams)
+    spanCleanRows(Dedup.removeDuplicateSpansIncrementalOfTokens(batch, "doc_id", "toks",
+      n = 8, grams))
+  }
+
+  /** A span-service fold's clean rows in the oracles' shape and order
+    * (q113/q115/q116/q122/q124): the cleaned token stream as its md5. */
+  private def spanCleanRows(clean: DataFrame): DataFrame =
+    clean
       .select(col("id").as("doc_id"), col("n_tokens"), col("n_dup_starts"),
         col("n_spans"), col("n_covered"),
         md5(to_binary(concat_ws(" ", col("clean_toks")), lit("utf-8")))
           .as("clean_md5"))
       .orderBy("doc_id")
-  }
 
-  /** Span-dedup maintenance SERVICE (q115): [[jobs.SpanDedupMaintenance]]
-    * driven end-to-end — documents arrive as three ascending doc_id
-    * terciles, each fold span-dedupes its batch against everything
-    * ingested before it (the accumulated gram-count state, never the
-    * corpus text) and contributes its own counts; the query returns the
-    * union of the three folds' clean outputs. compactEvery=2 makes the
-    * THIRD fold run the gram-state compaction path under this oracle —
-    * a compaction that dropped or double-counted grams changes coverage
-    * and hash-fails here, not just in the spec. The oracle replays the
-    * whole SEQUENCE in one pass: per-(gram, batch) counts, a cumulative
-    * window sum over batch order, covered iff the PREFIX count at the
-    * start's own batch exceeds one — the service's append-only semantics
-    * (batch k sees batches 0..k, earlier batches are never re-deduped)
-    * derived independently from the same constants. */
+  /** The foreachBatch body of the span-service streams (q116/q124): the
+    * micro-batch tokenized once and folded through
+    * [[jobs.SpanDedupMaintenance.foldBatch]]. */
+  private def spanServiceFold(gramDir: String, cleanDir: String,
+                              cfg: jobs.SpanDedupMaintenance.Config)
+                             (batch: DataFrame, batchId: Long): Unit =
+    jobs.SpanDedupMaintenance.foldBatch(
+      batch.select(col("doc_id"), functions.TextFunctions.tokens(col("text")).as("toks")),
+      batchId, gramDir, cleanDir, "doc_id", "toks", cfg)
+
   /** The q115 tercile fold sequence into (gramDir, cleanDir) — shared by
     * q115 (fresh run per call: the service IS the measurement) and the
     * staged state q117 mines. */
@@ -2498,16 +2452,25 @@ object Queries {
     }
   }
 
+  /** Span-dedup maintenance SERVICE (q115): [[jobs.SpanDedupMaintenance]]
+    * driven end-to-end — documents arrive as three ascending doc_id
+    * terciles, each fold span-dedupes its batch against everything
+    * ingested before it (the accumulated gram-count state, never the
+    * corpus text) and contributes its own counts; the query returns the
+    * union of the three folds' clean outputs. compactEvery=2 makes the
+    * THIRD fold run the gram-state compaction path under this oracle —
+    * a compaction that dropped or double-counted grams changes coverage
+    * and hash-fails here, not just in the spec. The oracle replays the
+    * whole SEQUENCE in one pass: per-(gram, batch) counts, a cumulative
+    * window sum over batch order, covered iff the PREFIX count at the
+    * start's own batch exceeds one — the service's append-only semantics
+    * (batch k sees batches 0..k, earlier batches are never re-deduped)
+    * derived independently from the same constants. */
   def spanDedupService(spark: SparkSession, dir: String): DataFrame = {
     val root = freshScratchDir(spark, "q115_svc")
     val (gramDir, cleanDir) = (s"$root/grams", s"$root/clean")
     runSpanServiceFolds(spark, dir, gramDir, cleanDir)
-    spark.read.parquet((0 until 3).map(k => s"$cleanDir/b=$k"): _*)
-      .select(col("id").as("doc_id"), col("n_tokens"), col("n_dup_starts"),
-        col("n_spans"), col("n_covered"),
-        md5(to_binary(concat_ws(" ", col("clean_toks")), lit("utf-8")))
-          .as("clean_md5"))
-      .orderBy("doc_id")
+    spanCleanRows(spark.read.parquet((0 until 3).map(k => s"$cleanDir/b=$k"): _*))
   }
 
   /** The span-dedup service's gram state, staged once per process per
@@ -2634,19 +2597,20 @@ object Queries {
     * resume — under one oracle. Two tercile folds commit; every ingested
     * vec_id % 7 == 0 is then retracted via
     * [[jobs.ClusterMaintenance.rebuildWithoutTombstones]] (state collapses
-    * to one rebuilt snapshot, corpus + bucket state to one filtered
-    * generation); the stream then RESUMES with the third tercile folded on
-    * top of the rebuilt state. The final assignment must equal the full
+    * to one rebuilt snapshot, the corpus to one filtered generation); the
+    * stream then RESUMES with the third tercile folded on top of the
+    * rebuilt state, its candidates from one map-side pass over the
+    * filtered generation ∪ the batch. The final assignment must equal the full
     * pruned build over (retained ∪ resumed batch) — the incremental
     * theorem on the filtered corpus, i.e. exactly the claim that a
     * takedown is invisible to the stream that follows it. The oracle
     * replays q103's pipeline over embeddings WHERE vec_id % 7 <> 0 OR
     * vec_id >= the re-derived tercile boundary (ids arriving AFTER the
     * takedown are kept even when ≡ 0 mod 7 — retraction applies to the
-    * corpus at rebuild time, not to future ingests). A stale bucket row
-    * resurrecting a retracted id as a candidate, a rebuild head resolved
-    * at the wrong fold, or a resume fold reading swept state all
-    * hash-fail here end-to-end, not just in the spec. */
+    * corpus at rebuild time, not to future ingests). A retracted vector
+    * left in the corpus (which would bring its id back as a candidate), a
+    * rebuild head resolved at the wrong fold, or a resume fold reading
+    * swept state all hash-fail here end-to-end, not just in the spec. */
   def takedownResume(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir).embeddings
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
@@ -2656,10 +2620,8 @@ object Queries {
     val cfg = jobs.ClusterMaintenance.Config(threshold = 0.35, numPlanes = 4,
       dim = 64, probeRadius = 1, numTables = 16)
     (0 until 2).foreach { w =>
-      val lo = (maxId + 1) * w / 3
-      val hi = (maxId + 1) * (w + 1) / 3
       jobs.ClusterMaintenance.foldBatch(
-        emb.filter(col("vec_id") >= lo && col("vec_id") < hi), w.toLong,
+        emb.filter(idSlice(col("vec_id"), maxId, 3, w)), w.toLong,
         s"$root/state", s"$root/corpus", "vec_id", "embedding", cfg)
     }
     val tomb = emb.select(col("vec_id"))
@@ -2697,22 +2659,15 @@ object Queries {
     val root = freshScratchDir(spark, "q122_tr")
     val cfg = jobs.SpanDedupMaintenance.Config(n = 8, compactEvery = 2)
     (0 until 2).foreach { w =>
-      val lo = (maxId + 1) * w / 3
-      val hi = (maxId + 1) * (w + 1) / 3
       jobs.SpanDedupMaintenance.foldBatch(
-        toks(docs.filter(col("doc_id") >= lo && col("doc_id") < hi)), w.toLong,
+        toks(docs.filter(idSlice(col("doc_id"), maxId, 3, w))), w.toLong,
         s"$root/grams", s"$root/clean", "doc_id", "toks", cfg)
     }
     val retained = toks(docs.filter(col("doc_id") < b && col("doc_id") % 7 =!= 0))
     jobs.SpanDedupMaintenance.rebuildState(retained, s"$root/grams",
       "doc_id", "toks", cfg)
-    jobs.SpanDedupMaintenance.foldBatch(toks(docs.filter(col("doc_id") >= b)), 2L,
-        s"$root/grams", s"$root/clean", "doc_id", "toks", cfg)
-      .select(col("id").as("doc_id"), col("n_tokens"), col("n_dup_starts"),
-        col("n_spans"), col("n_covered"),
-        md5(to_binary(concat_ws(" ", col("clean_toks")), lit("utf-8")))
-          .as("clean_md5"))
-      .orderBy("doc_id")
+    spanCleanRows(jobs.SpanDedupMaintenance.foldBatch(toks(docs.filter(col("doc_id") >= b)),
+      2L, s"$root/grams", s"$root/clean", "doc_id", "toks", cfg))
   }
 
   /** Cluster-service fold SEQUENCE, gated (q120): [[jobs.ClusterMaintenance]]
@@ -2743,10 +2698,8 @@ object Queries {
       dim = 64, probeRadius = 1, numTables = 16,
       compactEvery = 2, snapshotEvery = 2)
     (0 until nWaves).foreach { w =>
-      val lo = (maxId + 1) * w / nWaves
-      val hi = (maxId + 1) * (w + 1) / nWaves
       jobs.ClusterMaintenance.foldBatch(
-        emb.filter(col("vec_id") >= lo && col("vec_id") < hi), w.toLong,
+        emb.filter(idSlice(col("vec_id"), maxId, nWaves, w)), w.toLong,
         s"$root/state", s"$root/corpus", "vec_id", "embedding", cfg)
       jobs.ClusterMaintenance.latestAssignment(spark, s"$root/state")
         .withColumn("fold", lit(w.toLong))
@@ -2777,13 +2730,8 @@ object Queries {
   def streamingSpanDedupService(spark: SparkSession, dir: String): DataFrame = {
     val runId = streamRunCounter.getAndIncrement()
     val tag = s"q116_${Integer.toHexString(dir.hashCode)}_$runId"
-    val stage = scratchDir(spark, s"${tag}_src")
     val gramDir = scratchDir(spark, s"${tag}_grams")
     val cleanDir = scratchDir(spark, s"${tag}_clean")
-    val chk = scratchDir(spark, s"${tag}_chk")
-    // NOT streamSession: foreachBatch owns all state as parquet dirs (no
-    // stateful operator), same adjudication as q104
-    val ss = spark.newSession()
     val docs = t(spark, dir).documents
     val lims = docs.agg(min(col("doc_id").cast("long")),
       max(col("doc_id").cast("long"))).head()
@@ -2792,46 +2740,18 @@ object Queries {
         least(lit(2L), floor((col("doc_id").cast("long") - mn) * 3 /
           lit(span.toDouble)).cast("long")).as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagePath = new org.apache.hadoop.fs.Path(stage)
-    val sfs = stagePath.getFileSystem(hconf)
-    val stamped = scala.collection.mutable.Set[String]()
-    // one single-file wave per tercile; modtimes stamped to a fixed minute
-    // ladder so the file source's timestamp order (hence the batch order
-    // the append-only fold sequence rides on) never depends on write-clock
-    // granularity
-    def writeWave(w: Int): Unit = {
-      base.filter(col("b") === w).select("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(stage)
-      stampWave(sfs, stagePath, stamped, w)
-    }
-    val waveSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id long, text string")
     val cfg = jobs.SpanDedupMaintenance.Config(n = 8, compactEvery = 1)
-    def start() = ss.readStream.schema(waveSchema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val toks = batch.select(col("doc_id"),
-          functions.TextFunctions.tokens(col("text")).as("toks"))
-        jobs.SpanDedupMaintenance.foldBatch(toks, batchId, gramDir, cleanDir,
-          "doc_id", "toks", cfg)
-        ()
-      }
-      .start()
     try {
-      (0 until 3).foreach(writeWave) // all staged before ingest begins
+      // one single-file wave per tercile
+      val (stageWave, start) = serviceStream(spark, tag,
+        w => base.filter(col("b") === w).select("doc_id", "text"))(
+        spanServiceFold(gramDir, cleanDir, cfg))
+      (0 until 3).foreach(stageWave) // all staged before ingest begins
       // kill once batch 1 commits — file 3 unread, stop may land with
       // batch 2 in flight (the restart then replays it idempotently)
-      killRestartDrain(() => start(), killAfter = 1)
+      StreamRun.killRestartDrain(start, killAfter = 1, outage = ())
     } finally base.unpersist(false)
-    spark.read.parquet((0 until 3).map(k => s"$cleanDir/b=$k"): _*)
-      .select(col("id").as("doc_id"), col("n_tokens"), col("n_dup_starts"),
-        col("n_spans"), col("n_covered"),
-        md5(to_binary(concat_ws(" ", col("clean_toks")), lit("utf-8")))
-          .as("clean_md5"))
-      .orderBy("doc_id")
+    spanCleanRows(spark.read.parquet((0 until 3).map(k => s"$cleanDir/b=$k"): _*))
   }
 
   /** STREAM-GATED takedown lifecycle (q123): q121's ingest → retract →
@@ -2844,68 +2764,46 @@ object Queries {
     * rebuild lease enforces. The operator then runs
     * [[jobs.ClusterMaintenance.rebuildWithoutTombstones]] against the
     * committed state (every ingested vec_id % 7 == 0 retracted; state
-    * collapses to the rebuilt v=1 snapshot, corpus + bucket state to one
-    * filtered generation, the lease taken and released around the swap).
-    * The SAME stream then RESUMES FROM THE SAME CHECKPOINT with the
-    * third tercile staged: the restart's fold (batchId 2) lands on the
-    * post-rebuild dirs — its prior resolves the rebuilt snapshot, its
-    * corpus the filtered generation, its candidates the rebuilt bucket
-    * generation. The final head assignment answers q121's oracle
-    * VERBATIM (the full pruned replay over retained ∪ resumed batch) —
-    * kill-point independent, the takedown invisible to the stream that
-    * follows it. A lease left behind blocking the resumed fold, a
-    * rebuild head resolved at the wrong fold, a checkpoint restart
-    * landing on swept dirs, or a stale bucket row resurrecting a
-    * retracted id all hash-fail HERE, end-to-end through the streaming
+    * collapses to the rebuilt v=1 snapshot, the corpus to one filtered
+    * generation, the lease taken and released around the swap). The SAME
+    * stream then RESUMES FROM THE SAME CHECKPOINT with the third tercile
+    * staged: the restart's fold (batchId 2) lands on the post-rebuild
+    * dirs — its prior resolves the rebuilt snapshot, and its candidates
+    * come from its one map-side pass over the filtered generation ∪ the
+    * batch. The final head assignment answers q121's oracle VERBATIM (the
+    * full pruned replay over retained ∪ resumed batch) — kill-point
+    * independent, the takedown invisible to the stream that follows it. A
+    * lease left behind blocking the resumed fold, a rebuild head resolved
+    * at the wrong fold, a checkpoint restart landing on swept dirs, or a
+    * retracted vector left in the corpus (which would bring its id back as
+    * a candidate) all hash-fail HERE, end-to-end through the streaming
     * machinery rather than through direct batch calls (q121's tier). */
   def streamingTakedownLifecycle(spark: SparkSession, dir: String): DataFrame = {
     val runId = streamRunCounter.getAndIncrement()
     val tag = s"q123_${Integer.toHexString(dir.hashCode)}_$runId"
-    val stage = scratchDir(spark, s"${tag}_src")
     val state = scratchDir(spark, s"${tag}_state")
     val corpusDir = scratchDir(spark, s"${tag}_corpus")
-    val chk = scratchDir(spark, s"${tag}_chk")
-    // NOT streamSession: foreachBatch owns all state as parquet dirs (no
-    // stateful operator), same adjudication as q104
-    val ss = spark.newSession()
     val emb = t(spark, dir).embeddings
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) // bounded scalar
-    val b = (maxId + 1) * 2 / 3 // tercile boundary; oracle re-derives it
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagePath = new org.apache.hadoop.fs.Path(stage)
-    val sfs = stagePath.getFileSystem(hconf)
-    val stamped = scala.collection.mutable.Set[String]()
-    // one single-file wave per ascending tercile, modtimes on a fixed
-    // minute ladder (same staging as q104 — batch order deterministic)
-    def writeWave(w: Int): Unit = {
-      val lo = (maxId + 1) * w / 3
-      val hi = (maxId + 1) * (w + 1) / 3
-      emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
-        .coalesce(1).write.mode("append").parquet(stage)
-      stampWave(sfs, stagePath, stamped, w)
-    }
-    val embSchema = emb.schema
     // q121's config exactly — the oracle claim is the same filtered
     // pruned build, now reached through the streaming machinery
     val mcfg = jobs.ClusterMaintenance.Config(threshold = 0.35,
       numPlanes = 4, dim = 64, probeRadius = 1, numTables = 16)
-    def start() = ss.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+    try {
+      val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) // bounded scalar
+      val b = (maxId + 1) * 2 / 3 // tercile boundary; oracle re-derives it
+      // one single-file wave per ascending tercile (same staging as q104)
+      val (stageWave, start) = serviceStream(spark, tag,
+          w => emb.filter(idSlice(col("vec_id"), maxId, 3, w))) { (batch, batchId) =>
         jobs.ClusterMaintenance.foldBatch(batch, batchId, state, corpusDir,
           "vec_id", "embedding", mcfg)
       }
-      .start()
-    try {
-      (0 until 2).foreach(writeWave) // terciles 0/1 staged before ingest
+      (0 until 2).foreach(stageWave) // terciles 0/1 staged before ingest
       // kill once batch 0 commits — the stop may land with batch 1 in
       // flight (run 2 then replays it idempotently through the
       // checkpoint, still PRE-takedown: the lifecycle's kill window)
-      killRestartDrain(() => start(), killAfter = 0)
+      StreamRun.killRestartDrain(start, killAfter = 0, outage = ())
       // the stream is STOPPED and drained — the quiesced window the
       // rebuild contract demands (and its lease enforces against error)
       val tomb = emb.select(col("vec_id"))
@@ -2914,8 +2812,8 @@ object Queries {
         corpusDir, tomb, "vec_id", mcfg)
       // resume: third tercile staged, the SAME checkpoint continues at
       // batchId 2 on top of the rebuilt state
-      writeWave(2)
-      drainRun(() => start())
+      stageWave(2)
+      StreamRun.drain(start)
     } finally emb.unpersist(false)
     jobs.ClusterMaintenance.latestAssignment(spark, state)
       .select(col("id").as("vec_id"), col("cluster_id"), col("cluster_size"),
@@ -2944,52 +2842,24 @@ object Queries {
   def streamingSpanTakedownLifecycle(spark: SparkSession, dir: String): DataFrame = {
     val runId = streamRunCounter.getAndIncrement()
     val tag = s"q124_${Integer.toHexString(dir.hashCode)}_$runId"
-    val stage = scratchDir(spark, s"${tag}_src")
     val gramDir = scratchDir(spark, s"${tag}_grams")
     val cleanDir = scratchDir(spark, s"${tag}_clean")
-    val chk = scratchDir(spark, s"${tag}_chk")
-    // NOT streamSession: foreachBatch owns all state as parquet dirs (no
-    // stateful operator), same adjudication as q104/q116
-    val ss = spark.newSession()
-    val docs = t(spark, dir).documents
-    val maxId = docs.agg(max(col("doc_id").cast("long"))).head().getLong(0)
-    val b = (maxId + 1) * 2 / 3 // tercile boundary; oracle re-derives it
-    val base = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val base = t(spark, dir).documents
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagePath = new org.apache.hadoop.fs.Path(stage)
-    val sfs = stagePath.getFileSystem(hconf)
-    val stamped = scala.collection.mutable.Set[String]()
-    // one single-file wave per ascending tercile, modtimes on a fixed
-    // minute ladder (same staging as q116 — batch order deterministic,
-    // and the SAME id split as q122 so its oracle answers verbatim)
-    def writeWave(w: Int): Unit = {
-      val lo = (maxId + 1) * w / 3
-      val hi = (maxId + 1) * (w + 1) / 3
-      base.filter(col("doc_id") >= lo && col("doc_id") < hi)
-        .coalesce(1).write.mode("append").parquet(stage)
-      stampWave(sfs, stagePath, stamped, w)
-    }
-    val waveSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id long, text string")
     val cfg = jobs.SpanDedupMaintenance.Config(n = 8, compactEvery = 2) // q122's config
-    def start() = ss.readStream.schema(waveSchema)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val toks = batch.select(col("doc_id"),
-          functions.TextFunctions.tokens(col("text")).as("toks"))
-        jobs.SpanDedupMaintenance.foldBatch(toks, batchId, gramDir, cleanDir,
-          "doc_id", "toks", cfg)
-        ()
-      }
-      .start()
     try {
-      (0 until 2).foreach(writeWave) // terciles 0/1 staged before ingest
+      val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
+      val b = (maxId + 1) * 2 / 3 // tercile boundary; oracle re-derives it
+      // one single-file wave per ascending tercile (same staging as q116,
+      // and the SAME id split as q122 so its oracle answers verbatim)
+      val (stageWave, start) = serviceStream(spark, tag,
+        w => base.filter(idSlice(col("doc_id"), maxId, 3, w)))(
+        spanServiceFold(gramDir, cleanDir, cfg))
+      (0 until 2).foreach(stageWave) // terciles 0/1 staged before ingest
       // kill once batch 0 commits — the stop may land with batch 1 in
       // flight (run 2 replays it idempotently, still pre-takedown)
-      killRestartDrain(() => start(), killAfter = 0)
+      StreamRun.killRestartDrain(start, killAfter = 0, outage = ())
       // stream stopped and drained — the quiesced takedown window
       val retained = base
         .filter(col("doc_id") < b && col("doc_id") % 7 =!= 0)
@@ -2999,15 +2869,10 @@ object Queries {
         "doc_id", "toks", cfg)
       // resume: third tercile staged, the SAME checkpoint continues at
       // batchId 2 over the rebuilt generation
-      writeWave(2)
-      drainRun(() => start())
+      stageWave(2)
+      StreamRun.drain(start)
     } finally base.unpersist(false)
-    spark.read.parquet(s"$cleanDir/b=2")
-      .select(col("id").as("doc_id"), col("n_tokens"), col("n_dup_starts"),
-        col("n_spans"), col("n_covered"),
-        md5(to_binary(concat_ws(" ", col("clean_toks")), lit("utf-8")))
-          .as("clean_md5"))
-      .orderBy("doc_id")
+    spanCleanRows(spark.read.parquet(s"$cleanDir/b=2"))
   }
 
   /** Hybrid fusion of two OVERLAPPING retrievers (q114): q108's RRF gate

@@ -277,13 +277,21 @@ object Dedup {
     * distance `maxHamming` (< bands) of each other shares at least one exact
     * 16-bit band — so candidates come from an equi-join on (band, band-bits),
     * then the exact distance is one codegen'd `bit_count(xor)`. Linear in
-    * candidates, never O(n²). */
+    * candidates, never O(n²).
+    *
+    * Eager: building the frame runs one job, the fingerprint checkpoint.
+    * Both sides of the band join read the fingerprints, so they go through
+    * [[truncate]] like the MinHash signatures
+    * ([[candidatePairsOfSignatures]]), not through `persist`: a CacheManager
+    * entry keyed by a file scan's plan would hand a later call over a
+    * rewritten input at the same path the old fingerprints. The
+    * checkpoint's blocks go with the returned frame (Spark's context
+    * cleaner), as [[minhashCandidatePairs]]' signatures do. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3,
                           hashWords: (Column => Seq[Column], Int) = XxWords): DataFrame = {
     require(maxHamming < 4, "4 bands of 16 bits guarantee recall only for maxHamming < 4")
-    val sim = simhash(df, idCol, textCol, hashWords)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sim = truncate(simhash(df, idCol, textCol, hashWords))
     val banded = sim.select(col("id"), col("simhash"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),

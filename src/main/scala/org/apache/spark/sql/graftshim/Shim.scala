@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 made `Column.expr` / `ExpressionUtils` `private[sql]` (Connect
   * split); third-party expression libraries bridge from inside the
   * `org.apache.spark.sql` namespace — the standard extension-library shim.
-  * Kept to exactly these two forwarders.
+  * Kept to forwarders: the two column bridges, the live-session function
+  * registration and the stopped-stream session release.
   */
 object Shim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -22,4 +23,17 @@ object Shim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** Release the session Spark cloned for a stream query once the query
+    * has stopped. Every query runs in a clone of the session that started
+    * it, and each clone registers an artifact-dir cleanup that runs when GC
+    * frees the clone: an `rm -rf` process (Spark's `deleteRecursively` on
+    * Unix) at GC's time, inside whatever work runs then. Closing the clone's
+    * `ArtifactManager` runs that cleanup now, once; GC then has nothing to
+    * run. */
+  def releaseStreamSession(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = q match {
+    case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+      w.streamingQuery.sparkSessionForStream.artifactManager.close()
+    case _ => ()
+  }
 }

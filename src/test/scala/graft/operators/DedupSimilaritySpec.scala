@@ -83,16 +83,19 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(pairs.toSeq == Seq((1L, 2L, 1.0)))
   }
 
-  test("q25 and q74 read a rewritten input at the same path afresh in one session") {
-    // a file scan's plan compares by root path only, so a signature cache
-    // keyed by plan would hand the second run the first input's signatures.
-    // The input is replaced outside Spark, as another producer would: a
-    // Spark write to the path would refresh the caches over it.
+  /** Runs each query over a copy of the documents, replaces the input at
+    * the same path with a third of the documents removed, and requires the
+    * next run to equal a run over the new input. A file scan's plan compares
+    * by root path only, so a cache keyed by plan would hand the second run
+    * the first input's intermediate. The input is replaced outside Spark, as
+    * another producer would: a Spark write to the path would refresh the
+    * caches over it. */
+  private def assertReadsRewrittenInput(
+      queries: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)]): Unit = {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val (dir, fresh) = (java.nio.file.Files.createTempDirectory("rewrite").toString,
       java.nio.file.Files.createTempDirectory("fresh").toString)
-    val queries = Seq("q25" -> graft.Queries.minhashPairs _,
-      "q74" -> graft.Queries.dedupClusters _)
     def rows(name: String, at: String) =
       queries.toMap.apply(name)(spark, at).collect().map(_.toString).toSeq
     docs.write.parquet(s"$dir/documents.parquet")
@@ -108,6 +111,15 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(expected != first(name), s"premise: the rewrite changes $name's result")
       assert(rows(name, dir) == expected, s"$name returned a result of the replaced input")
     }
+  }
+
+  test("q25 and q74 read a rewritten input at the same path afresh in one session") {
+    assertReadsRewrittenInput(Seq("q25" -> graft.Queries.minhashPairs _,
+      "q74" -> graft.Queries.dedupClusters _))
+  }
+
+  test("q40 reads a rewritten input at the same path afresh in one session") {
+    assertReadsRewrittenInput(Seq("q40" -> graft.Queries.simhashPairs _))
   }
 
   test("minhash signatures are deterministic across invocations") {
