@@ -1038,7 +1038,7 @@ object Bench {
           (lit(1L) + pmod(col("id") * 2654435761L, lit(997L))).as("n_tokens"))
         val p0 = System.nanoTime()
         val (packed, release) = graft.operators.Packing
-          .packSequencesReleasable(docs, "doc_id", "n_tokens", capacity = 2048)
+          .packSequences(docs, "doc_id", "n_tokens", capacity = 2048)
         // the hierarchical-prefix-sum claim, checked on the OPERATOR'S OWN
         // PLAN (an input-derived bucket histogram is a tautology — distinct
         // ids can't exceed the width by construction): every window must be

@@ -30,14 +30,6 @@ object Engine {
       // avoids fleets of ~ms tasks on small exchanges (measured 3x on the
       // bench suite) and is the right policy on a real cluster too.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Apply the same AQE coalescing UNDER persisted frames (off by
-      // default for cached-plan partitioning stability): a tiny persisted
-      // distinct/join otherwise caches shuffle.partitions near-empty
-      // blocks and every later map stage over the cache pays one task per
-      // block (the CC loop's edge cache measured 64 ~20ms tasks per round
-      // at sf0.1). Partitioning follows data size at any scale — results
-      // are partitioning-independent.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // set once at build time: events.parquet is TIMESTAMP(NANOS); setting this
       // per-access would mutate shared session conf from query threads

@@ -567,15 +567,14 @@ object Queries {
     val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     val spanSec = (maxId * 100L) / 1000L + 61L // ingest span + re-ingest offset
     val latenessSec = math.max(3600L, 2L * spanSec)
-    // persisted: the stage write and the re-ingest wave both consume this
+    // a snapshot: the stage write and the re-ingest wave both consume this
     // frame (and for q70/q73 it carries the single-lang self-join) — the
-    // harness unpersists it when its stream stops
-    val docs = base
+    // harness releases it when its stream stops
+    val docs = Snapshot.take(base
       .select(col("doc_id").cast("long").as("doc_id"),
         timestamp_millis(lit(1704067200000L) + col("doc_id").cast("long") * 100L)
           .as("ingest_ts"),
-        col("text"), col("lang"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("text"), col("lang")))
     (docs, s"$latenessSec seconds")
   }
 
@@ -600,8 +599,8 @@ object Queries {
       val wLo = lo0 + (hi0 - lo0 + 1) * i / nWaves
       val wHi = lo0 + (hi0 - lo0 + 1) * (i + 1) / nWaves
       sides.foreach { case (df, tsCol, stage) =>
-        // repartition(2): the cached slice would otherwise write one
-        // near-empty file per cache partition each wave
+        // repartition(2): the snapshot slice would otherwise write one
+        // near-empty file per snapshot partition each wave
         df.filter(unix_millis(col(tsCol)) >= wLo && unix_millis(col(tsCol)) < wHi)
           .repartition(2)
           .write.mode("append").parquet(stage)
@@ -612,7 +611,7 @@ object Queries {
   /** Re-ingest wave: the same documents arriving again 60 s later — inside
     * the watermark horizon, so the stream's digest-dedup state must still
     * remember and drop every one of them. Coalesced to two files: the wave
-    * inherits the cached frame's partitioning otherwise (~32 near-empty
+    * inherits the snapshot's partitioning otherwise (~32 near-empty
     * files), and at maxFilesPerTrigger=1 each becomes its own micro-batch —
     * pure per-trigger fixed cost with identical semantics. */
   private def reIngestWave(docs: DataFrame, stage: String): Unit =
@@ -646,7 +645,7 @@ object Queries {
         reIngestWave(docs, stage)
         sq.processAllAvailable()
       }
-    } finally docs.unpersist(false)
+    } finally Snapshot.release(docs)
     sinkTable(ss, name)
   }
 
@@ -671,8 +670,8 @@ object Queries {
 
   /** The event slice a stream harness replays (q67/q68/q69/q72/q90):
     * `events` filtered to `slice` and projected to `cols` (which name a
-    * `ts` column), persisted while `body` runs and unpersisted after. The
-    * persist keeps the min/max aggregate and every wave filter off the
+    * `ts` column), a [[Snapshot]] while `body` runs and released after. The
+    * snapshot keeps the min/max aggregate and every wave filter off the
     * events parquet: those scans are harness cost, and the operator under
     * test reads only the staged files. `body` gets the slice and its
     * [min, max] `ts` in epoch millis; an empty slice returns `empty`, the
@@ -681,13 +680,11 @@ object Queries {
                         (empty: => DataFrame)
                         (body: (DataFrame, Long, Long) => DataFrame): DataFrame = {
     import spark.implicits._
-    val evs = t(spark, dir).events.filter(slice).select(cols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.scoped(t(spark, dir).events.filter(slice).select(cols: _*)) { evs =>
       val (lo, hi) = evs.agg(min(col("ts")), max(col("ts")))
         .as[(java.sql.Timestamp, java.sql.Timestamp)].head()
       if (lo == null) empty else body(evs, lo.getTime, hi.getTime)
-    } finally evs.unpersist(false)
+    }
   }
 
   /** [[eventSlice]] for the sessionizer harnesses (q67/q72/q90): the
@@ -936,7 +933,7 @@ object Queries {
       // pause while the pipeline is down
       StreamRun.killRestartDrain(() => start(), killAfter = 1,
         outage = reIngestWave(docs, stage))
-    } finally docs.unpersist(false)
+    } finally Snapshot.release(docs)
     // batch read of the sink dir: Spark reads through _spark_metadata, so
     // only COMMITTED batches are visible
     spark.read.parquet(out)
@@ -1419,7 +1416,7 @@ object Queries {
     * per-bucket windows plus a ≤4096-row base window (see Packing). */
   def seqPack(spark: SparkSession, dir: String): DataFrame =
     Packing.packSequences(docTokenCounts(spark, dir), "doc_id", "n_tokens",
-        capacity = 2048)
+        capacity = 2048)._1
       .withColumnRenamed("id", "doc_id")
 
   /** The (doc_id, n_tokens) weights q81/q85/q86 pack — ONE definition so
@@ -1467,20 +1464,20 @@ object Queries {
     val first = counts.filter(col("doc_id") <= splitId)
     val rest = counts.filter(col("doc_id") > splitId)
     val packedFirst = Packing.packSequences(first, "doc_id", "n_tokens",
-      capacity = 2048)
+      capacity = 2048)._1
     // the high-water mark is read from the FIRST PACK'S OWN OUTPUT — the
     // end position of its last document (positions are contiguous, so the
     // max end IS the batch's total token count). Exactly what a real
-    // pipeline stores alongside its written sequences, and this scalar
-    // materializes packSequences' internal (id, cnt) cache, so the union
-    // below reuses it instead of re-tokenizing the first half.
+    // pipeline stores alongside its written sequences; this scalar and the
+    // union below both read the first pack's (id, cnt) snapshot instead of
+    // re-tokenizing the first half.
     val hwRow = packedFirst.agg(coalesce(
       max(col("seq_id") * 2048L + col("seq_offset") + col("n_tokens")),
       lit(0L))).head
     val highWater = hwRow.getLong(0)
     packedFirst
       .unionAll(Packing.packSequences(rest, "doc_id", "n_tokens",
-        capacity = 2048, basePos = highWater))
+        capacity = 2048, basePos = highWater)._1)
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id")
   }
@@ -1617,7 +1614,7 @@ object Queries {
   def packedSegments(spark: SparkSession, dir: String): DataFrame =
     Packing.packSegments(
         Packing.packSequences(docTokenCounts(spark, dir), "doc_id", "n_tokens",
-          capacity = 2048),
+          capacity = 2048)._1,
         capacity = 2048)
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id", "seq_id")
@@ -1633,7 +1630,7 @@ object Queries {
     * same md5 order ranked by DuckDB's row_number. */
   def epochShuffle(spark: SparkSession, dir: String): DataFrame = {
     val packed = Packing.packSequences(docTokenCounts(spark, dir),
-        "doc_id", "n_tokens", capacity = 2048)
+        "doc_id", "n_tokens", capacity = 2048)._1
       .groupBy("seq_id").agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).cast("long").as("n_tokens"))
     Packing.epochOrder(packed, "seq_id", epoch = 0L)
@@ -1956,9 +1953,8 @@ object Queries {
     val tag = s"q104_${Integer.toHexString(dir.hashCode)}_$runId"
     val state = scratchDir(spark, s"${tag}_state")
     val corpusDir = scratchDir(spark, s"${tag}_corpus")
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val emb = Snapshot.take(t(spark, dir).embeddings
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding")))
     // three waves = the minimal shape that exercises every tier: a
     // bootstrap fold (empty prior), a committed pre-kill fold, and a
     // post-restart fold (often the replay of an in-flight batch); each
@@ -1978,8 +1974,8 @@ object Queries {
     val mcfg = jobs.ClusterMaintenance.Config(threshold = 0.35,
       numPlanes = 4, dim = 64, probeRadius = 1, numTables = 16,
       compactEvery = 2, snapshotEvery = 2)
-    // one finally owns the corpus cache: a failure in staging, run 1, or
-    // run 2 must not leak the persisted blocks into the rest of the process
+    // one finally owns the corpus snapshot: a failure in staging, run 1, or
+    // run 2 must not leak its blocks into the rest of the process
     try {
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0) // bounded scalar
       val (stageWave, start) = serviceStream(spark, tag,
@@ -1991,7 +1987,7 @@ object Queries {
       // kill once batch 1 commits — files 2/3 unread, stop may land with
       // batch 2 in flight (the restart then replays it idempotently)
       StreamRun.killRestartDrain(start, killAfter = 1, outage = ())
-    } finally emb.unpersist(false)
+    } finally Snapshot.release(emb)
     jobs.ClusterMaintenance.latestAssignment(spark, state)
       .select(col("id").as("vec_id"), col("cluster_id"), col("cluster_size"),
         col("is_canonical"))
@@ -2307,7 +2303,7 @@ object Queries {
   def tokenBudgetDraw(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir).documents.select(col("doc_id"), col("lang"),
       plans.TextExpressions.token_count(col("text")).as("n_tokens"))
-    CorpusQuality.tokenBudgetSample(docs, "doc_id", "n_tokens", budget = 10000L)
+    CorpusQuality.tokenBudgetSample(docs, "doc_id", "n_tokens", budget = 10000L)._1
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).cast("long").as("sum_tokens"))
@@ -2323,7 +2319,7 @@ object Queries {
     * production consumer. */
   def lengthBucketReport(spark: SparkSession, dir: String): DataFrame =
     Packing.lengthBuckets(docTokenCounts(spark, dir), "doc_id", "n_tokens",
-        batchSize = 32)
+        batchSize = 32)._1
       .groupBy("batch_id")
       .agg(count(lit(1)).as("n_docs"),
         min(col("n_tokens")).as("min_len"),
@@ -2736,10 +2732,9 @@ object Queries {
     val lims = docs.agg(min(col("doc_id").cast("long")),
       max(col("doc_id").cast("long"))).head()
     val (mn, span) = (lims.getLong(0), lims.getLong(1) - lims.getLong(0) + 1)
-    val base = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"),
+    val base = Snapshot.take(docs.select(col("doc_id").cast("long").as("doc_id"), col("text"),
         least(lit(2L), floor((col("doc_id").cast("long") - mn) * 3 /
-          lit(span.toDouble)).cast("long")).as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          lit(span.toDouble)).cast("long")).as("b")))
     val cfg = jobs.SpanDedupMaintenance.Config(n = 8, compactEvery = 1)
     try {
       // one single-file wave per tercile
@@ -2750,7 +2745,7 @@ object Queries {
       // kill once batch 1 commits — file 3 unread, stop may land with
       // batch 2 in flight (the restart then replays it idempotently)
       StreamRun.killRestartDrain(start, killAfter = 1, outage = ())
-    } finally base.unpersist(false)
+    } finally Snapshot.release(base)
     spanCleanRows(spark.read.parquet((0 until 3).map(k => s"$cleanDir/b=$k"): _*))
   }
 
@@ -2783,9 +2778,8 @@ object Queries {
     val tag = s"q123_${Integer.toHexString(dir.hashCode)}_$runId"
     val state = scratchDir(spark, s"${tag}_state")
     val corpusDir = scratchDir(spark, s"${tag}_corpus")
-    val emb = t(spark, dir).embeddings
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val emb = Snapshot.take(t(spark, dir).embeddings
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding")))
     // q121's config exactly — the oracle claim is the same filtered
     // pruned build, now reached through the streaming machinery
     val mcfg = jobs.ClusterMaintenance.Config(threshold = 0.35,
@@ -2814,7 +2808,7 @@ object Queries {
       // batchId 2 on top of the rebuilt state
       stageWave(2)
       StreamRun.drain(start)
-    } finally emb.unpersist(false)
+    } finally Snapshot.release(emb)
     jobs.ClusterMaintenance.latestAssignment(spark, state)
       .select(col("id").as("vec_id"), col("cluster_id"), col("cluster_size"),
         col("is_canonical"))
@@ -2844,9 +2838,8 @@ object Queries {
     val tag = s"q124_${Integer.toHexString(dir.hashCode)}_$runId"
     val gramDir = scratchDir(spark, s"${tag}_grams")
     val cleanDir = scratchDir(spark, s"${tag}_clean")
-    val base = t(spark, dir).documents
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Snapshot.take(t(spark, dir).documents
+      .select(col("doc_id").cast("long").as("doc_id"), col("text")))
     val cfg = jobs.SpanDedupMaintenance.Config(n = 8, compactEvery = 2) // q122's config
     try {
       val maxId = base.agg(max(col("doc_id"))).head().getLong(0)
@@ -2871,7 +2864,7 @@ object Queries {
       // batchId 2 over the rebuilt generation
       stageWave(2)
       StreamRun.drain(start)
-    } finally base.unpersist(false)
+    } finally Snapshot.release(base)
     spanCleanRows(spark.read.parquet(s"$cleanDir/b=2"))
   }
 

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, Snapshot}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -331,11 +331,9 @@ object ClusterMaintenance {
     StateProtocol.acquireRebuildLease(sfs, spath, takeover = resumeCrashedRebuild)
     val corpus = spark.read.parquet(parts: _*)
     val dropIds = tombstones.select(col(idCol).cast("long").as("vec_id")).distinct()
-    val keep = corpus.join(dropIds, Seq("vec_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Snapshot.scoped(corpus.join(dropIds, Seq("vec_id"), "left_anti")) { keep =>
       // stage the filtered corpus and recompute the assignment CONCURRENTLY
-      // (guide §2.6): both consume only the persisted `keep` (and the old
+      // (guide §2.6): both consume only the `keep` snapshot (and the old
       // dirs, untouched until the swaps below), both land in HIDDEN tmp
       // dirs no reader resolves, and the swaps run only after both commit —
       // the crash contract is unchanged (a crash leaves tmp dirs the re-run
@@ -390,7 +388,7 @@ object ClusterMaintenance {
       }
       staleState.foreach(nm => sfs.delete(new Path(s"$stateDir/$nm"), true))
       StateProtocol.releaseRebuildLease(sfs, spath)
-    } finally keep.unpersist(false)
+    }
     spark.read.parquet(s"$stateDir/v=$v")
   }
 

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.functions.TextFunctions._
-import graft.operators.{CorpusQuality, Dedup, Packing}
+import graft.operators.{CorpusQuality, Dedup, Packing, Snapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -157,48 +157,42 @@ object CorpusPipeline {
     * survivors' token volume. One row per input language.
     *
     * Scale shape: each stage count is a per-language aggregate (5 rows) of
-    * the stage frame; `gated`/`exact` are persisted so the upstream stages
-    * compute once, not once per downstream count (the MinHash signature
-    * checkpoint inside `minhashCandidatePairs` does the same for the
-    * sketch).
+    * the stage frame; `gated`/`exact` are [[Snapshot]]s so the upstream
+    * stages compute once, not once per downstream count (the MinHash
+    * signature snapshot inside `minhashCandidatePairs` does the same for
+    * the sketch).
     * Nothing beyond the per-language count rows ever concentrates.
     *
     * EAGER by design (unlike the operator library): a stage-count report is
-    * a job-level artifact, and running it inside the call lets the persisted
-    * stage frames be RELEASED before returning — a lazy plan would have to
-    * leave corpus-sized cache entries live for the session. The returned
-    * frame is the collected per-language rows (a handful). */
+    * a job-level artifact, and running it inside the call lets the stage
+    * snapshots be RELEASED before returning. The returned frame is the
+    * collected per-language rows (a handful). */
   def curationReport(docs: DataFrame, cfg: Config = Config()): DataFrame = {
     val spark = docs.sparkSession
-    val gated = qualityGated(docs, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exact = Dedup.exactDedup(gated, Seq(dedupKey(cfg)), col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val fin = nearDupRemoved(exact, cfg)
-        .withColumn("predicted_lang", langId(col("text"), graft.Queries.LangProfiles))
-      def byLang(df: DataFrame, name: String) =
-        df.groupBy("lang").agg(count(lit(1)).cast("long").as(name))
-      val finAgg = fin.groupBy("lang").agg(
-        count(lit(1)).cast("long").as("n_final"),
-        sum(when(col("predicted_lang") === col("lang"), 1L).otherwise(0L))
-          .cast("long").as("n_pred_match"),
-        sum(col("q.n_tokens")).cast("long").as("sum_tokens"))
-      val report = byLang(docs, "n_input")
-        .join(byLang(gated, "n_quality"), Seq("lang"), "left")
-        .join(byLang(exact, "n_exact"), Seq("lang"), "left")
-        .join(finAgg, Seq("lang"), "left")
-        .select(col("lang"), col("n_input"),
-          coalesce(col("n_quality"), lit(0L)).as("n_quality"),
-          coalesce(col("n_exact"), lit(0L)).as("n_exact"),
-          coalesce(col("n_final"), lit(0L)).as("n_final"),
-          coalesce(col("n_pred_match"), lit(0L)).as("n_pred_match"),
-          coalesce(col("sum_tokens"), lit(0L)).as("sum_tokens"))
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(report.collect().toList.asJava, report.schema)
-    } finally {
-      gated.unpersist(false)
-      exact.unpersist(false)
+    Snapshot.scoped(qualityGated(docs, cfg)) { gated =>
+      Snapshot.scoped(Dedup.exactDedup(gated, Seq(dedupKey(cfg)), col("doc_id"))) { exact =>
+        val fin = nearDupRemoved(exact, cfg)
+          .withColumn("predicted_lang", langId(col("text"), graft.Queries.LangProfiles))
+        def byLang(df: DataFrame, name: String) =
+          df.groupBy("lang").agg(count(lit(1)).cast("long").as(name))
+        val finAgg = fin.groupBy("lang").agg(
+          count(lit(1)).cast("long").as("n_final"),
+          sum(when(col("predicted_lang") === col("lang"), 1L).otherwise(0L))
+            .cast("long").as("n_pred_match"),
+          sum(col("q.n_tokens")).cast("long").as("sum_tokens"))
+        val report = byLang(docs, "n_input")
+          .join(byLang(gated, "n_quality"), Seq("lang"), "left")
+          .join(byLang(exact, "n_exact"), Seq("lang"), "left")
+          .join(finAgg, Seq("lang"), "left")
+          .select(col("lang"), col("n_input"),
+            coalesce(col("n_quality"), lit(0L)).as("n_quality"),
+            coalesce(col("n_exact"), lit(0L)).as("n_exact"),
+            coalesce(col("n_final"), lit(0L)).as("n_final"),
+            coalesce(col("n_pred_match"), lit(0L)).as("n_pred_match"),
+            coalesce(col("sum_tokens"), lit(0L)).as("sum_tokens"))
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(report.collect().toList.asJava, report.schema)
+      }
     }
   }
 
@@ -223,17 +217,15 @@ object CorpusPipeline {
     * is individually easy, jointly they rot; spec-pinned):
     *  - ONE tokenize: `tokens(text)` is projected once into `toks`; the
     *    quality gate (qualityMetricsOfTokens), the MinHash sketch
-    *    (minhashCandidatePairsOfTokensReleasable), the chunker
-    *    (chunkTokens) and the packer's token counts all consume that
-    *    attribute. No stage re-derives split().
-    *  - Bounded caches, released before return: the exact-dedup survivor
-    *    frame (with toks) backs the sketch, the survivor join and the
-    *    chunker — persisted for the duration of the write, unpersisted in
-    *    a finally. The packer's internal (id, cnt) cache is taken through
-    *    [[Packing.packSequencesReleasable]], the sketch's signature
-    *    checkpoint through [[Dedup.minhashCandidatePairsOfTokensReleasable]] (dropped
-    *    the moment the component closure — checkpoint-backed — returns);
-    *    both released the same way.
+    *    (minhashSignaturesOfTokens), the chunker (chunkTokens) and the
+    *    packer's token counts all consume that attribute. No stage
+    *    re-derives split().
+    *  - Bounded snapshots, released before return: the exact-dedup
+    *    survivor frame (with toks) backs the sketch, the survivor join and
+    *    the chunker — a [[Snapshot]] for the duration of the write,
+    *    released in a finally, like [[Packing.packSequences]]' (id, cnt)
+    *    snapshot. The sketch's signature snapshot is released the moment
+    *    the component closure — checkpoint-backed — returns.
     *  - Cluster dedup, not pair dedup: dropping one side of each PAIR
     *    over-deletes on chains a-b, b-c; components keep exactly one
     *    canonical doc per near-dup cluster (min id — deterministic).
@@ -271,11 +263,12 @@ object CorpusPipeline {
   }
 
   /** The lazy segment frame behind [[curateToSequences]], plus the thunk
-    * releasing its stage caches — exposed for plan inspection (the
-    * one-tokenize and cache-lifecycle specs assert on this frame). Jobs use
-    * [[curateToSequences]], which writes, releases, and reads back. NOTE:
-    * cluster dedup runs EAGERLY in here (connected components is a
-    * multi-round loop); only the chunk→pack→segment tail is lazy. */
+    * releasing its stage snapshots — exposed for plan inspection (the
+    * one-tokenize and snapshot-lifecycle specs assert on this frame). Jobs
+    * use [[curateToSequences]], which writes, releases, and reads back.
+    * NOTE: the snapshots and cluster dedup run EAGERLY in here (connected
+    * components is a multi-round loop); only the chunk→pack→segment tail
+    * is lazy. */
   private[graft] def segmentPlan(docs: DataFrame, cfg: Config,
                                  chunkSize: Int, chunkStride: Int,
                                  capacity: Long, seqsPerBucket: Long,
@@ -306,22 +299,21 @@ object CorpusPipeline {
     val gated = Dedup.exactDedup(base, Seq(col("__digest")), col("doc_id"))
       .withColumn("q", qualityMetricsOfTokens(col("toks"), stopwords))
       .filter(qualityGate(cfg))
-    val cached = gated.select(col("doc_id"), col("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stage = Snapshot.take(gated.select(col("doc_id"), col("toks")))
     // repetition gate (same stage qualityGated applies it at; commutes with
     // exact dedup like the quality gate — a pure function of the deduped
-    // text). Both anti-join sides read the stage cache, and the signals
-    // consume the cached toks attribute, so the gate adds no tokenize.
+    // text). Both anti-join sides read the stage snapshot, and the signals
+    // consume its toks attribute, so the gate adds no tokenize.
     val exact =
-      if (cfg.maxTop2gramFrac >= 1.0) cached
-      else cached.join(
-        CorpusQuality.repetitionSignalsOfTokens(cached, "doc_id", "toks", ns = Seq(2))
+      if (cfg.maxTop2gramFrac >= 1.0) stage
+      else stage.join(
+        CorpusQuality.repetitionSignalsOfTokens(stage, "doc_id", "toks", ns = Seq(2))
           .filter(col("top_frac") > cfg.maxTop2gramFrac)
           .select(col("id").as("doc_id")),
         Seq("doc_id"), "left_anti")
-    val (pairs, releaseSigs) = Dedup.minhashCandidatePairsOfTokensReleasable(
-      exact, "doc_id", "toks",
-      threshold = cfg.nearDupThreshold, tokenHash = cfg.tokenHash)
+    val (pairs, releaseSigs) = Dedup.candidatePairsOfSignatures(
+      Dedup.minhashSignaturesOfTokens(exact, "doc_id", "toks", tokenHash = cfg.tokenHash),
+      threshold = cfg.nearDupThreshold)
     // non-canonical cluster members (node ≠ its component's min label).
     // connectedComponents consumes the pairs eagerly and returns a
     // materialized frame (a local relation or a checkpoint), so the
@@ -333,7 +325,7 @@ object CorpusPipeline {
       finally releaseSigs()
     val kept0 = exact.join(losers, Seq("doc_id"), "left_anti")
     // optional span-level exact-substring dedup among the survivors:
-    // consumes the cached toks attribute (no tokenize added — the
+    // consumes the snapshot's toks attribute (no tokenize added — the
     // one-tokenize plan spec covers this configuration too) and feeds the
     // chunker the CLEANED token stream; a fully-covered doc chunks to
     // nothing and packing closes ranks over the remainder
@@ -345,7 +337,7 @@ object CorpusPipeline {
       chunkSize, chunkStride)
     // optional CHUNK-level decontamination: benchmark-shingle positions map
     // to window indices by arithmetic (contaminatedChunksOfTokens — reads
-    // the cached toks attribute, so the stage adds no tokenize of the
+    // the snapshot's toks attribute, so the stage adds no tokenize of the
     // corpus); contaminated chunks are anti-joined away BEFORE packing, so
     // the surviving sequences still fill to capacity
     val chunks = benchmark.fold(allChunks) { case (bdf, btextCol) =>
@@ -363,7 +355,7 @@ object CorpusPipeline {
           "curateToSequences: chunk uid overflow (doc %d, chunk %d)",
           col("id"), col("chunk_idx")))).as("uid"),
       col("token_cnt"))
-    val (packed, releasePack) = Packing.packSequencesReleasable(
+    val (packed, releasePack) = Packing.packSequences(
       withUid, "uid", "token_cnt", capacity)
     val segs = Packing.packSegments(packed, capacity)
       .select(shiftright(col("id"), 20).as("doc_id"),
@@ -371,7 +363,7 @@ object CorpusPipeline {
         col("seq_id"), col("seq_off"),
         col("doc_from").as("chunk_from"), col("n_tok"),
         floor(col("seq_id") / seqsPerBucket).cast("long").as("seq_bucket"))
-    (segs, () => { releasePack(); cached.unpersist(blocking = false); () })
+    (segs, () => { releasePack(); Snapshot.release(stage) })
   }
 
   /** Curate + write partitioned by annotated language. */

@@ -166,27 +166,18 @@ object CorpusQuality {
     * span fits: pos + cnt <= budget (documents are atomic — the draw
     * never truncates one). Token-less documents are never kept (they
     * carry no budget weight; filter separately if they matter).
-    * Returns the kept rows with input columns intact. */
+    * Eager: the rank's and the prefix sum's snapshots are taken while the
+    * frame is built (two jobs). Returns the kept rows with input columns
+    * intact, plus the thunk releasing both snapshots (call it after the
+    * last action on the frame, which then fails loudly if read again). */
   def tokenBudgetSample(df: DataFrame, idCol: String, cntCol: String,
-                        budget: Long, salt: String = ""): DataFrame =
-    tokenBudgetSampleReleasable(df, idCol, cntCol, budget, salt)._1
-
-  /** [[tokenBudgetSample]] plus the thunk releasing its internal caches
-    * (the rank's pid-stamped frame and the prefix sum's (id, cnt)
-    * projection) — for drivers drawing from DISTINCT inputs or salts in a
-    * loop (ablation sweeps), where the per-call caches would otherwise
-    * accumulate for the session's lifetime. One-shot callers can rely on
-    * CacheManager dedup and use [[tokenBudgetSample]]; loop callers call
-    * `release()` after the terminal action on the returned frame. */
-  def tokenBudgetSampleReleasable(df: DataFrame, idCol: String, cntCol: String,
-                                  budget: Long, salt: String = "")
-      : (DataFrame, () => Unit) = {
+                        budget: Long, salt: String = ""): (DataFrame, () => Unit) = {
     require(budget >= 0, "budget must be non-negative")
     val keyed = df.withColumn("__draw_key",
       md5(concat(lit(s"draw-$salt:"), col(idCol).cast("string")).cast("binary")))
-    val (ranked, releaseRank) = graft.operators.Sorts.globalOrderIndexReleasable(
+    val (ranked, releaseRank) = graft.operators.Sorts.globalOrderIndex(
       keyed, Seq(col("__draw_key"), col(idCol)), "__draw_rank")
-    val (packedAll, releasePack) = Packing.packSequencesReleasable(ranked,
+    val (packedAll, releasePack) = Packing.packSequences(ranked,
       "__draw_rank", cntCol, capacity = math.max(budget, 1L))
     val packed = packedAll.select(col("id").as("__draw_rank"),
       col("seq_id"), col("seq_offset"), col("n_tokens").as("__cnt"))

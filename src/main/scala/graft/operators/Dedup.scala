@@ -156,36 +156,16 @@ object Dedup {
       minhashSignatures(df, idCol, textCol, numHashes, tokenHash = tokenHash),
       numHashes, bands, threshold, maxBucket)._1
 
-  /** [[minhashCandidatePairs]] over an already-tokenized corpus (see
-    * [[minhashSignaturesOfTokens]]) — identical pairs, no second tokenize —
-    * plus a thunk releasing the internal signature snapshot (~520 B/doc,
-    * checkpointed because the pair plan references it four times). A
-    * composed job that consumes the pairs EAGERLY — e.g. closes them into
-    * components, whose output is checkpoint-backed — should release as soon
-    * as that action completes; a caller that drops the thunk leaves the
-    * snapshot to Spark's context cleaner ([[minhashCandidatePairs]]). */
-  def minhashCandidatePairsOfTokensReleasable(
-      df: DataFrame, idCol: String, toksCol: String,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 1000,
-      tokenHash: Column => Column = tokenHash32): (DataFrame, () => Unit) =
-    candidatePairsOfSignatures(
-      minhashSignaturesOfTokens(df, idCol, toksCol, numHashes, tokenHash = tokenHash),
-      numHashes, bands, threshold, maxBucket)
-
   /** [[minhashCandidatePairs]]' banding/bucketing/scoring stage over
     * PRE-COMPUTED signatures — (id, sig: array<bigint>) with `numHashes`
     * entries. Public for callers that bring their own sketch (and for the
     * synthetic-scale soak, which drives the bucket-cap skew guard with
     * adversarial signature sets no real tokenizer run could shape
-    * precisely). Returns the pairs plus the signature-snapshot release
-    * thunk ([[minhashCandidatePairsOfTokensReleasable]] semantics).
-    *
-    * The signatures are taken through [[truncate]], the checkpoint the CC
-    * loop uses, not `persist`: a persisted frame is a CacheManager entry
-    * keyed by its plan, and a file scan's plan compares by root path only,
-    * so a later build over a rewritten input at the same path would read
-    * the old signatures. A checkpoint belongs to this call alone. */
+    * precisely). Returns the pairs plus a thunk releasing the signature
+    * [[Snapshot]] (~520 B/doc). A caller that consumes the pairs EAGERLY —
+    * e.g. closes them into components, whose output is checkpoint-backed —
+    * releases as soon as that action completes; one that drops the thunk
+    * leaves the snapshot to Spark's context cleaner. */
   def candidatePairsOfSignatures(sigs: DataFrame, numHashes: Int = 64,
                                  bands: Int = 16, threshold: Double = 0.5,
                                  maxBucket: Int = 1000): (DataFrame, () => Unit) = {
@@ -207,7 +187,7 @@ object Dedup {
     // of the bucket join, both signature joins); checkpoint it so the
     // shingle explosion + 64-way min aggregation runs once. ~520 B/doc — at
     // 100 TB input this is n_docs * 0.5 KB.
-    val snap = truncate(sigs)
+    val snap = Snapshot.take(sigs)
     // Explode band buckets; kill skewed buckets before the self-join.
     val bucketed = snap
       .select(col("id"), col("sig"), explode(lshBuckets(col("sig"), bands, r)).as("bb"))
@@ -234,7 +214,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         (agree.cast("double") / numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-    (out, () => release(snap))
+    (out, () => Snapshot.release(snap))
   }
 
   /** Hash-word providers for `simhash`: token → fixed-width hash words whose
@@ -280,18 +260,15 @@ object Dedup {
     * candidates, never O(n²).
     *
     * Eager: building the frame runs one job, the fingerprint checkpoint.
-    * Both sides of the band join read the fingerprints, so they go through
-    * [[truncate]] like the MinHash signatures
-    * ([[candidatePairsOfSignatures]]), not through `persist`: a CacheManager
-    * entry keyed by a file scan's plan would hand a later call over a
-    * rewritten input at the same path the old fingerprints. The
-    * checkpoint's blocks go with the returned frame (Spark's context
-    * cleaner), as [[minhashCandidatePairs]]' signatures do. */
+    * Both sides of the band join read the fingerprints, so they are a
+    * [[Snapshot]], like the MinHash signatures; its blocks go with the
+    * returned frame (Spark's context cleaner), as
+    * [[minhashCandidatePairs]]' signatures do. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3,
                           hashWords: (Column => Seq[Column], Int) = XxWords): DataFrame = {
     require(maxHamming < 4, "4 bands of 16 bits guarantee recall only for maxHamming < 4")
-    val sim = truncate(simhash(df, idCol, textCol, hashWords))
+    val sim = Snapshot.take(simhash(df, idCol, textCol, hashWords))
     val banded = sim.select(col("id"), col("simhash"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),
@@ -384,7 +361,7 @@ object Dedup {
     * per node and only labels travel between rounds, so a 10⁸-member
     * component costs the same shuffle volume as 10⁸ singletons — nothing
     * component-shaped is ever materialized in one place. Each round's
-    * labels are checkpointed (see [[truncate]]: RELIABLE checkpoint when
+    * labels are checkpointed (see [[Snapshot.take]]: RELIABLE checkpoint when
     * the session configures a checkpoint dir — the cluster-deployment
     * fault-tolerance path — executor-local otherwise) — MANDATORY, not an
     * optimization: the
@@ -394,7 +371,7 @@ object Dedup {
     * string). Live storage stays O(nodes + edges): once a round's
     * checkpoint is materialized by the convergence action, the previous
     * round's backing RDD is unpersisted explicitly — never more than two
-    * label snapshots plus the edge cache. (localCheckpoint trades
+    * label snapshots plus the edge snapshot. (localCheckpoint trades
     * executor-loss recovery for speed; at ≤ ~40 rounds for any physical
     * diameter, a lost executor costs one query retry — prefer a reliable
     * `checkpoint` dir if that matters.)
@@ -440,32 +417,6 @@ object Dedup {
     * GiB of driver heap, capped so every array index fits an Int. */
   def localComponentsBound: Long =
     math.min(Runtime.getRuntime.maxMemory / 1024, Int.MaxValue / 2)
-
-  /** Eager, plan-truncating checkpoint for the CC loop's reused frames.
-    * When the session has a RELIABLE checkpoint directory configured
-    * (`SparkContext.setCheckpointDir`), use it: checkpoint files live on
-    * the DFS and survive executor loss, so a cluster deployment keeps
-    * fault tolerance through the loop (set
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` if the app
-    * outlives many builds). Otherwise `localCheckpoint`: faster (executor-
-    * local blocks, no DFS round-trip) but NON-REPLAYABLE — losing an
-    * executor mid-loop fails the query and a retry recomputes from source.
-    * That is the right default for the ≲40-round loops here on local or
-    * retry-tolerant jobs; a cluster job that cannot afford a query retry
-    * opts into durability by setting a checkpoint dir — no API change. */
-  private def truncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
-  /** Deterministic release of a [[truncate]]d frame's persisted blocks:
-    * the checkpointed Dataset is backed by a LogicalRDD leaf whose RDD
-    * holds the storage. (Dataset.unpersist goes through the CacheManager
-    * and does not know about checkpoint RDDs; without this, snapshots
-    * linger until driver GC happens to collect the Dataset.) */
-  private def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-    case _ => ()
-  }
 
   /** [[connectedComponents]] plus the number of label-propagation rounds the
     * build ran (including the final confirming round whose label sum was
@@ -522,7 +473,7 @@ object Dedup {
     // segment — for the LSH generators that is the exact cosine gate,
     // paid twice per build (guide §2.3: don't compute what you throw
     // away). Same row multiset, checkpointed identically.
-    val real = truncate(
+    val real = Snapshot.take(
       sym.filter(col("s") =!= col("d"))
         .select(explode(array(
           struct(col("s"), col("d")),
@@ -533,13 +484,13 @@ object Dedup {
       val snapshot = real.queryExecution.toRdd
       if (snapshot.count() <= localBound) {
         val local = localComponents(real.sparkSession, snapshot)
-        release(real)
+        Snapshot.release(real)
         return (local, 0)
       }
     }
     val nodes = real.select(col("s")).distinct()
     // Symmetrized + self-edge-seeded + deduped once; reused every round.
-    // truncate, i.e. a checkpoint (not persist): a persisted frame still CARRIES the
+    // A snapshot, i.e. a checkpoint (not persist): a persisted frame still CARRIES the
     // upstream logical plan inside its InMemoryRelation, and every one of
     // the O(log) per-round actions re-runs analysis + optimization over
     // it — for an edge plan holding a large expression tree (the pruned
@@ -548,11 +499,11 @@ object Dedup {
     // folds). The checkpoint truncates the plan to a LogicalRDD leaf, so
     // every round plans over a two-column table no matter what produced
     // the edges.
-    val und = truncate(
+    val und = Snapshot.take(
       real.union(nodes.select(col("s"), col("s").as("d"))).distinct())
     val selfStart = und.filter(col("s") === col("d"))
       .select(col("s").as("node"), col("s").as("lbl"))
-    var labels = truncate(seed match {
+    var labels = Snapshot.take(seed match {
       case None => selfStart
       case Some(sd) =>
         // warm start: prior labels where provided, self elsewhere — the
@@ -563,7 +514,7 @@ object Dedup {
         selfStart.join(s0, Seq("node"), "left")
           .select(col("node"), coalesce(col("pl"), col("lbl")).as("lbl"))
     })
-    release(real) // und and labels are materialized; the edge snapshot is done
+    Snapshot.release(real) // und and labels are materialized; the edge snapshot is done
     var prevSum: Option[java.math.BigDecimal] = None
     var it = 0
     var done = false
@@ -574,22 +525,22 @@ object Dedup {
         .select(col("s").as("node"), col("lbl"))
       // Jump: labels are always node ids present in the table (mins of node
       // ids), so the lookup is total; left+coalesce guards the invariant.
-      // The eager localCheckpoint both materializes the round and truncates
+      // The eager snapshot both materializes the round and truncates
       // the otherwise per-round-doubling plan (relaxed appears twice).
-      val jumped = truncate(relaxed.join(
+      val jumped = Snapshot.take(relaxed.join(
           relaxed.select(col("node").as("lbl"), col("lbl").as("ll")), Seq("lbl"), "left")
         .select(col("node"), coalesce(col("ll"), col("lbl")).as("lbl")))
       val sum = jumped.agg(
           org.apache.spark.sql.functions.sum(col("lbl").cast("decimal(38,0)")).as("s"))
         .head().getDecimal(0)
-      release(labels) // jumped is materialized — release the old snapshot
+      Snapshot.release(labels) // jumped is materialized — release the old snapshot
       labels = jumped
       val s = Option(sum) // None ⇔ empty graph — converged trivially
       done = s == prevSum || s.isEmpty
       prevSum = s
       it += 1
     }
-    release(und)
+    Snapshot.release(und)
     if (!done)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
@@ -814,28 +765,25 @@ object Dedup {
                                  maxIter: Int, localBound: Long): (DataFrame, DataFrame) = {
     // Materialize the candidate pairs once (they feed the endpoint set, the
     // scoped edge graph, and — via the broadcast builds — would otherwise
-    // re-run the whole LSH candidate generator per consumer). localCheckpoint
-    // rather than persist: the downstream CC loop plans over these many
-    // times, and a persisted frame still carries the generator's plan
-    // (see the note in connectedComponentsWithRounds).
-    val fresh = edges.localCheckpoint(true)
+    // re-run the whole LSH candidate generator per consumer). A snapshot
+    // truncates the generator's plan, which the downstream CC loop plans
+    // over many times (see the note in connectedComponentsWithRounds).
+    val fresh = Snapshot.take(edges)
     val eps = fresh.select(col("s").as("id"))
       .unionByName(fresh.select(col("d").as("id"))).distinct()
     // Prior clusters containing any fresh endpoint. Corpus side is scanned,
     // never shuffled: eps broadcasts into the semi join, affected (≤ |eps|
     // rows) broadcasts into the touched/untouched splits below.
-    val affected = assignment.join(broadcast(eps), Seq("id"), "left_semi")
-      .select(col("cluster_id")).distinct()
-      .localCheckpoint(true)
-    // touched is affected-cluster-sized (batch-proportional). Checkpoint
-    // rather than persist/unpersist: the result frame below still references
-    // it lazily (through scopedU inside rec), so an eager unpersist here
-    // would silently re-run the corpus semi join at consumption time.
-    val touched = assignment
+    val affected = Snapshot.take(assignment.join(broadcast(eps), Seq("id"), "left_semi")
+      .select(col("cluster_id")).distinct())
+    // touched is affected-cluster-sized (batch-proportional). The result
+    // frames below still read these snapshots lazily (through scopedU inside
+    // rec, and the untouched anti join), so they are left to the context
+    // cleaner rather than released here.
+    val touched = Snapshot.take(assignment
       .join(broadcast(affected), Seq("cluster_id"), "left_semi")
       .select(col("id").cast("long").as("id"),
-        col("cluster_id").cast("long").as("cluster_id"))
-      .localCheckpoint(true)
+        col("cluster_id").cast("long").as("cluster_id")))
     val star = touched.select(col("id").as("s"), col("cluster_id").as("d"))
     val scopedU = touched.select(col("id")).unionByName(ids).distinct()
     val seed = Some(touched.select(col("id").as("node"),

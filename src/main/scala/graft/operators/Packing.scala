@@ -112,54 +112,24 @@ object Packing {
     * continued pack of the rest, a property PackingSpec pins and q86 gates
     * against the full-repack oracle.
     *
-    * Output: (id, n_tokens, seq_id, seq_offset, spans), ordered by id. */
+    * Eager: the (id, cnt) projection, which the plan reads three times
+    * (maxId scalar, bucket totals, the positioned rows), is a [[Snapshot]]
+    * taken while the frame is built (one job), so whatever produced cnt —
+    * typically a full tokenize of the corpus — runs once. ~16 B/doc.
+    *
+    * Output: (id, n_tokens, seq_id, seq_offset, spans), ordered by id, plus
+    * the thunk releasing the snapshot. Call it after the last action on the
+    * frame; the frame then fails loudly if read again. A caller that drops
+    * the thunk leaves the snapshot to Spark's context cleaner. */
   def packSequences(docs: DataFrame, idCol: String, cntCol: String,
                     capacity: Long, bucketTarget: Int = 4096,
-                    basePos: Long = 0L): DataFrame = {
-    // (id, cnt) is referenced three times below (maxId scalar, bucket
-    // totals, the positioned rows themselves); persist the two-long
-    // projection so whatever produced cnt — typically a full tokenize of
-    // the corpus text — runs ONCE, not per reference (the same trade q25
-    // makes for its minhash signatures). ~16 B/doc at any corpus size.
-    // Lifecycle: intentionally not unpersisted — the returned plan is lazy
-    // and still references the cache. Repeated calls over the SAME input
-    // dedupe in the CacheManager (canonicalized-plan equality), so steady-
-    // state bench/driver reruns hold one entry, not one per call. A
-    // long-lived INCREMENTAL driver feeds a DISTINCT input per batch, and
-    // disk-spilled MEMORY_AND_DISK blocks are not LRU-evicted — such
-    // callers must use [[packSequencesReleasable]] (or manage
-    // spark.catalog.clearCache() themselves) or storage grows per batch.
-    validateArgs(capacity, bucketTarget, basePos)
-    packPositioned(cacheBase(docs, idCol, cntCol), capacity, bucketTarget,
-      basePos)
-  }
-
-  /** [[packSequences]] for long-lived incremental drivers: the same output
-    * frame plus a `release` thunk that drops the operator's internal
-    * (id, cnt) cache. Each append batch is a distinct input plan, so the
-    * per-call cache inside [[packSequences]] would otherwise accumulate one
-    * MEMORY_AND_DISK entry per batch for the lifetime of the session. Call
-    * `release()` after the terminal action on the returned frame (the frame
-    * is lazy — releasing first would just re-run the tokenize). */
-  def packSequencesReleasable(docs: DataFrame, idCol: String, cntCol: String,
-                              capacity: Long, bucketTarget: Int = 4096,
-                              basePos: Long = 0L): (DataFrame, () => Unit) = {
-    validateArgs(capacity, bucketTarget, basePos)
-    val base = cacheBase(docs, idCol, cntCol)
-    (packPositioned(base, capacity, bucketTarget, basePos),
-      () => { base.unpersist(blocking = false); () })
-  }
-
-  // validated BEFORE cacheBase in both entry points: a require that threw
-  // after the persist would leak a registered cache entry with no handle
-  private def validateArgs(capacity: Long, bucketTarget: Int, basePos: Long): Unit =
+                    basePos: Long = 0L): (DataFrame, () => Unit) = {
     require(capacity >= 1 && bucketTarget >= 1 && basePos >= 0)
-
-  private def cacheBase(docs: DataFrame, idCol: String, cntCol: String): DataFrame =
-    docs
+    val base = Snapshot.take(docs
       .select(col(idCol).cast("long").as("id"), col(cntCol).cast("long").as("cnt"))
-      .filter(col("cnt") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("cnt") > 0))
+    (packPositioned(base, capacity, bucketTarget, basePos), () => Snapshot.release(base))
+  }
 
   private def packPositioned(base: DataFrame, capacity: Long,
                              bucketTarget: Int, basePos: Long): DataFrame = {
@@ -210,12 +180,14 @@ object Packing {
     * reshuffles — and assigned via [[Sorts.globalOrderIndex]] (range
     * partitions + bounded base window + intra-partition row_number), never
     * a single-partition window, so ordering 10^10 sequences costs a
-    * TeraSort, not a one-task sort. Adds `posAlias` (0-based long). */
+    * TeraSort, not a one-task sort. Adds `posAlias` (0-based long). Eager
+    * like [[Sorts.globalOrderIndex]]; its snapshot goes with the returned
+    * frame (Spark's context cleaner). */
   def epochOrder(seqs: DataFrame, idCol: String, epoch: Long,
                  posAlias: String = "shuffle_pos"): DataFrame = {
     val keyed = seqs.withColumn("__shuffle_key",
       md5(concat(lit(s"epoch-$epoch:"), col(idCol).cast("string")).cast("binary")))
-    Sorts.globalOrderIndex(keyed, Seq(col("__shuffle_key")), posAlias)
+    Sorts.globalOrderIndex(keyed, Seq(col("__shuffle_key")), posAlias)._1
       .drop("__shuffle_key")
   }
 
@@ -229,21 +201,13 @@ object Packing {
     * TeraSort shape, never a single-partition window), then
     * batch_id = rank / batchSize, batch_pos = rank % batchSize. Ties
     * break on id, so the assignment is total and replayable. Output:
-    * input columns + (batch_id, batch_pos). */
+    * input columns + (batch_id, batch_pos), plus the rank's snapshot
+    * release thunk ([[Sorts.globalOrderIndex]]: eager, unusable once
+    * released). */
   def lengthBuckets(df: DataFrame, idCol: String, lenCol: String,
-                    batchSize: Int): DataFrame =
-    lengthBucketsReleasable(df, idCol, lenCol, batchSize)._1
-
-  /** [[lengthBuckets]] plus the thunk releasing the rank's internal
-    * pid-stamped cache — for drivers that re-bucket DISTINCT inputs
-    * (per-shard scoring loops), where the per-call cache would otherwise
-    * accumulate (same lifecycle contract as `globalOrderIndexReleasable`,
-    * which this delegates to). Call `release()` after the terminal action
-    * on the returned frame. */
-  def lengthBucketsReleasable(df: DataFrame, idCol: String, lenCol: String,
-                              batchSize: Int): (DataFrame, () => Unit) = {
+                    batchSize: Int): (DataFrame, () => Unit) = {
     require(batchSize >= 1, "batchSize must be positive")
-    val (ranked, release) = Sorts.globalOrderIndexReleasable(df,
+    val (ranked, release) = Sorts.globalOrderIndex(df,
       Seq(col(lenCol), col(idCol)), "__rank")
     (ranked
       .withColumn("batch_id", floor(col("__rank") / batchSize).cast("long"))

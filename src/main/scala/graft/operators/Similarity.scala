@@ -154,16 +154,16 @@ object Similarity {
     * re-ranks exactly. Cost per query scans ~nprobe/nlist of the corpus —
     * the classic IVF trade, and the 100 TB path when LSH recall is too
     * vector-distribution-sensitive.
+    *
+    * Eager: the quantizer is built while the frame is built. The Lloyd
+    * iterations read a [[Snapshot]] of the corpus projection, released
+    * before returning; the returned plan reads the corpus from source once.
     */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, qidCol: String, qvecCol: String,
               k: Int, nlist: Int, nprobe: Int, iters: Int = 2): DataFrame = {
-    // The corpus projection is scanned once per Lloyd iteration plus once for
-    // the final bucketing — persist it so the parquet read + norm computation
-    // happens once (id + vec + norm ≈ 300 B/row; spills to disk if large).
     // spread: every Lloyd scan pays nlist centroid dots per row
-    val c = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val proj = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide)
 
     def centroidLit(v: Array[Double]): Column =
       array(v.map(x => lit(x.toFloat)): _*)
@@ -196,30 +196,29 @@ object Similarity {
     // (xxhash64(id), id) — the id tiebreak makes seed choice exact under
     // task retries even across an xxhash64 collision (the exact variant
     // below always had it; this path previously tied arbitrarily)
-    var cents: Seq[Array[Double]] = c.orderBy(xxhash64(col("id")), col("id"))
-      .limit(nlist)
-      .select(col("vec")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray).toSeq
-    var it = 0
-    while (it < iters) {
-      val assigned = c.select(col("vec"), assign(col("vec"), col("cnorm"), cents).as("cid"))
-      val means = assigned
-        .select(col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos").agg(avg(col("x")).as("m"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("centroid"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-      cents = cents.indices.map(i => means.getOrElse(i, cents(i)))
-      it += 1
+    val cents = Snapshot.scoped(proj) { c =>
+      var cents: Seq[Array[Double]] = c.orderBy(xxhash64(col("id")), col("id"))
+        .limit(nlist)
+        .select(col("vec")).collect()
+        .map(_.getSeq[Float](0).map(_.toDouble).toArray).toSeq
+      var it = 0
+      while (it < iters) {
+        val assigned = c.select(col("vec"), assign(col("vec"), col("cnorm"), cents).as("cid"))
+        val means = assigned
+          .select(col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
+          .groupBy("cid", "pos").agg(avg(col("x")).as("m"))
+          .groupBy("cid")
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+            s => s.getField("m")).as("centroid"))
+          .collect()
+          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+        cents = cents.indices.map(i => means.getOrElse(i, cents(i)))
+        it += 1
+      }
+      cents
     }
-    // Lloyd iterations (the repeated scans the cache existed for) are done —
-    // release it now rather than leaking one cache entry per call. The
-    // returned plan re-reads the corpus from source exactly once.
-    c.unpersist(false)
 
-    val bucketed = c.select(col("id"), col("vec"), col("cnorm"),
+    val bucketed = proj.select(col("id"), col("vec"), col("cnorm"),
       assign(col("vec"), col("cnorm"), cents).as("cid"))
     probeAndRerank(bucketed, normed(queries, qidCol, qvecCol, QuerySide), cents.map(ct =>
       try_divide(vec_dot(col("qvec"), centroidLit(ct)),
@@ -269,9 +268,8 @@ object Similarity {
                    k: Int, nlist: Int, nprobe: Int, iters: Int = 2): DataFrame = {
     val md5id = graft.functions.TextFunctions.md5Hash32(col("id").cast("string"))
     // spread: every Lloyd scan pays nlist centroid dots per row
-    val c = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide,
+    val proj = normed(Parallelism.spread(corpus, idCol), idCol, vecCol, CorpusSide,
       quantizeInt8(col(vecCol)).as("qv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // exact double literals (components are integers)
     def centLit(s: Array[Double]): Column = array(s.map(lit): _*)
@@ -289,25 +287,27 @@ object Similarity {
       (array_position(arr, array_max(arr)) - 1).cast("int")
     }
 
-    var cents: Seq[Array[Double]] = c.orderBy(md5id, col("id")).limit(nlist)
-      .select(col("qv")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray).toSeq
-    var it = 0
-    while (it < iters) {
-      val sums = c.select(assign(col("qv"), cents).as("cid"),
-          posexplode(col("qv")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos").agg(sum(col("x").cast("long")).as("sx"))
-        .groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("sx")))),
-          s => s.getField("sx").cast("double")).as("centroid"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-      cents = cents.indices.map(i => sums.getOrElse(i, cents(i)))
-      it += 1
+    val cents = Snapshot.scoped(proj) { c =>
+      var cents: Seq[Array[Double]] = c.orderBy(md5id, col("id")).limit(nlist)
+        .select(col("qv")).collect()
+        .map(_.getSeq[Float](0).map(_.toDouble).toArray).toSeq
+      var it = 0
+      while (it < iters) {
+        val sums = c.select(assign(col("qv"), cents).as("cid"),
+            posexplode(col("qv")).as(Seq("pos", "x")))
+          .groupBy("cid", "pos").agg(sum(col("x").cast("long")).as("sx"))
+          .groupBy("cid")
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("sx")))),
+            s => s.getField("sx").cast("double")).as("centroid"))
+          .collect()
+          .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+        cents = cents.indices.map(i => sums.getOrElse(i, cents(i)))
+        it += 1
+      }
+      cents
     }
-    c.unpersist(false)
 
-    val bucketed = c.select(col("id"), col("vec"), col("cnorm"),
+    val bucketed = proj.select(col("id"), col("vec"), col("cnorm"),
       assign(col("qv"), cents).as("cid"))
     val q = normed(queries, qidCol, qvecCol, QuerySide, quantizeInt8(col(qvecCol)).as("qqv"))
     probeAndRerank(bucketed, q, cents.map(s =>

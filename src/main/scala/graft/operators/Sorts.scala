@@ -87,35 +87,26 @@ object Sorts {
     * order (make it unique — add a tiebreak column — or equal keys get an
     * arbitrary but stable-within-run order).
     *
-    * Returns the input columns plus `posAlias` (0-based long). */
+    * Eager: the pid-stamped rows are a [[Snapshot]] taken while the frame
+    * is built (one job, the input rows once). Returns the input columns
+    * plus `posAlias` (0-based long), and the thunk releasing the snapshot:
+    * call it after the last action on the frame, which then fails loudly if
+    * read again. A caller that drops the thunk leaves the snapshot to
+    * Spark's context cleaner. */
   def globalOrderIndex(df: DataFrame, orderCols: Seq[Column],
                        posAlias: String = "pos",
-                       numParts: Int = 0): DataFrame =
-    globalOrderIndexReleasable(df, orderCols, posAlias, numParts)._1
-
-  /** [[globalOrderIndex]] plus a thunk releasing the pid-stamped cache —
-    * the per-epoch form: each epoch keys a DISTINCT plan, so without the
-    * release a long-lived training driver accumulates one full-input
-    * MEMORY_AND_DISK entry per epoch (disk-spilled blocks are not
-    * LRU-evicted; same lifecycle contract as packSequencesReleasable).
-    * Call `release()` after the terminal action on the returned frame. */
-  def globalOrderIndexReleasable(df: DataFrame, orderCols: Seq[Column],
-                                 posAlias: String = "pos",
-                                 numParts: Int = 0): (DataFrame, () => Unit) = {
+                       numParts: Int = 0): (DataFrame, () => Unit) = {
     require(orderCols.nonEmpty)
     val parts =
       if (numParts > 0) df.repartitionByRange(numParts, orderCols: _*)
       else df.repartitionByRange(orderCols: _*)
-    val withPid = parts.withColumn("__pid", spark_partition_id())
-    // The persist is CORRECTNESS, not caching: the pid-stamped frame feeds
+    // The snapshot is CORRECTNESS, not caching: the pid-stamped frame feeds
     // two branches (per-partition counts, and the rows themselves), and
     // without it each branch re-runs the range shuffle with its own sampled
     // boundaries — inconsistent pids between branches would corrupt every
     // position. One materialization pins one partitioning. (Also shields
-    // the stamp from AQE re-splitting.) Size: the input rows once,
-    // evictable, deduped across reruns by the CacheManager like the minhash
-    // signature cache.
-    val pinned = withPid.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the stamp from AQE re-splitting.)
+    val pinned = Snapshot.take(parts.withColumn("__pid", spark_partition_id()))
     val bases = pinned.groupBy("__pid").agg(count(lit(1)).as("__c"))
       .withColumn("__base",
         coalesce(sum("__c").over(
@@ -127,6 +118,6 @@ object Sorts {
       .join(broadcast(bases), Seq("__pid"))
       .withColumn(posAlias, col("__base") + row_number().over(intra) - 1)
       .drop("__pid", "__base")
-    (out, () => { pinned.unpersist(blocking = false); () })
+    (out, () => Snapshot.release(pinned))
   }
 }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.operators.Snapshot
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -316,15 +317,15 @@ object Compact {
     }
 
     val rangeParts = math.max(16, sc.defaultParallelism)
-    val ordered = spark.read.text(listingPath.toString)
+    val listed = spark.read.text(listingPath.toString)
       .select(
         split(col("value"), "\t", 2).getItem(0).cast("long").as("len"),
         split(col("value"), "\t", 2).getItem(1).as("rel"))
       .repartitionByRange(rangeParts, col("len").desc, col("rel"))
       .sortWithinPartitions(col("len").desc, col("rel"))
-      .select(col("rel"), col("len")).as[(String, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try {
+      .select(col("rel"), col("len"))
+    try Snapshot.scoped(listed) { snap =>
+      val ordered = snap.as[(String, Long)]
       // phase 1: per-partition byte totals — rangeParts rows to the driver
       val sums = ordered.mapPartitions { rows =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -378,7 +379,6 @@ object Compact {
       cleanupSuperseded(dstFs, qdst, newGen, newParts)
       spark.read.parquet(s"$qdstStr/${indexDirName(newGen)}")
     } finally {
-      ordered.unpersist(false)
       try listingPath.getFileSystem(conf).delete(listingPath, false)
       catch { case _: Exception => () }
     }

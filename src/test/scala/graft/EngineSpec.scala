@@ -7,7 +7,6 @@ class EngineSpec extends SparkSpec {
   test("the test session carries the factory's production settings") {
     val expected = Map(
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.session.timeZone" -> "UTC")
     // a newSession() child (several queries run on one) inherits them too,

@@ -252,31 +252,56 @@ class CorpusPipelineSpec extends SparkSpec {
 
   test("curateToSequences plan tokenizes the corpus exactly once") {
     val docs = new graft.Engine.Tables(spark, sf).documents
-    val (segs, release) = CorpusPipeline.segmentPlan(docs,
-      graft.Queries.CurationCfg, 64, 48, 2048L, 1024L)
+    // the plans of the jobs segmentPlan runs while it builds the frame (the
+    // stage snapshot, the sketch, the components, the packer's snapshot)
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit = ran.add(qe.optimizedPlan.toString)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (segs, release) =
+      try {
+        val built = CorpusPipeline.segmentPlan(docs,
+          graft.Queries.CurationCfg, 64, 48, 2048L, 1024L)
+        // listener events arrive in order: once this marker job's plan is
+        // in, every job segmentPlan ran is too
+        spark.range(1).select(lit("segment-plan-marker").as("m")).collect()
+        val deadline = System.nanoTime() + 30_000_000_000L
+        while (!ran.toArray.exists(_.toString.contains("segment-plan-marker")) &&
+            System.nanoTime() < deadline) Thread.sleep(50)
+        built
+      } finally spark.listenerManager.unregister(listener)
     try {
       val plan = segs.queryExecution.optimizedPlan.toString
-      // the lazy chunk→pack→segment tail (everything above the first cached
-      // stage) must be tokenize-free: it consumes the curated cache's toks
-      // attribute, never re-deriving split()
-      val tail = plan.split("InMemoryRelation", 2).head
-      assert(!tail.contains("split("),
-        s"pipeline tail re-derives tokenize:\n${tail.take(4000)}")
-      // and the whole tree holds exactly ONE tokenize SITE: every line that
-      // mentions split() is the same base projection of the cached curation
-      // stage, re-printed wherever the cache appears in the tree (nested
-      // cached plans print per reference — textual count > 1 is fine,
-      // distinct sites > 1 is the rot this pins against)
-      val sites = plan.split("\n").filter(_.contains("split("))
+      // the lazy chunk→pack→segment tail must be tokenize-free: it
+      // consumes the stage snapshot's toks attribute, never re-deriving
+      // split()
+      assert(!plan.contains("split("),
+        s"pipeline tail re-derives tokenize:\n${plan.take(4000)}")
+      // and everything that ran holds exactly ONE tokenize SITE: every line
+      // that mentions split() is the same base projection of the curation
+      // stage (distinct sites > 1 is the rot this pins against) ...
+      import scala.jdk.CollectionConverters._
+      val jobs = ran.asScala.toSeq
+      assert(jobs.exists(_.contains("segment-plan-marker")),
+        "the construction jobs' plans never reached the listener")
+      val sites = jobs.flatMap(_.split("\n"))
+        .filter(_.contains("split("))
         .map(_.replaceAll("#\\d+L?", "#x").replaceAll("^[\\s:+|-]+", "")
           .take(120)).toSet
-      assert(sites.nonEmpty, "expected the single tokenize site in the plan")
+      assert(sites.nonEmpty, "expected the single tokenize site in the plans")
       assert(sites.size == 1,
         s"chain re-derives tokenize at ${sites.size} distinct sites:\n" +
           sites.mkString("\n"))
-      // the stage cache is actually in the plan (the tokenize feeds
-      // consumers through it, not through recomputation)
-      assert(plan.contains("InMemoryRelation"), plan.take(2000))
+      // ... in ONE job, the stage snapshot's: every other consumer reads
+      // the toks through a snapshot, not through recomputation
+      assert(jobs.count(_.contains("split(")) == 1,
+        s"${jobs.count(_.contains("split("))} jobs tokenize the corpus")
+      // the lazy tail reads the packer's snapshot
+      assert(plan.contains("LogicalRDD"), plan.take(2000))
     } finally release()
   }
 

@@ -264,7 +264,7 @@ class CorpusQualitySpec extends SparkSpec {
     val docs = (1L to 40L).map(i => (i, 1L + (i * 7) % 13)) // cnt in 1..13
     val df = docs.toDF("doc_id", "cnt")
     def drawn(budget: Long, salt: String = "") =
-      CorpusQuality.tokenBudgetSample(df, "doc_id", "cnt", budget, salt)
+      CorpusQuality.tokenBudgetSample(df, "doc_id", "cnt", budget, salt)._1
         .collect().map(_.getLong(0)).toSet
     // driver-side recompute: walk in (md5, id) order; a doc is kept iff
     // its own span fits, and the position advances by EVERY doc's cnt
@@ -290,7 +290,7 @@ class CorpusQualitySpec extends SparkSpec {
     assert(drawn(50L, salt = "b") != drawn(50L))
     // zero-token docs are never kept
     val withZero = (docs :+ (99L, 0L)).toDF("doc_id", "cnt")
-    val z = CorpusQuality.tokenBudgetSample(withZero, "doc_id", "cnt", 1000L)
+    val z = CorpusQuality.tokenBudgetSample(withZero, "doc_id", "cnt", 1000L)._1
       .collect().map(_.getLong(0)).toSet
     assert(!z.contains(99L) && z == docs.map(_._1).toSet)
   }

@@ -101,16 +101,15 @@ class JoinsAndSortsSpec extends SparkSpec {
     val rows = (1 to 5000).map(i => ((i * 2654435761L) % 100003L, i))
     val df = rows.toDF("k", "payload").repartition(7)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (got, release1) = Sorts.globalOrderIndexReleasable(df, Seq(col("k")), posAlias = "pos")
+    val (got, release1) = Sorts.globalOrderIndex(df, Seq(col("k")), posAlias = "pos")
     val collected = got.collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     val exp = rows.map(_._1).distinct.sorted.zipWithIndex
       .map { case (k, i) => k -> i.toLong }.toMap
     assert(collected.size == rows.map(_._1).distinct.size)
     assert(collected == exp)
     // determinism across runs with GENUINELY fresh range sampling: release
-    // the first run's pinned cache first — a canonically-equal second plan
-    // would otherwise be served from the CacheManager and never resample
-    // the boundaries, making this assertion vacuous
+    // the first run's pinned snapshot first, so the rerun below samples its
+    // own boundaries over its own snapshot
     val firstRun = spark.sparkContext.getPersistentRDDs.keySet -- before
     release1()
     val deadline = System.nanoTime() + 10_000_000_000L
@@ -118,7 +117,7 @@ class JoinsAndSortsSpec extends SparkSpec {
         && System.nanoTime() < deadline) Thread.sleep(50)
     assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(firstRun).isEmpty,
       "first run's pinned cache not released — the rerun below would be vacuous")
-    val again = Sorts.globalOrderIndex(df, Seq(col("k")), posAlias = "pos")
+    val again = Sorts.globalOrderIndex(df, Seq(col("k")), posAlias = "pos")._1
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     assert(again == exp)
     // the scale property: no unpartitioned window anywhere in the plan —
@@ -142,7 +141,7 @@ class JoinsAndSortsSpec extends SparkSpec {
     def perm(epoch: Int): Seq[(Long, Long)] = {
       val keyed = seqs.withColumn("k",
         md5(concat(lit(s"epoch-$epoch:"), col("seq_id").cast("string")).cast("binary")))
-      val (out, release) = Sorts.globalOrderIndexReleasable(keyed, Seq(col("k")), "pos")
+      val (out, release) = Sorts.globalOrderIndex(keyed, Seq(col("k")), "pos")
       try out.collect().map(r => r.getLong(0) -> r.getLong(2)).sortBy(_._1).toSeq
       finally release()
     }

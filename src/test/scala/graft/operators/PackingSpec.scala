@@ -70,7 +70,7 @@ class PackingSpec extends SparkSpec {
     val cnts = Seq(3L -> 40L, 7L -> 95L, 8L -> 10L, 12L -> 260L, 20L -> 55L,
       21L -> 0L /* dropped */, 40L -> 1L)
     val got = Packing.packSequences(cnts.toDF("doc_id", "n_tokens"),
-        "doc_id", "n_tokens", capacity = cap)
+        "doc_id", "n_tokens", capacity = cap)._1
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
 
@@ -91,7 +91,7 @@ class PackingSpec extends SparkSpec {
     val cap = 100L
     val cnts = Seq(1L -> 40L, 2L -> 95L, 3L -> 10L, 4L -> 260L, 5L -> 55L, 6L -> 1L)
     val packed = Packing.packSequences(cnts.toDF("doc_id", "n_tokens"),
-      "doc_id", "n_tokens", capacity = cap)
+      "doc_id", "n_tokens", capacity = cap)._1
     val segs = Packing.packSegments(packed, cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
 
@@ -131,7 +131,7 @@ class PackingSpec extends SparkSpec {
     val df = cnts.toDF("doc_id", "n_tokens")
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    val full = rows(Packing.packSequences(df, "doc_id", "n_tokens", cap))
+    val full = rows(Packing.packSequences(df, "doc_id", "n_tokens", cap)._1)
     // three arbitrary id-ordered batches, each continued from the previous
     // high-water token position
     val cuts = Seq(0L, 17L, 42L, 60L)
@@ -139,30 +139,30 @@ class PackingSpec extends SparkSpec {
     val batched = cuts.sliding(2).flatMap { case Seq(lo, hi) =>
       val slice = df.filter(col("doc_id") > lo && col("doc_id") <= hi)
       val out = rows(Packing.packSequences(slice, "doc_id", "n_tokens", cap,
-        basePos = base))
+        basePos = base)._1)
       base += cnts.filter { case (id, _) => id > lo && id <= hi }.map(_._2).sum
       out
     }.toSeq
     assert(batched == full)
   }
 
-  test("packSequencesReleasable drops its internal cache on release") {
+  test("packSequences drops its internal snapshot on release") {
     val df = (1 to 40).map(i => (i.toLong, 1L + i % 9)).toDF("doc_id", "n_tokens")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (packed, release) = Packing.packSequencesReleasable(
+    val (packed, release) = Packing.packSequences(
       df, "doc_id", "n_tokens", capacity = 32)
-    assert(packed.count() > 0) // terminal action populates the cache
+    assert(packed.count() > 0)
     val during = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(during.nonEmpty, "expected the (id, cnt) cache entry to exist")
+    assert(during.nonEmpty, "expected the (id, cnt) snapshot to exist")
     release()
-    // unpersist(blocking = false) completes asynchronously
     val deadline = System.nanoTime() + 10_000_000_000L
     while (spark.sparkContext.getPersistentRDDs.keySet.intersect(during).nonEmpty
         && System.nanoTime() < deadline) Thread.sleep(50)
     assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(during).isEmpty,
-      "cache entry survived release()")
-    // and the frame still answers (recomputed, not poisoned)
-    assert(packed.count() > 0)
+      "snapshot survived release()")
+    // and the released frame fails loudly (never recomputes)
+    val e = intercept[org.apache.spark.SparkException](packed.count())
+    assert(e.getMessage.contains("Checkpoint block"), e.getMessage)
   }
 
   test("chunk and packSequences plans tokenize once (no re-derived split in hot paths)") {
@@ -174,16 +174,16 @@ class PackingSpec extends SparkSpec {
     val chunkPlan = Packing.chunk(docs, "doc_id", "text", 4, 3)
       .queryExecution.optimizedPlan.toString
     assert(chunkPlan.sliding("split(".length).count(_ == "split(") == 1, chunkPlan)
-    // packSequences: the persisted (id, cnt) projection appears as an
-    // InMemoryRelation in the executed plan, so tokenize runs once across
-    // the three plan references
+    // packSequences: the (id, cnt) projection is a snapshot, read through
+    // its Scan ExistingRDD leaf in the executed plan, so tokenize ran once
+    // (when the snapshot was taken) across the three plan references
     val counts = docs.select(col("doc_id"),
       org.apache.spark.sql.functions.size(
         graft.functions.TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
-    val packPlan = Packing.packSequences(counts, "doc_id", "n_tokens", 64)
-      .queryExecution.executedPlan.toString
-    assert(packPlan.contains("InMemoryTableScan") || packPlan.contains("TableCacheQueryStage"),
-      packPlan.take(2000))
+    val (packed, release) = Packing.packSequences(counts, "doc_id", "n_tokens", 64)
+    val packPlan = try packed.queryExecution.executedPlan.toString finally release()
+    assert(packPlan.contains("Scan ExistingRDD"), packPlan.take(2000))
+    assert(!packPlan.contains("split("), packPlan.take(2000))
   }
 
   test("packSequences positions are invariant under the bucket width") {
@@ -194,7 +194,7 @@ class PackingSpec extends SparkSpec {
       .distinctBy(_._1).map { case (id, c) => (id, c.toLong) }
     val df = cnts.toDF("doc_id", "n_tokens")
     def run(bt: Int) = Packing.packSequences(df, "doc_id", "n_tokens",
-        capacity = 2048, bucketTarget = bt)
+        capacity = 2048, bucketTarget = bt)._1
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
     val coarse = run(8)        // 8 wide buckets: intra-bucket windows do the work
     val fine = run(2000000)    // width 1: every id its own bucket, all work in the base window
@@ -206,7 +206,7 @@ class PackingSpec extends SparkSpec {
     // mixed sign: max id positive keeps the bucket width positive, negative
     // ids land in negative buckets that still order before the positives
     val mixed = Seq(-7L -> 10L, -2L -> 20L, 3L -> 30L).toDF("doc_id", "n_tokens")
-    val got = Packing.packSequences(mixed, "doc_id", "n_tokens", capacity = 25L)
+    val got = Packing.packSequences(mixed, "doc_id", "n_tokens", capacity = 25L)._1
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSeq
     // id order -7, -2, 3 at positions 0, 10, 30
     assert(got == Seq((-7L, 0L, 0L), (-2L, 0L, 10L), (3L, 1L, 5L)))
@@ -214,32 +214,31 @@ class PackingSpec extends SparkSpec {
     // null out every bucket (rows silently vanish) — must raise instead
     val allNeg = Seq(-7L -> 10L, -2L -> 20L).toDF("doc_id", "n_tokens")
     val e = intercept[Exception] {
-      Packing.packSequences(allNeg, "doc_id", "n_tokens", capacity = 25L).collect()
+      Packing.packSequences(allNeg, "doc_id", "n_tokens", capacity = 25L)._1.collect()
     }
     assert(e.getMessage.contains("all doc ids are negative"))
     // empty input stays empty, no error
     assert(Packing.packSequences(mixed.filter(col("doc_id") > 100),
-      "doc_id", "n_tokens", capacity = 25L).collect().isEmpty)
+      "doc_id", "n_tokens", capacity = 25L)._1.collect().isEmpty)
   }
 
-  test("lengthBucketsReleasable and tokenBudgetSampleReleasable drop their caches on release") {
+  test("lengthBuckets and tokenBudgetSample drop their snapshots on release") {
     import spark.implicits._
     val docs = (1L to 50L).map(i => (i, 1L + i % 9)).toDF("id", "len")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (buckets, releaseB) = Packing.lengthBucketsReleasable(docs, "id", "len", 8)
+    val (buckets, releaseB) = Packing.lengthBuckets(docs, "id", "len", 8)
     assert(buckets.count() == 50)
-    val (draw, releaseD) = CorpusQuality.tokenBudgetSampleReleasable(
+    val (draw, releaseD) = CorpusQuality.tokenBudgetSample(
       docs, "id", "len", budget = 60L)
     assert(draw.count() > 0)
     assert(spark.sparkContext.getPersistentRDDs.keySet.size > before.size,
-      "the operators' internal caches should be registered while live")
+      "the operators' internal snapshots should be registered while live")
     releaseB(); releaseD()
-    // unpersist(blocking=false): poll briefly for the async release
     val deadline = System.nanoTime() + 10e9.toLong
     while (spark.sparkContext.getPersistentRDDs.keySet.size > before.size
         && System.nanoTime() < deadline) Thread.sleep(50)
     assert(spark.sparkContext.getPersistentRDDs.keySet.size <= before.size,
-      s"caches leaked: ${spark.sparkContext.getPersistentRDDs.keySet -- before}")
+      s"snapshots leaked: ${spark.sparkContext.getPersistentRDDs.keySet -- before}")
   }
 
   test("lengthBuckets: exact batch assignment, monotone batches, padding formula") {
@@ -249,7 +248,7 @@ class PackingSpec extends SparkSpec {
     val docs = Seq((1L, 50L), (2L, 10L), (3L, 30L), (4L, 10L), (5L, 70L),
       (6L, 20L), (7L, 60L), (8L, 40L), (9L, 10L), (10L, 25L))
       .toDF("id", "len")
-    val got = Packing.lengthBuckets(docs, "id", "len", batchSize = 3)
+    val got = Packing.lengthBuckets(docs, "id", "len", batchSize = 3)._1
       .collect().map(r => (r.getAs[Long]("id"),
         r.getAs[Long]("batch_id"), r.getAs[Long]("batch_pos")))
       .sortBy(r => (r._2, r._3))
@@ -259,7 +258,7 @@ class PackingSpec extends SparkSpec {
     assert(got.map(_._2).toSeq == Seq(0L, 0L, 0L, 1L, 1L, 1L, 2L, 2L, 2L, 3L))
     assert(got.map(_._3).toSeq == Seq(0L, 1L, 2L, 0L, 1L, 2L, 0L, 1L, 2L, 0L))
     // batches are length-monotone: max(batch i) <= min(batch i+1)
-    val byBatch = Packing.lengthBuckets(docs, "id", "len", batchSize = 3)
+    val byBatch = Packing.lengthBuckets(docs, "id", "len", batchSize = 3)._1
       .groupBy("batch_id").agg(min(col("len")).as("lo"), max(col("len")).as("hi"))
       .orderBy("batch_id").collect()
       .map(r => (r.getLong(1), r.getLong(2)))
