@@ -144,8 +144,8 @@ object Dedup {
     *
     * Eager: the signatures are checkpointed while the frame is built (one
     * job; see [[candidatePairsOfSignatures]]). This entry drops the release
-    * thunk, so Spark's context cleaner frees the snapshot once the pairs
-    * frame is garbage.
+    * thunk, so the snapshot goes once the pairs frame is garbage (see
+    * [[Snapshot]]).
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 64, bands: Int = 16,
@@ -165,7 +165,7 @@ object Dedup {
     * [[Snapshot]] (~520 B/doc). A caller that consumes the pairs EAGERLY —
     * e.g. closes them into components, whose output is checkpoint-backed —
     * releases as soon as that action completes; one that drops the thunk
-    * leaves the snapshot to Spark's context cleaner. */
+    * leaves the snapshot to go once the pairs frame is garbage. */
   def candidatePairsOfSignatures(sigs: DataFrame, numHashes: Int = 64,
                                  bands: Int = 16, threshold: Double = 0.5,
                                  maxBucket: Int = 1000): (DataFrame, () => Unit) = {
@@ -261,8 +261,8 @@ object Dedup {
     *
     * Eager: building the frame runs one job, the fingerprint checkpoint.
     * Both sides of the band join read the fingerprints, so they are a
-    * [[Snapshot]], like the MinHash signatures; its blocks go with the
-    * returned frame (Spark's context cleaner), as
+    * [[Snapshot]], like the MinHash signatures; it goes with the
+    * returned frame once that is garbage, as
     * [[minhashCandidatePairs]]' signatures do. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3,
@@ -778,8 +778,8 @@ object Dedup {
       .select(col("cluster_id")).distinct())
     // touched is affected-cluster-sized (batch-proportional). The result
     // frames below still read these snapshots lazily (through scopedU inside
-    // rec, and the untouched anti join), so they are left to the context
-    // cleaner rather than released here.
+    // rec, and the untouched anti join), so they go once those frames are
+    // garbage (see Snapshot) rather than being released here.
     val touched = Snapshot.take(assignment
       .join(broadcast(affected), Seq("cluster_id"), "left_semi")
       .select(col("id").cast("long").as("id"),

@@ -120,7 +120,8 @@ object Packing {
     * Output: (id, n_tokens, seq_id, seq_offset, spans), ordered by id, plus
     * the thunk releasing the snapshot. Call it after the last action on the
     * frame; the frame then fails loudly if read again. A caller that drops
-    * the thunk leaves the snapshot to Spark's context cleaner. */
+    * the thunk leaves the snapshot to go once the frame is garbage (see
+    * [[Snapshot]]). */
   def packSequences(docs: DataFrame, idCol: String, cntCol: String,
                     capacity: Long, bucketTarget: Int = 4096,
                     basePos: Long = 0L): (DataFrame, () => Unit) = {
@@ -182,7 +183,7 @@ object Packing {
     * a single-partition window, so ordering 10^10 sequences costs a
     * TeraSort, not a one-task sort. Adds `posAlias` (0-based long). Eager
     * like [[Sorts.globalOrderIndex]]; its snapshot goes with the returned
-    * frame (Spark's context cleaner). */
+    * frame once that is garbage. */
   def epochOrder(seqs: DataFrame, idCol: String, epoch: Long,
                  posAlias: String = "shuffle_pos"): DataFrame = {
     val keyed = seqs.withColumn("__shuffle_key",

@@ -1,6 +1,9 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one way graft materializes a frame it reads more than once: an
   * eager checkpoint that truncates the plan to a `LogicalRDD` leaf, owned
@@ -18,27 +21,42 @@ import org.apache.spark.sql.DataFrame
   *  - '''Storage.''' A RELIABLE `checkpoint` when the context has a
   *    checkpoint dir (`SparkContext.setCheckpointDir`): files on the DFS
   *    that survive executor loss. Otherwise `localCheckpoint`:
-  *    executor-local blocks, no DFS round trip, and losing an executor
-  *    fails the query (a retry recomputes from source).
+  *    executor-local blocks (memory, spilling to disk), no DFS round trip,
+  *    and losing an executor fails the query (a retry recomputes from
+  *    source).
   *  - '''Released means unusable.''' `release` drops the local snapshot's
-  *    blocks, and a frame that still reads them then fails loudly; it never
-  *    recomputes. A reliable snapshot's files stay until the context
-  *    cleaner removes them (`spark.cleaner.referenceTracking.cleanCheckpoints`).
-  *  - A snapshot whose release is never called is freed by Spark's context
-  *    cleaner once the frame is garbage. */
+  *    blocks, or deletes the reliable snapshot's files, and a frame that
+  *    still reads them then fails loudly; it never recomputes. Releasing a
+  *    frame `take` did not return throws.
+  *  - A snapshot whose release is never called goes once its frame is
+  *    garbage: Spark's context cleaner drops a local snapshot's blocks, and
+  *    a reliable snapshot's files are deleted here (Spark's cleaner keeps
+  *    them unless `spark.cleaner.referenceTracking.cleanCheckpoints` is on). */
 private[graft] object Snapshot {
 
-  /** `df` materialized now, behind a plan-truncating `LogicalRDD` leaf. */
-  def take(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
+  /** Deletes the files of reliable snapshots whose RDD became unreachable. */
+  private val unreleased = java.lang.ref.Cleaner.create()
 
-  /** Drops the blocks under a [[take]]n frame, waiting until they are gone.
+  /** `df` materialized now, behind a plan-truncating `LogicalRDD` leaf. */
+  def take(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    if (sc.getCheckpointDir.isEmpty) df.localCheckpoint(true)
+    else {
+      val snap = df.checkpoint(true)
+      val rdd = leaf(snap).rdd
+      val conf = sc.hadoopConfiguration
+      rdd.getCheckpointFile.foreach(p => unreleased.register(rdd, () => delete(p, conf)))
+      snap
+    }
+  }
+
+  /** Drops the storage under a [[take]]n frame, waiting until it is gone.
     * (Dataset.unpersist goes through the CacheManager and does not know
-    * about checkpoint RDDs.) A frame that is not a snapshot is left as is. */
-  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = true)
-    case _ => ()
+    * about checkpoint RDDs.) */
+  def release(df: DataFrame): Unit = {
+    val rdd = leaf(df).rdd
+    rdd.unpersist(blocking = true)
+    rdd.getCheckpointFile.foreach(delete(_, df.sparkSession.sparkContext.hadoopConfiguration))
   }
 
   /** `body` over a snapshot of `df`, released when `body` returns or throws:
@@ -46,5 +64,16 @@ private[graft] object Snapshot {
   def scoped[T](df: DataFrame)(body: DataFrame => T): T = {
     val snap = take(df)
     try body(snap) finally release(snap)
+  }
+
+  private def leaf(df: DataFrame): LogicalRDD = df.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr
+    case p => throw new IllegalArgumentException(
+      s"not a frame Snapshot.take returned (its plan is a ${p.nodeName}, not a LogicalRDD)")
+  }
+
+  private def delete(file: String, conf: Configuration): Unit = {
+    val p = new Path(file)
+    p.getFileSystem(conf).delete(p, true)
   }
 }

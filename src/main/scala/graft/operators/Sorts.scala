@@ -91,8 +91,8 @@ object Sorts {
     * is built (one job, the input rows once). Returns the input columns
     * plus `posAlias` (0-based long), and the thunk releasing the snapshot:
     * call it after the last action on the frame, which then fails loudly if
-    * read again. A caller that drops the thunk leaves the snapshot to
-    * Spark's context cleaner. */
+    * read again. A caller that drops the thunk leaves the snapshot to go
+    * once the frame is garbage (see [[Snapshot]]). */
   def globalOrderIndex(df: DataFrame, orderCols: Seq[Column],
                        posAlias: String = "pos",
                        numParts: Int = 0): (DataFrame, () => Unit) = {

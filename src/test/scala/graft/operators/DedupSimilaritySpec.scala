@@ -491,16 +491,34 @@ class DedupSimilaritySpec extends SparkSpec {
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "suite session unexpectedly has a checkpoint dir")
     sc.setCheckpointDir(dir)
+    // the Dataset actions the CC runs, by name: a reliable snapshot is a
+    // "checkpoint" action, an executor-local one a "localCheckpoint"
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit = actions.add(funcName)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("s", "d")
       val got = Dedup.connectedComponents(edges, "s", "d")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
-      // the durable path actually wrote checkpoint files
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      // listener events arrive in order: the result's collect comes last
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!actions.contains("collect") && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(actions.contains("collect"), s"no collect event among $actions")
+      // the durable path checkpointed, never locally
+      assert(actions.contains("checkpoint") && !actions.contains("localCheckpoint"),
+        s"no reliable checkpoint despite configured dir: $actions")
+      // and the CC released what it wrote: no checkpoint file is left behind
+      val left = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(wrote > 0, "no reliable checkpoint files written despite configured dir")
+      assert(left == 0, s"$left checkpoint files left under the configured dir")
     } finally {
+      spark.listenerManager.unregister(listener)
       // SparkContext has no unset API; empty string disables the dir again
       val f = sc.getClass.getDeclaredField("checkpointDir")
       f.setAccessible(true)

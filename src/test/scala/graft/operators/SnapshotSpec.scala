@@ -28,24 +28,69 @@ class SnapshotSpec extends SparkSpec {
     } finally Snapshot.release(snap)
   }
 
-  test("with a checkpoint dir, take writes a reliable checkpoint under it") {
+  /** `body` with `dir` as the context's checkpoint dir, unset afterwards. */
+  private def withCheckpointDir[T](body: String => T): T = {
     val dir = java.nio.file.Files.createTempDirectory("snapshot_chk").toString
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "suite session unexpectedly has a checkpoint dir")
     sc.setCheckpointDir(dir)
-    try {
-      val snap = Snapshot.take(frame)
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(files > 0, "no checkpoint files written under the configured dir")
-      assert(snap.count() == 200)
-      Snapshot.release(snap)
-    } finally {
+    try body(dir) finally {
       // SparkContext has no unset API
       val f = sc.getClass.getDeclaredField("checkpointDir")
       f.setAccessible(true)
       f.set(sc, None)
     }
+  }
+
+  private def filesUnder(dir: String): Long =
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(java.nio.file.Files.isRegularFile(_)).count()
+
+  private def checkpointFile(snap: org.apache.spark.sql.DataFrame): String =
+    snap.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.getCheckpointFile
+      .getOrElse(fail("a reliable snapshot without a checkpoint file"))
+
+  test("with a checkpoint dir, take writes under it and release deletes what it wrote") {
+    withCheckpointDir { dir =>
+      val snap = Snapshot.take(frame)
+      assert(checkpointFile(snap).contains(new java.io.File(dir).getName),
+        s"${checkpointFile(snap)} is not under $dir")
+      assert(filesUnder(dir) > 0, "no checkpoint files written under the configured dir")
+      assert(snap.count() == 200)
+      Snapshot.release(snap)
+      assert(filesUnder(dir) == 0, "release left the reliable snapshot's files behind")
+      val e = intercept[org.apache.spark.SparkException](snap.collect())
+      assert(e.getMessage.contains(checkpointFile(snap).stripPrefix("file:")), e.getMessage)
+    }
+  }
+
+  test("with a checkpoint dir, an unreleased snapshot's files go once its frame is garbage") {
+    withCheckpointDir { dir =>
+      // the frame and its RDD are unreachable once this returns
+      def unreleased(): String = {
+        val snap = Snapshot.take(frame)
+        assert(snap.count() == 200)
+        checkpointFile(snap)
+      }
+      val file = new org.apache.hadoop.fs.Path(unreleased())
+      val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.exists(file))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (fs.exists(file) && System.nanoTime() < deadline) {
+        System.gc()
+        Thread.sleep(100)
+      }
+      assert(!fs.exists(file), s"$file outlived its garbage frame")
+    }
+  }
+
+  test("release of a frame take did not return throws") {
+    val snap = Snapshot.take(frame)
+    try {
+      for (df <- Seq(frame, snap.select(col("id"))))
+        intercept[IllegalArgumentException](Snapshot.release(df))
+      assert(snap.count() == 200, "a refused release dropped the snapshot")
+    } finally Snapshot.release(snap)
   }
 
   test("release frees the snapshot's RDD from getPersistentRDDs") {
