@@ -213,7 +213,10 @@ object Queries {
   /** MinHash-LSH near-dup candidates. threshold 0.5 matches the (16 bands x
     * 4 rows) s-curve midpoint (j ≈ 0.55); the md5 token hash makes the whole
     * sketch DuckDB-reproducible, so this query is hash-checked end to end.
-    * Eager: building the frame runs one job, the signature checkpoint
+    * Eager: building the frame runs two jobs, the map-only signature
+    * snapshot and the collect that bands it on the driver, and releases the
+    * snapshot before it returns; above the driver bound, one job, and the
+    * snapshot goes once the frame is garbage
     * ([[Dedup.candidatePairsOfSignatures]]). */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.minhashCandidatePairs(t(spark, dir).documents, "doc_id", "text",
@@ -227,13 +230,17 @@ object Queries {
     * runs — dropping one side of each PAIR over-deletes on chains a–b, b–c.
     * The edge set reuses q25's DuckDB-replayable md5 minhash, so the whole
     * graph — and therefore the clustering — is hash-checked end to end
-    * (oracle: recursive-CTE min-label closure over the same edges). */
+    * (oracle: recursive-CTE min-label closure over the same edges).
+    * Eager: below the driver bound, building the frame runs two jobs (the
+    * signature snapshot and its collect); the pairs come back as a local
+    * relation, which the CC closes on the driver with no further job. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val (pairs, release) = Dedup.candidatePairsOfSignatures(
       Dedup.minhashSignatures(t(spark, dir).documents, "doc_id", "text",
         numHashes = 64, tokenHash = md5Hash32),
       numHashes = 64, bands = 16, threshold = 0.5)
-    // the CC consumes the pairs eagerly into a materialized frame
+    // the CC consumes the pairs eagerly into a materialized frame (the
+    // release is a no-op when the pairs were banded on the driver)
     val cc = try Dedup.connectedComponents(pairs, "id_a", "id_b") finally release()
     val sz = cc.groupBy("component").agg(count(lit(1)).as("cluster_size"))
     cc.join(sz, Seq("component"))

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   *        → language-ID annotate → partitioned write
   *
   * Scale shape: per-document stages (scrub, scoring, repetition) shuffle on
-  * (doc, gram) with map-side combine; dedup adds two content shuffles
-  * (exact-dedup digest groupBy, MinHash signature groupBy) + the near-dup
-  * candidate join (inverted-index via LSH bands, linear in candidates); the
+  * (doc, gram) with map-side combine; dedup adds one content shuffle
+  * (the exact-dedup digest groupBy; the MinHash signature is map-only) + the
+  * near-dup candidate step (LSH band buckets, linear in candidates, banded
+  * on the driver while the signatures fit its heap); the
   * final write repartitions by the partition column so each output partition
   * is written by one task.
   */
@@ -224,8 +225,9 @@ object CorpusPipeline {
     *    survivor frame (with toks) backs the sketch, the survivor join and
     *    the chunker — a [[Snapshot]] for the duration of the write,
     *    released in a finally, like [[Packing.packSequences]]' (id, cnt)
-    *    snapshot. The sketch's signature snapshot is released the moment
-    *    the component closure — checkpoint-backed — returns.
+    *    snapshot. The sketch's signature snapshot is released before the
+    *    candidate step returns when it bands on the driver, else the moment
+    *    the component closure — materialized — returns.
     *  - Cluster dedup, not pair dedup: dropping one side of each PAIR
     *    over-deletes on chains a-b, b-c; components keep exactly one
     *    canonical doc per near-dup cluster (min id — deterministic).

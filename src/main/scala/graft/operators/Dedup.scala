@@ -1,20 +1,23 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
+import graft.plans.TextExpressions.{minhash_signature, token_count}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication operators for large-scale corpus pipelines.
   *
   * Four tiers, all shuffle-minimal and expression-only (no UDFs):
   *  - exact:   hash-groupBy on content digest — one shuffle on the digest.
-  *  - minhash: shingle → 64-perm MinHash signature (one codegen'd pass) →
-  *             LSH banding → bucket self-join for candidates. Only documents
-  *             sharing a band bucket ever meet, so the join is linear-ish in
-  *             candidates, not O(n²) — the property that survives 100 TB.
+  *  - minhash: shingle → 64-perm MinHash signature (one codegen'd pass,
+  *             map-only) → LSH banding → bucket self-join for candidates,
+  *             finished on the driver while the signatures fit its heap.
+  *             Only documents sharing a band bucket ever meet, so the join
+  *             is linear-ish in candidates, not O(n²).
   *  - simhash: 64-bit sign-of-sums fingerprint; near-dups = small Hamming
   *             distance within identical high-bit prefix buckets.
   *  - exact n-gram Jaccard: shingle-explode + equi-join + group-count (for
@@ -62,7 +65,6 @@ object Dedup {
   }
 
   /** Deterministic MinHash permutation parameters (LCG, fixed seed). */
-  private val MinhashPrime = 4294967311L // smallest prime > 2^32
   private[graft] def permParams(numHashes: Int): (Seq[Long], Seq[Long]) = {
     var state = 88172645463325252L
     def next(): Long = { // xorshift64 — deterministic, public-domain algorithm
@@ -76,14 +78,15 @@ object Dedup {
   /** MinHash signatures over word `n`-gram shingles:
     * sig[i] = min over shingles of (a_i * h32(shingle) + b_i) mod p.
     *
-    * Shape: explode shingle hashes once, then ONE hash aggregation with 64
-    * `min` columns. Map-side partial aggregation reduces each task's stream
-    * to 64 longs per doc before the shuffle — at 100 TB the shuffle carries
-    * ~512 B/doc regardless of doc length. (A single nested-array expression
-    * would recompute the shingle set per permutation after projection
-    * collapse — measured pathological.)
+    * Shape: map-only. One native expression per row
+    * ([[graft.plans.MinhashSignature]]) takes the row's distinct shingle
+    * hashes and keeps 64 running minima, so the signature is finished in
+    * the task that reads the row: no explode, no exchange, no aggregation.
     *
-    * Docs with no shingles (shorter than `shingleN` words) are dropped.
+    * Docs with no shingles (null, or shorter than `shingleN` words) are
+    * dropped. Precondition: `idCol` is unique per row. The signature is
+    * per row, so two rows sharing an id stay two rows (every caller passes
+    * a key: `documents.doc_id`, the exact-deduped corpus' `doc_id`).
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, shingleN: Int = 3,
@@ -91,9 +94,12 @@ object Dedup {
     // Tokenize ONCE into a named column before shingling: passing the token
     // expression straight into the shingle transform re-tokenizes the text
     // per shingle index (the q25 295 s pathology; see shinglesOfTokens).
-    minhashSignaturesOfTokens(
-      df.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks")),
-      "id", "__toks", numHashes, shingleN, tokenHash)
+    // The short-doc filter counts tokens without splitting (token_count ≡
+    // size(tokens(_))); a filter on the token array would be pushed below
+    // the projection and split every text twice.
+    signatures(df.filter(token_count(col(textCol)) >= shingleN)
+        .select(col(idCol).as("id"), tokens(col(textCol)).as("__toks")),
+      numHashes, shingleN, tokenHash)
 
   /** [[minhashSignatures]] over an ALREADY-TOKENIZED corpus — the composed-
     * pipeline entry point: a chain that has materialized `tokens(text)` once
@@ -102,21 +108,18 @@ object Dedup {
     * attribute, not a computed expression (see shinglesOfTokens). */
   def minhashSignaturesOfTokens(df: DataFrame, idCol: String, toksCol: String,
                                 numHashes: Int = 64, shingleN: Int = 3,
-                                tokenHash: Column => Column = tokenHash32): DataFrame = {
+                                tokenHash: Column => Column = tokenHash32): DataFrame =
+    signatures(df.select(col(idCol).as("id"), col(toksCol).as("__toks"))
+        .filter(size(col("__toks")) >= shingleN),
+      numHashes, shingleN, tokenHash)
+
+  /** (id, sig) of `toks`' (id, __toks) rows, every row having at least
+    * `shingleN` tokens. */
+  private def signatures(toks: DataFrame, numHashes: Int, shingleN: Int,
+                         tokenHash: Column => Column): DataFrame = {
     val (as, bs) = permParams(numHashes)
-    // spread: the shingle explode + 64-way min aggregation's map side is
-    // the sketch's whole cost — per-row work far above its bytes (see
-    // Parallelism.spread; no-op at real scale)
-    val hs = Parallelism.spread(
-        df.select(col(idCol).as("id"), col(toksCol).as("__toks")), "id")
-      .select(col("id"),
-        explode(array_distinct(shinglesOfTokens(col("__toks"), shingleN))).as("s"))
-      .select(col("id"), tokenHash(col("s")).as("h"))
-    val aggs = (0 until numHashes).map { i =>
-      min(pmod(lit(as(i)) * col("h") + lit(bs(i)), lit(MinhashPrime))).as(s"__m$i")
-    }
-    hs.groupBy("id").agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"))
+    val hashes = transform(array_distinct(shinglesOfTokens(col("__toks"), shingleN)), tokenHash)
+    toks.select(col("id"), minhash_signature(hashes, as, bs).as("sig"))
   }
 
   /** LSH band buckets for a signature: array of (band, bucket-hash). The
@@ -142,9 +145,10 @@ object Dedup {
     * far below the midpoint is accepted but logs a warning: such pairs
     * rarely ever become candidates.
     *
-    * Eager: the signatures are checkpointed while the frame is built (one
-    * job; see [[candidatePairsOfSignatures]]). This entry drops the release
-    * thunk, so the snapshot goes once the pairs frame is garbage (see
+    * Eager, like [[candidatePairsOfSignatures]]: below the driver bound the
+    * frame is built by two jobs and the signature snapshot is released
+    * before this returns; above it, one job, and the snapshot goes once the
+    * pairs frame is garbage (this entry drops the release thunk; see
     * [[Snapshot]]).
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
@@ -161,14 +165,40 @@ object Dedup {
     * entries. Public for callers that bring their own sketch (and for the
     * synthetic-scale soak, which drives the bucket-cap skew guard with
     * adversarial signature sets no real tokenizer run could shape
-    * precisely). Returns the pairs plus a thunk releasing the signature
-    * [[Snapshot]] (~520 B/doc). A caller that consumes the pairs EAGERLY —
-    * e.g. closes them into components, whose output is checkpoint-backed —
-    * releases as soon as that action completes; one that drops the thunk
-    * leaves the snapshot to go once the pairs frame is garbage. */
+    * precisely). Returns the pairs plus a thunk releasing what the pairs
+    * frame still reads.
+    *
+    * The signatures are snapshotted first (one job: the sketch runs once).
+    * Then one of two paths, one result (spec-gated):
+    *
+    * DRIVER path — at most `localBound` snapshot rows (default
+    * [[localBandingBound]], derived from the driver heap) and at most
+    * `localBound` × 16 candidate pairs (Σ C(m,2) over the kept buckets,
+    * the same heap budget at [[localBandingPairBytes]] per pair): one more
+    * job collects (id, sig, band bucket ids) from the snapshot's blocks.
+    * The bucket ids are computed by the same [[lshBuckets]] expression, so
+    * bucket identity (hash collisions included) is the distributed path's.
+    * The driver groups rows by (band, bucket), keeps buckets of 2 to
+    * `maxBucket` rows, pairs their members, drops repeats, scores the
+    * 64-way agreement and returns a local relation. The snapshot is
+    * released before returning and the thunk does nothing: a caller that
+    * drops it leaves nothing behind. Rows the driver could not replay
+    * exactly — a null or repeated id, a null or short signature, a null
+    * signature entry, a non-bigint id — send the call down the distributed
+    * path instead.
+    *
+    * DISTRIBUTED path — above either bound, or `localBound = 0`: band-bucket
+    * explode, bucket sizes, the bucket self-join, its `distinct` and two
+    * signature re-joins over the snapshot. The thunk releases the
+    * signature [[Snapshot]] (~520 B/doc); a caller that consumes the pairs
+    * EAGERLY — e.g. closes them into components, whose output is
+    * materialized — releases as soon as that action completes; one that
+    * drops the thunk leaves the snapshot to go once the pairs frame is
+    * garbage. A measurement of that plan passes `localBound = 0`. */
   def candidatePairsOfSignatures(sigs: DataFrame, numHashes: Int = 64,
                                  bands: Int = 16, threshold: Double = 0.5,
-                                 maxBucket: Int = 1000): (DataFrame, () => Unit) = {
+                                 maxBucket: Int = 1000,
+                                 localBound: Long = localBandingBound): (DataFrame, () => Unit) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     // Parameter sanity: the (bands, rows) s-curve should put its steep section
@@ -183,11 +213,141 @@ object Dedup {
           f"(bands=$bands, rows=$r) s-curve midpoint $recall50%.2f — pairs near " +
           f"the threshold will rarely become candidates; re-band (more bands, " +
           f"fewer rows) or raise the threshold")
-    // The signature table is referenced four times in this plan (both sides
-    // of the bucket join, both signature joins); checkpoint it so the
-    // shingle explosion + 64-way min aggregation runs once. ~520 B/doc — at
-    // 100 TB input this is n_docs * 0.5 KB.
+    // The signature table is referenced four times in the distributed plan
+    // (both sides of the bucket join, both signature joins) and collected
+    // once by the driver path; snapshot it so the sketch runs once.
+    // ~520 B/doc — at 100 TB input this is n_docs * 0.5 KB.
     val snap = Snapshot.take(sigs)
+    val onDriver =
+      if (localBound > 0) bandOnDriver(snap, numHashes, bands, threshold, maxBucket, localBound)
+      else None
+    onDriver match {
+      case Some(pairs) =>
+        Snapshot.release(snap)
+        (pairs, () => ())
+      case None =>
+        (bandDistributed(snap, numHashes, bands, threshold, maxBucket),
+          () => Snapshot.release(snap))
+    }
+  }
+
+  /** Driver bytes per collected signature row of [[candidatePairsOfSignatures]]'
+    * driver path at the default 64 hashes / 16 bands: 82 longs (id, a
+    * replay flag, 64 signature entries, 16 bucket ids) = 656 B in the
+    * collected array, as much again in the row's serialized task result
+    * until the collect returns, and 4 B per band of bucket-member index
+    * (64 B), rounded up to 2 KiB for the per-band sort copies and slack. */
+  private val localBandingRowBytes = 2048L
+
+  /** Driver bytes per candidate pair of that path: 8 B packed in the pair
+    * array, 8 B in its sorted copy, and ~100 B for its result row (a row
+    * object, a three-slot value array, three boxed values). */
+  private val localBandingPairBytes = 128L
+
+  /** Default `localBound` of [[candidatePairsOfSignatures]]: the largest
+    * signature snapshot (in rows) banded on the driver. Derived from the
+    * driver's max heap like [[localComponentsBound]], never a host-tuned
+    * constant: the path may take 1/8 of the heap at
+    * [[localBandingRowBytes]] per row, i.e. 2^16 rows per GiB, and the
+    * candidate pairs share that budget (`localBound` × 2 KiB / 128 B =
+    * 16 pairs per row bound). */
+  def localBandingBound: Long =
+    math.min(Runtime.getRuntime.maxMemory / 8 / localBandingRowBytes, Int.MaxValue / 2)
+
+  /** The driver path of [[candidatePairsOfSignatures]], or None when the
+    * snapshot exceeds `bound` rows, its candidates exceed the pair budget,
+    * or a row cannot be replayed exactly (see there). */
+  private def bandOnDriver(snap: DataFrame, numHashes: Int, bands: Int,
+                           threshold: Double, maxBucket: Int,
+                           bound: Long): Option[DataFrame] = {
+    val r = numHashes / bands
+    val sig = col("sig")
+    val nullEntry = (snap.schema("id").dataType, snap.schema("sig").dataType) match {
+      case (LongType, ArrayType(LongType, true)) => exists(sig, _.isNull)
+      case (LongType, ArrayType(LongType, false)) => lit(false)
+      case _ => return None
+    }
+    val unreplayable = col("id").isNull || sig.isNull || size(sig) < numHashes || nullEntry
+    val buckets = lshBuckets(sig, bands, r)
+    val w = 2 + numHashes + bands
+    val rows = Seq(coalesce(col("id"), lit(0L)), unreplayable.cast("long")) ++
+      (1 to numHashes).map(i => coalesce(try_element_at(sig, lit(i)), lit(0L))) ++
+      (0 until bands).map(b => buckets.getItem(b).getField("bucket"))
+    val pairBudget = bound * localBandingRowBytes / localBandingPairBytes
+    for {
+      flat <- collectLongs(snap.select(rows: _*), bound)
+      n = flat.length / w
+      ids = Array.tabulate(n)(i => flat(i * w))
+      if (0 until n).forall(i => flat(i * w + 1) == 0L)
+      if sortedUnique(ids.clone()).length == n
+      groups <- keptBuckets(flat, n, w, 2 + numHashes, bands, maxBucket, pairBudget)
+    } yield {
+      // every pair of every kept bucket, smaller id first, packed as two
+      // row indices; sorting drops the repeats a pair sharing several
+      // bands produces
+      val packed = new scala.collection.mutable.ArrayBuilder.ofLong
+      for (g <- groups; x <- g.indices; y <- x + 1 until g.length) {
+        val (p, q) = if (ids(g(x)) < ids(g(y))) (g(x), g(y)) else (g(y), g(x))
+        packed += (p.toLong << 32) | q
+      }
+      val out = new java.util.ArrayList[Row]()
+      val cand = sortedUnique(packed.result())
+      for (pq <- cand) {
+        val (p, q) = ((pq >>> 32).toInt, pq.toInt)
+        // the distributed path's statically unrolled agreement count
+        var agree = 0
+        var i = 0
+        while (i < numHashes) {
+          if (flat(p * w + 2 + i) == flat(q * w + 2 + i)) agree += 1
+          i += 1
+        }
+        val est = agree.toDouble / numHashes
+        if (est >= threshold) out.add(Row(ids(p), ids(q), est))
+      }
+      snap.sparkSession.createDataFrame(out, StructType(Seq(
+        StructField("id_a", LongType), StructField("id_b", LongType),
+        StructField("est_jaccard", DoubleType))))
+    }
+  }
+
+  /** The member row indices of every (band, bucket) of 2 to `maxBucket`
+    * rows, the bucket id of row i in band b being `flat(i * w + off + b)`;
+    * None once the kept buckets' Σ C(m,2) exceeds `pairBudget`. */
+  private def keptBuckets(flat: Array[Long], n: Int, w: Int, off: Int, bands: Int,
+                          maxBucket: Int, pairBudget: Long): Option[Seq[Array[Int]]] = {
+    val groups = Seq.newBuilder[Array[Int]]
+    var pairs = 0L
+    var b = 0
+    while (b < bands && pairs <= pairBudget) {
+      val key = Array.tabulate(n)(i => flat(i * w + off + b))
+      val sorted = key.clone()
+      java.util.Arrays.sort(sorted)
+      val kept = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuilder.ofInt]()
+      var j = 0
+      while (j < n) {
+        var k = j
+        while (k < n && sorted(k) == sorted(j)) k += 1
+        val m = (k - j).toLong
+        if (m >= 2 && m <= maxBucket) {
+          kept(sorted(j)) = new scala.collection.mutable.ArrayBuilder.ofInt
+          pairs += m * (m - 1) / 2
+        }
+        j = k
+      }
+      if (kept.nonEmpty) {
+        for (i <- 0 until n) kept.get(key(i)).foreach(_ += i)
+        kept.valuesIterator.foreach(g => groups += g.result())
+      }
+      b += 1
+    }
+    if (pairs > pairBudget) None else Some(groups.result())
+  }
+
+  /** The distributed path of [[candidatePairsOfSignatures]] over the
+    * signature snapshot. */
+  private def bandDistributed(snap: DataFrame, numHashes: Int, bands: Int,
+                              threshold: Double, maxBucket: Int): DataFrame = {
+    val r = numHashes / bands
     // Explode band buckets; kill skewed buckets before the self-join.
     val bucketed = snap
       .select(col("id"), col("sig"), explode(lshBuckets(col("sig"), bands, r)).as("bb"))
@@ -208,13 +368,12 @@ object Dedup {
       when(element_at(col("sig_a"), i + 1) === element_at(col("sig_b"), i + 1), 1)
         .otherwise(0)
     }.reduce(_ + _)
-    val out = pairs
+    pairs
       .join(snap.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(snap.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         (agree.cast("double") / numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-    (out, () => Snapshot.release(snap))
   }
 
   /** Hash-word providers for `simhash`: token → fixed-width hash words whose
@@ -329,6 +488,11 @@ object Dedup {
     * row count then picks one of two paths (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC 2014: iterate only while
     * the graph is too big for one machine).
+    *
+    * An edge frame that plans to a local relation (rows already on the
+    * driver, e.g. [[candidatePairsOfSignatures]]' driver-banded pairs) of
+    * at most `localBound` / 2 edges is closed by union-find straight from
+    * its rows: no snapshot and no job.
     *
     * LOCAL path — snapshot rows ≤ `localBound` (default
     * [[localComponentsBound]], derived from the driver heap): the rows are
@@ -457,6 +621,15 @@ object Dedup {
           "(casting would null out unparseable ids and silently drop edges)")
     }
     val sym = edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
+    val nonLoops = sym.filter(col("s") =!= col("d"))
+    // Edges already on the driver (a local relation, e.g. the driver-banded
+    // minhash pairs): union-find straight over their rows, no job. The
+    // bound counts symmetrized rows, two per edge.
+    if (localBound > 0 && nonLoops.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+      collectLongs(nonLoops, localBound / 2) match {
+        case Some(flat) => return (componentsFrame(edges.sparkSession, flat.clone(), Seq(flat)), 0)
+        case None =>
+      }
     // CHECKPOINT (not persist) the symmetrized edges: they feed `und` twice
     // (directly and via the self-edge node list), and without materializing
     // each copy re-runs the whole upstream edge computation — for q74 that
@@ -474,8 +647,7 @@ object Dedup {
     // paid twice per build (guide §2.3: don't compute what you throw
     // away). Same row multiset, checkpointed identically.
     val real = Snapshot.take(
-      sym.filter(col("s") =!= col("d"))
-        .select(explode(array(
+      nonLoops.select(explode(array(
           struct(col("s"), col("d")),
           struct(col("d").as("s"), col("s").as("d")))).as("e"))
         .select(col("e.s").as("s"), col("e.d").as("d")))
@@ -549,9 +721,7 @@ object Dedup {
 
   /** The local path of [[connectedComponentsWithRounds]] over the
     * symmetrized (s, d) snapshot rows: one primitive long array per
-    * partition is collected, the distinct node ids are indexed by sorting,
-    * and union-find (path halving) always unites toward the smaller root.
-    * Indices follow id order, so every root is its component's min id. */
+    * partition is collected and closed by [[componentsFrame]]. */
   private def localComponents(spark: SparkSession,
                               snapshot: RDD[InternalRow]): DataFrame = {
     val parts = snapshot.mapPartitions { rows =>
@@ -563,8 +733,17 @@ object Dedup {
     val ids = new Array[Long](parts.map(_.length / 2).sum)
     var n = 0
     for (p <- parts; j <- p.indices by 2) { ids(n) = p(j); n += 1 }
+    componentsFrame(spark, ids, parts.toSeq)
+  }
+
+  /** (node, component) as a local relation: `ids` (every node at least
+    * once; sorted in place) are indexed by sorting, and union-find over the
+    * flattened (s, d) `edges` labels each node with its component's min id
+    * ([[componentMins]]). */
+  private def componentsFrame(spark: SparkSession, ids: Array[Long],
+                              edges: Seq[Array[Long]]): DataFrame = {
     val nodes = sortedUnique(ids)
-    val comp = componentMins(nodes, parts.toSeq)
+    val comp = componentMins(nodes, edges)
     val out = new java.util.ArrayList[Row](nodes.length)
     for (i <- nodes.indices) out.add(Row(nodes(i), comp(i)))
     spark.createDataFrame(out, StructType(Seq(
@@ -817,7 +996,7 @@ object Dedup {
       b.result()
     }
     df.queryExecution.executedPlan match {
-      case l: org.apache.spark.sql.execution.LocalTableScanExec =>
+      case l: LocalTableScanExec =>
         Some(flat(l.executeCollect().iterator, bound)).filter(_.length / w <= bound)
       case _ =>
         val rdd = df.queryExecution.toRdd

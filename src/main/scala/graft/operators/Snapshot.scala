@@ -18,6 +18,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * frame `take` returns.
   *
   *  - '''Eager.''' `take` runs one job while the caller builds its frame.
+  *    The job is named after the caller (`Snapshot.take at Dedup.scala:190`,
+  *    the first stack frame outside this object), so a stage log tells one
+  *    site's snapshots from another's.
   *  - '''Storage.''' A RELIABLE `checkpoint` when the context has a
   *    checkpoint dir (`SparkContext.setCheckpointDir`): files on the DFS
   *    that survive executor loss. Otherwise `localCheckpoint`:
@@ -40,15 +43,30 @@ private[graft] object Snapshot {
   /** `df` materialized now, behind a plan-truncating `LogicalRDD` leaf. */
   def take(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty) df.localCheckpoint(true)
-    else {
-      val snap = df.checkpoint(true)
-      val rdd = leaf(snap).rdd
-      val conf = sc.hadoopConfiguration
-      rdd.getCheckpointFile.foreach(p => unreleased.register(rdd, () => delete(p, conf)))
-      snap
-    }
+    val prior = sc.getLocalProperty(ShortCallSite)
+    sc.setCallSite(s"Snapshot.take at $caller")
+    try {
+      if (sc.getCheckpointDir.isEmpty) df.localCheckpoint(true)
+      else {
+        val snap = df.checkpoint(true)
+        val rdd = leaf(snap).rdd
+        val conf = sc.hadoopConfiguration
+        rdd.getCheckpointFile.foreach(p => unreleased.register(rdd, () => delete(p, conf)))
+        snap
+      }
+    } finally sc.setLocalProperty(ShortCallSite, prior)
   }
+
+  /** The local property `SparkContext.setCallSite` sets (Spark's
+    * `CallSite.SHORT_FORM`, not public); null removes it. */
+  private val ShortCallSite = "callSite.short"
+
+  /** `File.scala:line` of the first stack frame outside this object. */
+  private def caller: String =
+    Thread.currentThread.getStackTrace.iterator
+      .drop(1) // Thread.getStackTrace itself
+      .find(!_.getClassName.startsWith(getClass.getName))
+      .fold("unknown")(f => s"${f.getFileName}:${f.getLineNumber}")
 
   /** Drops the storage under a [[take]]n frame, waiting until it is gone.
     * (Dataset.unpersist goes through the CacheManager and does not know

@@ -4,8 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native token counting (the custom-`Expression` extension tier, the
@@ -140,6 +141,78 @@ case class NormalizeText(child: Expression, form: String) extends UnaryExpressio
     copy(child = newChild)
 }
 
+/** Static host for the MinHash kernel (no companion class, so generated
+  * Java calls `graft.plans.Minhash.signature(...)` directly). */
+object Minhash {
+  /** The smallest prime above 2^32: the permutation modulus. */
+  val Prime = 4294967311L
+
+  /** sig[i] = min over the non-null `hashes` h of pmod(a(i)·h + b(i), Prime),
+    * or null when no hash is non-null. The arithmetic is exact: it throws
+    * on long overflow as ANSI `*`/`+` do, which 32-bit hashes and the
+    * parameters of `Dedup.permParams` never reach, and `floorMod` by a
+    * positive modulus equals Spark's `pmod`. */
+  def signature(hashes: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
+    val k = a.length
+    val out = Array.fill(k)(Long.MaxValue)
+    var any = false
+    var j = 0
+    while (j < hashes.numElements()) {
+      if (!hashes.isNullAt(j)) {
+        val h = hashes.getLong(j)
+        any = true
+        var i = 0
+        while (i < k) {
+          val v = java.lang.Math.floorMod(
+            java.lang.Math.addExact(java.lang.Math.multiplyExact(a(i), h), b(i)), Prime)
+          if (v < out(i)) out(i) = v
+          i += 1
+        }
+      }
+      j += 1
+    }
+    if (any) ArrayData.toArrayData(out) else null
+  }
+}
+
+/** All MinHash minima of one row in ONE codegen'd expression: `child` is
+  * the row's array of shingle hashes, evaluated once, and the expression
+  * keeps `a.length` running minima of pmod(a_i·h + b_i, [[Minhash.Prime]])
+  * over it ([[Minhash.signature]]). It is the map-only form of the
+  * shingle explode + 64-column `min` aggregation: each row's signature is
+  * finished in the task that reads the row, so no exchange carries the
+  * shingle stream, and the plan node is O(1) however many permutations
+  * there are (the `RpSignatures` precedent). A null or empty `child`
+  * gives null, as the explode dropped such a row. */
+case class MinhashSignature(child: Expression, a: Array[Long], b: Array[Long])
+    extends UnaryExpression {
+  require(a.length == b.length, s"MinhashSignature: ${a.length} a's but ${b.length} b's")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"minhash_signature expects array<bigint> hashes, got $other")
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    Minhash.signature(input.asInstanceOf[ArrayData], a, b)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val aRef = ctx.addReferenceObj("minhashA", a, "long[]")
+    val bRef = ctx.addReferenceObj("minhashB", b, "long[]")
+    nullSafeCodeGen(ctx, ev, hs =>
+      s"""
+         |${ev.value} = graft.plans.Minhash.signature($hs, $aRef, $bRef);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object TextExpressions {
   /** Column-level API: exact token count without materializing the tokens. */
   def token_count(text: Column): Column =
@@ -148,4 +221,9 @@ object TextExpressions {
   /** Column-level API: Unicode normalization, default NFC. */
   def normalize_text(text: Column, form: String = "NFC"): Column =
     Shim.column(NormalizeText(Shim.expression(text), form))
+
+  /** Column-level API: the MinHash signature of an array<bigint> of
+    * shingle hashes under the permutations (a_i, b_i); see [[MinhashSignature]]. */
+  def minhash_signature(hashes: Column, a: Seq[Long], b: Seq[Long]): Column =
+    Shim.column(MinhashSignature(Shim.expression(hashes), a.toArray, b.toArray))
 }

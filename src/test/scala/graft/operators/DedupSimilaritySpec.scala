@@ -122,6 +122,138 @@ class DedupSimilaritySpec extends SparkSpec {
     assertReadsRewrittenInput(Seq("q40" -> graft.Queries.simhashPairs _))
   }
 
+  test("q25 leaves no persisted RDD behind once its pairs are collected") {
+    // below the driver bound the signature snapshot is released inside the
+    // call, not left for GC
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(graft.Queries.minhashPairs(spark, sf).collect().nonEmpty)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"q25 left persisted RDDs $left")
+  }
+
+  /** The explode + 64-column `min` aggregation the map-only signature
+    * replaced, kept here as its reference. */
+  private def explodedSignatures(df: org.apache.spark.sql.DataFrame, tokenHash:
+      org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
+    import graft.functions.TextFunctions.{shinglesOfTokens, tokens}
+    val (as, bs) = Dedup.permParams(64)
+    val hs = df.select(col("id"), tokens(col("text")).as("toks"))
+      .select(col("id"), explode(array_distinct(shinglesOfTokens(col("toks"), 3))).as("s"))
+      .select(col("id"), tokenHash(col("s")).as("h"))
+    val aggs = (0 until 64).map(i =>
+      min(pmod(lit(as(i)) * col("h") + lit(bs(i)), lit(4294967311L))).as(s"m$i"))
+    hs.groupBy("id").agg(aggs.head, aggs.tail: _*)
+      .select(col("id"), array((0 until 64).map(i => col(s"m$i")): _*).as("sig"))
+  }
+
+  /** Generated documents: near-dup stars (an original and variants that
+    * each change a few of its tokens), chains (each doc a few token edits
+    * from the previous), a group of identical docs, unrelated docs, and
+    * docs with 0-2 tokens, empty, blank or null text. */
+  private def generatedDocs(seed: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    def words(n: Int) = Vector.fill(n)(s"w${rnd.nextInt(5000)}")
+    def edit(d: Vector[String], k: Int) =
+      (0 until k).foldLeft(d)((v, _) => v.updated(rnd.nextInt(v.length), s"x${rnd.nextInt(5000)}"))
+    val stars = (0 until 4).flatMap { _ =>
+      val o = words(30 + rnd.nextInt(30))
+      o +: Seq.fill(2 + rnd.nextInt(4))(edit(o, 1 + rnd.nextInt(2)))
+    }
+    val chains = (0 until 3).flatMap { _ =>
+      Iterator.iterate(words(40))(edit(_, 2)).take(4 + rnd.nextInt(4)).toSeq
+    }
+    val identical = { val d = words(25); Seq.fill(6)(d) }
+    val other = Seq.fill(20)(words(10 + rnd.nextInt(40)))
+    val short = Seq(Vector.empty, words(1), words(2), Vector("a", "b"))
+    val texts = rnd.shuffle((stars ++ chains ++ identical ++ other ++ short).map(_.mkString(" ")))
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong * 3 + 1, t) }
+    docs ++ Seq((100000L, ""), (100001L, "   "), (100002L, null))
+  }
+
+  test("map-only minhash signatures equal the explode/min aggregation") {
+    // a local relation evaluates the expression on the driver, interpreted;
+    // the exchange puts it in a whole-stage-codegen'd stage
+    for (seed <- 1 to 2; (name, h) <- Seq(
+        "xxhash" -> (graft.functions.TextFunctions.tokenHash32 _),
+        "md5" -> (graft.functions.TextFunctions.md5Hash32 _));
+         (df, form) <- Seq(generatedDocs(seed).toDF("id", "text") -> "local",
+           generatedDocs(seed).toDF("id", "text").repartition(3) -> "codegen")) {
+      def rows(sigs: org.apache.spark.sql.DataFrame) =
+        sigs.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val expected = rows(explodedSignatures(df, h))
+      assert(expected.nonEmpty)
+      assert(rows(Dedup.minhashSignatures(df, "id", "text", tokenHash = h)) == expected,
+        s"seed $seed, $name, $form")
+      val toks = df.select(col("id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"))
+      assert(rows(Dedup.minhashSignaturesOfTokens(toks, "id", "toks", tokenHash = h)) == expected,
+        s"seed $seed, $name, $form, tokens")
+    }
+  }
+
+  test("driver banding == distributed banding: pairs and components on generated documents") {
+    def local(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec]
+    for (seed <- 1 to 3; maxBucket <- Seq(1000, 4)) {
+      val docs = generatedDocs(seed).toDF("id", "text")
+      val what = s"seed $seed, maxBucket $maxBucket"
+      def pairsAndComponents(bound: Long, ccBound: Long) = {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val (pairs, release) = Dedup.candidatePairsOfSignatures(
+          Dedup.minhashSignatures(docs, "id", "text"), threshold = 0.5,
+          maxBucket = maxBucket, localBound = bound)
+        assert(local(pairs) == (bound > 0), s"$what: bound $bound took the wrong path")
+        if (bound > 0) assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+          s"$what: the driver path kept its signature snapshot")
+        try {
+          val p = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+          val cc = Dedup.connectedComponentsWithRounds(pairs, "id_a", "id_b",
+              localBound = ccBound)._1
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          (p, cc)
+        } finally release()
+      }
+      val (driverPairs, driverCc) = pairsAndComponents(Dedup.localBandingBound,
+        Dedup.localComponentsBound)
+      assert(driverPairs.nonEmpty && driverPairs.forall(p => p._1 < p._2), what)
+      assert(driverCc == unionFindComponents(driverPairs.toSeq.map(p => (p._1, p._2))), what)
+      for (ccBound <- Seq(Dedup.localComponentsBound, 0L)) {
+        val (pairs, cc) = pairsAndComponents(0L, ccBound)
+        assert(pairs == driverPairs, s"$what: the two bandings disagree")
+        assert(cc == driverCc, s"$what, CC bound $ccBound: components disagree")
+      }
+    }
+    // the premise of the maxBucket case: the six identical docs pair only
+    // while their buckets are within the cap
+    val docs = generatedDocs(1).toDF("id", "text")
+    def exactPairs(cap: Int) = Dedup.minhashCandidatePairs(docs, "id", "text", maxBucket = cap)
+      .filter(col("est_jaccard") === 1.0).count()
+    assert(exactPairs(1000) >= 15 && exactPairs(4) < exactPairs(1000))
+  }
+
+  test("driver banding falls back to the distributed plan above its row and pair bounds") {
+    // 120 ids in three groups of 40, each group sharing one signature:
+    // every band has three 40-row buckets, 16 × 3 × C(40,2) = 37,440
+    // candidate pairs, 2,340 distinct
+    val sigs = spark.range(0, 120, 1, 4).select(col("id"),
+      array((0 until 64).map(i => xxhash64(lit(i), col("id") % 3)): _*).as("sig"))
+    def pairsAt(bound: Long) = {
+      val (p, release) = Dedup.candidatePairsOfSignatures(sigs, localBound = bound)
+      try (p.queryExecution.executedPlan.isInstanceOf[
+          org.apache.spark.sql.execution.LocalTableScanExec],
+        p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+      finally release()
+    }
+    val (onDriver, expected) = pairsAt(Dedup.localBandingBound)
+    assert(onDriver && expected.size == 3 * 40 * 39 / 2 && expected.forall(_._3 == 1.0))
+    // bound 10: fewer than the rows; bound 1000: every row fits, but its
+    // 16,000-pair budget is below the candidates
+    for (bound <- Seq(10L, 1000L)) {
+      val (local, got) = pairsAt(bound)
+      assert(!local, s"bound $bound stayed on the driver")
+      assert(got == expected, s"bound $bound")
+    }
+  }
+
   test("minhash signatures are deterministic across invocations") {
     val df = Seq((1L, "a b c d e f g h")).toDF("id", "text")
     val s1 = Dedup.minhashSignatures(df, "id", "text").collect().head.getSeq[Long](1)
@@ -502,7 +634,8 @@ class DedupSimilaritySpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("s", "d")
+      // not a local relation: those are closed from their rows, no snapshot
+      val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("s", "d").repartition(2)
       val got = Dedup.connectedComponents(edges, "s", "d")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
@@ -632,11 +765,14 @@ class DedupSimilaritySpec extends SparkSpec {
         (v, below(rnd.nextInt(below.size)))
       }.toDF("node", "lbl")
       val df = edges.toDF("a", "b")
-      for (seed <- Seq(None, Some(warm)); (path, bound) <- ccPaths) {
-        val (out, rounds) = Dedup.connectedComponentsWithRounds(df, "a", "b",
+      // a local relation (closed straight from its rows on the local path)
+      // and a frame that is not (snapshotted first)
+      for (seed <- Seq(None, Some(warm)); (path, bound) <- ccPaths;
+           (frame, form) <- Seq(df -> "", df.repartition(2) -> " [exchange]")) {
+        val (out, rounds) = Dedup.connectedComponentsWithRounds(frame, "a", "b",
           seed = seed, localBound = bound)
         val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
-        val what = s"graph $gen, ${if (seed.isEmpty) "cold" else "warm"}$path"
+        val what = s"graph $gen, ${if (seed.isEmpty) "cold" else "warm"}$path$form"
         assert(got.sorted == expect.toSeq.sorted, what)
         assert((rounds == 0) == (bound > 0), s"$what: wrong path, $rounds rounds")
       }

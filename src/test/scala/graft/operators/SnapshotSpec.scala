@@ -3,10 +3,12 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
 
 /** The one materialization primitive: eager, plan-truncating, owned by the
   * call that took it, never a CacheManager entry. */
-class SnapshotSpec extends SparkSpec {
+class SnapshotSpec extends SparkSpec with Eventually {
   import spark.implicits._
 
   private def cacheManagerEmpty: Boolean =
@@ -26,6 +28,31 @@ class SnapshotSpec extends SparkSpec {
       assert(snap.agg(sum(col("sq"))).head().getLong(0) ==
         (2L to 200L by 2).map(i => i * i).sum)
     } finally Snapshot.release(snap)
+  }
+
+  test("a snapshot's job is named after the line that took it, and the prior call site restored") {
+    val sc = spark.sparkContext
+    val log = new graft.tools.StageLog
+    sc.addSparkListener(log)
+    try {
+      sc.setCallSite("outer call site")
+      val line = new Throwable().getStackTrace.head.getLineNumber + 1
+      val snap = Snapshot.take(frame.filter(col("id") > 10))
+      assert(sc.getLocalProperty("callSite.short") == "outer call site")
+      Snapshot.release(snap)
+      sc.clearCallSite()
+      sc.setJobDescription("snapshot_marker")
+      sc.parallelize(1 to 2, 1).count()
+      eventually(timeout(Span(15, Seconds))) {
+        assert(log.stages.exists(_.job == "snapshot_marker"))
+      }
+      val jobs = log.stages.map(_.job).filterNot(_ == "snapshot_marker").distinct
+      assert(jobs == Seq(s"Snapshot.take at SnapshotSpec.scala:$line"), jobs)
+    } finally {
+      sc.clearCallSite()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(log)
+    }
   }
 
   /** `body` with `dir` as the context's checkpoint dir, unset afterwards. */

@@ -150,4 +150,22 @@ class TextExpressionsSpec extends SparkSpec {
       TextExpressions.normalize_text(col("s"), "NFX")
     }
   }
+
+  test("minhash_signature: running pmod minima per permutation; null for null, empty or all-null hashes") {
+    val (a, b) = (Seq(3L, 536870911L, 1L), Seq(7L, 0L, 536870911L))
+    def expected(hs: Seq[Long]) =
+      a.zip(b).map { case (ai, bi) => hs.map(h => java.lang.Math.floorMod(ai * h + bi, 4294967311L)).min }
+    val rows: Seq[Option[Seq[Option[Long]]]] = Seq(
+      Some(Seq(Some(0L), Some(4294967295L), Some(12345L))),
+      Some(Seq(Some(42L), None, Some(42L))),
+      Some(Seq(None)), Some(Seq.empty), None)
+    val got = rows.toDF("h")
+      .select(TextExpressions.minhash_signature(col("h"), a, b)).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getSeq[Long](0)))
+    assert(got.toSeq == Seq(Some(expected(Seq(0L, 4294967295L, 12345L))), Some(expected(Seq(42L))),
+      None, None, None))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Seq("x").toDF("s").select(TextExpressions.minhash_signature(col("s"), a, b)).collect()
+    }
+  }
 }
